@@ -100,26 +100,41 @@ object Tables {
     df.repartition(math.max(sc.defaultParallelism.toLong, byData).toInt)
   }
 
-  /** Scratch dir for sink round-trips and versioned-table roots. Kept under the
-    * JVM tmpdir so nothing outside /root/repo or /tmp is touched.
-    * Deletes any stale dir from a prior run so Spark's default ErrorIfExists
-    * mode (and our versioned-table layer, which requires a fresh root) never
-    * collides with leftover state. */
+  /** This JVM's scratch root, `<tmpdir>/graft_scratch/<pid>-<random>`, so two
+    * JVMs on one tmpdir never delete each other's tables; removed at exit. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val p = java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      "graft_scratch", s"${ProcessHandle.current.pid}-${java.util.UUID.randomUUID.toString.take(8)}")
+    sys.addShutdownHook(scala.util.Try(deleteRecursively(p)))
+    p
+  }
+
+  /** Scratch dir for sink round-trips and versioned-table roots (one path per
+    * name within a JVM). Deletes any stale dir from an earlier use so Spark's
+    * default ErrorIfExists mode (and our versioned-table layer, which requires
+    * a fresh root) never collides with leftover state. */
   def scratch(name: String): String = {
-    val p = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_scratch", name)
+    val p = scratchRoot.resolve(name)
     deleteRecursively(p)
     java.nio.file.Files.createDirectories(p.getParent)
     p.toString
   }
 
+  /** Delete `p` and everything under it. Retried for up to a second: the
+    * killed tasks of a just-failed write job can still be creating or
+    * removing their attempt files under `p` while the walk runs. */
   def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-      finally stream.close()
-    }
+    def attempt(left: Int): Unit =
+      try if (Files.exists(p)) {
+        val stream = Files.walk(p)
+        try stream.sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => Files.deleteIfExists(f))
+        finally stream.close()
+      } catch {
+        case _: java.io.IOException | _: java.io.UncheckedIOException if left > 0 =>
+          Thread.sleep(50); attempt(left - 1)
+      }
+    attempt(20)
   }
 }

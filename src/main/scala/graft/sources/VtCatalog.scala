@@ -706,8 +706,7 @@ private final class VtStagedTable(spark: SparkSession, vt: VersionedTable,
 
   override def abortStagedChanges(): Unit = {
     staged.foreach { case (files, _) =>
-      files.foreach(f =>
-        java.nio.file.Files.deleteIfExists(vt.root.resolve(f)))
+      files.foreach(f => graft.vt.LakeFiles.delete(vt.root.resolve(f)))
     }
     if (createdRoot && vt.branches.isEmpty)
       VersionedTable.delete(vt.root.toString)

@@ -99,8 +99,7 @@ private[graft] final class VtStreamingWrite(spark: SparkSession,
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case VtEpochFileMessage(rel, _) if rel != null =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(vt.root.toString).resolve(rel))
+        graft.vt.LakeFiles.delete(java.nio.file.Paths.get(vt.root.toString).resolve(rel))
       case _ => ()
     }
 
@@ -121,7 +120,8 @@ private[sources] final case class VtEpochWriterFactory(root: String, branch: Str
                             epochId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val rel = s"data/$branch-stream-e$epochId/" +
-        f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID.toString.take(8)}.snappy.parquet"
+        f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID.toString.take(8)}" +
+        s"${graft.vt.LakeFiles.Codec.getExtension}.parquet"
       private var rows = 0L
       private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
 
@@ -131,8 +131,7 @@ private[sources] final case class VtEpochWriterFactory(root: String, branch: Str
           writer = new VtRowParquetBuilder(
             new HPath(java.nio.file.Paths.get(root).resolve(rel).toUri))
             .withConf(conf)
-            .withCompressionCodec(
-              org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+            .withCompressionCodec(graft.vt.LakeFiles.Codec)
             .build()
         }
         writer.write(record)
@@ -146,9 +145,7 @@ private[sources] final case class VtEpochWriterFactory(root: String, branch: Str
 
       override def abort(): Unit = {
         if (writer != null) writer.close()
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(root).resolve(rel))
-        ()
+        graft.vt.LakeFiles.delete(java.nio.file.Paths.get(root).resolve(rel))
       }
 
       override def close(): Unit = ()

@@ -218,17 +218,10 @@ object DeltaForeignWriter {
       }
     }: _*)
     val rel = s"graft-${java.util.UUID.randomUUID.toString.take(12)}"
-    val out = root.resolve(rel)
-    projected.write.mode("overwrite").parquet(out.toString)
-    val listed = {
-      import scala.jdk.CollectionConverters._
-      val st = Files.list(out)
-      try st.iterator().asScala.toVector finally st.close()
+    LakeFiles.write(projected, root.resolve(rel), root).map { f =>
+      val p = root.resolve(f)
+      (f, Files.size(p), VersionedTable.footerRowCount(p))
     }
-    listed.filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
-      .map { p =>
-        (root.relativize(p).toString, Files.size(p), VersionedTable.footerRowCount(p))
-      }
   }
 
 }

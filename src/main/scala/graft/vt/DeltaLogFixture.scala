@@ -214,11 +214,9 @@ object DeltaLogFixture {
     ()
   }
 
-  private def oneFileParquet(spark: org.apache.spark.sql.SparkSession,
-                             rows: Seq[org.apache.spark.sql.Row],
-                             schema: org.apache.spark.sql.types.StructType,
-                             tmpDir: Path, dest: Path): Unit = {
-    val df = spark.createDataFrame(rows.asJava, schema)
+  /** `df` as exactly one parquet file at `dest`, in the session's default
+    * codec (fixtures author stock-Delta files, not lake files). */
+  private def oneFileParquet(df: DataFrame, tmpDir: Path, dest: Path): Unit = {
     df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
     val st = Files.list(tmpDir)
     val part =
@@ -259,7 +257,7 @@ object DeltaLogFixture {
       } ++ removeTombstones.map(p => Row(null, Row(p, 0L, false)))
     val dest = tableRoot.resolve("_delta_log").resolve("_sidecars")
       .resolve(s"$name.parquet")
-    oneFileParquet(spark, rows, schema,
+    oneFileParquet(spark.createDataFrame(rows.asJava, schema),
       tableRoot.resolve(s"_tmp_sidecar_$name"), dest)
     s"$name.parquet"
   }
@@ -321,7 +319,7 @@ object DeltaLogFixture {
         inlineAdds.map { case (p, sz, pv) =>
           Row(null, null, null, null, Row(p, pv, sz, 0L, false, null))
         }
-    oneFileParquet(spark, rows, schema,
+    oneFileParquet(spark.createDataFrame(rows.asJava, schema),
       tableRoot.resolve(s"_tmp_v2cp_$version"),
       tableRoot.resolve("_delta_log")
         .resolve(f"$version%020d.checkpoint.$uuid.parquet"))
@@ -340,15 +338,8 @@ object DeltaLogFixture {
     * directly under `tableRoot`; returns (relative path, size) for its
     * `add` action. */
   def writeDataFile(tableRoot: Path, df: DataFrame, name: String): (String, Long) = {
-    val tmp = tableRoot.resolve(s"_tmp_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val st = Files.list(tmp)
-    val part =
-      try st.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-      finally st.close()
     val dest = tableRoot.resolve(s"$name.parquet")
-    Files.move(part, dest)
-    graft.Tables.deleteRecursively(tmp)
+    oneFileParquet(df, tableRoot.resolve(s"_tmp_$name"), dest)
     (s"$name.parquet", Files.size(dest))
   }
 }

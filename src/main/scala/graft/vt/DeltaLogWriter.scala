@@ -409,17 +409,10 @@ object DeltaLogWriter {
     val dir = root.resolve("_change_data")
     Files.createDirectories(dir)
     val tmp = dir.resolve(s".cdc_tmp_$version")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val parts = {
-      val st = Files.list(tmp)
-      try st.iterator().asScala.toVector
-        .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
-      finally st.close()
-    }
-    val out = parts.zipWithIndex.map { case (part, i) =>
+    val out = LakeFiles.write(df, tmp, tmp).zipWithIndex.map { case (part, i) =>
       val rel = f"_change_data/cdc-$version%020d-$i%05d.parquet"
       val dest = root.resolve(rel)
-      Files.move(part, dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.move(tmp.resolve(part), dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       rel -> Files.size(dest)
     }
     graft.Tables.deleteRecursively(tmp)
@@ -625,14 +618,9 @@ object DeltaLogWriter {
                                  schema: StructType, tmpDir: Path,
                                  dest: Path): Unit = {
     val df = spark.createDataFrame(rows.asJava, schema)
-    df.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-    val part = {
-      val st = Files.list(tmpDir)
-      try st.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-      finally st.close()
-    }
+    val part = LakeFiles.write(df.coalesce(1), tmpDir, tmpDir).head
     Files.createDirectories(dest.getParent)
-    Files.move(part, dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.move(tmpDir.resolve(part), dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     graft.Tables.deleteRecursively(tmpDir)
   }
 

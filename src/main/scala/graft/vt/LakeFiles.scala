@@ -1,0 +1,59 @@
+package graft.vt
+
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.sql.DataFrame
+
+/** The one writer of lake parquet: every data, deletion-vector, staged repo
+  * table, foreign-Delta and Delta-export file the engine lands goes through
+  * [[write]], and vacuum removes files through [[delete]], so no checksum
+  * sidecar outlives its file. */
+private[graft] object LakeFiles {
+
+  /** Lake parquet is always zstd at parquet-mr's default level (3), with no
+    * knob: each byte is PUT once and read back on every scan, diff and time
+    * travel. Older snappy files stay readable — the footer names the codec. */
+  val Codec: CompressionCodecName = CompressionCodecName.ZSTD
+
+  /** Write `df` into the fresh directory `out` (zstd, no `_SUCCESS`
+    * marker); return its part files relative to `root`, sorted. */
+  def write(df: DataFrame, out: Path, root: Path): Vector[String] = {
+    df.write.mode("overwrite")
+      .option("compression", Codec.name.toLowerCase)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(out.toString)
+    val st = Files.list(out)
+    try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => root.relativize(p).toString).toVector.sorted
+    finally st.close()
+  }
+
+  /** Delete a lake file and its Hadoop checksum sidecar `.<name>.crc`. */
+  def delete(p: Path): Unit = {
+    Files.deleteIfExists(p)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+  }
+
+  /** Vacuum-managed files: parquet (data, deletion vectors), `.bloom`
+    * sidecars and commit-metadata manifests. */
+  def dataPlane(name: String): Boolean =
+    name.endsWith(".parquet") || name.endsWith(".bloom") || name.endsWith(".manifest")
+
+  /** Delete every data-plane file under `dataDir` whose `root`-relative path
+    * is not in `retained` (only count them when `dryRun`); returns the count. */
+  def sweep(root: Path, dataDir: Path, retained: Set[String],
+            dryRun: Boolean = false): Int = {
+    if (!Files.exists(dataDir)) return 0
+    val walk = Files.walk(dataDir)
+    val dead =
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && dataPlane(p.getFileName.toString))
+        .map(p => root.relativize(p).toString).filterNot(retained.contains).toVector
+      finally walk.close()
+    if (!dryRun) dead.foreach(f => delete(root.resolve(f)))
+    dead.size
+  }
+}

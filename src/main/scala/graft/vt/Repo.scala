@@ -56,13 +56,7 @@ final class Repo private (val root: Path, val store: MetaStore) {
     val version = head(branch).map(_.version + 1).getOrElse(0L)
     val rel = s"$table/$branch-v$version-${java.util.UUID.randomUUID.toString.take(8)}"
     val out = dataDir.resolve(rel)
-    df.write.mode("overwrite").parquet(out.toString)
-    import scala.jdk.CollectionConverters._
-    val st = Files.list(out)
-    try st.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => root.relativize(p).toString).toVector.sorted
-    finally st.close()
+    LakeFiles.write(df, out, root)
   }
 
   /** Stage a table write on `branch`; nothing is visible until [[commit]]. */
@@ -141,7 +135,7 @@ final class Repo private (val root: Path, val store: MetaStore) {
   /** Discard staged writes and their data files (lakeFS reset). */
   def reset(branch: String): Unit = synchronized {
     staged.remove(branch).foreach(_.values.foreach(_._1.foreach(f =>
-      Files.deleteIfExists(root.resolve(f)))))
+      LakeFiles.delete(root.resolve(f)))))
   }
 
   def readTable(spark: SparkSession, branch: String, table: String): DataFrame = {
@@ -550,7 +544,7 @@ final class Repo private (val root: Path, val store: MetaStore) {
         staged.values.flatMap(_.values.flatMap(_._1))).toSet ++
         SlotSweep.slotProtectedFiles(store, root, loadCommit, reachableIds) ++
         taggedFiles ++ reachableManifests
-    sweepData(retained)
+    LakeFiles.sweep(root, dataDir, retained)
   }
 
   /** Time-based repo GC, the Delta retention dial at repo scope: retain
@@ -568,23 +562,7 @@ final class Repo private (val root: Path, val store: MetaStore) {
       }.flatten) ++ staged.values.flatMap(_.values.flatMap(_._1))).toSet ++
         SlotSweep.slotProtectedFiles(store, root, loadCommit, reachableIds) ++
         taggedFiles ++ reachableManifests
-    sweepData(retained)
-  }
-
-  private def sweepData(retained: Set[String]): Int = {
-    if (!Files.exists(dataDir)) return 0
-    val walk = Files.walk(dataDir)
-    import scala.jdk.CollectionConverters._
-    val all =
-      try walk.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          (p.getFileName.toString.endsWith(".parquet") ||
-            p.getFileName.toString.endsWith(".manifest")))
-        .map(p => root.relativize(p).toString).toVector
-      finally walk.close()
-    val dead = all.filterNot(retained.contains)
-    dead.foreach(f => Files.deleteIfExists(root.resolve(f)))
-    dead.size
+    LakeFiles.sweep(root, dataDir, retained)
   }
 }
 

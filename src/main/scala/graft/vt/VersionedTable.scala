@@ -1732,10 +1732,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // find-matches scan once before the write re-ran it; emptiness is read
     // off the landed footers instead, and a no-match delete removes the
     // empty output and returns the unchanged head exactly as before.
-    matched.sortWithinPartitions("fk", "pos")
-      .write.mode("overwrite").parquet(out.toString)
-    val dvNew = listDir(out).filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => root.relativize(p).toString).sorted
+    val dvNew = LakeFiles.write(matched.sortWithinPartitions("fk", "pos"), out, root)
     if (dvNew.map(f => VersionedTable.footerRowCount(root.resolve(f)).getOrElse(1L)).sum == 0L) {
       graft.Tables.deleteRecursively(out)
       return parent
@@ -2541,7 +2538,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     val stagedPath = refsDir.resolve(branch + ".staged")
     if (store.exists(stagedPath)) {
       val staged = CommitLog.fromJson(store.read(stagedPath))
-      staged.files.foreach(f => Files.deleteIfExists(root.resolve(f)))
+      staged.files.foreach(f => LakeFiles.delete(root.resolve(f)))
       store.delete(stagedPath)
     }
   }
@@ -2560,12 +2557,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       println(s"===== write plan: $rel =====")
       body.explain("formatted")
     }
-    graft.Tables.timed(s"writeDataFiles $rel") {
-      body.write.mode("overwrite").parquet(out.toString)
-    }
-    listDir(out)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => root.relativize(p).toString).sorted
+    graft.Tables.timed(s"writeDataFiles $rel")(LakeFiles.write(body, out, root))
   }
 
   private def locksDir: Path = root.resolve("locks")
@@ -3789,31 +3781,17 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     branches.filter(hasStaged).flatMap(b =>
       CommitLog.fromJson(store.read(refsDir.resolve(b + ".staged"))).files)
 
-  /** Delete every data-plane file not in `retained` (or just COUNT them
-    * when `dryRun`); prune emptied commit dirs. Covers parquet (data +
-    * deletion vectors) AND `.bloom` index sidecars — an orphaned sidecar
-    * is reclaimable garbage exactly like an orphaned data file. */
+  /** [[LakeFiles.sweep]] every data-plane file not in `retained` (or just
+    * COUNT them when `dryRun`), then prune emptied commit dirs. */
   private def sweep(retained: Set[String], dryRun: Boolean = false): Int = {
-    def dataPlane(name: String): Boolean =
-      name.endsWith(".parquet") || name.endsWith(".bloom") ||
-        name.endsWith(".manifest")
-    if (!Files.exists(dataDir)) return 0
-    val walk = Files.walk(dataDir)
-    val all =
-      try walk.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && dataPlane(p.getFileName.toString))
-        .map(p => root.relativize(p).toString).toVector
-      finally walk.close()
-    val dead = all.filterNot(retained.contains)
-    if (dryRun) return dead.size
-    dead.foreach(f => Files.deleteIfExists(root.resolve(f)))
+    val dead = LakeFiles.sweep(root, dataDir, retained, dryRun)
     // prune now-empty commit directories
-    listDir(dataDir).foreach { d =>
+    if (!dryRun && Files.exists(dataDir)) listDir(dataDir).foreach { d =>
       if (Files.isDirectory(d) && !listDir(d).exists(p =>
-            dataPlane(p.getFileName.toString)))
+            LakeFiles.dataPlane(p.getFileName.toString)))
         graft.Tables.deleteRecursively(d)
     }
-    dead.size
+    dead
   }
 
   /** CDC between two versions of a branch: row-level changes as a DataFrame

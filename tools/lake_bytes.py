@@ -1,0 +1,117 @@
+#!/usr/bin/env python3
+"""Bytes and file counts of a lake directory, by kind of file.
+
+Usage: lake_bytes.py [--check] <root>...
+
+Walks each root (a versioned table, a repo or any directory holding them)
+and sorts every file into one kind:
+
+  data parquet (<codec>)  table data, split by the footer's column codec
+                          (`empty` for a file with no row groups, `mixed`
+                          when its column chunks differ)
+  dv parquet              deletion vectors (`<branch>-v<N>-dv-<id>/` dirs)
+  cdc parquet             Delta-export change data (`_change_data/`)
+  checkpoint parquet      Delta-export checkpoints (`_delta_log/`)
+  manifest                commit-metadata manifests (`.manifest`)
+  commit json             commit records and Delta log entries (`.json`)
+  bloom                   bloom index sidecars (`.bloom`)
+  crc                     Hadoop checksum sidecars of a present file
+  orphan crc              checksum sidecars whose file is gone
+  _SUCCESS                job-commit markers
+  other                   everything else (refs, locks, Delta DV binaries)
+
+Prints one table per root and, for several roots, their total. `--check`
+exits 1 when any root holds a snappy data parquet file, a `_SUCCESS` marker
+or an orphan checksum file.
+Needs only pyarrow.
+"""
+import os
+import re
+import sys
+from collections import defaultdict
+
+import pyarrow.parquet as pq
+
+DV_DIR = re.compile(r"-v\d+-dv-")
+
+
+def parquet_codec(path):
+    meta = pq.ParquetFile(path).metadata
+    codecs = {meta.row_group(g).column(c).compression
+              for g in range(meta.num_row_groups) for c in range(meta.num_columns)}
+    if not codecs:
+        return "empty"
+    return codecs.pop().lower() if len(codecs) == 1 else "mixed"
+
+
+def kind_of(dirpath, name):
+    if name == "_SUCCESS":
+        return "_SUCCESS"
+    if name.startswith(".") and name.endswith(".crc"):
+        present = os.path.exists(os.path.join(dirpath, name[1:-len(".crc")]))
+        return "crc" if present else "orphan crc"
+    parts = dirpath.split(os.sep)
+    if name.endswith(".parquet"):
+        if "_change_data" in parts:
+            return "cdc parquet"
+        if "_delta_log" in parts:
+            return "checkpoint parquet"
+        if DV_DIR.search(os.path.basename(dirpath)):
+            return "dv parquet"
+        return f"data parquet ({parquet_codec(os.path.join(dirpath, name))})"
+    for ext, kind in ((".manifest", "manifest"), (".json", "commit json"),
+                      (".bloom", "bloom")):
+        if name.endswith(ext):
+            return kind
+    return "other"
+
+
+def survey(root):
+    """{kind: [files, bytes]} over every regular file under `root`."""
+    out = defaultdict(lambda: [0, 0])
+    for dirpath, _, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            if os.path.isfile(path) and not os.path.islink(path):
+                k = out[kind_of(dirpath, name)]
+                k[0] += 1
+                k[1] += os.path.getsize(path)
+    return dict(out)
+
+
+def print_table(title, kinds):
+    print(title)
+    print(f"  {'kind':<26}{'files':>8}{'bytes':>14}")
+    for k in sorted(kinds):
+        print(f"  {k:<26}{kinds[k][0]:>8}{kinds[k][1]:>14,}")
+    print(f"  {'all':<26}{sum(v[0] for v in kinds.values()):>8}"
+          f"{sum(v[1] for v in kinds.values()):>14,}")
+
+
+def main(argv):
+    flags = {a for a in argv if a.startswith("--")}
+    roots = [a for a in argv if not a.startswith("--")]
+    if not roots or flags - {"--check"}:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    per_root = {r: survey(r) for r in roots}
+    total = defaultdict(lambda: [0, 0])
+    for kinds in per_root.values():
+        for k, (n, b) in kinds.items():
+            total[k][0] += n
+            total[k][1] += b
+    for r, kinds in per_root.items():
+        print_table(r, kinds)
+    if len(roots) > 1:
+        print_table("total", total)
+    bad = {k: v for k, v in total.items()
+           if k in ("data parquet (snappy)", "_SUCCESS", "orphan crc")}
+    if "--check" in flags and bad:
+        print("check failed: " + ", ".join(f"{k} x{v[0]}" for k, v in sorted(bad.items())),
+              file=sys.stderr)
+        return 1
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
