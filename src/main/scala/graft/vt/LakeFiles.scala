@@ -43,7 +43,10 @@ private[graft] object LakeFiles {
     name.endsWith(".parquet") || name.endsWith(".bloom") || name.endsWith(".manifest")
 
   /** Delete every data-plane file under `dataDir` whose `root`-relative path
-    * is not in `retained` (only count them when `dryRun`); returns the count. */
+    * is not in `retained` (only count them when `dryRun`), then prune every
+    * directory below `dataDir` left without a data-plane file, bottom-up —
+    * a table's `<branch>-v<N>-<id>/` commit dirs and a repo's
+    * `<table>/<branch>-v<N>-<id>/` alike. Returns the count of dead files. */
   def sweep(root: Path, dataDir: Path, retained: Set[String],
             dryRun: Boolean = false): Int = {
     if (!Files.exists(dataDir)) return 0
@@ -53,7 +56,25 @@ private[graft] object LakeFiles {
         .filter(p => Files.isRegularFile(p) && dataPlane(p.getFileName.toString))
         .map(p => root.relativize(p).toString).filterNot(retained.contains).toVector
       finally walk.close()
-    if (!dryRun) dead.foreach(f => delete(root.resolve(f)))
+    if (!dryRun) {
+      dead.foreach(f => delete(root.resolve(f)))
+      children(dataDir).filter(Files.isDirectory(_)).foreach(pruneDirs)
+    }
     dead.size
+  }
+
+  /** Delete `dir` (with any leftover sidecars or markers) unless some
+    * data-plane file survives beneath it; true when one does. */
+  private def pruneDirs(dir: Path): Boolean = {
+    val live = children(dir).map { p =>
+      if (Files.isDirectory(p)) pruneDirs(p) else dataPlane(p.getFileName.toString)
+    }.contains(true)
+    if (!live) graft.Tables.deleteRecursively(dir)
+    live
+  }
+
+  private def children(dir: Path): Vector[Path] = {
+    val st = Files.list(dir)
+    try st.iterator().asScala.toVector finally st.close()
   }
 }

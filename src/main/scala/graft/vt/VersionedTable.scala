@@ -882,38 +882,32 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
 
   /** Delta-style MERGE (upsert): source rows REPLACE current rows sharing
     * their key (WHEN MATCHED UPDATE ALL) and are INSERTED otherwise, as a
-    * NEW version — old versions still time-travel. Relational core: one
-    * left-anti join of the touched rows against the distinct source keys,
-    * then a union — both shuffle only on the key columns, so the plan is two
-    * key-partitioned exchanges regardless of table width or scale. Schemas
-    * must match (same enforcement rationale as append).
+    * NEW version — old versions still time-travel. Schemas must match (same
+    * enforcement rationale as append).
     *
-    * COPY-ON-WRITE, file-granular (Delta MERGE's file pruning): a parent
-    * file whose per-file [min,max] stats on some key column are DISJOINT
-    * from the source's key range provably contains no matched key — it is
-    * carried into the new version UNTOUCHED (and keeps its stats entry).
-    * Only the remaining files are rewritten. On a key-clustered petabyte
-    * table a point-range upsert rewrites a handful of files, and the
-    * file-granular [[changes]] diff over that interval scans only
-    * touched+new files. Files without numeric key stats are conservatively
-    * rewritten; correctness never depends on pruning.
+    * File-granular retire-or-rewrite ([[applyCdc]] has the mechanics): key
+    * range stats prune the files that provably hold no source key, one
+    * semi-join finds the rows each remaining file loses, and a file whose
+    * dead rows stay at or below 1/20 of its row count (Delta OPTIMIZE's
+    * deleted-rows purge ratio) keeps its entry and takes a deletion vector;
+    * only files past that are rewritten. The upserted rows always land as
+    * new files.
     *
     * The source must be key-unique: Delta's MERGE errors when multiple source
     * rows match one target row, and silently keeping every duplicate would
     * violate the REPLACE contract above — so a duplicated key fails fast
-    * here. The check is one aggregation on the key columns (the same shuffle
-    * key the anti-join uses) short-circuited by `limit(1)`: a bounded extra
-    * job, metadata-scale next to the rewrite itself. */
+    * here. The check is one aggregation on the key columns short-circuited
+    * by `limit(1)`: a bounded extra job, metadata-scale next to the write. */
   def upsert(spark: SparkSession, source: DataFrame, keyCols: Seq[String],
              branch: String = "main", message: String = ""): Commit =
     applyCdc(spark, source, None, keyCols, branch,
       if (message.isEmpty) s"upsert on (${keyCols.mkString(", ")})" else message)
 
-  /** Apply a KEYED CDC batch as ONE copy-on-write commit — the general form
-    * of [[upsert]] (which is `applyCdc` with no deletes): rows in `upserts`
-    * REPLACE any row sharing their key, keys in `deleteKeys` (a DataFrame
-    * carrying at least the key columns) are REMOVED, and a key present in
-    * both is a replace (the upsert wins — the net effect of a CDC batch's
+  /** Apply a KEYED CDC batch as ONE commit — the general form of [[upsert]]
+    * (which is `applyCdc` with no deletes): rows in `upserts` REPLACE any
+    * row sharing their key, keys in `deleteKeys` (a DataFrame carrying at
+    * least the key columns) are REMOVED, and a key present in both is a
+    * replace (the upsert wins — the net effect of a CDC batch's
     * delete-preimage + insert-postimage pair). This is what a CDC consumer
     * needs to land one source version ATOMICALLY: a split delete-commit +
     * upsert-commit pair would leave a torn intermediate version on a crash
@@ -921,16 +915,23 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     * ([[graft.streaming.ChangeFeed.tailFromDelta]] relies on the one-commit
     * shape).
     *
-    * Same COW mechanics and scale shape as upsert: numeric-key range stats
-    * (over upserted AND deleted keys) prune the files that provably hold no
-    * affected key; only the remainder is rewritten via one anti-join;
-    * untouched files carry their stats and deletion vectors. */
+    * Scale shape: the affected keys' range per numeric, timestamp or string
+    * key column prunes files through the commit-log stats
+    * ([[mergeCandidates]]); one semi-join of the remaining files against
+    * the affected keys lands the positions of the live rows it replaces or
+    * removes as a deletion vector, counted per file ([[landRetired]]); then
+    * [[retireOrRewrite]] applies the 1/20 rule — a file with few dead rows
+    * keeps its entry, stats and bloom bits and its lost rows go into one
+    * deletion vector, a file past the rule is rewritten with its kept rows
+    * (one anti-join), and every untouched file carries as it was. 1/20 is
+    * the deleted-rows ratio at which Delta's OPTIMIZE purges a file's
+    * vectors, and it caps the read amplification of a hot file. */
   def applyCdc(spark: SparkSession, upserts: DataFrame,
                deleteKeys: Option[DataFrame], keyCols: Seq[String],
                branch: String = "main", message: String = ""): Commit = synchronized {
     guardWritable(branch)
     require(keyCols.nonEmpty, "applyCdc needs at least one key column")
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    import org.apache.spark.sql.functions.{col, count, lit}
     val dup = upserts.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__n")).where(col("__n") > 1)
       .limit(1).collect()
@@ -957,62 +958,92 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // version churn (the same early-return shape as merge's already-equal
     // case). The incremental-pipeline cycle with no updates costs one
     // limit(1) probe per side.
-    if (upserts.isEmpty && delKeys.forall(_.isEmpty)) return parent
+    val noUpserts = upserts.isEmpty
+    if (noUpserts && delKeys.forall(_.isEmpty)) return parent
     val affected = delKeys.foldLeft(upserts.select(keyCols.map(col): _*))(_ unionByName _)
-    // file pruning: affected key range per NUMERIC key column (one bounded
-    // action, 2 doubles per key) vs the parent's per-file stats — the same
-    // range logic as readWhere. Only NumericType keys participate (a
-    // DATE/BINARY key is not double-castable under ANSI and must not break
-    // the apply); non-numeric-keyed tables simply rewrite conservatively.
-    val numKeys = keyCols.filter(k =>
-      schema(k).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val srcRange: Map[String, (Double, Double)] =
-      if (numKeys.isEmpty) Map.empty
-      else {
-        val aggs = numKeys.flatMap(k => Seq(min(col(k).cast("double")).as(s"__mn_$k"),
-          max(col(k).cast("double")).as(s"__mx_$k")))
-        val r = affected.agg(aggs.head, aggs.tail: _*).collect().head
-        numKeys.zipWithIndex.collect {
-          case (k, i) if !r.isNullAt(2 * i) && !r.isNullAt(2 * i + 1) =>
-            k -> (r.getDouble(2 * i), r.getDouble(2 * i + 1))
-        }.toMap
-      }
-    val (untouched, touched) = parent.files.partition { f =>
-      srcRange.exists { case (k, (smn, smx)) =>
+    val (numRange, strRange) = keyRanges(schema, affected, keyCols.map(k => k -> k))
+    val candidates = mergeCandidates(parent, numRange, strRange)
+    // the live rows an affected key replaces or removes
+    val hits = if (candidates.isEmpty) None
+      else Some(scanWithPos(spark, parent.copy(files = candidates))
+        .join(affected.distinct(), keyCols, "left_semi"))
+    retireOrRewrite(spark, parent, branch,
+      if (message.isEmpty) s"applyCdc on (${keyCols.mkString(", ")})" else message,
+      schema, landRetired(spark, parent, branch, candidates, hits),
+      (rewrite, _) => {
+        val kept = if (rewrite.isEmpty) None
+          else Some(readCommit(spark, parent.copy(files = rewrite))
+            .join(affected.distinct(), keyCols, "left_anti"))
+        // CHECK constraints guard only the INCOMING side: kept rows come
+        // from the already-validated snapshot and re-land unchanged
+        val fresh = if (noUpserts) None else Some(guardChecks(upserts, Some(parent)))
+        (kept ++ fresh).reduceOption(_ unionByName _)
+      })
+  }
+
+  /** Per-key [min, max] of `frame`'s key columns, as [[mergeCandidates]]
+    * takes them: `keys` pairs a target column with the `frame` column
+    * holding its values. Numeric and timestamp keys land in the
+    * double-domain stats (timestamps as epoch seconds, which the cast
+    * yields), STRING keys keep their values for the strStats window; other
+    * key types prune nothing. One bounded aggregate, skipped when no key
+    * column can prune. */
+  private def keyRanges(schema: StructType, frame: DataFrame, keys: Seq[(String, String)])
+      : (Map[String, (Double, Double)], Map[String, (String, String)]) = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val numKeys = keys.filter { case (tc, _) =>
+      val dt = schema(tc).dataType
+      dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
+        dt == org.apache.spark.sql.types.TimestampType
+    }
+    val strKeys = keys.filter { case (tc, _) =>
+      schema(tc).dataType == org.apache.spark.sql.types.StringType
+    }
+    if (numKeys.isEmpty && strKeys.isEmpty) return (Map.empty, Map.empty)
+    val aggs = numKeys.flatMap { case (tc, sc) =>
+      Seq(min(col(sc).cast("double")).as(s"__mn_$tc"), max(col(sc).cast("double")).as(s"__mx_$tc"))
+    } ++ strKeys.flatMap { case (tc, sc) =>
+      Seq(min(col(sc)).as(s"__smn_$tc"), max(col(sc)).as(s"__smx_$tc"))
+    }
+    val r = frame.agg(aggs.head, aggs.tail: _*).collect().head
+    val nums = numKeys.map(_._1).zipWithIndex.collect {
+      case (tc, i) if !r.isNullAt(2 * i) && !r.isNullAt(2 * i + 1) =>
+        tc -> (r.getDouble(2 * i), r.getDouble(2 * i + 1))
+    }.toMap
+    val base = 2 * numKeys.size
+    val strs = strKeys.map(_._1).zipWithIndex.collect {
+      case (tc, i) if !r.isNullAt(base + 2 * i) && !r.isNullAt(base + 2 * i + 1) =>
+        tc -> (r.getString(base + 2 * i), r.getString(base + 2 * i + 1))
+    }.toMap
+    (nums, strs)
+  }
+
+  /** The candidate-file set a merge source with the given per-key ranges
+    * could possibly match: a file is DROPPED only when some key's file
+    * stats are provably disjoint from the source's [min, max] on that key
+    * — numeric/timestamp keys against the double-domain stats, string keys
+    * against the truncation-sound strStats under unsigned-UTF-8 order.
+    * Missing stats keep the file (conservative); soundness is pinned by
+    * the ScalaCheck pruning property and the ghost-file merge spec. */
+  private[graft] def mergeCandidates(parent: Commit,
+      numRange: Map[String, (Double, Double)],
+      strRange: Map[String, (String, String)]): Vector[String] =
+    parent.files.filterNot { f =>
+      numRange.exists { case (k, (lo, hi)) =>
         parent.stats.get(f).flatMap(_.get(k)) match {
-          case Some((mn, mx)) => mx < smn || mn > smx // provably no affected key
+          case Some((mn, mx)) => mx < lo || mn > hi // provably no equi-key match
+          case None => false
+        }
+      } || strRange.exists { case (k, (lo, hi)) =>
+        parent.strStats.get(f).flatMap(_.get(k)) match {
+          // file stats are truncation-SOUND bounds (statsLower ≤ true min,
+          // statsUpper ≥ true max), so disjointness stays a proof
+          case Some((mn, mx)) =>
+            VersionedTable.utf8Cmp(mx, lo) < 0 || VersionedTable.utf8Cmp(mn, hi) > 0
           case None => false
         }
       }
     }
-    val touchedRows = readCommit(spark, parent.copy(files = touched))
-    val keep = touchedRows.join(affected.distinct(), keyCols, "left_anti")
-    // CHECK constraints guard only the INCOMING side: `keep` rows come from
-    // the already-validated snapshot and re-land unchanged
-    val newFiles = writeDataFiles(
-      keep.unionByName(guardChecks(upserts, Some(parent))), branch, parent.version + 1,
-      mapTo = Some(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]))
-    // untouched files keep their stats; new files get fresh stats over the
-    // same column set the parent tracked (so skip-reads keep working)
-    val statCols = (parent.stats.values.flatMap(_.keys) ++
-      parent.strStats.values.flatMap(_.keys)).toSeq.distinct
-    val (newStats, newStrStats, newNullStats) =
-      if (statCols.isEmpty || newFiles.isEmpty) // a pure delete may empty the rewrite
-        (Map.empty[String, Map[String, (Double, Double)]],
-          Map.empty[String, Map[String, (String, String)]],
-          Map.empty[String, Map[String, Long]])
-      else collectFileStats(spark, newFiles, statCols, schema)
-    val untouchedSet = untouched.toSet // O(1) lookups: stat carry is O(F), not O(F^2)
-    val (bCols, bFiles, bLegacy) = cowBloom(spark, parent, branch, untouchedSet, newFiles, schema)
-    publish(branch, Some(parent),
-      if (message.isEmpty) s"applyCdc on (${keyCols.mkString(", ")})" else message,
-      schema, untouched ++ newFiles,
-      parent.stats.view.filterKeys(untouchedSet).toMap ++ newStats,
-      strStats = parent.strStats.view.filterKeys(untouchedSet).toMap ++ newStrStats,
-      nullStats = parent.nullStats.view.filterKeys(untouchedSet).toMap ++ newNullStats,
-      dvFiles = parent.dvFiles, // untouched files keep their deletion vectors
-      bloomStats = bLegacy, bloomCols = bCols, bloomFiles = bFiles)
-  }
 
   /** Generalized `MERGE INTO` (the full Delta/Spark statement, where
     * [[upsert]] is the classic two-clause special case): target rows join
@@ -1041,48 +1072,27 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     * more than one joined copy has an applicable clause fails fast
     * (Delta's cardinality error): which copy should win is ambiguous.
     *
-    * COPY-ON-WRITE, file-granular, all as ONE commit: equi-key conjuncts
-    * of `on` (`t.k = s.k`) prune candidate files through the commit-log
-    * stats exactly like [[upsert]] — numeric and timestamp keys against
-    * the double-domain stats, STRING keys (doc_id/uuid, the common
+    * File-granular retire-or-rewrite, all as ONE commit: equi-key
+    * conjuncts of `on` (`t.k = s.k`) prune candidate files through the
+    * commit-log stats exactly like [[upsert]] — numeric and timestamp keys
+    * against the double-domain stats, STRING keys (doc_id/uuid, the common
     * LLM-corpus merge shape) against the truncation-sound strStats under
-    * unsigned-UTF-8 order; an exact detection pass
-    * lists the files actually holding a row some clause APPLIES to; only
-    * those are rewritten (kept rows carried, updates applied, deletes
-    * dropped), inserts land in the new files, and every untouched file
-    * keeps its entry, stats and deletion vectors. A `notMatchedBySource`
-    * clause must examine every target row, so its detection scans the
-    * whole snapshot (still file-exact about what it rewrites) — the same
-    * cost Delta pays for that clause. Matching is over LIVE rows (deletion
+    * unsigned-UTF-8 order; an exact detection pass lands the positions of
+    * the rows some clause APPLIES to as a deletion vector, counted per file
+    * ([[landRetired]]). [[retireOrRewrite]] then decides per
+    * touched file: while its dead rows stay at or below 1/20 of its row
+    * count (Delta OPTIMIZE's deleted-rows purge ratio, which also caps a
+    * hot file's read amplification) the file keeps its entry, stats and
+    * bloom bits, its updated and deleted rows are retired by a deletion
+    * vector and the update images land in new files; past 1/20 it is
+    * rewritten (kept rows carried, updates applied, deletes dropped).
+    * Inserts land in the new files, and every untouched file keeps its
+    * entry, stats and deletion vectors. A
+    * `notMatchedBySource` clause must examine every target row, so its
+    * detection scans the whole snapshot (still file-exact about what it
+    * touches) — the same cost Delta pays for that clause. Matching is over LIVE rows (deletion
     * vectors subtracted) and the rewrite materializes survivors, so MOR
     * and COW history compose. */
-  /** The candidate-file set a merge source with the given per-key ranges
-    * could possibly match: a file is DROPPED only when some key's file
-    * stats are provably disjoint from the source's [min, max] on that key
-    * — numeric/timestamp keys against the double-domain stats, string keys
-    * against the truncation-sound strStats under unsigned-UTF-8 order.
-    * Missing stats keep the file (conservative); soundness is pinned by
-    * the ScalaCheck pruning property and the ghost-file merge spec. */
-  private[graft] def mergeCandidates(parent: Commit,
-      numRange: Map[String, (Double, Double)],
-      strRange: Map[String, (String, String)]): Vector[String] =
-    parent.files.filterNot { f =>
-      numRange.exists { case (k, (lo, hi)) =>
-        parent.stats.get(f).flatMap(_.get(k)) match {
-          case Some((mn, mx)) => mx < lo || mn > hi // provably no equi-key match
-          case None => false
-        }
-      } || strRange.exists { case (k, (lo, hi)) =>
-        parent.strStats.get(f).flatMap(_.get(k)) match {
-          // file stats are truncation-SOUND bounds (statsLower ≤ true min,
-          // statsUpper ≥ true max), so disjointness stays a proof
-          case Some((mn, mx)) =>
-            VersionedTable.utf8Cmp(mx, lo) < 0 || VersionedTable.utf8Cmp(mn, hi) > 0
-          case None => false
-        }
-      }
-    }
-
   def mergeInto(spark: SparkSession, source: DataFrame, on: String,
                 matched: Seq[MergeClause] = Nil,
                 notMatched: Seq[MergeClause] = Nil,
@@ -1091,7 +1101,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
                 branch: String = "main", message: String = "",
                 schemaEvolution: Boolean = false): Commit = synchronized {
     guardWritable(branch)
-    import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, max => smax, min => smin, when}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "mergeInto needs at least one WHEN clause")
     require(targetAlias != sourceAlias,
@@ -1179,40 +1189,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
             case _ => None
           }
       }.flatten.filter { case (tc, _) => schema.fieldNames.contains(tc) }
-    // numeric AND timestamp keys prune through the double-domain stats
-    // (timestamps live there as epoch seconds — the cast below lands in the
-    // same domain); STRING keys — the common LLM-corpus shape, doc_id/uuid —
-    // prune through strStats under unsigned-UTF-8 order, exactly like
+    // numeric AND timestamp keys prune through the double-domain stats;
+    // STRING keys — the common LLM-corpus shape, doc_id/uuid — prune
+    // through strStats under unsigned-UTF-8 order, exactly like
     // delete/update's statsCandidates. One bounded agg computes every range.
-    val numKeys = equiKeys.filter { case (tc, _) =>
-      val dt = schema(tc).dataType
-      dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
-        dt == org.apache.spark.sql.types.TimestampType
-    }
-    val strKeys = equiKeys.filter { case (tc, _) =>
-      schema(tc).dataType == org.apache.spark.sql.types.StringType
-    }
-    val (srcRange, srcStrRange): (Map[String, (Double, Double)], Map[String, (String, String)]) =
-      if (numKeys.isEmpty && strKeys.isEmpty) (Map.empty, Map.empty)
-      else {
-        val aggs = numKeys.flatMap { case (tc, sc) =>
-          Seq(smin(col(sc).cast("double")).as(s"__mn_$tc"),
-            smax(col(sc).cast("double")).as(s"__mx_$tc"))
-        } ++ strKeys.flatMap { case (tc, sc) =>
-          Seq(smin(col(sc)).as(s"__smn_$tc"), smax(col(sc)).as(s"__smx_$tc"))
-        }
-        val r = source0.agg(aggs.head, aggs.tail: _*).collect().head
-        val nums = numKeys.map(_._1).zipWithIndex.collect {
-          case (tc, i) if !r.isNullAt(2 * i) && !r.isNullAt(2 * i + 1) =>
-            tc -> (r.getDouble(2 * i), r.getDouble(2 * i + 1))
-        }.toMap
-        val base = 2 * numKeys.size
-        val strs = strKeys.map(_._1).zipWithIndex.collect {
-          case (tc, i) if !r.isNullAt(base + 2 * i) && !r.isNullAt(base + 2 * i + 1) =>
-            tc -> (r.getString(base + 2 * i), r.getString(base + 2 * i + 1))
-        }.toMap
-        (nums, strs)
-      }
+    val (srcRange, srcStrRange) = keyRanges(schema, source0, equiKeys)
     val candidates = {
       val base = mergeCandidates(parent, srcRange, srcStrRange)
       // BLOOM probe (r19): when the source's DISTINCT keys on a
@@ -1268,51 +1249,40 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       }
     }
 
-    // ---- exact touched-file detection (files some clause APPLIES to) ----
-    // The same pass carries Delta's cardinality check: for src-present rows
-    // "some matched clause applies" ⟺ anyCond(matched), so counting applied
-    // copies per target row here saves a second target×source join later.
-    val fkToRel = parent.files.map(f => VersionedTable.fileKey(f) -> f).toMap
-    val (matchedTouched, multiMatch): (Set[String], Boolean) =
-      if (matched.isEmpty || candidates.isEmpty) (Set.empty, false)
-      else {
-        // ONE exchange, not two (r22, guide §2.4): hash-partitioning by the
-        // file key alone already co-locates every (file, pos) group, so the
-        // explicit repartition satisfies BOTH groupings and the per-row count
-        // and the per-file max run exchange-free above it. The map-side
-        // partial agg the old two-groupBy shape had collapsed nothing anyway:
-        // (file, pos) pairs are unique unless the merge is about to throw the
-        // cardinality error, so the shuffled bytes are identical.
-        val detect = tgtScan(parent.copy(files = candidates)).join(src, onExpr, "inner")
-          .where(anyCond(matched))
-          .select(col(VersionedTable.FkCol), col(VersionedTable.PosCol))
-          .repartition(col(VersionedTable.FkCol))
-          .groupBy(col(VersionedTable.FkCol), col(VersionedTable.PosCol))
-          .agg(count(lit(1)).as("__graft_n"))
-          .groupBy(col(VersionedTable.FkCol))
-          .agg(smax(col("__graft_n")).as("__graft_mx"))
-        // same dev-only hook as writeDataFiles: the detection plan never
-        // surfaces through a returned DataFrame
-        if (sys.env.contains("SPARK_GRAFT_EXPLAIN_WRITES")) {
-          println(s"===== merge detection plan =====")
-          detect.explain("formatted")
-        }
-        val perFile = detect.collect() // O(touched files) rows
-        (perFile.map(r => fkToRel(r.getString(0))).toSet,
-          perFile.exists(_.getLong(1) > 1L))
-      }
-    if (multiMatch) throw new IllegalArgumentException(
-      "mergeInto: multiple source rows match and attempt to modify the " +
-        "same target row — de-duplicate the source or tighten the ON / " +
-        "clause conditions (Delta MERGE raises the same error)")
-    val bySourceTouched: Set[String] =
-      if (notMatchedBySource.isEmpty || parent.files.isEmpty) Set.empty
-      else tgtScan(parent).join(src, onExpr, "left_anti")
+    // ---- exact detection: the rows some clause APPLIES to, per file -----
+    // One pass lands their (file, pos) pairs as the statement's deletion
+    // vector and carries Delta's cardinality check: for src-present rows
+    // "some matched clause applies" ⟺ anyCond(matched), so a position the
+    // vector records twice is a target row two source copies modify.
+    val matchedHits: Option[DataFrame] =
+      if (matched.isEmpty || candidates.isEmpty) None
+      else Some(tgtScan(parent.copy(files = candidates)).join(src, onExpr, "inner")
+        .where(anyCond(matched))
+        .select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)))
+    val bySourceHits: Option[DataFrame] =
+      if (notMatchedBySource.isEmpty || parent.files.isEmpty) None
+      else Some(tgtScan(parent).join(src, onExpr, "left_anti")
         .where(anyCond(notMatchedBySource))
-        .select(col(VersionedTable.FkCol)).distinct().collect()
-        .map(r => fkToRel(r.getString(0))).toSet
-    val touchedSet = matchedTouched ++ bySourceTouched
-    val (touched, untouched) = parent.files.partition(touchedSet.contains)
+        .select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)))
+    // matched and by-source rows are disjoint, so one vector holds both
+    val hits = (matchedHits ++ bySourceHits).reduceOption(_ unionByName _)
+    // same dev-only hook as writeDataFiles: the detection plan never
+    // surfaces through a returned DataFrame
+    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_WRITES")) hits.foreach { h =>
+      println(s"===== merge detection plan =====")
+      h.explain("formatted")
+    }
+    val retired = landRetired(spark, parent, branch,
+      if (bySourceHits.isDefined) parent.files else candidates, hits)
+    if (retired.multiHit) {
+      dropVector(retired.vector)
+      throw new IllegalArgumentException(
+        "mergeInto: multiple source rows match and attempt to modify the " +
+          "same target row — de-duplicate the source or tighten the ON / " +
+          "clause conditions (Delta MERGE raises the same error)")
+    }
+    // clauses touch nothing: no-op, no churn
+    if (retired.perFile.isEmpty && notMatched.isEmpty) return parent
 
     // ---- the rewrite + insert plan, one write ----------------------------
     // (r22, guide §2.4/§1.2): formerly a UNION of filtered branches — kept
@@ -1321,6 +1291,9 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // once per branch, 3-4 times for the benched merges. One select with a
     // per-column CASE over the applied-clause index routes every row in a
     // SINGLE execution of the join (the shape Delta's writeAllChanges uses).
+    // Rows of a rewritten file emit when kept or updated; rows of a file
+    // that takes a deletion vector emit only as update images, since its
+    // kept rows stay where they are.
     //
     // Kept-exactly-once: a target row with SEVERAL source copies where none
     // applies must still be written once. When the last WHEN MATCHED clause
@@ -1343,12 +1316,13 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
         .filter(_._1.kind == "update")
     def isUpdate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       if (updateIdxs.isEmpty) lit(false) else c.isin(updateIdxs: _*)
-    val rewritePart: Option[DataFrame] =
-      if (touched.isEmpty) None
+    def rewritePart(rewrite: Vector[String], retire: Vector[String]): Option[DataFrame] =
+      if (rewrite.isEmpty && (retire.isEmpty || updateIdxs.isEmpty)) None
       else {
-        val srcMarked = source0.withColumn(srcMark, lit(true)).alias(sourceAlias)
-        val j = tgtScan(parent.copy(files = touched))
-          .join(srcMarked, onExpr, "left_outer")
+        // every target row with the index of the clause that applies to
+        // it (null: none applies, the row is kept)
+        val j = tgtScan(parent.copy(files = rewrite ++ retire))
+          .join(source0.withColumn(srcMark, lit(true)).alias(sourceAlias), onExpr, "left_outer")
           .withColumn("__graft_applied",
             when(col(srcMark).isNotNull, chain(matched, 0))
               .otherwise(chain(notMatchedBySource, 1000)))
@@ -1366,7 +1340,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
               (col("__graft_mn").isNull && col("__graft_rn") === 1) ||
                 isUpdate(col("__graft_applied")))
           }
-        Some(picked.where(emit).select(outSchema.fields.toIndexedSeq.map { f =>
+        val routed =
+          if (retire.isEmpty) emit
+          else when(col(VersionedTable.FkCol).isin(retire.map(VersionedTable.fileKey): _*),
+            isUpdate(col("__graft_applied"))).otherwise(emit)
+        Some(picked.where(routed).select(outSchema.fields.toIndexedSeq.map { f =>
           updateClauses.foldRight(tcolOrNull(f)) { case ((c, idx), rest) =>
             c.assignments.get(f.name) match {
               case Some(rhs) =>
@@ -1398,42 +1376,15 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
             }.as(f.name)
         }: _*))
       }
-    val parts = rewritePart.toSeq ++ insertPart.toSeq
-    if (parts.isEmpty) return parent // clauses can touch nothing: no-op, no churn
-    val out = parts.reduce(_ unionByName _)
-    // UPDATE/INSERT clauses can mint constraint-violating values — the
-    // fused guard aborts the rewrite before any commit publishes
-    val newFiles = writeDataFiles(guardChecks(out, Some(parent)), branch, parent.version + 1,
-      mapTo = Some(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]))
-    // insert-only merge with zero inserts: no-op, no version churn — decided
-    // from the landed footers (r21) instead of a separate isEmpty probe job
-    // that ran the whole insert anti-join twice
-    if (touched.isEmpty &&
-        newFiles.map(f => VersionedTable.footerRowCount(root.resolve(f)).getOrElse(1L)).sum == 0L) {
-      newFiles.headOption.foreach(f =>
-        graft.Tables.deleteRecursively(root.resolve(f).getParent))
-      return parent
-    }
-    val statCols = (parent.stats.values.flatMap(_.keys) ++
-      parent.strStats.values.flatMap(_.keys)).toSeq.distinct
-    val (newStats, newStrStats, newNullStats) =
-      if (statCols.isEmpty || newFiles.isEmpty)
-        (Map.empty[String, Map[String, (Double, Double)]],
-          Map.empty[String, Map[String, (String, String)]],
-          Map.empty[String, Map[String, Long]])
-      else collectFileStats(spark, newFiles, statCols, outSchema)
-    val untouchedSet = untouched.toSet
-    val (bCols, bFiles, bLegacy) = cowBloom(spark, parent, branch, untouchedSet, newFiles, outSchema)
-    publish(branch, Some(parent),
-      if (message.isEmpty) s"merge into on ($on)" else message,
-      outSchema, untouched ++ newFiles,
-      parent.stats.view.filterKeys(untouchedSet).toMap ++ newStats,
-      strStats = parent.strStats.view.filterKeys(untouchedSet).toMap ++ newStrStats,
-      nullStats = parent.nullStats.view.filterKeys(untouchedSet).toMap ++ newNullStats,
-      // untouched files keep their deletion vectors; touched files were read
-      // with DVs applied and rewritten, leaving only harmless dead entries
-      dvFiles = parent.dvFiles,
-      bloomStats = bLegacy, bloomCols = bCols, bloomFiles = bFiles)
+    retireOrRewrite(spark, parent, branch,
+      if (message.isEmpty) s"merge into on ($on)" else message, outSchema, retired,
+      // UPDATE/INSERT clauses can mint constraint-violating values — the
+      // fused guard aborts the write before any commit publishes
+      (rewrite, retire) => (rewritePart(rewrite, retire) ++ insertPart)
+        .reduceOption(_ unionByName _).map(guardChecks(_, Some(parent))),
+      // an insert-only merge with zero inserts is a no-op, decided from the
+      // landed footers (r21) instead of an isEmpty probe of the anti-join
+      noOpIfNothingLands = true)
   }
 
   /** Delta `DELETE FROM … WHERE`: remove the rows where `where` evaluates
@@ -1711,32 +1662,16 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
   def deleteWithVectors(spark: SparkSession, where: String, branch: String = "main",
                         message: String = ""): Commit = synchronized {
     guardWritable(branch)
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     val parent = head(branch).getOrElse(
       throw new IllegalArgumentException(s"no such branch: $branch"))
     if (parent.files.isEmpty) return parent
     val candidates = statsCandidates(parent, where)
     if (candidates.isEmpty) return parent
-    val matched = scanWithPos(spark, parent.copy(files = candidates))
-      .where(expr(where))
-      .select(col(VersionedTable.FkCol).as("fk"),
-        col(VersionedTable.PosCol).cast("long").as("pos"))
-    val rel = s"$branch-v${parent.version + 1}-dv-${java.util.UUID.randomUUID.toString.take(8)}"
-    val out = dataDir.resolve(rel)
-    // sorted WITHIN partitions by (fk, pos): each DV part-file's row
-    // groups cluster by file key, so the per-TASK DV load (r19,
-    // [[graft.sources.DvTaskLoader]]) prunes the DV parquet by row-group
-    // stats down to ~O(its own file's deletions). No extra shuffle — the
-    // matched scan's own partitioning (and its parallelism) is preserved.
-    // ONE pass (r21): the former `matched.isEmpty` probe ran the whole
-    // find-matches scan once before the write re-ran it; emptiness is read
-    // off the landed footers instead, and a no-match delete removes the
-    // empty output and returns the unchanged head exactly as before.
-    val dvNew = LakeFiles.write(matched.sortWithinPartitions("fk", "pos"), out, root)
-    if (dvNew.map(f => VersionedTable.footerRowCount(root.resolve(f)).getOrElse(1L)).sum == 0L) {
-      graft.Tables.deleteRecursively(out)
-      return parent
-    }
+    val dvNew = writeDeletionVectors(
+      scanWithPos(spark, parent.copy(files = candidates)).where(expr(where)),
+      branch, parent.version + 1)
+    if (dvNew.isEmpty) return parent // the delete matched nothing
     publish(branch, Some(parent),
       if (message.isEmpty) s"delete (merge-on-read) where ($where)" else message,
       DataType.fromJson(parent.schemaJson).asInstanceOf[StructType], parent.files,
@@ -1751,7 +1686,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
   def delete(spark: SparkSession, where: String, branch: String = "main",
              message: String = ""): Commit = synchronized {
     guardWritable(branch)
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val parent = head(branch).getOrElse(
       throw new IllegalArgumentException(s"no such branch: $branch"))
     if (parent.files.isEmpty) return parent
@@ -1762,50 +1697,33 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // input_file_name(): on a DV-bearing snapshot the live-row scan is a
     // multi-source join where input_file_name() throws, and only live rows
     // (DVs applied) should drive the rewrite set
-    val fkToRel = candidates.map(f => VersionedTable.fileKey(f) -> f).toMap
-    val touchedSet = scanWithPos(spark, parent.copy(files = candidates)).where(pred)
-      .select(col(VersionedTable.FkCol)).distinct().collect()
-      .map(r => fkToRel(r.getString(0)))
-      .toSet
-    if (touchedSet.isEmpty) return parent // delete matched nothing
-    val (touched, untouched) = parent.files.partition(touchedSet.contains)
+    val touchedKeys = retiredPerFile(
+      scanWithPos(spark, parent.copy(files = candidates)).where(pred)).keySet
+    if (touchedKeys.isEmpty) return parent // delete matched nothing
+    val (touched, untouched) =
+      parent.files.partition(f => touchedKeys(VersionedTable.fileKey(f)))
     val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
     val kept = readCommit(spark, parent.copy(files = touched))
       .where(not(coalesce(pred, lit(false)))) // NULL predicate keeps the row
-    val newFiles = writeDataFiles(kept, branch, parent.version + 1, mapTo = Some(schema))
-    val statCols = (parent.stats.values.flatMap(_.keys) ++
-      parent.strStats.values.flatMap(_.keys)).toSeq.distinct
-    val (newStats, newStrStats, newNullStats) =
-      if (statCols.isEmpty || newFiles.isEmpty) // all touched rows may be gone
-        (Map.empty[String, Map[String, (Double, Double)]],
-          Map.empty[String, Map[String, (String, String)]],
-          Map.empty[String, Map[String, Long]])
-      else collectFileStats(spark, newFiles, statCols, schema)
-    val untouchedSet = untouched.toSet // O(1) lookups: stat carry is O(F), not O(F^2)
-    val (bCols, bFiles, bLegacy) = cowBloom(spark, parent, branch, untouchedSet, newFiles, schema)
-    publish(branch, Some(parent),
-      if (message.isEmpty) s"delete where ($where)" else message,
-      schema, untouched ++ newFiles,
-      parent.stats.view.filterKeys(untouchedSet).toMap ++ newStats,
-      strStats = parent.strStats.view.filterKeys(untouchedSet).toMap ++ newStrStats,
-      nullStats = parent.nullStats.view.filterKeys(untouchedSet).toMap ++ newNullStats,
-      // untouched files keep their deletion vectors; touched files were read
-      // with DVs applied and rewritten, leaving only harmless dead entries
-      dvFiles = parent.dvFiles,
-      bloomStats = bLegacy, bloomCols = bCols, bloomFiles = bFiles)
+    commitDml(spark, parent, branch, if (message.isEmpty) s"delete where ($where)" else message,
+      schema, untouched, writeDataFiles(kept, branch, parent.version + 1, mapTo = Some(schema)))
   }
 
-  /** Row-level UPDATE (Delta `UPDATE t SET c = e WHERE p`) over the same
-    * copy-on-write machinery as [[delete]]: commit-log stats prune the
-    * candidate files, one scan finds the files actually holding matching
-    * rows, and ONLY those files are rewritten — matching rows get the `set`
-    * expressions applied (cast to the column's existing type, so the schema
-    * never drifts), non-matching rows in a touched file are carried
-    * byte-identical, and untouched files keep their file entries AND their
-    * per-file stats. A NULL predicate leaves the row unchanged (three-valued
-    * WHERE, same as [[delete]]'s keep rule). Updates surface in CDC
-    * ([[changes]] / [[changesFeed]]) as a delete of the before-image plus an
-    * insert of the after-image, restricted to the rewritten files.
+  /** Row-level UPDATE (Delta `UPDATE t SET c = e WHERE p`): commit-log
+    * stats prune the candidate files as for [[delete]], one scan lands the
+    * matching rows' positions as a deletion vector and counts them per file
+    * ([[landRetired]]), and [[retireOrRewrite]] decides per touched
+    * file. A file whose dead rows stay at or below 1/20 of its row count
+    * (Delta OPTIMIZE's deleted-rows purge ratio, which also caps a hot
+    * file's read amplification) keeps its entry, stats and bloom bits: its
+    * matching rows are retired by a deletion vector and their updated
+    * images land in a new file. A file past 1/20 is rewritten whole,
+    * non-matching rows carried byte-identical. Updated values are cast to the column's existing type,
+    * so the schema never drifts, and untouched files keep their entries AND
+    * their per-file stats. A NULL predicate leaves the row unchanged
+    * (three-valued WHERE, same as [[delete]]'s keep rule). Updates surface
+    * in CDC ([[changes]] / [[changesFeed]]) as a delete of the before-image
+    * plus an insert of the after-image, restricted to the touched files.
     *
     * `set` maps existing column names to SQL expressions evaluated against
     * the pre-update row (standard UPDATE semantics: all right-hand sides see
@@ -1826,48 +1744,195 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     val pred = expr(where)
     val candidates = statsCandidates(parent, where)
     if (candidates.isEmpty) return parent // stats alone prove nothing matches
-    // same DV-safe touched-file detection as delete (see comment there)
-    val fkToRel = candidates.map(f => VersionedTable.fileKey(f) -> f).toMap
-    val touchedSet = scanWithPos(spark, parent.copy(files = candidates)).where(pred)
-      .select(col(VersionedTable.FkCol)).distinct().collect()
-      .map(r => fkToRel(r.getString(0)))
-      .toSet
-    if (touchedSet.isEmpty) return parent // update matched nothing
-    val (touched, untouched) = parent.files.partition(touchedSet.contains)
-    // All SET right-hand sides evaluate against the OLD row: build every new
-    // column from the original scan in one select (no sequential withColumn,
-    // which would let later assignments see earlier ones).
+    // same DV-safe detection as delete (see comment there)
+    val hits = scanWithPos(spark, parent.copy(files = candidates)).where(pred)
+    val retired = landRetired(spark, parent, branch, candidates, Some(hits))
+    if (retired.perFile.isEmpty) return parent // update matched nothing
+    // All SET right-hand sides evaluate against the OLD row: build every
+    // new column from the original scan in one select (no sequential
+    // withColumn, which would let later assignments see earlier ones).
     val hit = coalesce(pred, lit(false)) // NULL predicate -> row unchanged
-    val rewritten = readCommit(spark, parent.copy(files = touched)).select(
+    def assign(rows: DataFrame): DataFrame = rows.select(
       schema.fields.toIndexedSeq.map { f =>
         set.get(f.name) match {
           case Some(rhs) => when(hit, expr(rhs).cast(f.dataType)).otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
       }: _*)
-    // SET can mint violating values — fuse the constraint guard into the rewrite
-    val newFiles = writeDataFiles(guardChecks(rewritten, Some(parent)), branch,
-      parent.version + 1, mapTo = Some(schema))
+    retireOrRewrite(spark, parent, branch,
+      if (message.isEmpty) s"update set (${set.keys.toSeq.sorted.mkString(", ")}) where ($where)"
+      else message,
+      schema, retired,
+      // a rewritten file lands whole, a retiring one only its updated
+      // rows; SET can mint violating values — fuse the constraint guard in
+      (rewrite, retire) => Seq(rewrite -> lit(true), retire -> hit).collect {
+        case (files, keep) if files.nonEmpty =>
+          assign(readCommit(spark, parent.copy(files = files)).where(keep))
+      }.reduceOption(_ unionByName _).map(guardChecks(_, Some(parent))))
+  }
+
+  /** Live rows `hits` (carrying the [[scanWithPos]] tag columns) counted
+    * per file key: the files a copy-on-write [[delete]] touches. The driver
+    * receives O(touched files) rows. */
+  private def retiredPerFile(hits: DataFrame): Map[String, Long] =
+    hits.groupBy(VersionedTable.FkCol).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** What a row-level DML statement's detection pass retired: `vector` is
+    * the new deletion-vector part-file holding the (file key, position) of
+    * every live row the statement replaces or deletes; per touched file
+    * key, `perFile` counts those rows and `deadBefore` the rows the
+    * parent's vectors already delete. `multiHit` is set when one position
+    * was hit more than once (several source rows applying to one target
+    * row of a MERGE). */
+  private case class Retired(vector: Vector[String], perFile: Map[String, Long],
+                             deadBefore: Map[String, Long], multiHit: Boolean,
+                             deterministic: Boolean)
+
+  /** Remove a landed but unpublished deletion-vector part-file set. */
+  private def dropVector(vector: Vector[String]): Unit =
+    vector.headOption.foreach(f => graft.Tables.deleteRecursively(root.resolve(f).getParent))
+
+  /** Land the detection pass `hits` of [[applyCdc]], [[mergeInto]] or
+    * [[update]] — over the parent's `scanned` files — as one
+    * deletion-vector part-file in the statement's single evaluation of it,
+    * then count it per file key with one small read of that file and of
+    * the parent's vectors for the scanned files. Entries for files the
+    * statement ends up rewriting are dead and harmless (readers match
+    * vectors by live file key); a statement that retires no file drops the
+    * file again ([[retireOrRewrite]]). */
+  private def landRetired(spark: SparkSession, parent: Commit, branch: String,
+                          scanned: Vector[String], hits: Option[DataFrame]): Retired = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, sum, when}
+    val deterministic = hits.forall(h =>
+      !h.queryExecution.analyzed.exists(_.expressions.exists(!_.deterministic)))
+    val vector = hits.map(h => writeDeletionVectors(
+      h.select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)).repartition(1),
+      branch, parent.version + 1)).getOrElse(Vector.empty)
+    if (vector.isEmpty) return Retired(vector, Map.empty, Map.empty, multiHit = false, deterministic)
+    def dv(files: Vector[String], fresh: Boolean) = spark.read.schema(VersionedTable.DvParquetSchema)
+      .parquet(files.map(f => root.resolve(f).toString): _*)
+      .withColumn("__new", lit(if (fresh) 1 else 0))
+    val all = if (parent.dvFiles.isEmpty) dv(vector, fresh = true)
+      else dv(vector, fresh = true).unionByName(dv(parent.dvFiles, fresh = false)
+        .where(col("fk").isInCollection(scanned.map(VersionedTable.fileKey))))
+    // one exchange: partitioning by fk co-locates every (fk, pos) group, so
+    // both aggregates run above it. Old positions count DISTINCT, as
+    // dvCardByKey does (merged branches can record one deleted row in two
+    // vector files); a fresh position counted twice is a multi-hit
+    val perFk = all.repartition(col("fk"))
+      .groupBy(col("fk"), col("pos"))
+      .agg(sum(col("__new")).as("__n"), count(lit(1)).as("__all"))
+      .groupBy(col("fk"))
+      .agg(sum(col("__n")).as("n"), count(when(col("__all") > col("__n"), lit(1))).as("dead"),
+        max(col("__n")).as("mx"))
+      .where(col("n") > 0)
+      .collect()
+    Retired(vector, perFk.map(r => r.getString(0) -> r.getLong(1)).toMap,
+      perFk.map(r => r.getString(0) -> r.getLong(2)).toMap,
+      multiHit = perFk.exists(_.getLong(3) > 1L), deterministic)
+  }
+
+  /** The one commit path of [[applyCdc]] (so [[upsert]]), [[mergeInto]] and
+    * [[update]]: retire a touched file's changed rows with a deletion
+    * vector, or rewrite the file.
+    *
+    * A file whose dead rows after the statement — its existing DV
+    * cardinality plus this statement's `retired` rows — stay at or below
+    * 1/[[VersionedTable.DvDeadRowsDivisor]] of its logged row count keeps
+    * its entry, stats and bloom bits, and `retired.vector` is published
+    * with it. Every other touched file, including one without a logged row
+    * count, and every file a non-deterministic statement touches, is
+    * rewritten. `rows(rewrite, retire)` is everything the statement lands:
+    * the kept rows of the rewritten files plus every new row image; it
+    * goes out in one write, and one commit publishes the carried files and
+    * the new ones with `dvFiles ++` the new vector. With
+    * `noOpIfNothingLands` a statement that retires nothing and lands no
+    * row returns the unchanged head. */
+  private def retireOrRewrite(spark: SparkSession, parent: Commit, branch: String,
+      message: String, schema: StructType, retired: Retired,
+      rows: (Vector[String], Vector[String]) => Option[DataFrame],
+      noOpIfNothingLands: Boolean = false): Commit = {
+    val perFile = retired.perFile
+    // the vector and the new row images come from separate evaluations of
+    // the statement, so a non-deterministic one (a rand() condition) would
+    // retire other rows than it replaces: it rewrites, which evaluates each
+    // row once
+    val (retire, rewrite) = parent.files.filter(f => perFile.contains(VersionedTable.fileKey(f)))
+      .partition { f =>
+        val fk = VersionedTable.fileKey(f)
+        retired.deterministic && parent.rowCounts.get(f).exists(n =>
+          VersionedTable.DvDeadRowsDivisor * (retired.deadBefore.getOrElse(fk, 0L) + perFile(fk)) <= n)
+      }
+    val dvNew = if (retire.isEmpty) { dropVector(retired.vector); Vector.empty } else retired.vector
+    val version = parent.version + 1
+    val newFiles = try rows(rewrite, retire).map(df => writeDataFiles(df, branch, version,
+        mapTo = Some(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType])))
+        .getOrElse(Vector.empty)
+      catch { case e: Throwable => dropVector(dvNew); throw e }
+    if (noOpIfNothingLands && perFile.isEmpty &&
+        newFiles.map(f => VersionedTable.footerRowCount(root.resolve(f)).getOrElse(1L)).sum == 0L) {
+      newFiles.headOption.foreach(f => graft.Tables.deleteRecursively(root.resolve(f).getParent))
+      return parent
+    }
+    commitDml(spark, parent, branch, message, schema,
+      parent.files.filterNot(rewrite.toSet), newFiles, dvNew)
+  }
+
+  /** Land the (file key, position) pairs of `hits` (carrying the
+    * [[scanWithPos]] tag columns) as one deletion-vector part-file set
+    * under `data/<branch>-v<version>-dv-<id>/`; returns its root-relative
+    * files, or nothing (and no directory) when no position landed.
+    *
+    * Sorted WITHIN partitions by (fk, pos): each DV part-file's row groups
+    * cluster by file key, so the per-TASK DV load (r19,
+    * [[graft.sources.DvTaskLoader]]) prunes the DV parquet by row-group
+    * stats down to ~O(its own file's deletions). No extra shuffle — the
+    * scan's own partitioning (and its parallelism) is preserved;
+    * [[landRetired]] funnels its hits into one part-file first. ONE pass
+    * (r21): emptiness is read off the landed footers instead of an
+    * `isEmpty` probe that would run the whole scan twice. */
+  private def writeDeletionVectors(hits: DataFrame, branch: String,
+                                   version: Long): Vector[String] = {
+    import org.apache.spark.sql.functions.col
+    val out = dataDir.resolve(
+      s"$branch-v$version-dv-${java.util.UUID.randomUUID.toString.take(8)}")
+    val dvNew = LakeFiles.write(
+      hits.select(col(VersionedTable.FkCol).as("fk"),
+        col(VersionedTable.PosCol).cast("long").as("pos"))
+        .sortWithinPartitions("fk", "pos"), out, root)
+    if (dvNew.map(f => VersionedTable.footerRowCount(root.resolve(f)).getOrElse(1L)).sum > 0L) dvNew
+    else {
+      graft.Tables.deleteRecursively(out)
+      Vector.empty
+    }
+  }
+
+  /** Publish a row-level DML result: `carried` parent files keep their
+    * entries, stats and bloom bits, `newFiles` get fresh stats over the
+    * parent's tracked column set (so skip-reads keep working) and a bloom
+    * sidecar, and `dvNew` joins the parent's deletion vectors. Entries of
+    * rewritten files left in the carried vectors are dead and harmless:
+    * readers and [[countRows]] match vectors by live file key. */
+  private def commitDml(spark: SparkSession, parent: Commit, branch: String,
+                        message: String, schema: StructType, carried: Vector[String],
+                        newFiles: Vector[String],
+                        dvNew: Vector[String] = Vector.empty): Commit = {
     val statCols = (parent.stats.values.flatMap(_.keys) ++
       parent.strStats.values.flatMap(_.keys)).toSeq.distinct
     val (newStats, newStrStats, newNullStats) =
-      if (statCols.isEmpty || newFiles.isEmpty)
+      if (statCols.isEmpty || newFiles.isEmpty) // a pure delete may land no file
         (Map.empty[String, Map[String, (Double, Double)]],
           Map.empty[String, Map[String, (String, String)]],
           Map.empty[String, Map[String, Long]])
       else collectFileStats(spark, newFiles, statCols, schema)
-    val untouchedSet = untouched.toSet // O(1) lookups: stat carry is O(F), not O(F^2)
-    val (bCols, bFiles, bLegacy) = cowBloom(spark, parent, branch, untouchedSet, newFiles, schema)
-    publish(branch, Some(parent),
-      if (message.isEmpty) s"update set (${set.keys.toSeq.sorted.mkString(", ")}) where ($where)"
-      else message,
-      schema, untouched ++ newFiles,
-      parent.stats.view.filterKeys(untouchedSet).toMap ++ newStats,
-      strStats = parent.strStats.view.filterKeys(untouchedSet).toMap ++ newStrStats,
-      nullStats = parent.nullStats.view.filterKeys(untouchedSet).toMap ++ newNullStats,
-      // untouched files keep their deletion vectors; touched files were read
-      // with DVs applied and rewritten, leaving only harmless dead entries
-      dvFiles = parent.dvFiles,
+    val carriedSet = carried.toSet // O(1) lookups: stat carry is O(F), not O(F^2)
+    val (bCols, bFiles, bLegacy) = cowBloom(spark, parent, branch, carriedSet, newFiles, schema)
+    publish(branch, Some(parent), message, schema, carried ++ newFiles,
+      parent.stats.view.filterKeys(carriedSet).toMap ++ newStats,
+      strStats = parent.strStats.view.filterKeys(carriedSet).toMap ++ newStrStats,
+      nullStats = parent.nullStats.view.filterKeys(carriedSet).toMap ++ newNullStats,
+      dvFiles = parent.dvFiles ++ dvNew,
       bloomStats = bLegacy, bloomCols = bCols, bloomFiles = bFiles)
   }
 
@@ -3453,7 +3518,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     * side. Object-wise lakeFS would merge that case too, but the row-level
     * outcome — an overwrite snapshot silently interleaved with the other
     * side's appended rows — is ambiguous enough that we refuse it loudly;
-    * redo the overwrite on the merged head instead.
+    * redo the overwrite on the merged head instead. Likewise two sides
+    * that both retired rows of one base file by deletion vector conflict
+    * when either side also added files, since that is how a merge-on-read
+    * upsert, MERGE or UPDATE replaces a row; two vector deletes compose.
     *
     * The merge commit records the source head as [[Commit.mergeParent]], so
     * the merge base ADVANCES: keep committing appends on `from` and merging —
@@ -3506,6 +3574,30 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
           s"merge conflict: $into replaced base files (overwrite/compact/revert) while " +
             s"$from appended — merging would silently graft $from's rows onto the rewritten " +
             "snapshot; redo the append on the merged head instead")
+      // a side that retired rows of a base file by deletion vector AND
+      // added files may have replaced those rows (upsert, MERGE or UPDATE
+      // on the retire side, or a vector delete plus an append); if the
+      // other side retired rows of the same file too, the union could keep
+      // two images of one row. File-granular, as copy-on-write was (both
+      // sides rewrote that file): refuse. Sides that only delete by vector
+      // still compose — a row deleted twice is deleted once.
+      val srcDvAdded = src.dvFiles.filterNot(base.dvFiles.toSet)
+      val dstDvAdded = dst.dvFiles.filterNot(base.dvFiles.toSet)
+      if (srcDvAdded.nonEmpty && dstDvAdded.nonEmpty && (srcAdded.nonEmpty || dstAdded.nonEmpty)) {
+        val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+          .getOrElse(throw new IllegalStateException(
+            s"merge $from into $into must compare both sides' deletion vectors, " +
+              "which needs an active SparkSession"))
+        def fks(dvs: Vector[String]) =
+          VersionedTable.dvDistinctFks(spark, dvs.map(f => root.resolve(f).toString))
+        val both = fks(srcDvAdded) intersect fks(dstDvAdded) intersect
+          base.files.map(VersionedTable.fileKey).toSet
+        if (both.nonEmpty) throw new IllegalStateException(
+          s"merge conflict: $from and $into both retired rows of ${both.size} base " +
+            s"file(s) by deletion vector since the merge base, and rows were added " +
+            s"as well (e.g. ${both.toSeq.sorted.take(3).mkString(", ")}) — merging " +
+            "could keep two versions of one row; redo one side's change on the merged head")
+      }
       if (src.schemaJson != dst.schemaJson) throw new IllegalStateException(
         s"merge conflict: $from and $into disagree on the table schema")
       // TABLE-PROPERTIES 3-way merge (constraints included), git's per-key
@@ -3717,9 +3809,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     def vHead(b: String): Option[Commit] =
       (if (dryRun) repairs.get(b).map(loadCommit) else None).orElse(head(b))
     val vReachable = Ancestry.reachableIds(loadCommit, branches.flatMap(vHead))
-    sweep((branches.flatMap(b => lineageTake(vHead(b), retainLast).flatMap(_.allFiles)) ++
-      stagedFiles).toSet ++ slotProtectedFiles(vReachable) ++ taggedFiles ++
-      reachableManifests(vReachable), dryRun)
+    LakeFiles.sweep(root, dataDir,
+      (branches.flatMap(b => lineageTake(vHead(b), retainLast).flatMap(_.allFiles)) ++
+        stagedFiles).toSet ++ slotProtectedFiles(vReachable) ++ taggedFiles ++
+        reachableManifests(vReachable), dryRun)
   }
 
   /** Manifests of every REACHABLE commit (r20 review fix): the commit
@@ -3752,10 +3845,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     def vHead(b: String): Option[Commit] =
       (if (dryRun) repairs.get(b).map(loadCommit) else None).orElse(head(b))
     val vReachable = Ancestry.reachableIds(loadCommit, branches.flatMap(vHead))
-    sweep((branches.flatMap(b => lineageFrom(vHead(b)).zipWithIndex.collect {
-      case (c, i) if i == 0 || c.ts >= cutoff => c.allFiles // i==0 = the head
-    }.flatten) ++ stagedFiles).toSet ++ slotProtectedFiles(vReachable) ++
-      taggedFiles ++ reachableManifests(vReachable), dryRun)
+    LakeFiles.sweep(root, dataDir,
+      (branches.flatMap(b => lineageFrom(vHead(b)).zipWithIndex.collect {
+        case (c, i) if i == 0 || c.ts >= cutoff => c.allFiles // i==0 = the head
+      }.flatten) ++ stagedFiles).toSet ++ slotProtectedFiles(vReachable) ++
+        taggedFiles ++ reachableManifests(vReachable), dryRun)
   }
 
   /** Crash recovery for this table's slots — semantics and guards live in
@@ -3780,19 +3874,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
   private def stagedFiles: Seq[String] =
     branches.filter(hasStaged).flatMap(b =>
       CommitLog.fromJson(store.read(refsDir.resolve(b + ".staged"))).files)
-
-  /** [[LakeFiles.sweep]] every data-plane file not in `retained` (or just
-    * COUNT them when `dryRun`), then prune emptied commit dirs. */
-  private def sweep(retained: Set[String], dryRun: Boolean = false): Int = {
-    val dead = LakeFiles.sweep(root, dataDir, retained, dryRun)
-    // prune now-empty commit directories
-    if (!dryRun && Files.exists(dataDir)) listDir(dataDir).foreach { d =>
-      if (Files.isDirectory(d) && !listDir(d).exists(p =>
-            LakeFiles.dataPlane(p.getFileName.toString)))
-        graft.Tables.deleteRecursively(d)
-    }
-    dead
-  }
 
   /** CDC between two versions of a branch: row-level changes as a DataFrame
     * of (change_type, row-columns).
@@ -4560,6 +4641,15 @@ object VersionedTable {
     * column get bloom-probed against candidate files ([[mergeInto]]) —
     * the point-upsert shape; bigger sources rely on range pruning. */
   private[graft] val MaxMergeBloomProbes = 1024
+
+  /** Row-level DML retires a touched file's changed rows with a deletion
+    * vector while the file's dead rows stay at or below 1/20 of its rows,
+    * and rewrites the file past that (`VersionedTable.retireOrRewrite`).
+    * 1/20 is the deleted-rows ratio at which Delta's OPTIMIZE purges a
+    * file's deletion vectors; it also bounds the read amplification of a
+    * hot file, which repeated upserts push back to a rewrite that
+    * materializes its old vectors. A constant, not a knob. */
+  private[graft] val DvDeadRowsDivisor = 20
 
   /** Column types a bloom index can hash with an exactly reproducible
     * probe image: strings (UTF-8 bytes) and integrals (the cast-to-long

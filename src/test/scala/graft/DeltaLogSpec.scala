@@ -1011,16 +1011,19 @@ class DeltaLogSpec extends SparkSpec {
       (1L to 8000L).count(_ % 3 != 0).toLong)
     assert(DeltaLogReader.changes(spark, vt.root.toString, 2, 2).count() >= 1)
     // log retention: checkpoint the head and prune ALL commit JSON. The v2
-    // upsert rewrote every file (no DVs survive into the checkpointed
-    // snapshot), so the old DV bins and the cdc files become genuinely
-    // unreferenced history — the sweep reclaims exactly them, and the
-    // checkpointed snapshot still reads in full (delta-spark's VACUUM
-    // retires aged _change_data the same way)
+    // upsert's one key lives in the first file, which (a third of its rows
+    // dead) was rewritten; the second file holds no upserted key and was
+    // carried with its vector. So the first file's DV bin and the cdc files
+    // become genuinely unreferenced history — the sweep reclaims exactly
+    // them, keeps the bin the checkpointed snapshot still references, and
+    // that snapshot still reads in full (delta-spark's VACUUM retires aged
+    // _change_data the same way)
+    assert(liveBins.size === 2, "one DV bin per file")
     DeltaLogWriter.writeCheckpoint(spark, vt.root.toString, 2L)
     (0L to 2L).foreach(v =>
       Files.delete(vt.root.resolve("_delta_log").resolve(f"$v%020d.json")))
-    assert(vt.vacuumDeltaExport(spark) === liveBins.size + liveCdcs.size)
-    assert(dvBins.isEmpty && cdcFiles.isEmpty)
+    assert(vt.vacuumDeltaExport(spark) === liveBins.size - 1 + liveCdcs.size)
+    assert(dvBins.size === 1 && liveBins.contains(dvBins.head) && cdcFiles.isEmpty)
     assert(DeltaLogReader.read(spark, vt.root.toString, None).count() ===
       (1L to 8000L).count(_ % 3 != 0).toLong)
   }

@@ -223,11 +223,20 @@ class PropertySpec extends SparkSpec {
     // The stats-based file pruning is an OPTIMIZATION: for any table layout
     // and any source key set, the COW result must be row-identical to the
     // definitionally-correct (keep = table ∖ source-keys) ∪ source — and the
-    // CDC over the interval must be exactly the value-level delta.
-    val tableGen: Gen[List[(Int, Int)]] = Gen.listOfN(30,
-      for { k <- Gen.choose(0, 49); v <- Gen.choose(0, 9) } yield (k, v))
-    val srcGen: Gen[List[(Int, Int)]] = Gen.listOfN(8,
-      for { k <- Gen.choose(0, 59); v <- Gen.choose(10, 19) } yield (k, v))
+    // CDC over the interval must be exactly the value-level delta. Sized so
+    // both sides of the retire-or-rewrite rule run: four files of ~80 rows,
+    // scattered source keys (about one per file: retired by a deletion
+    // vector) plus a dense band of 12 keys (several rows of one file, past
+    // 1/20: rewritten).
+    val tableGen: Gen[List[(Int, Int)]] = Gen.listOfN(400,
+      for { k <- Gen.choose(0, 799); v <- Gen.choose(0, 9) } yield (k, v))
+    val srcGen: Gen[List[(Int, Int)]] = for {
+      scattered <- Gen.listOfN(8,
+        for { k <- Gen.choose(0, 899); v <- Gen.choose(10, 19) } yield (k, v))
+      lo <- Gen.choose(0, 780)
+      band <- Gen.listOfN(12, Gen.choose(10, 19))
+    } yield scattered ++ band.zipWithIndex.map { case (v, i) => (lo + i, v) }
+    var (retired, rewritten) = (0, 0)
     samples(Gen.zip(tableGen, srcGen), 6).zipWithIndex.foreach {
       case ((tableRows0, srcRows0), i) =>
         // one row per key (upsert targets are key-unique relations)
@@ -235,9 +244,11 @@ class PropertySpec extends SparkSpec {
         val srcRows = srcRows0.groupBy(_._1).values.map(_.head).toList
         if (tableRows.nonEmpty && srcRows.nonEmpty) {
           val vt = VersionedTable.create(Tables.scratch(s"prop_cow_$i"))
-          vt.write(tableRows.toDF("k", "v").repartitionByRange(4, col("k")),
+          val c0 = vt.write(tableRows.toDF("k", "v").repartitionByRange(4, col("k")),
             "main", "v0", statsCols = Seq("k"))
-          vt.upsert(spark, srcRows.toDF("k", "v"), keyCols = Seq("k"))
+          val c1 = vt.upsert(spark, srcRows.toDF("k", "v"), keyCols = Seq("k"))
+          if (c1.dvFiles.nonEmpty) retired += 1
+          if (!c0.files.forall(c1.files.contains)) rewritten += 1
           val got = vt.read(spark, "main").as[(Int, Int)].collect().toSet
           val srcKeys = srcRows.map(_._1).toSet
           val expected = tableRows.filterNot(r => srcKeys(r._1)).toSet ++ srcRows
@@ -249,8 +260,10 @@ class PropertySpec extends SparkSpec {
           val deletes = cdc.collect { case ("delete", k, v) => (k, v) }.toSet
           assert(inserts === (expected -- tableRows.toSet), s"case $i inserts")
           assert(deletes === (tableRows.toSet -- expected), s"case $i deletes")
+          assert(vt.countRows(spark, "main") === expected.size.toLong, s"case $i count")
         }
     }
+    assert(retired > 0 && rewritten > 0, s"retired in $retired cases, rewrote in $rewritten")
   }
 
   test("property: generalized mergeInto equals the naive per-row clause evaluation on random data") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.vt.{LocalFsMetaStore, MetaStore, Repo, S3SimMetaStore}
 
 /** Multi-table repo semantics: atomic cross-table commits, reset drops the
@@ -162,6 +164,29 @@ class RepoSpec extends SparkSpec {
       s"retained file vanished: $f"))
     assert(repo.readTable(spark, "main", "a").as[Int].collect() === Array(2))
     assertThrows[Exception](repo.readTableAsOf(spark, "main", "a", 0).collect())
+  }
+
+  test("repo vacuum prunes the commit directories it empties") {
+    val repo = freshRepo("repo_vacuum_dirs")
+    def emptyDirs: List[java.nio.file.Path] = {
+      val w = java.nio.file.Files.walk(repo.root.resolve("data"))
+      try w.iterator().asScala.filter(p => java.nio.file.Files.isDirectory(p) && {
+        val st = java.nio.file.Files.list(p)
+        try !st.iterator().hasNext finally st.close()
+      }).toList
+      finally w.close()
+    }
+    (0 until 2).foreach { i =>
+      repo.stageWrite(Seq(i).toDF("x"), "main", "t")
+      repo.commit("main", s"v$i")
+    }
+    assert(repo.vacuum(retainLast = 1) > 0)
+    assert(emptyDirs.isEmpty, s"vacuum left empty directories: ${emptyDirs.mkString(", ")}")
+    repo.stageWrite(Seq(2).toDF("x"), "main", "t")
+    repo.commit("main", "v2")
+    assert(repo.vacuumRetainHours(0) > 0)
+    assert(emptyDirs.isEmpty, s"vacuumRetainHours left: ${emptyDirs.mkString(", ")}")
+    assert(repo.readTable(spark, "main", "t").as[Int].collect() === Array(2))
   }
 
   test("repo tags pin every table of a multi-table state through vacuum") {

@@ -358,12 +358,32 @@ class VtDataSourceSpec extends SparkSpec {
         bloomCols = Seq("d")))
     intercept[IllegalArgumentException](
       vt.write(part(0), "main", "bad", bloomCols = Seq("nosuch")))
-    // COW update: untouched files keep blooms, the rewritten file gets a
-    // fresh one — the lookup stays single-file and sees the new value
+    // a snapshot with deletion vectors reads merge-on-read: the data files
+    // a point lookup opens are those of the MOR relation's pruned scan
+    def morOpened(key: String): Int = {
+      val h = vt.head("main").get
+      def fk(p: String) = p.split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
+      new graft.sources.VtMorRelation(spark.sqlContext, vt, h)
+        .scanPlan(Array("k", "v"), Array(org.apache.spark.sql.sources.EqualTo("k", key)))
+        .inputFiles.map(fk).count(h.files.map(fk).toSet)
+    }
+    // one of file A's 40 rows changes (1/40, within 1/20): A keeps its
+    // entry and bloom bits, the old row is retired by a deletion vector and
+    // its new image lands in a new file — the lookup sees the new value but
+    // opens two files, A (whose bits still hold the key) and the new one
     vt.update(spark, "k = 'id-0006'", Map("v" -> "999"))
     val q2 = readVt(root).where($"k" === "id-0006")
-    assert(q2.as[(String, Long)].head() === (("id-0006", 999L)))
-    assert(scanned(q2) === 1, "the post-COW bloom must keep pruning")
+    assert(q2.as[(String, Long)].collect().toSeq === Seq(("id-0006", 999L)))
+    assert(vt.head("main").get.dvFiles.nonEmpty && morOpened("id-0006") === 2,
+      "A's carried bloom keeps the retired key")
+    // COW update: two more of A's rows push it past 1/20, so A is rewritten
+    // with a fresh bloom (its vector materialized); untouched files keep
+    // theirs — the lookup is single-file again and sees the new value
+    vt.update(spark, "k IN ('id-0009', 'id-0012')", Map("v" -> "999"))
+    val q3 = readVt(root).where($"k".isin("id-0006", "id-0009"))
+    assert(q3.as[(String, Long)].collect().toSeq.sorted ===
+      Seq(("id-0006", 999L), ("id-0009", 999L)))
+    assert(morOpened("id-0006") === 1, "the post-COW bloom must keep pruning")
     // reopen: the sidecar paths round-trip through the commit-log JSON and
     // a FRESH handle loads them (probe parity with the writing handle)
     val vt2 = VersionedTable.open(root)

@@ -19,10 +19,12 @@ and sorts every file into one kind:
   orphan crc              checksum sidecars whose file is gone
   _SUCCESS                job-commit markers
   other                   everything else (refs, locks, Delta DV binaries)
+  empty dir               directories holding nothing (0 bytes each), such
+                          as commit directories a vacuum emptied
 
 Prints one table per root and, for several roots, their total. `--check`
-exits 1 when any root holds a snappy data parquet file, a `_SUCCESS` marker
-or an orphan checksum file.
+exits 1 when any root holds a snappy data parquet file, a `_SUCCESS` marker,
+an orphan checksum file or an empty directory.
 Needs only pyarrow.
 """
 import os
@@ -67,9 +69,12 @@ def kind_of(dirpath, name):
 
 
 def survey(root):
-    """{kind: [files, bytes]} over every regular file under `root`."""
+    """{kind: [files, bytes]} over every regular file and every empty
+    directory under `root`."""
     out = defaultdict(lambda: [0, 0])
-    for dirpath, _, names in os.walk(root):
+    for dirpath, dirnames, names in os.walk(root):
+        if not dirnames and not names and dirpath != root:
+            out["empty dir"][0] += 1
         for name in names:
             path = os.path.join(dirpath, name)
             if os.path.isfile(path) and not os.path.islink(path):
@@ -105,7 +110,7 @@ def main(argv):
     if len(roots) > 1:
         print_table("total", total)
     bad = {k: v for k, v in total.items()
-           if k in ("data parquet (snappy)", "_SUCCESS", "orphan crc")}
+           if k in ("data parquet (snappy)", "_SUCCESS", "orphan crc", "empty dir")}
     if "--check" in flags and bad:
         print("check failed: " + ", ".join(f"{k} x{v[0]}" for k, v in sorted(bad.items())),
               file=sys.stderr)
