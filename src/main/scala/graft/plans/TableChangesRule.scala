@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{SourcePaths, VtAddress}
-import graft.vt.VersionedTable
+import graft.vt.{CommitGraph, VersionedTable}
 
 /** Delta's CDF SQL surface as a registered TABLE-VALUED FUNCTION:
   *
@@ -73,10 +73,7 @@ object TableChanges {
     // stays on the native feed.
     locally {
       val root = java.nio.file.Paths.get(local)
-      val isVtRoot = java.nio.file.Files.exists(root.resolve("_graft_table")) ||
-        (java.nio.file.Files.isDirectory(root.resolve("commits")) &&
-          java.nio.file.Files.isDirectory(root.resolve("refs")))
-      if (!isVtRoot &&
+      if (!CommitGraph.isTableRoot(root) &&
           java.nio.file.Files.isDirectory(root.resolve("_delta_log"))) {
         require(branch == "main",
           "foreign Delta tables have no branches — drop the 'branch@' prefix")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.vt.{Commit, VersionedTable}
+import graft.vt.{Commit, CommitGraph, VersionedTable}
 
 /** The DSv2 front end for versioned tables: a [[TableCatalog]] that makes
   * them first-class SQL citizens, unlocking the time-travel SYNTAX the
@@ -502,18 +502,13 @@ final class VtCatalog extends TableCatalog with StagingTableCatalog {
     * table root and every other branch's data stay; a failed
     * branch-scoped CTAS thus cleans up exactly what it created). A plain
     * (main) identifier deletes the table tree, and ONLY when the path
-    * verifiably IS a versioned table root — the `_graft_table` marker,
-    * or BOTH the `commits` and `refs` control directories for pre-marker
-    * tables (a lone `commits` subfolder in some unrelated tree must
-    * never authorize a recursive delete). Anything else answers false
-    * and is left untouched. */
+    * verifiably IS a versioned table root ([[CommitGraph.isTableRoot]]:
+    * never a repo root, never an unrelated tree that merely has a
+    * `commits` folder). Anything else answers false and is left
+    * untouched. */
   override def dropTable(ident: Identifier): Boolean = {
     val (branch, path) = parseAddress(ident)
-    val root = java.nio.file.Paths.get(path)
-    val isVtRoot = java.nio.file.Files.exists(root.resolve("_graft_table")) ||
-      (java.nio.file.Files.isDirectory(root.resolve("commits")) &&
-        java.nio.file.Files.isDirectory(root.resolve("refs")))
-    if (!isVtRoot) false
+    if (!CommitGraph.isTableRoot(java.nio.file.Paths.get(path))) false
     else if (branch != "main") {
       // drop the BRANCH, not the table: its exclusive files become
       // vacuumable orphans; a missing branch answers false. When the

@@ -2,12 +2,12 @@ package graft.vt
 
 import scala.collection.mutable
 
-/** Commit-DAG ancestry walks shared by [[VersionedTable]] and [[Repo]].
+/** Commit-DAG ancestry walks of the [[CommitGraph]].
   *
   * History is a DAG, not a chain, because merge commits record the merged-in
   * source head as a second parent ([[Commit.mergeParent]]) — the same model
-  * as git and lakeFS commit graphs. Both helpers take the store's `load`
-  * function so each layer keeps its own commit storage.
+  * as git and lakeFS commit graphs. The helpers take the graph's `load`
+  * function.
   *
   * Cost: O(history) tiny JSON metadata reads in the worst case — these run on
   * the driver against the commit log, never against data files, so they are

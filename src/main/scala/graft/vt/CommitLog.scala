@@ -357,11 +357,4 @@ object CommitLog {
         s"concurrent write to $branch: version $version was already claimed by " +
           "another writer — re-read the branch head and retry the write")
   }
-
-  /** Atomic file write on the DEFAULT (local-FS) store — kept as the
-    * entry point crash-simulation specs drive directly. */
-  def writeAtomic(target: Path, content: String): Unit =
-    LocalFsMetaStore.put(target, content)
-
-  def readString(p: Path): String = LocalFsMetaStore.read(p)
 }

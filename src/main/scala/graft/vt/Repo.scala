@@ -1,6 +1,6 @@
 package graft.vt
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -12,30 +12,25 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * to any number of tables, then one `commit` publishes them together — a
   * reader on the branch either sees all of the batch or none of it.
   *
-  * Implementation: one commit log (reusing [[CommitLog]]'s record + atomic
-  * rename publication); `files` entries are namespaced `tableName/…` paths and
-  * `schemaJson` holds a JSON object of per-table schemas. Branch / merge /
-  * diff / time-travel semantics carry over from the single-table layer
-  * unchanged, because they only manipulate commit ids and file lists.
+  * Implementation: the same [[CommitGraph]] as a table — refs, lineage,
+  * checkpointed time travel, version-slot publish, tags, protection and
+  * vacuum retention are shared. A repo commit's `files` are namespaced
+  * `data/<table>/…` paths in path-only manifests, and `schemaJson` holds a
+  * JSON object of per-table schemas. What stays here is that multi-table
+  * snapshot, staging, the table-granular merge rule and the reads.
   *
   * Scale posture matches VersionedTable: metadata is O(tables + files) JSON,
   * data files are immutable parquet read through the stock DataFrameReader.
   */
-final class Repo private (val root: Path, val store: MetaStore) {
+final class Repo private (val root: Path, val store: MetaStore) extends CommitGraph {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private def commitsDir = root.resolve("commits")
-  private def refsDir = root.resolve("refs")
-  private def dataDir = root.resolve("data")
 
   /** branch → staged (table → (files, schemaJson)) accumulated until commit. */
   private val staged = scala.collection.mutable.Map
     .empty[String, scala.collection.mutable.LinkedHashMap[String, (Vector[String], String)]]
 
-  def head(branch: String): Option[Commit] = {
-    val ref = refsDir.resolve(branch)
-    if (store.exists(ref)) Some(loadCommit(store.read(ref).trim)) else None
-  }
+  protected def stagedFiles: Seq[String] = staged.values.flatMap(_.values.flatMap(_._1)).toSeq
 
   /** Data files live under `data/<table>/…` relative to the repo root. */
   private def tablePrefix(table: String): String = s"data/$table/"
@@ -99,35 +94,42 @@ final class Repo private (val root: Path, val store: MetaStore) {
         current.map(_._2).getOrElse(df.schema.json)))
   }
 
-  /** Publish every staged table of `branch` as ONE commit (atomic rename of
-    * the ref: concurrent readers see the old snapshot or the full new one). */
+  /** One JSON object of per-table schemas, keys sorted. */
+  private def schemasJson(schemas: Map[String, String]): String = {
+    val m = new java.util.LinkedHashMap[String, String]()
+    schemas.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
+    mapper.writeValueAsString(m)
+  }
+
+  /** Publish a repo snapshot on `branch` over `parent`: path-only manifests
+    * (the repo layer tracks no per-file stats; untouched tables' segments
+    * carry by reference), then the shared publish tail. */
+  private def publishSnapshot(branch: String, parent: Option[Commit], files: Vector[String],
+                              schemaJson: String, message: String,
+                              candidateRefs: Vector[String],
+                              mergeParent: Option[String] = None): Commit = {
+    val version = parent.map(_.version + 1).getOrElse(0L)
+    val (mrefs, ordered) = buildManifests(branch, version, candidateRefs, files,
+      f => ManifestEntry(f, None, None, Map.empty, Map.empty, Map.empty))
+    publishCommit(branch, Commit(newCommitId(branch, version), parent.map(_.id), version,
+      ordered, schemaJson, message, System.currentTimeMillis(),
+      mergeParent = mergeParent, manifests = mrefs))
+  }
+
+  /** Publish every staged table of `branch` as ONE commit: concurrent
+    * readers see the old snapshot or the full new one. */
   def commit(branch: String, message: String): Commit = synchronized {
     guardWritable(branch)
     val batch = staged.getOrElse(branch,
       throw new IllegalStateException(s"nothing staged on $branch"))
     require(batch.nonEmpty, s"nothing staged on $branch")
     val parent = head(branch)
-    val parentSchemas = parent.map(tableSchemas).getOrElse(Map.empty)
     val untouched = parent.map(_.files.filterNot(f =>
       batch.keys.exists(t => f.startsWith(tablePrefix(t))))).getOrElse(Vector.empty)
-    val files = untouched ++ batch.values.flatMap(_._1)
-    val schemas = parentSchemas ++ batch.map { case (t, (_, sj)) => t -> sj }
-    val schemaJson = {
-      val m = new java.util.LinkedHashMap[String, String]()
-      schemas.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
-      mapper.writeValueAsString(m)
-    }
-    val version = parent.map(_.version + 1).getOrElse(0L)
-    // same cross-process CAS as VersionedTable.publish: no silent forks
-    CommitLog.claimVersionSlot(root.resolve("locks"), branch, version, store = store)
-    val id = s"$branch-v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-    val (mrefs, ordered) = buildManifests(branch, version,
-      parent.map(_.manifests).getOrElse(Vector.empty), files.toVector)
-    val c = Commit(id, parent.map(_.id), version, ordered, schemaJson,
-      message, System.currentTimeMillis(), manifests = mrefs)
-    store.put(commitsDir.resolve(id + ".json"), CommitLog.toJson(c))
-    if (parent.isEmpty) branchIndex.add(branch) // before the ref (see branches)
-    store.put(refsDir.resolve(branch), id)
+    val schemas = parent.map(tableSchemas).getOrElse(Map.empty) ++
+      batch.map { case (t, (_, sj)) => t -> sj }
+    val c = publishSnapshot(branch, parent, untouched ++ batch.values.flatMap(_._1),
+      schemasJson(schemas), message, parent.map(_.manifests).getOrElse(Vector.empty))
     staged.remove(branch)
     c
   }
@@ -138,57 +140,22 @@ final class Repo private (val root: Path, val store: MetaStore) {
       LakeFiles.delete(root.resolve(f)))))
   }
 
-  def readTable(spark: SparkSession, branch: String, table: String): DataFrame = {
-    val c = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
-    readTableAt(spark, c, table)
-  }
+  def readTable(spark: SparkSession, branch: String, table: String): DataFrame =
+    readTableAt(spark, headOrThrow(branch), table)
 
-  /** `(branch, version)` → commit via a bounded head-down walk: O(head −
-    * version) metadata loads, never a full-lineage materialization. (Repo
-    * histories are human-paced multi-table commits, orders of magnitude
-    * shorter than a streaming table's — the table layer's checkpoint index
-    * covers that case; here the bounded walk is the proportionate shape.) */
-  private def commitAt(branch: String, version: Long): Commit = {
-    val h = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
-    if (version > h.version || version < 0)
-      throw new IllegalArgumentException(s"no version $version on $branch")
-    @annotation.tailrec
-    def walk(c: Commit): Commit =
-      if (c.version == version) c
-      else c.parent match {
-        case Some(p) => walk(loadCommit(p))
-        case None => throw new IllegalArgumentException(s"no version $version on $branch")
-      }
-    walk(h)
-  }
-
-  /** Repo-wide time travel: every table as of one repo version. */
+  /** Repo-wide time travel: every table as of one repo version, resolved
+    * through the checkpoint index like a table's. */
   def readTableAsOf(spark: SparkSession, branch: String, table: String,
                     version: Long): DataFrame =
-    readTableAt(spark, commitAt(branch, version), table)
+    readTableAt(spark, resolveVersion(branch, version), table)
 
   /** Repo-wide time travel by COMMIT TIMESTAMP (Delta `timestampAsOf` /
-    * lakeFS ref@timestamp at repo scope): resolve the newest commit at or
-    * before `tsMillis` on the branch's first-parent lineage, then read one
-    * table out of that snapshot. First-parent timestamps are nondecreasing
-    * (every commit stamps after its parent), so the head-down walk stops at
-    * the FIRST qualifying commit — O(commits since `tsMillis`), not a full
-    * lineage replay. */
+    * lakeFS ref@timestamp at repo scope): the newest commit at or before
+    * `tsMillis` on the branch's first-parent lineage, then one table out of
+    * that snapshot. */
   def readTableAsOfTimestamp(spark: SparkSession, branch: String, table: String,
-                             tsMillis: Long): DataFrame = {
-    def fail() = throw new IllegalArgumentException(
-      s"no commit on $branch at or before timestamp $tsMillis (first commit is later)")
-    @annotation.tailrec
-    def walk(c: Commit): Commit =
-      if (c.ts <= tsMillis) c
-      else c.parent match {
-        case Some(p) => walk(loadCommit(p))
-        case None => fail()
-      }
-    readTableAt(spark, walk(head(branch).getOrElse(fail())), table)
-  }
+                             tsMillis: Long): DataFrame =
+    readTableAt(spark, commitAtTimestamp(branch, tsMillis), table)
 
   /** Row-level CDC for ONE table between two REPO versions — lakectl diff's
     * row-granular cousin, file-granular like [[VersionedTable.changes]]:
@@ -208,16 +175,8 @@ final class Repo private (val root: Path, val store: MetaStore) {
   def tableChanges(spark: SparkSession, branch: String, table: String,
                    fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    // one bounded walk reaches both endpoints (to sits on from's path down)
-    val to = commitAt(branch, toVersion)
-    @annotation.tailrec
-    def down(c: Commit): Commit =
-      if (c.version == fromVersion) c
-      else c.parent match {
-        case Some(p) => down(loadCommit(p))
-        case None => throw new IllegalArgumentException(s"no version $fromVersion on $branch")
-      }
-    val from = if (fromVersion <= toVersion) down(to) else commitAt(branch, fromVersion)
+    val to = resolveVersion(branch, toVersion)
+    val from = resolveVersion(branch, fromVersion)
     val fromFiles = tableFiles(from, table)
     val toFiles = tableFiles(to, table)
     require(tableSchemas(to).contains(table) || tableSchemas(from).contains(table),
@@ -232,11 +191,7 @@ final class Repo private (val root: Path, val store: MetaStore) {
         .filterNot(f => toSchema.exists(_.fieldNames.contains(f.name)))
     def readSide(files: Vector[String], schema: Option[StructType]): DataFrame = {
       val own = schema.getOrElse(StructType(unionFields))
-      val raw =
-        if (files.isEmpty)
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), own)
-        else spark.read.schema(own).parquet(files.map(f => root.resolve(f).toString): _*)
-      raw.select(unionFields.toIndexedSeq.map { f =>
+      readFiles(spark, files, own).select(unionFields.toIndexedSeq.map { f =>
         if (own.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }: _*)
@@ -247,73 +202,18 @@ final class Repo private (val root: Path, val store: MetaStore) {
       .unionByName(before.exceptAll(after).withColumn("change_type", lit("delete")))
   }
 
-  private def readTableAt(spark: SparkSession, c: Commit, table: String): DataFrame = {
-    val schema = DataType.fromJson(tableSchemas(c).getOrElse(table,
-      throw new IllegalArgumentException(s"no table '$table' in commit ${c.id}")))
-      .asInstanceOf[StructType]
-    val files = tableFiles(c, table)
+  private def readFiles(spark: SparkSession, files: Vector[String], schema: StructType): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     else spark.read.schema(schema).parquet(files.map(f => root.resolve(f).toString): _*)
-  }
+
+  private def readTableAt(spark: SparkSession, c: Commit, table: String): DataFrame =
+    readFiles(spark, tableFiles(c, table), DataType.fromJson(tableSchemas(c).getOrElse(table,
+      throw new IllegalArgumentException(s"no table '$table' in commit ${c.id}")))
+      .asInstanceOf[StructType])
 
   def tables(branch: String): Seq[String] =
     head(branch).map(tableSchemas(_).keys.toSeq.sorted).getOrElse(Seq.empty)
-
-  /** lakeFS branch create: zero-copy head pointer. */
-  def createBranch(name: String, from: String = "main"): Unit = synchronized {
-    require(!store.exists(refsDir.resolve(name)), s"branch exists: $name")
-    branchIndex.add(name)
-    val h = head(from).getOrElse(throw new IllegalArgumentException(s"no such branch: $from"))
-    store.put(refsDir.resolve(name), h.id)
-  }
-
-  private def loadCommit(id: String): Commit =
-    resolveManifests(CommitLog.fromJson(store.read(commitsDir.resolve(id + ".json"))))
-
-  // ---- commit-metadata manifests (r20, the [[VersionedTable]] contract at
-  // repo scope): a repo commit's file list spans EVERY table — inlining it
-  // makes a 1-table commit into a 1000-table repo an O(repo) record. The
-  // record instead reuses the parent's immutable `.manifest` sidecars by
-  // reference (untouched tables' segments carry as-is) plus ONE fresh
-  // manifest for the changed files; [[Manifest.cached]] resolution keeps
-  // everything downstream seeing materialized commits. Repo entries carry
-  // only paths (the repo layer tracks no per-file stats).
-  private def resolveManifests(c: Commit): Commit =
-    if (c.manifests.isEmpty) c
-    else c.copy(files =
-      c.manifests.flatMap(m => Manifest.cached(root.resolve(m))).map(_.file))
-
-  private def writeManifest(branch: String, version: Long,
-                            files: Seq[String]): String = {
-    Files.createDirectories(dataDir)
-    val p = dataDir.resolve(
-      s"$branch-v$version-mf-${java.util.UUID.randomUUID.toString.take(8)}.manifest")
-    Manifest.write(p, files.map(f =>
-      ManifestEntry(f, None, None, Map.empty, Map.empty, Map.empty)))
-    root.relativize(p).toString
-  }
-
-  /** Factor `files` into manifest refs — [[Manifest.factor]] with
-    * path-only entries (the repo layer tracks no per-file stats). */
-  private def buildManifests(branch: String, version: Long,
-                             candidateRefs: Vector[String],
-                             files: Vector[String]): (Vector[String], Vector[String]) =
-    Manifest.factor(
-      load = mref => Manifest.cached(root.resolve(mref)),
-      write = entries => writeManifest(branch, version, entries.map(_.file)),
-      candidateRefs = candidateRefs,
-      files = files,
-      entryOf = f => ManifestEntry(f, None, None, Map.empty, Map.empty, Map.empty),
-      maxRefs = VersionedTable.MaxManifests)
-
-  /** DAG-aware ancestry (merge commits have two parents — see [[Ancestry]]). */
-  private def isAncestor(maybeAncestor: String, of: Commit): Boolean =
-    Ancestry.isAncestor(loadCommit, maybeAncestor, of)
-
-  /** Lowest common ancestor (merge base) over the commit DAG. */
-  private def mergeBase(a: Commit, b: Commit): Option[Commit] =
-    Ancestry.mergeBase(loadCommit, a, b)
 
   /** Tables whose snapshot (file list or schema) differs between `base` and
     * `c` — the change set the lakeFS conflict rule compares. */
@@ -339,23 +239,7 @@ final class Repo private (val root: Path, val store: MetaStore) {
     * [[Commit.mergeParent]], so later merges of the same pair measure
     * divergence from the ADVANCED base, not the original branch point. */
   def merge(from: String, into: String): Commit = synchronized {
-    val src = head(from).getOrElse(throw new IllegalArgumentException(s"no such branch: $from"))
-    val dst = head(into).getOrElse(throw new IllegalArgumentException(s"no such branch: $into"))
-    if (src.id == dst.id) src
-    else if (isAncestor(dst.id, of = src)) {
-      // Fast-forward, slot-serialized like any publish (see
-      // VersionedTable.merge): claiming the next version slot before the ref
-      // write means no concurrent cross-process commit or merge based on the
-      // same head can silently overwrite this ref advance — the lakeFS
-      // atomic-merge contract (reference README.md:145).
-      CommitLog.claimVersionSlot(root.resolve("locks"), into, dst.version + 1,
-        content = "ff:" + src.id, store = store)
-      store.put(refsDir.resolve(into), src.id)
-      src
-    } else if (isAncestor(src.id, of = dst)) dst
-    else {
-      val base = mergeBase(src, dst).getOrElse(throw new IllegalStateException(
-        s"merge conflict: $from and $into share no common ancestor"))
+    mergeHeads(from, into) { (base, src, dst) =>
       val srcChanged = changedTables(base, src)
       val overlap = srcChanged intersect changedTables(base, dst)
       // append-append union rule: both sides kept every base file and share
@@ -378,137 +262,26 @@ final class Repo private (val root: Path, val store: MetaStore) {
         unionable.toSeq.flatMap(t => tableFiles(src, t)
           .filterNot(tableFiles(base, t).toSet).filterNot(tableFiles(dst, t).toSet))
       val schemas = tableSchemas(dst) ++ tableSchemas(src).view.filterKeys(srcSwap).toMap
-      val schemaJson = {
-        val m = new java.util.LinkedHashMap[String, String]()
-        schemas.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
-        mapper.writeValueAsString(m)
-      }
-      val version = dst.version + 1
-      CommitLog.claimVersionSlot(root.resolve("locks"), into, version, store = store)
-      val id = s"$into-v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-      val (mrefs, ordered) = buildManifests(into, version,
-        dst.manifests ++ src.manifests, files.sorted)
-      val c = Commit(id, Some(dst.id), version, ordered, schemaJson,
-        s"merge $from into $into", System.currentTimeMillis(),
-        mergeParent = Some(src.id), manifests = mrefs)
-      store.put(commitsDir.resolve(id + ".json"), CommitLog.toJson(c))
-      store.put(refsDir.resolve(into), id)
-      c
+      publishSnapshot(into, Some(dst), files.sorted, schemasJson(schemas),
+        s"merge $from into $into", dst.manifests ++ src.manifests, mergeParent = Some(src.id))
     }
-  }
-
-  /** lakeFS diff: repo-wide (path, change_type) between two branch heads. */
-  def diffFiles(branch: String, other: String): Seq[(String, String)] = {
-    val a = head(branch).map(_.files.toSet).getOrElse(Set.empty)
-    val b = head(other).map(_.files.toSet).getOrElse(Set.empty)
-    (a -- b).toSeq.sorted.map(_ -> "added") ++ (b -- a).toSeq.sorted.map(_ -> "removed")
-  }
-
-  /** Same eventual-consistency armor as [[VersionedTable.branches]]: a
-    * single-key-read [[CasStringSet]] index unioned with the listing, so
-    * [[vacuum]]'s retention enumeration sees a just-created branch even
-    * while the ref lags out of an EC LIST. */
-  private def branchIndex = new CasStringSet(store, root.resolve("refidx"), "branches")
-
-  def branches: Seq[String] = {
-    val listed = store.list(refsDir).map(_.getFileName.toString)
-    val indexed = branchIndex.all.filter(b => store.exists(refsDir.resolve(b)))
-    (listed ++ indexed).distinct.sorted
-  }
-
-  /** Head-first lineage walk of a branch (head, head.parent, …, root). */
-  def lineage(branch: String): List[Commit] = {
-    @annotation.tailrec
-    def walk(c: Option[Commit], acc: List[Commit]): List[Commit] = c match {
-      case None => acc.reverse
-      case Some(cc) => walk(cc.parent.map(loadCommit), cc :: acc)
-    }
-    walk(head(branch), Nil)
   }
 
   /** lakeFS revert: append a NEW repo-wide commit whose snapshot (every
     * table) equals `toVersion` — history is never rewritten. */
   def revert(branch: String, toVersion: Long, message: String = ""): Commit = synchronized {
     guardWritable(branch)
-    val target = lineage(branch).find(_.version == toVersion).getOrElse(
-      throw new IllegalArgumentException(s"no version $toVersion on $branch"))
-    val parent = head(branch).get
-    val version = parent.version + 1
-    CommitLog.claimVersionSlot(root.resolve("locks"), branch, version, store = store)
-    val id = s"$branch-v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-    val (mrefs, ordered) = buildManifests(branch, version,
-      target.manifests ++ parent.manifests, target.files)
-    val c = Commit(id, Some(parent.id), version, ordered, target.schemaJson,
+    val target = resolveVersion(branch, toVersion)
+    val parent = headOrThrow(branch)
+    publishSnapshot(branch, Some(parent), target.files, target.schemaJson,
       if (message.isEmpty) s"revert to v$toVersion" else message,
-      System.currentTimeMillis(), manifests = mrefs)
-    store.put(commitsDir.resolve(id + ".json"), CommitLog.toJson(c))
-    store.put(refsDir.resolve(branch), id)
-    c
+      target.manifests ++ parent.manifests)
   }
 
-  // ---- branch protection (lakeFS protection rules, native repo scope) -----
-
-  private def protectedDir = root.resolve("protected")
-
-  /** lakeFS branch-protection at its native scope: glob rules rejecting
-    * direct staging/commits on matching repo branches — changes land only
-    * via [[merge]]. Same persisted-rule mechanics as the table layer
-    * ([[ProtectionRules]]); enforced by every handle on the root. */
-  def protectBranch(pattern: String): Unit =
-    synchronized { ProtectionRules.add(store, protectedDir, pattern) }
-
-  def unprotectBranch(pattern: String): Boolean =
-    synchronized { ProtectionRules.remove(store, protectedDir, pattern) }
-
-  def protectionRules: Seq[String] = ProtectionRules.all(store, protectedDir)
-
-  def isProtected(branch: String): Boolean =
-    ProtectionRules.isProtected(store, protectedDir, branch)
-
-  private def guardWritable(branch: String): Unit =
-    ProtectionRules.guard(store, protectedDir, branch)
-
-  // ---- tags (lakeFS tags are REPO-scoped: one name pins every table) ------
-
-  private def tagsDir = root.resolve("tags")
-
-  /** lakeFS `tag create` at its native scope: one immutable name pins the
-    * ENTIRE repo state — every table, at one atomic cross-table commit. This
-    * is the reproducibility primitive the reference's lakeFS deployment
-    * exists for ("tag the exact multi-table state this model trained on").
-    * Same contract as the table-level twin ([[VersionedTable.createTag]]):
-    * put-if-absent creation (atomic under races), vacuum-protection until
-    * deleted. */
-  def createTag(name: String, branch: String = "main"): Commit = {
-    val h = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
-    TagStore.create(store, tagsDir, name, h.id)
-    h
-  }
-
-  def tags: Seq[(String, String)] = TagStore.all(store, tagsDir)
-
-  def tagCommit(name: String): Commit =
-    loadCommit(TagStore.commitIdOf(store, tagsDir, name))
-
-  /** Read one table exactly as the tagged repo state captured it. */
+  /** Read one table exactly as the tagged repo state captured it — a repo
+    * tag pins every table at one atomic cross-table commit. */
   def readTableAtTag(spark: SparkSession, tag: String, table: String): DataFrame =
     readTableAt(spark, tagCommit(tag), table)
-
-  def deleteTag(name: String): Boolean = TagStore.delete(store, tagsDir, name)
-
-  /** Every table's files across all tagged repo states — joins each vacuum's
-    * retained set. */
-  private def taggedFiles: Set[String] =
-    tags.flatMap { case (_, id) => loadCommit(id).allFiles }.toSet
-
-  /** Manifests of every reachable commit stay retained — the record must
-    * resolve for ancestry walks even past the data horizon (the same r20
-    * review fix as [[VersionedTable]]'s). */
-  private def reachableManifests: Set[String] =
-    reachableIds.flatMap(id =>
-      try CommitLog.fromJson(store.read(commitsDir.resolve(id + ".json"))).manifests
-      catch { case scala.util.control.NonFatal(_) => Vector.empty })
 
   /** Commit history of a branch, newest first: (version, message, ts,
     * n_tables, n_files). */
@@ -518,52 +291,22 @@ final class Repo private (val root: Path, val store: MetaStore) {
       .toDF("version", "message", "ts", "n_tables", "n_files")
   }
 
-  /** Full-DAG reachable closure of every branch head (merge commits have a
-    * second parent — [[Ancestry.reachableIds]]). */
-  private def reachableIds: Set[String] =
-    Ancestry.reachableIds(loadCommit, branches.flatMap(head))
-
-  /** Same crash recovery as the table layer ([[SlotSweep.sweepStaleSlots]]):
-    * a repo writer killed mid-publish otherwise wedges its branch forever
-    * (the claimed slot blocks every retry). Run by both vacuum dials. */
-  private def sweepStaleSlots(nowMs: Long, staleSlotMs: Long): SlotSweep.SweepResult =
-    SlotSweep.sweepStaleSlots(store, root, head, loadCommit, reachableIds,
-      nowMs, staleSlotMs)
-
   /** Repo-wide GC, same contract as VersionedTable.vacuum: delete data files
     * unreferenced by the newest `retainLast` commits of every branch (staged
     * but uncommitted batches and age-gated orphan-replay targets are always
     * retained), after sweeping crashed writers' stale slots. Returns #files
     * deleted. */
   def vacuum(retainLast: Int = 1,
-             staleSlotMs: Long = VersionedTable.DefaultStaleSlotMs): Int = synchronized {
-    require(retainLast >= 1, "retainLast must be >= 1")
-    sweepStaleSlots(System.currentTimeMillis(), staleSlotMs)
-    val retained: Set[String] =
-      (branches.flatMap(b => lineage(b).take(retainLast).flatMap(_.allFiles)) ++
-        staged.values.flatMap(_.values.flatMap(_._1))).toSet ++
-        SlotSweep.slotProtectedFiles(store, root, loadCommit, reachableIds) ++
-        taggedFiles ++ reachableManifests
-    LakeFiles.sweep(root, dataDir, retained)
-  }
+             staleSlotMs: Long = VersionedTable.DefaultStaleSlotMs): Int =
+    synchronized { vacuumLast(retainLast, staleSlotMs, dryRun = false) }
 
   /** Time-based repo GC, the Delta retention dial at repo scope: retain
     * commits younger than `retainHours` plus every branch head (the repo
     * must stay readable). `nowMs` is injectable for deterministic tests. */
   def vacuumRetainHours(retainHours: Double,
                         nowMs: Long = System.currentTimeMillis(),
-                        staleSlotMs: Long = VersionedTable.DefaultStaleSlotMs): Int = synchronized {
-    require(retainHours >= 0, "retainHours must be >= 0")
-    val cutoff = nowMs - (retainHours * 3600 * 1000).toLong
-    sweepStaleSlots(nowMs, staleSlotMs)
-    val retained: Set[String] =
-      (branches.flatMap(b => lineage(b).zipWithIndex.collect {
-        case (c, i) if i == 0 || c.ts >= cutoff => c.allFiles // i==0 = the head
-      }.flatten) ++ staged.values.flatMap(_.values.flatMap(_._1))).toSet ++
-        SlotSweep.slotProtectedFiles(store, root, loadCommit, reachableIds) ++
-        taggedFiles ++ reachableManifests
-    LakeFiles.sweep(root, dataDir, retained)
-  }
+                        staleSlotMs: Long = VersionedTable.DefaultStaleSlotMs): Int =
+    synchronized { vacuumHours(retainHours, nowMs, staleSlotMs, dryRun = false) }
 }
 
 object Repo {
@@ -571,19 +314,16 @@ object Repo {
     * data files under `data/` always live on the Spark-visible filesystem. */
   def create(root: String, store: MetaStore = LocalFsMetaStore): Repo = {
     val p = Paths.get(root)
-    store.ensurePrefix(p.resolve("commits"))
-    store.ensurePrefix(p.resolve("refs"))
-    Files.createDirectories(p.resolve("data"))
-    store.put(p.resolve("_graft_repo"), "repo-v1")
+    CommitGraph.initRepo(p, store)
     new Repo(p, store)
   }
 
-  /** Re-attach to an existing repo root — the read side of the `_graft_repo`
-    * marker [[create]] writes: refuses a path that is not a repo (catching
-    * the open-a-table-as-a-repo mixup before any metadata is misread). */
+  /** Re-attach to an existing repo root — the read side of the repo marker
+    * [[create]] writes: refuses a path that is not a repo (catching the
+    * open-a-table-as-a-repo mixup before any metadata is misread). */
   def open(root: String, store: MetaStore = LocalFsMetaStore): Repo = {
     val p = Paths.get(root)
-    require(store.exists(p.resolve("_graft_repo")), s"not a repo root: $root")
+    require(CommitGraph.isRepoRoot(p, store), s"not a repo root: $root")
     new Repo(p, store)
   }
 }

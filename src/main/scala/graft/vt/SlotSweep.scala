@@ -1,11 +1,10 @@
 package graft.vt
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
-/** Crash recovery over the version-slot CAS, shared by [[VersionedTable]]
-  * and [[Repo]] (both speak the same claim-slot → write-commit → advance-ref
-  * protocol, so they share one recovery semantics instead of two drifting
-  * copies):
+/** Crash recovery over the version-slot CAS of a [[CommitGraph]] — the one
+  * claim-slot → write-commit → advance-ref protocol tables and repos share,
+  * run by the graph's vacuum:
   *
   *  - an aged slot with NO published commit is a crashed claim — reclaimed
   *    so retries can land (unless it is a completed fast-forward merge's
@@ -18,7 +17,7 @@ import java.nio.file.{Files, Path}
   *  - [[slotProtectedFiles]] names the replay targets' data files so vacuum
   *    retention never deletes what a later replay would publish.
   *
-  * All metadata access goes through the table's [[MetaStore]]; only the
+  * All metadata access goes through the graph's [[MetaStore]]; only the
   * existence probe of a replay target's DATA files touches the filesystem
   * directly (the data plane stays outside the store by design).
   */
@@ -45,15 +44,10 @@ private[vt] object SlotSweep {
     * of each branch head is computed ONCE per sweep and memoized, so sweep
     * cost is O(#branches × history) + O(#slots), not O(#FF-slots × history).
     */
-  def sweepStaleSlots(store: MetaStore, root: Path,
-                      head: String => Option[Commit],
-                      loadCommit: String => Commit,
-                      reachable: Set[String],
+  def sweepStaleSlots(g: CommitGraph, reachable: Set[String],
                       nowMs: Long, staleSlotMs: Long,
                       act: Boolean = true): SweepResult = {
-    val locksDir = root.resolve("locks")
-    val commitsDir = root.resolve("commits")
-    val refsDir = root.resolve("refs")
+    import g.{commitsDir, head, loadCommit, locksDir, refsDir, root, store}
     val publishedIds =
       store.list(commitsDir).map(_.getFileName.toString.stripSuffix(".json")).sorted
     // Snapshot the slot listing ONCE: the v0Safe count below must be evaluated
@@ -79,7 +73,7 @@ private[vt] object SlotSweep {
     store.list(locksDir)
       .filter(p => store.lastModified(p) < nowMs - staleSlotMs)
       .sortBy(p => p.getFileName.toString match {
-        case VersionedTable.SlotRe(b, v) => (b, v.toLong)
+        case CommitGraph.SlotRe(b, v) => (b, v.toLong)
         case other => (other, -1L)
       })
       .foreach { p =>
@@ -105,8 +99,8 @@ private[vt] object SlotSweep {
           val content = try store.read(p).trim catch { case _: Exception => "" }
           val ffDone = content.startsWith("ff:") && {
             val tid = content.drop(3)
-            store.exists(commitsDir.resolve(tid + ".json")) && (slot match {
-              case VersionedTable.SlotRe(branch, _) => branchClosure(branch).contains(tid)
+            g.commitExists(tid) && (slot match {
+              case CommitGraph.SlotRe(branch, _) => branchClosure(branch).contains(tid)
               case _ => false
             })
           }
@@ -117,7 +111,7 @@ private[vt] object SlotSweep {
           // same version and hits the claimed slot. Finish the interrupted
           // publish: advance the branch ref to the orphan — guarded three ways.
           slot match {
-            case VersionedTable.SlotRe(branch, _) =>
+            case CommitGraph.SlotRe(branch, _) =>
               val orphan = loadCommit(owned.head)
               // (1) the orphan must EXTEND the branch's current head —
               //     anything else means lineage moved some other way; leave it.
@@ -175,10 +169,8 @@ private[vt] object SlotSweep {
     * head whose data was already deleted. Reachable commits are excluded, so
     * this never widens retention for ordinary history (every published commit
     * keeps its slot forever as the CAS record). */
-  def slotProtectedFiles(store: MetaStore, root: Path, loadCommit: String => Commit,
-                         reachable: Set[String]): Set[String] = {
-    val locksDir = root.resolve("locks")
-    val commitsDir = root.resolve("commits")
+  def slotProtectedFiles(g: CommitGraph, reachable: Set[String]): Set[String] = {
+    import g.{commitsDir, loadCommit, locksDir, store}
     val slots = store.list(locksDir).map(_.getFileName.toString).toSet
     if (slots.isEmpty) return Set.empty
     store.list(commitsDir).map(_.getFileName.toString.stripSuffix(".json"))

@@ -1,20 +1,18 @@
 package graft.vt
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** A branch/version-addressed table over immutable parquet files + a commit log.
   *
-  * Layout under `root/`:
-  * {{{
-  *   refs/<branch>           head pointer: the branch's current commit id
-  *   refs/<branch>.staged    staged (uncommitted) snapshot, lakeFS-style
-  *   commits/<id>.json       immutable commit records (CommitLog JSON)
-  *   data/<commit-dir>/part-… .parquet   immutable data files
-  * }}}
+  * Refs, lineage, time travel, publish, tags, protection and vacuum retention
+  * come from the [[CommitGraph]] it shares with [[Repo]] (which also owns the
+  * control-plane layout); data files live under `data/<commit-dir>/`. This
+  * class builds the table's commit records — per-file stats, row counts,
+  * sizes, blooms, hooks, OCC rebase — and holds the DML, reads, CDC and
+  * maintenance.
   *
   * Re-expresses the reference's versioning surface natively (no Delta/lakeFS
   * jars offline — SURVEY.md §2.11):
@@ -26,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
   * relation — predicate pushdown, column pruning, vectorized reads and
   * split-parallelism all survive (SURVEY.md §4). Writes create a fresh
   * directory per commit (no in-place mutation), so concurrent readers of older
-  * versions are never disturbed; commit/ref publication is atomic-rename.
+  * versions are never disturbed; commit/ref publication is an atomic put.
   *
   * Concurrency: writers within one JVM are serialized per table instance
   * (`synchronized`); ACROSS processes every ref-advancing write — commit,
@@ -61,240 +59,8 @@ object MergeClause {
     MergeClause("insert", condition, assignments)
 }
 
-final class VersionedTable private (val root: Path, val store: MetaStore) {
-
-  private def commitsDir: Path = root.resolve("commits")
-  private def refsDir: Path = root.resolve("refs")
-  private def dataDir: Path = root.resolve("data")
-  private def checkpointsDir: Path = root.resolve("checkpoints")
-
-  /** List a DATA directory, closing the underlying stream (Files.list leaks
-    * the handle otherwise — fatal for a long-lived driver hosting many
-    * tables). Metadata listings go through [[store]] instead. */
-  private def listDir(p: Path): Vector[Path] = {
-    val st = Files.list(p)
-    try st.iterator().asScala.toVector finally st.close()
-  }
-
-  // ---- commit log access -------------------------------------------------
-
-  def loadCommit(id: String): Commit =
-    resolveManifests(CommitLog.fromJson(store.read(commitsDir.resolve(id + ".json"))))
-
-  /** Materialize a manifest-backed commit (r20, [[Manifest]]): the JSON
-    * record carries only manifest PATHS; their concatenated entries — in
-    * manifest-list order, which [[buildManifests]] made identical to the
-    * order publish saw — become the in-memory `files` list and per-file
-    * stats maps. Everything downstream (scans, pruning, diff, merge, CDC,
-    * vacuum) keeps seeing a fully materialized [[Commit]]; the resolution
-    * is cheap because immutable manifests parse once per process
-    * ([[Manifest.cached]]). Legacy inline commits pass through untouched. */
-  private def resolveManifests(c: Commit): Commit =
-    if (c.manifests.isEmpty) c
-    else {
-      val entries = c.manifests.flatMap(m => Manifest.cached(root.resolve(m)))
-      c.copy(
-        files = entries.map(_.file),
-        stats = entries.iterator.filter(_.stats.nonEmpty)
-          .map(e => e.file -> e.stats).toMap,
-        strStats = entries.iterator.filter(_.strStats.nonEmpty)
-          .map(e => e.file -> e.strStats).toMap,
-        rowCounts = entries.iterator.flatMap(e => e.rows.map(e.file -> _)).toMap,
-        nullStats = entries.iterator.filter(_.nulls.nonEmpty)
-          .map(e => e.file -> e.nulls).toMap,
-        fileSizes = entries.iterator.flatMap(e => e.size.map(e.file -> _)).toMap)
-    }
-
-  def head(branch: String): Option[Commit] = {
-    val ref = refsDir.resolve(branch)
-    if (store.exists(ref)) Some(loadCommit(store.read(ref).trim)) else None
-  }
-
-  /** Branch INDEX — a [[CasStringSet]] naming every branch, maintained by
-    * the same operations that create/delete refs. Listings may be
-    * EVENTUALLY CONSISTENT on object stores (a just-created ref can lag out
-    * of LIST), and [[vacuum]] prices retention by enumerating branches — an
-    * unlisted fresh branch would have its exclusive files swept. The index
-    * is read through SINGLE-KEY operations only (head hint + exists probes +
-    * one generation read), so enumeration is exact the moment the creating
-    * operation returns. The listing is still unioned in (tables created
-    * before the index, defensive completeness); index entries whose ref no
-    * longer exists are filtered out, so a deleted branch never resurrects. */
-  private def branchIndex = new CasStringSet(store, root.resolve("refidx"), "branches")
-
-  def branches: Seq[String] = {
-    val listed = store.list(refsDir).map(_.getFileName.toString)
-      .filterNot(_.endsWith(".staged"))
-    val indexed = branchIndex.all.filter(b => store.exists(refsDir.resolve(b)))
-    (listed ++ indexed).distinct.sorted
-  }
-
-  /** Head-first lineage walk of a branch (head, head.parent, …, root). */
-  def lineage(branch: String): List[Commit] = lineageFrom(head(branch))
-
-  private def lineageFrom(h: Option[Commit]): List[Commit] = {
-    @annotation.tailrec
-    def walk(c: Option[Commit], acc: List[Commit]): List[Commit] = c match {
-      case None => acc.reverse
-      case Some(cc) => walk(cc.parent.map(loadCommit), cc :: acc)
-    }
-    walk(h, Nil)
-  }
-
-  /** First `n` commits of the head-first walk — O(n) metadata reads, never
-    * O(history). What vacuum's retainLast retention uses so pricing retention
-    * on a version-10⁶ table does not replay the whole log per branch. */
-  private def lineageTake(h: Option[Commit], n: Int): List[Commit] = {
-    @annotation.tailrec
-    def walk(c: Option[Commit], left: Int, acc: List[Commit]): List[Commit] = c match {
-      case Some(cc) if left > 0 => walk(cc.parent.map(loadCommit), left - 1, cc :: acc)
-      case _ => acc.reverse
-    }
-    walk(h, n, Nil)
-  }
-
-  // ---- commit-log checkpoints (O(1) snapshot resolution) ------------------
-
-  /** Resolve `(branch, version)` to its commit in O(1) metadata reads at any
-    * history depth — Delta's checkpoint scheme (`_last_checkpoint` + numbered
-    * log suffix), which its `versionAsOf` (reference `jobs/vdt4.py:80-81`)
-    * depends on at high commit counts. Without this, a streaming ingest at
-    * one-commit-per-micro-batch makes every time travel / CDC call replay
-    * O(version) JSON files.
-    *
-    * Resolution order: the head itself (2 reads) → a bounded parent walk when
-    * the target is within one checkpoint interval (≤ interval reads) → the
-    * newest checkpoint's SPARSE boundary index (1 list + 1 read + 1 commit
-    * load at the nearest boundary ≥ target + ≤interval parent steps).
-    * Falls back to the plain walk when no checkpoint covers the target (e.g.
-    * a branch younger than one interval — bounded by its own commit count). */
-  private def resolveVersion(branch: String, version: Long): Commit = {
-    val h = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
-    if (version > h.version || version < 0) throw new IllegalArgumentException(
-      s"no version $version on $branch (vacuumed or never existed)")
-    if (version == h.version) return h
-    @annotation.tailrec
-    def walk(c: Commit): Commit =
-      if (c.version == version) c
-      else c.parent.map(loadCommit) match {
-        case Some(p) => walk(p)
-        case None => throw new IllegalArgumentException(
-          s"no version $version on $branch (vacuumed or never existed)")
-      }
-    if (h.version - version > VersionedTable.CheckpointInterval) {
-      latestCheckpoint(branch) match {
-        case Some((ckVersion, index)) if version <= ckVersion =>
-          // nearest indexed boundary at or above the target, then ≤interval
-          // parent steps down — ckVersion itself is always indexed, so the
-          // jump exists whenever coverage does
-          index.keys.filter(_ >= version).minOption match {
-            case Some(jump) => return walk(loadCommit(index(jump)._1))
-            case None => () // defensive: empty index → plain walk
-          }
-        case _ => ()
-      }
-    }
-    walk(h)
-  }
-
-  /** The commits of `(fromVersion, toVersion]` plus `fromVersion` itself,
-    * ascending — O(span) metadata reads via one [[resolveVersion]] and a
-    * bounded parent walk, never O(full history). Package-visible so
-    * incremental maintainers (IVF index, dedup signatures) can examine just
-    * their catch-up interval instead of replaying the whole lineage. */
-  private[graft] def commitRange(branch: String, fromVersion: Long, toVersion: Long): List[Commit] = {
-    val to = resolveVersion(branch, toVersion)
-    @annotation.tailrec
-    def walk(c: Commit, acc: List[Commit]): List[Commit] =
-      if (c.version == fromVersion) c :: acc
-      else c.parent.map(loadCommit) match {
-        case Some(p) => walk(p, c :: acc)
-        case None => throw new IllegalArgumentException(
-          s"no version $fromVersion on $branch (vacuumed or never existed)")
-      }
-    walk(to, Nil)
-  }
-
-  /** Newest checkpoint of `branch`: (checkpoint version, SPARSE version →
-    * (commit id, ts) index holding only interval-boundary versions of the
-    * first-parent lineage — O(V/interval) entries, never O(V)). A read race
-    * with the writer's prune of the superseded file degrades to None (plain
-    * walk), never an error. */
-  private def latestCheckpoint(branch: String): Option[(Long, Map[Long, (String, Long)])] = {
-    val names = store.list(checkpointsDir).map(_.getFileName.toString)
-    val mine = names.flatMap {
-      case VersionedTable.SlotRe(b, v) if b == branch => Some(v.toLong)
-      case _ => None
-    }
-    if (mine.isEmpty) None
-    else
-      try {
-        val v = mine.max
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val m = mapper.readValue(store.read(checkpointsDir.resolve(s"$branch-v$v")),
-          classOf[java.util.Map[String, Object]])
-        import scala.jdk.CollectionConverters._
-        val idx = m.get("index").asInstanceOf[java.util.Map[String, java.util.List[Object]]]
-          .asScala.map { case (ver, e) =>
-            ver.toLong -> (e.get(0).asInstanceOf[String], e.get(1).asInstanceOf[Number].longValue())
-          }.toMap
-        Some((v, idx))
-      } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Write the checkpoint for `c` (a version divisible by the interval):
-    * previous checkpoint's index + a ≤interval-step walk over the gap — so
-    * checkpoint maintenance is O(interval) amortized, with ONE O(history)
-    * walk the first time a branch (or a pre-checkpoint table) crosses a
-    * boundary. The index keeps ONLY interval-boundary versions (resolution
-    * jumps to the nearest boundary above the target, then walks ≤interval
-    * parents), and the superseded checkpoint file — fully subsumed by its
-    * successor — is pruned, so checkpoint storage is O(V/interval) total in
-    * O(1) files per branch, not the O(V²) a cumulative never-pruned index
-    * accretes. Failure here never fails the publish (the commit and ref are
-    * already durable; the next boundary just walks a larger gap). */
-  private def writeCheckpoint(branch: String, c: Commit): Unit =
-    try {
-      val prev = latestCheckpoint(branch)
-      val floor = prev.map(_._1).getOrElse(-1L)
-      @annotation.tailrec
-      def gap(x: Commit, acc: List[(Long, (String, Long))]): List[(Long, (String, Long))] =
-        if (x.version <= floor) acc
-        else x.parent.map(loadCommit) match {
-          case Some(p) => gap(p, (x.version, (x.id, x.ts)) :: acc)
-          case None => (x.version, (x.id, x.ts)) :: acc
-        }
-      val index = (prev.map(_._2).getOrElse(Map.empty) ++ gap(c, Nil))
-        .filter { case (v, _) => v % VersionedTable.CheckpointInterval == 0 }
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val m = new java.util.LinkedHashMap[String, Object]()
-      m.put("branch", branch)
-      m.put("version", java.lang.Long.valueOf(c.version))
-      val im = new java.util.LinkedHashMap[String, Object]()
-      index.toSeq.sortBy(_._1).foreach { case (v, (id, ts)) =>
-        im.put(v.toString, java.util.List.of(id, java.lang.Long.valueOf(ts)))
-      }
-      m.put("index", im)
-      store.put(checkpointsDir.resolve(s"$branch-v${c.version}"), mapper.writeValueAsString(m))
-      prev.foreach { case (pv, _) =>
-        store.delete(checkpointsDir.resolve(s"$branch-v$pv")); ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** DAG ancestry: history is a DAG once merge commits carry a second parent,
-    * so both walks below follow `parents` (first parent + mergeParent), not
-    * just the first-parent chain. This is what makes "merge, keep committing
-    * on the source, merge again" converge: the second merge sees the first
-    * merge's imported commits as shared history, not as divergence. */
-  private def isAncestor(maybeAncestor: String, of: Commit): Boolean =
-    Ancestry.isAncestor(loadCommit, maybeAncestor, of)
-
-  /** Nearest common ancestor of two commits (the merge base): breadth-first
-    * from `b` in level order, first commit already in `a`'s ancestor closure
-    * — a lowest common ancestor of the DAG. */
-  private def mergeBase(a: Commit, b: Commit): Option[Commit] =
-    Ancestry.mergeBase(loadCommit, a, b)
+final class VersionedTable private (val root: Path, val store: MetaStore)
+    extends CommitGraph {
 
   // ---- writes ------------------------------------------------------------
 
@@ -940,8 +706,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
         s"${dup.head.toSeq.init.mkString("(", ", ", ")")} appears ${dup.head.getLong(keyCols.size)} " +
         "times — source rows REPLACE rows sharing their key, so duplicates are ambiguous " +
         "(Delta MERGE raises the same error); de-duplicate the source first")
-    val parent = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val parent = headOrThrow(branch)
     val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
     // name+type equality (nullability-insensitive, including NESTED nullability:
     // reading parquet back relaxes nullable flags, which must not block an upsert)
@@ -1112,8 +877,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       s"WHEN NOT MATCHED supports insert only, got '${c.kind}'"))
     notMatchedBySource.foreach(c => require(c.kind == "update" || c.kind == "delete",
       s"WHEN NOT MATCHED BY SOURCE supports update/delete, got '${c.kind}'"))
-    val parent = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val parent = headOrThrow(branch)
     val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
     // WITH SCHEMA EVOLUTION (Delta's rule): source-only columns APPEND to
     // the target schema as NULLABLE fields — assignments may target them,
@@ -1266,12 +1030,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
         .select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)))
     // matched and by-source rows are disjoint, so one vector holds both
     val hits = (matchedHits ++ bySourceHits).reduceOption(_ unionByName _)
-    // same dev-only hook as writeDataFiles: the detection plan never
-    // surfaces through a returned DataFrame
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_WRITES")) hits.foreach { h =>
-      println(s"===== merge detection plan =====")
-      h.explain("formatted")
-    }
     val retired = landRetired(spark, parent, branch,
       if (bySourceHits.isDefined) parent.files else candidates, hits)
     if (retired.multiHit) {
@@ -1663,8 +1421,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
                         message: String = ""): Commit = synchronized {
     guardWritable(branch)
     import org.apache.spark.sql.functions.expr
-    val parent = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val parent = headOrThrow(branch)
     if (parent.files.isEmpty) return parent
     val candidates = statsCandidates(parent, where)
     if (candidates.isEmpty) return parent
@@ -1687,8 +1444,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
              message: String = ""): Commit = synchronized {
     guardWritable(branch)
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    val parent = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val parent = headOrThrow(branch)
     if (parent.files.isEmpty) return parent
     val pred = expr(where)
     val candidates = statsCandidates(parent, where)
@@ -1735,8 +1491,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     guardWritable(branch)
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(set.nonEmpty, "update needs at least one SET column")
-    val parent = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val parent = headOrThrow(branch)
     val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
     val unknown = set.keySet.diff(schema.fieldNames.toSet)
     require(unknown.isEmpty, s"update SET names unknown column(s): ${unknown.mkString(", ")}")
@@ -2581,15 +2336,15 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       parent.map(_.version + 1).getOrElse(0L))
     val staged = Commit("STAGED", parent.map(_.id),
       parent.map(_.version + 1).getOrElse(0L), files, df.schema.json, "", System.currentTimeMillis())
-    store.put(refsDir.resolve(branch + ".staged"), CommitLog.toJson(staged))
+    store.put(stagedRef(branch), CommitLog.toJson(staged))
   }
 
-  def hasStaged(branch: String): Boolean = store.exists(refsDir.resolve(branch + ".staged"))
+  def hasStaged(branch: String): Boolean = store.exists(stagedRef(branch))
 
   /** lakeFS `commit`: promote the staged snapshot to a real commit (V3). */
   def commitStaged(branch: String, message: String): Commit = synchronized {
     guardWritable(branch)
-    val stagedPath = refsDir.resolve(branch + ".staged")
+    val stagedPath = stagedRef(branch)
     require(store.exists(stagedPath), s"nothing staged on $branch")
     val staged = CommitLog.fromJson(store.read(stagedPath))
     val c = publish(branch, head(branch), message,
@@ -2600,7 +2355,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
 
   /** lakeFS `reset`: drop staged changes and their orphaned data files (V7). */
   def reset(branch: String): Unit = synchronized {
-    val stagedPath = refsDir.resolve(branch + ".staged")
+    val stagedPath = stagedRef(branch)
     if (store.exists(stagedPath)) {
       val staged = CommitLog.fromJson(store.read(stagedPath))
       staged.files.foreach(f => LakeFiles.delete(root.resolve(f)))
@@ -2615,17 +2370,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // column mapping (r20): parquet always stores PHYSICAL names — rename
     // the logical frame positionally per the table schema's mapping
     val body = mapTo.map(VersionedTable.toPhysical(df, _)).getOrElse(df)
-    // measurement hook (guide §1/§7.2): internal write plans — merge/DML
-    // rewrites — never surface through a returned DataFrame, so Explain
-    // cannot show them; dev-only, never set by Bench/Verify/the driver
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_WRITES")) {
-      println(s"===== write plan: $rel =====")
-      body.explain("formatted")
-    }
     graft.Tables.timed(s"writeDataFiles $rel")(LakeFiles.write(body, out, root))
   }
-
-  private def locksDir: Path = root.resolve("locks")
 
   private def publish(branch: String, parent: Option[Commit], message: String,
                       schema: StructType, files: Vector[String],
@@ -2650,7 +2396,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
                       seedRowCounts: Map[String, Long] = Map.empty,
                       seedFileSizes: Map[String, Long] = Map.empty): Commit = {
     val version = parent.map(_.version + 1).getOrElse(0L)
-    val id = s"$branch-v$version-${java.util.UUID.randomUUID.toString.take(8)}"
     val mergeParentCommit = mergeParent.map(loadCommit)
     // Per-file row counts (Delta numRecords): inherited from either parent's
     // map when the file carries over; ONE local footer read per genuinely new
@@ -2683,11 +2428,15 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // commit record carries only their paths, so an append's record is
     // O(its new files) — not O(table) — and unchanged segments are reused
     // by reference across commits (Iceberg's manifest sharing).
-    val (manifestRefs, orderedFiles) = buildManifests(branch, version, parent,
-      mergeParentCommit, files, stats, strStats, rowCounts, nullStats, fileSizes)
-    val c = Commit(id, parent.map(_.id), version, orderedFiles, schema.json, message,
-      System.currentTimeMillis(), stats, mergeParent, strStats, dvFiles, rowCounts,
-      nullStats, fileSizes, bloomStats, bloomCols, bloomFiles, dataChange,
+    val (manifestRefs, orderedFiles) = buildManifests(branch, version,
+      parent.map(_.manifests).getOrElse(Vector.empty) ++
+        mergeParentCommit.map(_.manifests).getOrElse(Vector.empty), files,
+      f => ManifestEntry(f, fileSizes.get(f), rowCounts.get(f),
+        stats.getOrElse(f, Map.empty), strStats.getOrElse(f, Map.empty),
+        nullStats.getOrElse(f, Map.empty)))
+    val c = Commit(newCommitId(branch, version), parent.map(_.id), version, orderedFiles,
+      schema.json, message, System.currentTimeMillis(), stats, mergeParent, strStats,
+      dvFiles, rowCounts, nullStats, fileSizes, bloomStats, bloomCols, bloomFiles, dataChange,
       txn.map(_._1), txn.map(_._2),
       props = props.getOrElse(parent.map(_.props).getOrElse(Map.empty)),
       manifests = manifestRefs)
@@ -2695,76 +2444,13 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // running BEFORE the slot claim means an abort leaves no claimed slot to
     // sweep — only orphan data files the next vacuum reclaims.
     runPreCommitHooks(branch, c)
-    // cross-process CAS: two writers based on the same parent both target
-    // this version; exactly one claims the slot, the other gets a clean
-    // ConcurrentModificationException (never a silently forked lineage).
-    // A loser's already-written data files are orphans vacuum reclaims.
-    CommitLog.claimVersionSlot(locksDir, branch, version, store = store)
-    store.put(commitsDir.resolve(id + ".json"), CommitLog.toJson(c))
-    // index BEFORE the ref lands: vacuum enumerating mid-creation sees the
-    // name (and an exists-check on the not-yet-written ref just skips it) —
-    // the reverse order would leave a fresh unlisted branch enumerable by
-    // neither index nor EC listing for one sweep
-    if (parent.isEmpty) branchIndex.add(branch)
-    store.put(refsDir.resolve(branch), id)
-    if (version > 0 && version % VersionedTable.CheckpointInterval == 0)
-      writeCheckpoint(branch, c)
-    c
-  }
-
-  /** Factor this commit's per-file metadata into MANIFEST references
-    * (r20, [[Manifest]]): reuse every parent manifest whose entries are ALL
-    * still live and unchanged (the common case — an append or a metadata-only
-    * commit touches none of them), pool the surviving entries of partially
-    * dead manifests with the genuinely new files into ONE fresh manifest,
-    * and — when the reference list would exceed
-    * [[VersionedTable.MaxManifests]] — compact everything into a single
-    * manifest so `open()` cost stays bounded by a constant number of cached
-    * reads no matter how many commits the table accretes (Iceberg's
-    * rewrite-manifests, amortized O(files/MaxManifests) per commit).
-    *
-    * Returns (manifest paths, files in RESOLUTION order) — the order
-    * [[resolveManifests]] will reproduce, which publish stores in the
-    * in-memory commit so a round-trip through the log is an identity.
-    * A legacy inline parent (no manifests) converts wholesale: its carried
-    * files land in the fresh manifest once, O(table) at conversion only. */
-  private def buildManifests(
-      branch: String, version: Long,
-      parent: Option[Commit], mergeParentCommit: Option[Commit],
-      files: Vector[String],
-      stats: Map[String, Map[String, (Double, Double)]],
-      strStats: Map[String, Map[String, (String, String)]],
-      rowCounts: Map[String, Long],
-      nullStats: Map[String, Map[String, Long]],
-      fileSizes: Map[String, Long]): (Vector[String], Vector[String]) =
-    Manifest.factor(
-      load = mref => Manifest.cached(root.resolve(mref)),
-      write = entries => writeManifest(branch, version, entries),
-      candidateRefs = parent.map(_.manifests).getOrElse(Vector.empty) ++
-        mergeParentCommit.map(_.manifests).getOrElse(Vector.empty),
-      files = files,
-      entryOf = f => ManifestEntry(f, fileSizes.get(f), rowCounts.get(f),
-        stats.getOrElse(f, Map.empty), strStats.getOrElse(f, Map.empty),
-        nullStats.getOrElse(f, Map.empty)),
-      maxRefs = VersionedTable.MaxManifests)
-
-  /** Persist one manifest as a flat `.manifest` file under `data/` —
-    * data-plane like the bloom sidecars, so the existing vacuum
-    * sweep/retention machinery manages it; returns its root-relative path. */
-  private def writeManifest(branch: String, version: Long,
-                            entries: Seq[ManifestEntry]): String = {
-    Files.createDirectories(dataDir)
-    val p = dataDir.resolve(
-      s"$branch-v$version-mf-${java.util.UUID.randomUUID.toString.take(8)}.manifest")
-    Manifest.write(p, entries)
-    root.relativize(p).toString
+    publishCommit(branch, c)
   }
 
   // ---- reads -------------------------------------------------------------
 
   def read(spark: SparkSession, branch: String = "main"): DataFrame =
-    readCommit(spark, head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch")))
+    readCommit(spark, headOrThrow(branch))
 
   /** Data-skipping read: prune the snapshot's file list with the commit's
     * per-file [min,max] stats for `column` before Spark ever lists them, then
@@ -2774,8 +2460,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
   def readWhere(spark: SparkSession, branch: String, column: String,
                 lower: Double, upper: Double): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val c = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val c = headOrThrow(branch)
     val keep = c.files.filter { f =>
       c.stats.get(f).flatMap(_.get(column)) match {
         case Some((mn, mx)) => mx >= lower && mn <= upper
@@ -2799,8 +2484,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
                       lower: String, upper: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     import VersionedTable.utf8Cmp
-    val c = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val c = headOrThrow(branch)
     val keep = c.files.filter { f =>
       c.strStats.get(f).flatMap(_.get(column)) match {
         case Some((mn, mx)) => utf8Cmp(mx, lower) >= 0 && utf8Cmp(mn, upper) <= 0
@@ -2846,37 +2530,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     catch { case _: IllegalArgumentException => 0L }
   }
 
-  private def commitAtTimestamp(branch: String, tsMillis: Long): Commit = {
-    val h = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
-    lazy val checkpoint = latestCheckpoint(branch)
-    def fail() = throw new IllegalArgumentException(
-      s"no commit on $branch at or before timestamp $tsMillis (first commit is later)")
-    @annotation.tailrec
-    def walk(c: Commit): Commit =
-      if (c.ts <= tsMillis) c
-      else checkpoint match {
-        // the answer (if any) lies strictly below c: jump down to the LOWEST
-        // indexed boundary still after tsMillis — first-parent timestamps are
-        // nondecreasing, so the answer sits within one interval below it and
-        // the remaining parent walk is ≤interval steps
-        case Some((ckVersion, index)) if c.version - 1 <= ckVersion =>
-          index.filter { case (v, (_, ts)) => ts > tsMillis && v < c.version }
-            .keys.minOption match {
-            case Some(jump) => walk(loadCommit(index(jump)._1))
-            case None => c.parent.map(loadCommit) match {
-              case Some(p) => walk(p)
-              case None => fail()
-            }
-          }
-        case _ => c.parent.map(loadCommit) match {
-          case Some(p) => walk(p)
-          case None => fail()
-        }
-      }
-    walk(h)
-  }
-
   /** Resolve the commit a read addresses — branch head, `versionAsOf`, or
     * `timestampAsOf` (mutually exclusive) — the shared entry point for the
     * read methods above and the `format("vt")` batch relation
@@ -2888,8 +2541,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     (versionAsOf, timestampAsOf) match {
       case (Some(v), _) => resolveVersion(branch, v)
       case (_, Some(ts)) => commitAtTimestamp(branch, ts)
-      case _ => head(branch).getOrElse(
-        throw new IllegalArgumentException(s"no such branch: $branch"))
+      case _ => headOrThrow(branch)
     }
   }
 
@@ -2960,8 +2612,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     * anti-join semantics of [[scanWithPos]]. Files missing a logged count
     * (pre-rowCounts history) fall back to one real scan-based count. */
   def countRows(spark: SparkSession, branch: String = "main"): Long = {
-    val c = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
+    val c = headOrThrow(branch)
     if (!c.files.forall(c.rowCounts.contains)) readCommit(spark, c).count()
     else {
       val base = c.files.iterator.map(c.rowCounts).sum
@@ -3107,9 +2758,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     if (witnessed) Some(best) else None
   }
 
-  private def headOrThrow(branch: String): Commit = head(branch).getOrElse(
-    throw new IllegalArgumentException(s"no such branch: $branch"))
-
   private def minMaxFrom[T](c: Commit, column: String,
                             statsOf: Map[String, Map[String, (T, T)]])
                            (lo: (T, T) => T, hi: (T, T) => T): Option[(T, T)] = {
@@ -3168,14 +2816,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
 
   // ---- branch plumbing (lakeFS README.md:105-147) ------------------------
 
-  /** V2 `branch create`: zero-copy — a new head pointer at `from`'s commit. */
-  def createBranch(name: String, from: String = "main"): Unit = synchronized {
-    require(!store.exists(refsDir.resolve(name)), s"branch exists: $name")
-    val h = head(from).getOrElse(throw new IllegalArgumentException(s"no such branch: $from"))
-    branchIndex.add(name) // before the ref: see publish's ordering note
-    store.put(refsDir.resolve(name), h.id)
-  }
-
   /** lakeFS `branch delete`: drop the head pointer (and any staged snapshot
     * with its uncommitted files). Commits stay on disk — another branch may
     * still reach them, and an unreachable commit's data files are reclaimed
@@ -3187,21 +2827,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     require(branches.contains(name), s"no such branch: $name")
     require(branches.size > 1, s"cannot delete the last branch: $name")
     reset(name) // staged files are uncommitted: safe to reclaim now
-    // release the branch's version slots BEFORE the ref: a crash mid-delete
-    // then leaves (fewer slots + live ref) — the branch still exists and the
-    // delete can simply be retried. The old order (ref first) could leave a
-    // refless v0 slot behind, which vacuum's orphan-replay might mistake for
-    // a crashed first commit and resurrect the deleted branch. Slot release
-    // lets a recreated branch with the same name commit again (its commits
-    // get fresh uuid'd ids, so old still-reachable commits are never shadowed).
-    val slotRe = ("^" + java.util.regex.Pattern.quote(name) + """-v\d+$""").r
-    store.list(locksDir).filter(p => slotRe.findFirstIn(p.getFileName.toString).isDefined)
-      .foreach(store.delete)
-    // checkpoints are per-branch version→id indexes: a later branch REUSING
-    // this name must never resolve versions from the dead branch's index
-    store.list(checkpointsDir)
-      .filter(p => slotRe.findFirstIn(p.getFileName.toString).isDefined)
-      .foreach(store.delete)
     // change-feed cursors are per-branch offsets: a recreated namesake with a
     // shorter history must not inherit them (consumers would silently skip
     // every commit up to the dead branch's offset)
@@ -3211,51 +2836,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       store.delete(consumerDir)
     }
     store.delete(cursorsBranchDir)
-    store.delete(refsDir.resolve(name))
-    // the index entry is NOT removed — entries are ADD-ONLY, same rule as
-    // the tag index (TagStore.delete): a remove here racing a namesake
-    // createBranch can strip the NEW branch's entry (create's index.add
-    // no-ops while the stale entry exists), leaving a live ref invisible
-    // to index-only enumerators — the EC-vacuum hazard again. branches()'
-    // strongly-consistent exists probe filters the dead name instead.
-    ()
+    // the index entry stays: a remove racing a namesake createBranch could
+    // strip the NEW branch's entry; branches() filters the dead name
+    dropBranch(name)
   }
-
-  // ---- branch protection (lakeFS branch-protection rules) -----------------
-
-  private def protectedDir: Path = root.resolve("protected")
-
-  /** lakeFS branch-protection rules: glob patterns (`*` = any run of chars,
-    * `?` = one char) naming branches that reject DIRECT mutation — write /
-    * append / upsert / delete / update / stage / commit / revert / cherry-pick
-    * / compaction / branch deletion all throw. Changes reach a protected
-    * branch only by [[merge]] from a reviewed side branch (exactly the lakeFS
-    * model: protected branches guarantee every commit arrived via a merge).
-    * The rule set persists as a chain of immutable putIfAbsent-claimed
-    * generations under `protected/` ([[ProtectionRules]]): each edit is a
-    * REAL compare-and-set, so concurrent edits from different processes
-    * serialize — the loser rebases on the winner's set and retries, and no
-    * rule is ever silently dropped. Patterns must not contain newlines
-    * (the set is newline-joined per generation). Enforced by every table
-    * handle, not just the one that added the rule. */
-  def protectBranch(pattern: String): Unit =
-    synchronized { ProtectionRules.add(store, protectedDir, pattern) }
-
-  /** Remove one protection rule (exact pattern, not a matching branch name).
-    * Returns false when no such rule exists. */
-  def unprotectBranch(pattern: String): Boolean =
-    synchronized { ProtectionRules.remove(store, protectedDir, pattern) }
-
-  def protectionRules: Seq[String] = ProtectionRules.all(store, protectedDir)
-
-  def isProtected(branch: String): Boolean =
-    ProtectionRules.isProtected(store, protectedDir, branch)
-
-  /** Throws unless `branch` accepts direct mutation. Merge deliberately does
-    * NOT call this on its target: landing reviewed commits is the one door a
-    * protected branch keeps open. */
-  private def guardWritable(branch: String): Unit =
-    ProtectionRules.guard(store, protectedDir, branch)
 
   // ---- hooks (lakeFS Actions: pre-commit / pre-merge) ---------------------
 
@@ -3305,43 +2889,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       }
     }
 
-  // ---- tags (lakeFS `lakectl tag`, immutable named refs) ------------------
-
-  private def tagsDir: Path = root.resolve("tags")
-
-  /** lakeFS `tag create` (`lakectl tag create lakefs://repo@tag ref`): an
-    * IMMUTABLE named ref pinning one commit forever — the release-snapshot
-    * primitive ("the exact data the model was trained on"). Unlike a branch,
-    * a tag never advances; unlike a raw version number, it survives vacuum:
-    * the tagged commit's files join vacuum's retained set until the tag is
-    * deleted. Creation is a [[MetaStore.putIfAbsent]], so two racing
-    * `createTag`s of the same name resolve atomically — one wins, the other
-    * throws — on any store honoring the put-if-absent contract (no
-    * read-then-write window). Tags live under `tags/`, not `refs/`, so the
-    * branch listing and slot machinery never see them. */
-  def createTag(name: String, branch: String = "main"): Commit = {
-    TagStore.validateName(name)
-    val h = head(branch).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $branch"))
-    createTagAt(name, h.id)
-  }
-
-  /** Tag an arbitrary commit id (lakeFS allows tagging any reachable ref,
-    * not just a head — e.g. the version a benchmark ran against). */
-  def createTagAt(name: String, commitId: String): Commit = {
-    require(store.exists(commitsDir.resolve(commitId + ".json")),
-      s"no such commit: $commitId")
-    val c = loadCommit(commitId)
-    TagStore.create(store, tagsDir, name, commitId)
-    c
-  }
-
-  /** (tag name, commit id) pairs, name-sorted. */
-  def tags: Seq[(String, String)] = TagStore.all(store, tagsDir)
-
-  def tagCommit(name: String): Commit =
-    loadCommit(TagStore.commitIdOf(store, tagsDir, name))
-
   /** Read the table exactly as the tagged commit captured it. */
   def readTag(spark: SparkSession, name: String): DataFrame =
     readCommit(spark, tagCommit(name))
@@ -3356,19 +2903,9 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     synchronized {
       guardWritable(branch)
       // a typo'd branch must fail, not be silently born from the tag
-      val h = head(branch).getOrElse(
-        throw new IllegalArgumentException(s"no such branch: $branch"))
+      val h = headOrThrow(branch)
       val target = tagCommit(name)
-      publish(branch, Some(h),
-        if (message.isEmpty) s"restore tag $name" else message,
-        DataType.fromJson(target.schemaJson).asInstanceOf[StructType], target.files,
-        target.stats, strStats = target.strStats, nullStats = target.nullStats,
-        dvFiles = target.dvFiles, bloomStats = target.bloomStats,
-        bloomCols = target.bloomCols, bloomFiles = target.bloomFiles,
-        // restore restores STATE — table properties (constraints) included,
-        // Delta's RESTORE semantics: the restored data was validated under
-        // the restored constraint set, not the current one
-        props = Some(target.props))
+      publishState(branch, h, if (message.isEmpty) s"restore tag $name" else message, target)
     }
 
   /** Delta `CREATE TABLE … SHALLOW CLONE src [VERSION AS OF n]`: THIS table's
@@ -3492,22 +3029,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       }.toMap)
   }
 
-  /** lakeFS `tag delete`: the commit becomes vacuumable again (if nothing
-    * else retains it). Deleting a missing tag is a no-op returning false. */
-  def deleteTag(name: String): Boolean = TagStore.delete(store, tagsDir, name)
-
-  /** Data+DV files pinned by tags — part of every vacuum's retained set. */
-  private def taggedFiles: Set[String] =
-    tags.flatMap { case (_, id) => loadCommit(id).allFiles }.toSet
-
-  /** V4 `diff`: object-level change list between two branch heads, as
-    * (path, change_type) pairs — lakeFS `lakectl diff` semantics. */
-  def diffFiles(branch: String, other: String): Seq[(String, String)] = {
-    val a = head(branch).map(_.files.toSet).getOrElse(Set.empty)
-    val b = head(other).map(_.files.toSet).getOrElse(Set.empty)
-    ((a -- b).toSeq.sorted.map(_ -> "added") ++ (b -- a).toSeq.sorted.map(_ -> "removed"))
-  }
-
   /** V5 `merge from into`: fast-forward when `into` hasn't moved since the
     * branch point; when both branches moved but their changes since the merge
     * base are PURE DISJOINT APPENDS (each side only added files), a true
@@ -3528,27 +3049,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     * each later merge sees only the new commits as divergence. */
   def merge(from: String, into: String): Commit = synchronized {
     runPreMergeHooks(from, into) // lakeFS Actions: a throwing hook vetoes
-    val src = head(from).getOrElse(throw new IllegalArgumentException(s"no such branch: $from"))
-    val dst = head(into).getOrElse(throw new IllegalArgumentException(s"no such branch: $into"))
-    if (src.id == dst.id) src
-    else if (isAncestor(dst.id, of = src)) { // fast-forward
-      // An FF advances the ref without publishing a commit, but it still
-      // claims the next version slot exactly like a publish: EVERY
-      // ref-advancing path holds the branch's next slot, so a concurrent
-      // cross-process writer, another merge, or vacuum's orphan-replay
-      // (which only acts while the orphan's own slot is claimed) can never
-      // interleave with — and silently overwrite — this ref write. The slot
-      // records the FF target so the stale-slot sweep keeps it as this
-      // version's CAS record once the head descends from the target (lakeFS
-      // promises merge atomicity — reference README.md:145).
-      CommitLog.claimVersionSlot(locksDir, into, dst.version + 1,
-        content = "ff:" + src.id, store = store)
-      store.put(refsDir.resolve(into), src.id)
-      src
-    } else if (isAncestor(src.id, of = dst)) dst // already merged
-    else {
-      val base = mergeBase(src, dst).getOrElse(throw new IllegalStateException(
-        s"merge conflict: $from and $into share no common ancestor"))
+    mergeHeads(from, into) { (base, src, dst) =>
       val baseFiles = base.files.toSet
       val srcAdded = src.files.toSet -- baseFiles
       val srcRemoved = baseFiles -- src.files.toSet
@@ -3662,13 +3163,22 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
   def revert(branch: String, toVersion: Long, message: String = ""): Commit = synchronized {
     guardWritable(branch)
     val target = resolveVersion(branch, toVersion)
-    publish(branch, head(branch), if (message.isEmpty) s"revert to v$toVersion" else message,
+    publishState(branch, headOrThrow(branch),
+      if (message.isEmpty) s"revert to v$toVersion" else message, target)
+  }
+
+  /** Publish `target`'s STATE as a new commit over `parent` — revert,
+    * restore and the raced-write repair. Table properties (constraints)
+    * come back with it, Delta's RESTORE semantics: the restored data was
+    * validated under the restored constraint set, not the current one. */
+  private def publishState(branch: String, parent: Commit, message: String,
+                           target: Commit): Commit =
+    publish(branch, Some(parent), message,
       DataType.fromJson(target.schemaJson).asInstanceOf[StructType], target.files,
       target.stats, strStats = target.strStats, nullStats = target.nullStats,
       dvFiles = target.dvFiles, bloomStats = target.bloomStats,
       bloomCols = target.bloomCols, bloomFiles = target.bloomFiles,
-      props = Some(target.props)) // revert restores state, props included
-  }
+      props = Some(target.props))
 
   /** Delta `RESTORE TABLE … TO TIMESTAMP AS OF`: [[revert]] addressed by
     * wall clock — the restored state is the newest commit at or before
@@ -3698,12 +3208,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     guardWritable(branch)
     val target = loadCommit(raced.parent.getOrElse(throw new IllegalStateException(
       s"revertRaced needs a raced commit with a parent, got root ${raced.id}")))
-    publish(branch, Some(raced), message,
-      DataType.fromJson(target.schemaJson).asInstanceOf[StructType], target.files,
-      target.stats, strStats = target.strStats, nullStats = target.nullStats,
-      dvFiles = target.dvFiles, bloomStats = target.bloomStats,
-      bloomCols = target.bloomCols, bloomFiles = target.bloomFiles,
-      props = Some(target.props)) // the repair restores the winner's state
+    publishState(branch, raced, message, target) // restores the winner's state
   }
 
   /** lakeFS `cherry-pick` (lakectl's single-commit transplant): apply the
@@ -3733,8 +3238,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     // a merge-on-read delete's whole delta is its new deletion vectors
     val dvAdded = picked.dvFiles
       .filterNot(pickedParent.map(_.dvFiles.toSet).getOrElse(Set.empty))
-    val dst = head(into).getOrElse(
-      throw new IllegalArgumentException(s"no such branch: $into"))
+    val dst = headOrThrow(into)
     if (added.isEmpty && removed.isEmpty && dvAdded.isEmpty) return dst
     val dstFiles = dst.files.toSet
     val missing = removed.filterNot(dstFiles.contains)
@@ -3801,32 +3305,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     */
   def vacuum(retainLast: Int = 1, staleSlotMs: Long = VersionedTable.DefaultStaleSlotMs,
              dryRun: Boolean = false): Int = synchronized {
-    require(retainLast >= 1, "retainLast must be >= 1")
-    val repairs =
-      sweepStaleSlots(System.currentTimeMillis(), staleSlotMs, act = !dryRun).refRepairs
-    // After a REAL sweep head() is already post-repair; in a dry run the
-    // planned repairs substitute for the ref advances that did not happen.
-    def vHead(b: String): Option[Commit] =
-      (if (dryRun) repairs.get(b).map(loadCommit) else None).orElse(head(b))
-    val vReachable = Ancestry.reachableIds(loadCommit, branches.flatMap(vHead))
-    LakeFiles.sweep(root, dataDir,
-      (branches.flatMap(b => lineageTake(vHead(b), retainLast).flatMap(_.allFiles)) ++
-        stagedFiles).toSet ++ slotProtectedFiles(vReachable) ++ taggedFiles ++
-        reachableManifests(vReachable), dryRun)
+    vacuumLast(retainLast, staleSlotMs, dryRun)
   }
-
-  /** Manifests of every REACHABLE commit (r20 review fix): the commit
-    * RECORD must stay resolvable for ancestry walks — reachableIds, merge
-    * bases, lineage, timestamp resolution — in a fresh process even after
-    * the commit's DATA fell off the retention horizon (pre-manifest inline
-    * records had this property for free). Only unreachable commits'
-    * manifests sweep. Cost: O(history) tiny JSON parses, zero data reads —
-    * the manifests themselves are O(files) path lists, the exact metadata
-    * the inline records used to carry. */
-  private def reachableManifests(reachable: Set[String]): Set[String] =
-    reachable.flatMap(id =>
-      try CommitLog.fromJson(store.read(commitsDir.resolve(id + ".json"))).manifests
-      catch { case scala.util.control.NonFatal(_) => Vector.empty })
 
   /** Time-based retention, Delta's `vacuum()` dial (`jobs/vdt4.py:84-85`
     * defaults to 168h): a commit is retained iff it is younger than
@@ -3839,41 +3319,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
                         nowMs: Long = System.currentTimeMillis(),
                         staleSlotMs: Long = VersionedTable.DefaultStaleSlotMs,
                         dryRun: Boolean = false): Int = synchronized {
-    require(retainHours >= 0, "retainHours must be >= 0")
-    val cutoff = nowMs - (retainHours * 3600 * 1000).toLong
-    val repairs = sweepStaleSlots(nowMs, staleSlotMs, act = !dryRun).refRepairs
-    def vHead(b: String): Option[Commit] =
-      (if (dryRun) repairs.get(b).map(loadCommit) else None).orElse(head(b))
-    val vReachable = Ancestry.reachableIds(loadCommit, branches.flatMap(vHead))
-    LakeFiles.sweep(root, dataDir,
-      (branches.flatMap(b => lineageFrom(vHead(b)).zipWithIndex.collect {
-        case (c, i) if i == 0 || c.ts >= cutoff => c.allFiles // i==0 = the head
-      }.flatten) ++ stagedFiles).toSet ++ slotProtectedFiles(vReachable) ++
-        taggedFiles ++ reachableManifests(vReachable), dryRun)
+    vacuumHours(retainHours, nowMs, staleSlotMs, dryRun)
   }
 
-  /** Crash recovery for this table's slots — semantics and guards live in
-    * [[SlotSweep.sweepStaleSlots]] (shared with [[Repo]], which speaks the
-    * same claim-slot → write-commit → advance-ref protocol). */
-  private def sweepStaleSlots(nowMs: Long, staleSlotMs: Long,
-                              act: Boolean = true): SlotSweep.SweepResult =
-    SlotSweep.sweepStaleSlots(store, root, head, loadCommit, reachableIds,
-      nowMs, staleSlotMs, act)
-
-  /** Ids of every commit reachable from some branch ref through the FULL
-    * parent edge set (first parent + mergeParent) — see
-    * [[Ancestry.reachableIds]]. */
-  private def reachableIds: Set[String] =
-    Ancestry.reachableIds(loadCommit, branches.flatMap(head))
-
-  /** Replay-target data files vacuum must retain — see
-    * [[SlotSweep.slotProtectedFiles]]. */
-  private def slotProtectedFiles(reachable: Set[String]): Set[String] =
-    SlotSweep.slotProtectedFiles(store, root, loadCommit, reachable)
-
-  private def stagedFiles: Seq[String] =
-    branches.filter(hasStaged).flatMap(b =>
-      CommitLog.fromJson(store.read(refsDir.resolve(b + ".staged"))).files)
+  protected def stagedFiles: Seq[String] =
+    branches.filter(hasStaged).flatMap(b => CommitLog.fromJson(store.read(stagedRef(b))).files)
 
   /** CDC between two versions of a branch: row-level changes as a DataFrame
     * of (change_type, row-columns).
@@ -4205,8 +3655,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
                    maxRetries: Int = 3): Commit =
     retryLayoutCommit(maxRetries) { () =>
       guardWritable(branch)
-      val parent = head(branch).getOrElse(
-        throw new IllegalArgumentException(s"no such branch: $branch"))
+      val parent = headOrThrow(branch)
       val touchedSet = statsCandidates(parent, where).toSet
       if (touchedSet.isEmpty) parent
       else synchronized {
@@ -4613,7 +4062,6 @@ object VersionedTable {
   /** Slot filename "<branch>-v<version>"; greedy branch group so hyphenated
     * branch names (even ones ending in "-vN") parse to the right (branch,
     * version) split — the version is always the TRAILING digits. */
-  private[vt] val SlotRe = "(.+)-v(\\d+)".r
 
   /** Internal provenance-tag column names of the merge-on-read scan —
     * underscored to stay clear of user schemas. */
@@ -4766,18 +4214,13 @@ object VersionedTable {
     * `data/` is always the Spark-visible filesystem. */
   def create(root: String, store: MetaStore = LocalFsMetaStore): VersionedTable = {
     val p = Paths.get(root)
-    store.ensurePrefix(p.resolve("commits"))
-    store.ensurePrefix(p.resolve("refs"))
-    Files.createDirectories(p.resolve("data"))
-    store.put(p.resolve("_graft_table"), "versioned-table-v1")
+    CommitGraph.initTable(p, store)
     new VersionedTable(p, store)
   }
 
   def open(root: String, store: MetaStore = LocalFsMetaStore): VersionedTable = {
     val p = Paths.get(root)
-    require(store.exists(p.resolve("_graft_table")) ||
-        Files.isDirectory(p.resolve("commits")), // pre-marker tables on local FS
-      s"not a versioned table root: $root")
+    require(CommitGraph.isTableRoot(p, store), s"not a versioned table root: $root")
     new VersionedTable(p, store)
   }
 

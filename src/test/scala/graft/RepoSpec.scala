@@ -396,6 +396,71 @@ class RepoSpec extends SparkSpec {
     intercept[IllegalArgumentException](Repo.open(tableRoot, storeFor(tableRoot)))
   }
 
+  /** Counts the metadata reads (read, exists, list) that reach `inner`. */
+  private final class CountingStore(inner: MetaStore) extends MetaStore {
+    var reads = 0
+    def putIfAbsent(key: java.nio.file.Path, content: String): Boolean =
+      inner.putIfAbsent(key, content)
+    def put(key: java.nio.file.Path, content: String): Unit = inner.put(key, content)
+    def read(key: java.nio.file.Path): String = { reads += 1; inner.read(key) }
+    def exists(key: java.nio.file.Path): Boolean = { reads += 1; inner.exists(key) }
+    def delete(key: java.nio.file.Path): Boolean = inner.delete(key)
+    def list(dir: java.nio.file.Path): Vector[java.nio.file.Path] = { reads += 1; inner.list(dir) }
+    def lastModified(key: java.nio.file.Path): Long = inner.lastModified(key)
+    def ensurePrefix(dir: java.nio.file.Path): Unit = inner.ensurePrefix(dir)
+  }
+
+  test("deep repo history: time travel, timestamp travel and revert use the checkpoint index") {
+    val root = Tables.scratch("repo_ckpt" + suiteTag)
+    val store = new CountingStore(storeFor(root))
+    val repo = Repo.create(root, store)
+    repo.stageWrite(Seq(0).toDF("x"), "main", "a")
+    repo.commit("main", "v0")
+    repo.stageWrite(Seq(1).toDF("x"), "main", "a")
+    val c1 = repo.commit("main", "v1")
+    while (System.currentTimeMillis() <= c1.ts) Thread.sleep(1)
+    // metadata-only commits: even versions hold v0's snapshot, odd ones v1's
+    val interval = graft.vt.VersionedTable.CheckpointInterval
+    (2L to 4 * interval).foreach(v => repo.revert("main", v % 2))
+    assert(repo.head("main").get.version === 4 * interval)
+    // the head walk alone would load every commit down to v1
+    val bound = 2 * interval
+    def reads[T](f: => T): (T, Int) = { store.reads = 0; val r = f; (r, store.reads) }
+    val (atV1, n1) = reads(repo.readTableAsOf(spark, "main", "a", 1))
+    assert(atV1.as[Int].collect() === Array(1))
+    assert(n1 <= bound, s"readTableAsOf v1 did $n1 metadata reads")
+    val (atTs, n2) = reads(repo.readTableAsOfTimestamp(spark, "main", "a", c1.ts))
+    assert(atTs.as[Int].collect() === Array(1))
+    assert(n2 <= bound, s"readTableAsOfTimestamp did $n2 metadata reads")
+    val (_, n3) = reads(repo.revert("main", 1))
+    assert(n3 <= bound + 5, s"revert to v1 did $n3 metadata reads")
+    assert(repo.readTable(spark, "main", "a").as[Int].collect() === Array(1))
+    assert(repo.tableChanges(spark, "main", "a", 0, 1).count() === 2)
+  }
+
+  test("createBranch from a missing source leaves no branch-index entry behind") {
+    val repo = freshRepo("repo_branch_missing")
+    repo.stageWrite(Seq(1).toDF("x"), "main", "a")
+    repo.commit("main", "v0")
+    intercept[IllegalArgumentException](repo.createBranch("ghost", "no_such_branch"))
+    val index = repo.store.list(repo.root.resolve("refidx"))
+      .filter(_.getFileName.toString.startsWith("branches.gen"))
+    assert(index.nonEmpty)
+    assert(!index.exists(p => repo.store.read(p).split('\n').contains("ghost")),
+      "a failed createBranch indexed its branch")
+    assert(repo.branches === Seq("main"))
+  }
+
+  test("a repo root is not a versioned table: VersionedTable.open refuses it") {
+    val root = Tables.scratch("repo_not_a_table" + suiteTag)
+    val repo = Repo.create(root, storeFor(root))
+    repo.stageWrite(Seq(1).toDF("x"), "main", "a")
+    repo.commit("main", "v0")
+    intercept[IllegalArgumentException](
+      graft.vt.VersionedTable.open(root, storeFor(root)))
+    assert(repo.readTable(spark, "main", "a").as[Int].collect() === Array(1))
+  }
+
   test("branches are zero-copy and isolated across all tables") {
     val repo = freshRepo("repo_branch")
     repo.stageWrite(Seq(1).toDF("x"), "main", "a")

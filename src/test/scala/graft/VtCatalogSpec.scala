@@ -609,6 +609,28 @@ class VtCatalogSpec extends SparkSpec {
       === (1L to 200L).sum)
   }
 
+  test("DROP TABLE on a repo root answers false and leaves the repo readable") {
+    registerCatalog()
+    val root = Tables.scratch("vtcat_repo_root")
+    val repo = graft.vt.Repo.create(root)
+    repo.stageWrite(Seq(1, 2).toDF("x"), "main", "t")
+    repo.commit("main", "v0")
+    val cat = new graft.sources.VtCatalog()
+    cat.initialize("vt", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Collections.emptyMap()))
+    assert(!cat.dropTable(
+      org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, root)))
+    // the SQL surface may refuse by error or by answering false, never by
+    // deleting; nor may CREATE TABLE lay a table over the repo's refs
+    scala.util.Try(spark.sql(s"DROP TABLE vt.`$root`").collect())
+    intercept[Exception](spark.sql(s"CREATE TABLE vt.`$root` (k BIGINT)").collect())
+    intercept[Exception](
+      spark.sql(s"CREATE TABLE vt.`$root` USING vt AS SELECT 1L AS k").collect())
+    assert(graft.vt.Repo.open(root).head("main").get.version === 0)
+    assert(graft.vt.Repo.open(root).readTable(spark, "main", "t")
+      .as[Int].collect().sorted === Array(1, 2))
+  }
+
   test("r19 DDL: CREATE TABLE / CTAS / DROP TABLE; a failed CTAS leaves no committed table") {
     registerCatalog()
     val path = Tables.scratch("vtcat_ctas")
