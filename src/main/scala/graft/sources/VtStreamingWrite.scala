@@ -127,7 +127,8 @@ private[sources] final case class VtEpochWriterFactory(root: String, branch: Str
 
       override def write(record: InternalRow): Unit = {
         if (writer == null) {
-          val conf = Dsv2Shim.confOf(confWrapper)
+          val conf = new org.apache.hadoop.conf.Configuration(Dsv2Shim.confOf(confWrapper))
+          graft.vt.LakeFiles.LocalFsOptions.foreach { case (k, v) => conf.set(k, v) }
           writer = new VtRowParquetBuilder(
             new HPath(java.nio.file.Paths.get(root).resolve(rel).toUri))
             .withConf(conf)

@@ -19,6 +19,7 @@ import java.nio.file.{Files, Path}
   *   refidx/                single-key branch index (CasStringSet)
   *   checkpoints/<branch>-v<N>  sparse version → commit index
   *   tags/<name>            immutable tags (TagStore)
+  *   tagidx/                single-key tag index (CasStringSet)
   *   protected/             branch-protection rules (ProtectionRules)
   *   data/                  immutable data files and `.manifest` sidecars
   * }}}
@@ -38,6 +39,7 @@ private[vt] trait CommitGraph {
   private[vt] def locksDir: Path = root.resolve("locks")
   private def checkpointsDir: Path = root.resolve("checkpoints")
   private def tagsDir: Path = root.resolve("tags")
+  private def tagIndexDir: Path = root.resolve("tagidx")
   private def protectedDir: Path = root.resolve("protected")
   protected def dataDir: Path = root.resolve("data")
 
@@ -54,10 +56,11 @@ private[vt] trait CommitGraph {
     CommitLog.fromJson(store.read(commitsDir.resolve(id + ".json")))
 
   /** Load a commit, materializing a manifest-backed record (r20,
-    * [[Manifest]]): the JSON carries only manifest PATHS; their concatenated
-    * entries — in the order [[buildManifests]] made identical to the order
-    * publish saw — become `files` and the per-file stats maps. Everything
-    * downstream keeps seeing a fully materialized [[Commit]]; immutable
+    * [[Manifest]]): the JSON carries only manifest PATHS; their entries,
+    * minus the paths another manifest of the list drops
+    * ([[Manifest.resolve]]), in the order [[buildManifests]] made identical
+    * to the order publish saw, become `files` and the per-file stats maps.
+    * Everything downstream keeps seeing a fully materialized [[Commit]]; immutable
     * manifests parse once per process ([[Manifest.cached]]). A repo's
     * path-only entries resolve to files alone; legacy inline commits pass
     * through untouched. */
@@ -65,7 +68,7 @@ private[vt] trait CommitGraph {
     val c = rawCommit(id)
     if (c.manifests.isEmpty) c
     else {
-      val entries = c.manifests.flatMap(m => Manifest.cached(root.resolve(m)))
+      val entries = Manifest.resolve(c.manifests.map(m => Manifest.cached(root.resolve(m))))
       c.copy(
         files = entries.map(_.file),
         stats = entries.iterator.filter(_.stats.nonEmpty)
@@ -330,10 +333,11 @@ private[vt] trait CommitGraph {
   protected def newCommitId(branch: String, version: Long): String =
     s"$branch-v$version-${java.util.UUID.randomUUID.toString.take(8)}"
 
-  /** Factor `files` into manifest refs ([[Manifest.factor]]): reuse every
-    * candidate manifest whose entries are all still live and unchanged, pool
-    * the rest with the new files into ONE fresh manifest, and compact
-    * everything past [[VersionedTable.MaxManifests]] refs. `entryOf` gives
+  /** Factor `files` into manifest refs ([[Manifest.factor]]): keep
+    * referencing every candidate manifest that is still mostly live, write
+    * ONE fresh manifest with the new or changed entries and a drop for each
+    * kept entry that is gone, and compact everything past
+    * [[VersionedTable.MaxManifests]] refs. `entryOf` gives
     * each file's entry — per-file stats for a table, the path alone for a
     * repo. Returns (manifest paths, files in RESOLUTION order), the order
     * [[loadCommit]] reproduces. */
@@ -342,11 +346,11 @@ private[vt] trait CommitGraph {
       : (Vector[String], Vector[String]) =
     Manifest.factor(
       load = mref => Manifest.cached(root.resolve(mref)),
-      write = { entries =>
+      write = { (entries, drops) =>
         Files.createDirectories(dataDir)
         val p = dataDir.resolve(
           s"$branch-v$version-mf-${java.util.UUID.randomUUID.toString.take(8)}.manifest")
-        Manifest.write(p, entries)
+        Manifest.write(p, entries, drops)
         root.relativize(p).toString
       },
       candidateRefs = candidateRefs,
@@ -389,12 +393,12 @@ private[vt] trait CommitGraph {
   def createTagAt(name: String, commitId: String): Commit = {
     require(commitExists(commitId), s"no such commit: $commitId")
     val c = loadCommit(commitId)
-    TagStore.create(store, tagsDir, name, commitId)
+    TagStore.create(store, tagsDir, tagIndexDir, name, commitId)
     c
   }
 
   /** (tag name, commit id) pairs, name-sorted. */
-  def tags: Seq[(String, String)] = TagStore.all(store, tagsDir)
+  def tags: Seq[(String, String)] = TagStore.all(store, tagsDir, tagIndexDir)
 
   def tagCommit(name: String): Commit =
     loadCommit(TagStore.commitIdOf(store, tagsDir, name))

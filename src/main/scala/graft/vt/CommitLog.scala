@@ -128,16 +128,17 @@ final case class Commit(
       * too. Absent = empty (back-compatible JSON). */
     props: Map[String, String] = Map.empty,
     /** Commit-metadata MANIFEST files (r20, [[Manifest]]): table-root-
-      * relative `.manifest` paths whose concatenated entries ARE this
+      * relative `.manifest` paths whose entries, minus the paths another
+      * manifest of the list drops ([[Manifest.resolve]]), ARE this
       * snapshot's file list + per-file stats. When non-empty, the commit
       * JSON omits `files`/`stats`/`strStats`/`rowCounts`/`nullStats`/
-      * `fileSizes` entirely — [[VersionedTable.loadCommit]] resolves the
+      * `fileSizes` entirely — [[CommitGraph.loadCommit]] resolves the
       * references back into those fields, so everything downstream keeps
-      * seeing a fully materialized Commit. An append reuses the parent's
-      * manifests by reference and adds ONE new manifest for its new files:
-      * the commit record is O(changed files), not O(table), the Iceberg
-      * manifest-sharing shape. Absent = empty = legacy inline commit
-      * (back-compatible JSON). */
+      * seeing a fully materialized Commit. A commit reuses the parent's
+      * manifests by reference and adds at most ONE new manifest holding its
+      * new or changed entries and a drop per removed file: the commit record
+      * is O(changed files), not O(table), the Iceberg manifest-sharing
+      * shape. Absent = empty = legacy inline commit (back-compatible JSON). */
     manifests: Vector[String] = Vector.empty) {
   /** All parents, first-parent first — the DAG edge set for ancestry walks. */
   def parents: List[String] = parent.toList ++ mergeParent.toList

@@ -1,16 +1,20 @@
 package graft.vt
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.DataFrame
 
 /** The one writer of lake parquet: every data, deletion-vector, staged repo
   * table, foreign-Delta and Delta-export file the engine lands goes through
-  * [[write]], and vacuum removes files through [[delete]], so no checksum
-  * sidecar outlives its file. */
+  * [[write]], with no `.crc` checksum sidecar ([[NioLocalFileSystem]]), and
+  * vacuum removes files through [[delete]], so no sidecar an older writer
+  * left outlives its file. */
 private[graft] object LakeFiles {
 
   /** Lake parquet is always zstd at parquet-mr's default level (3), with no
@@ -18,10 +22,19 @@ private[graft] object LakeFiles {
     * travel. Older snappy files stay readable — the footer names the codec. */
   val Codec: CompressionCodecName = CompressionCodecName.ZSTD
 
+  /** Hadoop settings of a lake write: local files go through
+    * [[NioLocalFileSystem]], a fresh instance per job, so neither the
+    * session's conf nor its cached `file:` filesystem changes. */
+  val LocalFsOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** Write `df` into the fresh directory `out` (zstd, no `_SUCCESS`
-    * marker); return its part files relative to `root`, sorted. */
+    * marker, no `.crc` sidecars); return its part files relative to `root`,
+    * sorted. */
   def write(df: DataFrame, out: Path, root: Path): Vector[String] = {
     df.write.mode("overwrite")
+      .options(LocalFsOptions)
       .option("compression", Codec.name.toLowerCase)
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(out.toString)
@@ -31,7 +44,8 @@ private[graft] object LakeFiles {
     finally st.close()
   }
 
-  /** Delete a lake file and its Hadoop checksum sidecar `.<name>.crc`. */
+  /** Delete a lake file and the Hadoop checksum sidecar `.<name>.crc` that
+    * writers before [[NioLocalFileSystem]] left beside it. */
   def delete(p: Path): Unit = {
     Files.deleteIfExists(p)
     Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
@@ -77,4 +91,16 @@ private[graft] object LakeFiles {
     val st = Files.list(dir)
     try st.iterator().asScala.toVector finally st.close()
   }
+}
+
+/** Hadoop's raw local filesystem — no `ChecksumFileSystem`, so no `.crc`
+  * sidecar per file (parquet already checksums pages and the footer) — that
+  * sets permissions through `java.nio` instead of forking `chmod`, which
+  * Hadoop does for every created file and directory when its native library
+  * is missing. Lake writes select it per job ([[LakeFiles.LocalFsOptions]]). */
+private[graft] class NioLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: HPath, permission: FsPermission): Unit =
+    Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(
+      Seq(permission.getUserAction, permission.getGroupAction, permission.getOtherAction)
+        .map(_.SYMBOL).mkString))
 }

@@ -20,33 +20,48 @@ final case class ManifestEntry(
     strStats: Map[String, (String, String)],
     nulls: Map[String, Long])
 
+/** What one manifest file holds: per-file entries, plus (format 2) DROPS —
+  * paths of entries in OTHER manifests of the same commit that this
+  * manifest retires. A drop is how a commit removes a file without
+  * re-stating the survivors of the manifest that listed it (Delta's
+  * `remove` action, Iceberg's `DELETED` entry status). */
+final case class ManifestFile(entries: Vector[ManifestEntry], drops: Vector[String])
+
 /** Commit-metadata MANIFEST codec (r20). Every commit JSON used to inline
   * the COMPLETE file list plus five per-file stats maps, copied from the
   * parent on every publish — at 10⁶ files a one-row append serializes a
   * multi-GB record, every `open()` parses it, and the log stores it once
   * PER COMMIT. Delta stores deltas + parquet checkpoints; Iceberg shares
-  * immutable manifest files across snapshots. This engine now does the
-  * Iceberg shape: per-file metadata lives in write-once `.manifest` files
-  * under `data/`, a commit records only the manifest PATHS
-  * ([[Commit.manifests]]), an append writes ONE new manifest for its new
-  * files and reuses the parent's untouched manifests BY REFERENCE, and
-  * [[VersionedTable.loadCommit]] resolves the references back into the
-  * in-memory [[Commit]] through a bounded process-wide cache — so the
-  * commit record is O(changed files) and `open()` parses each shared
-  * manifest once per process, not once per commit.
+  * immutable manifest files across snapshots. This engine does the Iceberg
+  * shape: per-file metadata lives in write-once `.manifest` files under
+  * `data/`, a commit records only the manifest PATHS ([[Commit.manifests]]),
+  * and [[CommitGraph.loadCommit]] resolves the references back into the
+  * in-memory [[Commit]] through a bounded process-wide cache.
+  *
+  * Every publish costs O(changed files): an append writes ONE new manifest
+  * for its new files and reuses the parent's by reference; a commit that
+  * removes or changes files keeps referencing the manifests that list them
+  * and records each removal as a DROP in its one fresh manifest (a changed
+  * entry is a drop plus a fresh entry). [[resolve]] applies the drops.
+  * A manifest is re-stated — its live entries pooled into the fresh one —
+  * only once at least half of what it holds is dead, so resolution reads
+  * at most about twice the live entries.
   *
   * The r19 bloom sidecar ([[BloomIndex]]) proved the pattern; manifests are
   * the same contract for the file list itself. Like sidecars they are
-  * data-plane artifacts: vacuum retains them through [[Commit.allFiles]]
+  * data-plane artifacts: vacuum retains every reachable commit's manifests
   * and sweeps orphans.
   *
-  * Format (write-once, driver-read): int32 magic "GMFT", int32 version (1),
+  * Format (write-once, driver-read): int32 magic "GMFT", int32 version,
   * int32 entry count, then per entry: path (len+UTF-8), size int64 (-1 =
   * unknown), rows int64 (-1 = unknown), numeric stats (int32 n, per col:
   * name, min/max as raw-bit doubles), string stats (int32 n, per col: name,
   * min/max as len+UTF-8 — NOT writeUTF, whose 64 KB modified-UTF-8 ceiling
   * a long string min/max would trip), null counts (int32 n, per col: name,
-  * int64). */
+  * int64). Version 2 appends int32 drop count and the dropped paths
+  * (len+UTF-8); a drop-free manifest is written as version 1. A reader
+  * refuses any other version, so an engine that predates drops fails
+  * loudly instead of resurrecting a dropped file. */
 object Manifest {
 
   private val Magic = 0x474d4654 // "GMFT"
@@ -63,11 +78,11 @@ object Manifest {
     new String(b, UTF8)
   }
 
-  def write(path: Path, entries: Seq[ManifestEntry]): Unit = {
+  def write(path: Path, entries: Seq[ManifestEntry], drops: Seq[String] = Nil): Unit = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
     out.writeInt(Magic)
-    out.writeInt(1)
+    out.writeInt(if (drops.isEmpty) 1 else 2)
     out.writeInt(entries.size)
     entries.foreach { e =>
       writeStr(out, e.file)
@@ -88,18 +103,22 @@ object Manifest {
         writeStr(out, col); out.writeLong(n)
       }
     }
+    if (drops.nonEmpty) {
+      out.writeInt(drops.size)
+      drops.foreach(writeStr(out, _))
+    }
     out.flush()
     Files.write(path, bos.toByteArray)
   }
 
-  def read(path: Path): Vector[ManifestEntry] = {
+  def read(path: Path): ManifestFile = {
     val in = new java.io.DataInputStream(
       new java.io.ByteArrayInputStream(Files.readAllBytes(path)))
     require(in.readInt() == Magic, s"$path is not a graft commit manifest")
     val ver = in.readInt()
-    require(ver == 1, s"unsupported manifest version $ver in $path")
+    require(ver == 1 || ver == 2, s"unsupported manifest version $ver in $path")
     val n = in.readInt()
-    Vector.fill(n) {
+    val entries = Vector.fill(n) {
       val file = readStr(in)
       val size = in.readLong() match { case -1L => None; case s => Some(s) }
       val rows = in.readLong() match { case -1L => None; case r => Some(r) }
@@ -114,70 +133,132 @@ object Manifest {
       val nulls = Vector.fill(in.readInt()) { (readStr(in), in.readLong()) }.toMap
       ManifestEntry(file, size, rows, stats, strStats, nulls)
     }
+    ManifestFile(entries, if (ver == 2) Vector.fill(in.readInt())(readStr(in)) else Vector.empty)
   }
 
   // Bounded process-wide cache keyed by absolute manifest path: manifests
   // are immutable once published and the same manifest is referenced by
   // every descendant commit, so lineage walks and repeated `open()`s share
   // one parsed copy.
-  private val cache = new BoundedCache[String, Vector[ManifestEntry]](512)
+  private val cache = new BoundedCache[String, ManifestFile](512)
 
-  def cached(path: Path): Vector[ManifestEntry] =
+  def cached(path: Path): ManifestFile =
     cache.get(path.toAbsolutePath.toString)(read(path))
+
+  /** A commit's live entries from its manifests, in reference order: every
+    * entry except those whose path ANOTHER manifest of the list drops. A
+    * manifest's own drops never hide its own entries — that is how a
+    * changed entry (drop plus fresh entry in one manifest) survives. */
+  def resolve(manifests: Seq[ManifestFile]): Vector[ManifestEntry] = {
+    val droppedBy = manifests.zipWithIndex
+      .flatMap { case (m, i) => m.drops.map(_ -> i) }.groupMap(_._1)(_._2)
+    manifests.zipWithIndex.flatMap { case (m, i) =>
+      m.entries.filterNot(e => droppedBy.get(e.file).exists(_.exists(_ != i)))
+    }.toVector
+  }
 
   /** The ONE manifest-factoring algorithm, shared by the table layer
     * ([[VersionedTable]], full per-file stats entries) and the repo layer
-    * ([[Repo]], path-only entries): reuse every candidate manifest whose
-    * entries are ALL still live and byte-identical to the commit's current
-    * metadata for their files, pool the survivors of partially dead
-    * manifests with the genuinely new files into ONE fresh manifest, and
-    * compact everything into a single manifest when the reference list
-    * would exceed `maxRefs` (so `open()` stays a bounded number of cached
-    * reads forever — Iceberg's rewrite-manifests cadence, amortized
-    * O(files/maxRefs) per commit).
+    * ([[Repo]], path-only entries). It keeps referencing every candidate
+    * manifest that is still mostly live, writes at most ONE fresh manifest
+    * — the entries no kept manifest provides, plus a drop for every kept
+    * manifest's entry that is no longer live — and compacts everything
+    * into a single drop-free manifest when the reference list would exceed
+    * `maxRefs` (so `open()` stays a bounded number of cached reads forever
+    * — Iceberg's rewrite-manifests cadence).
+    *
+    * Drops are recomputed here from the target file set, never carried, so
+    * publish, merge, revert and rebase need no logic of their own. A
+    * candidate stays referenced iff
+    *  - its live, unchanged entries plus the drops that still hide another
+    *    kept manifest's dead entry are MORE than half of what it holds (the
+    *    half-dead rule: past it, its live entries are re-stated), and
+    *  - none of its drops names a live file it does not itself provide (a
+    *    stale drop would hide a path a revert re-added, or its fresh
+    *    entry).
+    * A live file listed by two kept manifests is provided by the one that
+    * also drops it (a changed entry), else by the first; a stale copy no
+    * kept manifest drops is re-stated as a drop plus a fresh entry.
     *
     * Returns (manifest refs, files in RESOLUTION order) — the order
-    * loading the refs back reproduces, which publishers store in the
-    * in-memory commit so a log round-trip is an identity. */
-  def factor(load: String => Vector[ManifestEntry],
-             write: Seq[ManifestEntry] => String,
+    * [[resolve]] reproduces, which publishers store in the in-memory commit
+    * so a log round-trip is an identity. */
+  def factor(load: String => ManifestFile,
+             write: (Seq[ManifestEntry], Seq[String]) => String,
              candidateRefs: Vector[String], files: Vector[String],
              entryOf: String => ManifestEntry,
              maxRefs: Int): (Vector[String], Vector[String]) = {
     if (files.isEmpty) return (Vector.empty, files)
     val fileSet = files.toSet
-    var covered = Set.empty[String]
-    val reused = Vector.newBuilder[String]
-    val reusedFiles = Vector.newBuilder[String]
-    val residual = Vector.newBuilder[ManifestEntry]
-    candidateRefs.distinct.foreach { mref =>
-      val entries =
-        try load(mref)
-        catch { case scala.util.control.NonFatal(_) => Vector.empty }
-      // an entry survives iff its file is still in the snapshot, not
-      // already covered by an earlier manifest (merge commits may reference
-      // overlapping ancestors), and its metadata is UNCHANGED (ANALYZE
-      // backfill and stats-evolving rewrites migrate files out)
-      val live = entries.filter(e =>
-        fileSet(e.file) && !covered(e.file) && entryOf(e.file) == e)
-      if (live.nonEmpty && live.size == entries.size) {
-        reused += mref
-        live.foreach { e => covered += e.file; reusedFiles += e.file }
-      } else if (live.nonEmpty) {
-        live.foreach { e => covered += e.file; residual += e }
+    val current = scala.collection.mutable.HashMap.empty[String, ManifestEntry]
+    def unchanged(e: ManifestEntry) =
+      fileSet(e.file) && current.getOrElseUpdate(e.file, entryOf(e.file)) == e
+    final case class Cand(ref: String, m: ManifestFile) {
+      val drops: Set[String] = m.drops.toSet
+    }
+    var kept = candidateRefs.distinct.flatMap { ref =>
+      try Some(Cand(ref, load(ref)))
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
+    // live files that must be re-stated: a kept manifest lists a stale copy
+    // that no kept manifest drops, so no drop could hide it alone
+    var restate = Set.empty[String]
+    var provider = Map.empty[String, Int] // live file → index into `kept`
+    var settled = false
+    while (!settled) {
+      val prov = scala.collection.mutable.HashMap.empty[String, Int]
+      kept.zipWithIndex.foreach { case (c, i) =>
+        c.m.entries.foreach { e =>
+          if (!restate(e.file) && unchanged(e) &&
+              prov.get(e.file).forall(p => c.drops(e.file) && !kept(p).drops(e.file)))
+            prov(e.file) = i
+        }
+      }
+      provider = prov.toMap
+      def hidden(i: Int, f: String) = !provider.get(f).contains(i)
+      // holders(f): kept manifests listing f without providing it
+      val holders = kept.zipWithIndex.flatMap { case (c, i) =>
+        c.m.entries.collect { case e if hidden(i, e.file) => e.file -> i }
+      }.groupMap(_._1)(_._2)
+      val next = kept.zipWithIndex.filter { case (c, i) =>
+        val live = c.m.entries.count(e => !hidden(i, e.file))
+        val useful = c.m.drops.count(d => holders.get(d).exists(_.exists(_ != i)))
+        c.m.drops.forall(d => !fileSet(d) || provider.get(d).contains(i)) &&
+          2 * (live + useful) > c.m.entries.size + c.m.drops.size
+      }.map(_._1)
+      if (next.size < kept.size) kept = next
+      else {
+        // settle the survivors: a live file some kept manifest lists stale,
+        // whose provider does not drop it, is re-stated instead
+        val stale = kept.zipWithIndex.flatMap { case (c, i) =>
+          c.m.entries.collect {
+            case e if fileSet(e.file) && hidden(i, e.file) &&
+              provider.get(e.file).exists(p => !kept(p).drops(e.file)) => e.file
+          }
+        }
+        restate ++= stale
+        settled = stale.isEmpty
       }
     }
-    val freshEntries = residual.result() ++ files.filterNot(covered).map(entryOf)
-    val ordered = reusedFiles.result() ++ freshEntries.map(_.file)
+    val keptFiles = kept.zipWithIndex.flatMap { case (c, i) =>
+      c.m.entries.collect { case e if provider.get(e.file).contains(i) => e.file }
+    }
+    val fresh = files.filterNot(keptFiles.toSet)
+    // a kept manifest's entry nobody provides must be hidden: by another
+    // kept manifest's drop, or else by a drop in the fresh manifest
+    val owed = kept.zipWithIndex.flatMap { case (c, i) =>
+      c.m.entries.collect { case e if !provider.get(e.file).contains(i) &&
+        !kept.indices.exists(j => j != i && kept(j).drops(e.file)) => e.file }
+    }.distinct
+    val ordered = keptFiles ++ fresh
     // decide compaction from the WOULD-BE ref count before writing anything:
     // writing the fresh manifest first and then compacting would orphan it
     // immediately — a wasted O(changed files) sidecar per compaction
-    val wouldBe = reused.result().size + (if (freshEntries.nonEmpty) 1 else 0)
-    if (wouldBe <= maxRefs)
-      (reused.result() ++
-        (if (freshEntries.nonEmpty) Vector(write(freshEntries)) else Vector.empty),
-        ordered)
-    else // compact: one manifest holding every live entry, resolution order
-      (Vector(write(ordered.map(entryOf))), ordered)
+    val freshRef = fresh.nonEmpty || owed.nonEmpty
+    if (kept.size + (if (freshRef) 1 else 0) <= maxRefs)
+      (kept.map(_.ref) ++
+        (if (freshRef) Vector(write(fresh.map(entryOf), owed)) else Vector.empty), ordered)
+    else // compact: one drop-free manifest holding every live entry, in order
+      (Vector(write(ordered.map(entryOf), Nil)), ordered)
   }
 }

@@ -10,9 +10,9 @@ import java.nio.file.Path
   * creation (two racing creates resolve atomically on any conforming
   * [[MetaStore]]), immutability — cannot drift between the two scopes.
   *
-  * Enumeration goes through a single-key [[CasStringSet]] INDEX (sibling
-  * `tagidx/` prefix — it cannot live under `tags/`, where its generation
-  * keys would list as tags) unioned with the listing, for the same reason
+  * Enumeration goes through a single-key [[CasStringSet]] INDEX (in a
+  * directory the caller names beside `tags/` — it cannot live under
+  * `tags/`, where its generation keys would list as tags) unioned with the listing, for the same reason
   * branches do: tags are create-once keys, exactly the class an
   * eventually-consistent LIST hides while young — and a fresh release tag
   * is often the ONLY thing keeping its commit's files out of vacuum's sweep
@@ -22,8 +22,8 @@ import java.nio.file.Path
   * create) is filtered by a strong single-key exists probe. */
 private[vt] object TagStore {
 
-  private def index(store: MetaStore, tagsDir: Path): CasStringSet =
-    new CasStringSet(store, tagsDir.getParent.resolve("tagidx"), "tags")
+  private def index(store: MetaStore, indexDir: Path): CasStringSet =
+    new CasStringSet(store, indexDir, "tags")
 
   /** Reject names that cannot serve as a single flat object key. */
   def validateName(name: String): Unit =
@@ -31,10 +31,11 @@ private[vt] object TagStore {
       s"bad tag name: $name")
 
   /** Atomically create `name` → `commitId`; throws if the tag exists. */
-  def create(store: MetaStore, tagsDir: Path, name: String, commitId: String): Unit = {
+  def create(store: MetaStore, tagsDir: Path, indexDir: Path, name: String,
+             commitId: String): Unit = {
     validateName(name)
     store.ensurePrefix(tagsDir)
-    index(store, tagsDir).add(name) // before the object: see enumeration note
+    index(store, indexDir).add(name) // before the object: see enumeration note
     if (!store.putIfAbsent(tagsDir.resolve(name), commitId))
       throw new IllegalArgumentException(s"tag exists: $name (tags are immutable)")
   }
@@ -42,9 +43,9 @@ private[vt] object TagStore {
   /** (tag name, commit id) pairs, name-sorted — index ∪ listing, existence
     * re-probed per name (single-key reads are strongly consistent even
     * where LIST is not). */
-  def all(store: MetaStore, tagsDir: Path): Seq[(String, String)] = {
+  def all(store: MetaStore, tagsDir: Path, indexDir: Path): Seq[(String, String)] = {
     val listed = store.list(tagsDir).map(_.getFileName.toString)
-    (listed ++ index(store, tagsDir).all).distinct.sorted
+    (listed ++ index(store, indexDir).all).distinct.sorted
       .filter(n => store.exists(tagsDir.resolve(n)))
       .flatMap { n =>
         // a tag deleted between the exists probe and this read must be

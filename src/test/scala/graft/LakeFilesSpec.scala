@@ -12,8 +12,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import graft.vt.{DeltaForeignWriter, DeltaLogFixture, MergeClause, Repo, VersionedTable}
 
 /** Every parquet file the engine lands in a lake goes through one writer
-  * ([[graft.vt.LakeFiles]]): zstd column chunks, no `_SUCCESS` marker, and
-  * vacuum removes each file's checksum sidecar with it. Older snappy files
+  * ([[graft.vt.LakeFiles]]): zstd column chunks, no `_SUCCESS` marker, no
+  * `.crc` checksum sidecar, and vacuum removes the sidecars older writers
+  * left with their files. Older snappy files
   * (here: a shallow clone of a fixture-authored Delta table) stay readable
   * next to zstd rewrites. */
 class LakeFilesSpec extends SparkSpec {
@@ -51,6 +52,21 @@ class LakeFilesSpec extends SparkSpec {
     assert(added.exists(p => codecs(p) == Set("ZSTD")), s"$what: no row groups")
     assert(!walk(root).exists(_.getFileName.toString == "_SUCCESS"),
       s"$what left a _SUCCESS marker")
+    out
+  }
+
+  private def crcOf(p: Path): Path = p.resolveSibling(s".${p.getFileName}.crc")
+
+  private def crcs(root: Path): Set[Path] =
+    walk(root).filter(_.getFileName.toString.endsWith(".crc")).toSet
+
+  /** Run `op` and check it added parquet under `root` but no `.crc`
+    * checksum sidecar anywhere. */
+  private def landsNoCrc[T](root: Path, what: String)(op: => T): T = {
+    val before = parquetFiles(root)
+    val out = op
+    assert((parquetFiles(root) -- before).nonEmpty, s"$what wrote no parquet file")
+    assert(crcs(root).isEmpty, s"$what left checksum sidecars: ${crcs(root).mkString(", ")}")
     out
   }
 
@@ -137,6 +153,44 @@ class LakeFilesSpec extends SparkSpec {
       .count() === 13L)
   }
 
+  test("no lake writer lands a .crc sidecar, and every file reads back") {
+    val vt = VersionedTable.create(Tables.scratch("lake_nocrc_vt"))
+    val r = vt.root
+    landsNoCrc(r, "write") {
+      vt.write(rows(1, 40).repartitionByRange(4, $"k"), "main", "v0", statsCols = Seq("k"))
+    }
+    landsNoCrc(r, "upsert")(vt.upsert(spark, Seq((2L, "two"), (60L, "new")).toDF("k", "v"), Seq("k")))
+    landsNoCrc(r, "mergeInto") {
+      vt.mergeInto(spark, Seq((5L, "five"), (70L, "ins")).toDF("k", "nv"), "t.k = s.k",
+        matched = Seq(MergeClause.update(Map("v" -> "s.nv"))),
+        notMatched = Seq(MergeClause.insert(Map("k" -> "s.k", "v" -> "s.nv"))))
+    }
+    landsNoCrc(r, "delete")(vt.delete(spark, "k between 10 and 12"))
+    landsNoCrc(r, "update")(vt.update(spark, "k between 20 and 29", Map("v" -> "'twenties'")))
+    landsNoCrc(r, "deleteWithVectors")(vt.deleteWithVectors(spark, "k = 33"))
+    val expected = ((1 to 40).toSet ++ Set(60, 70) -- (10 to 12) - 33).map(_.toLong)
+    assert(vt.read(spark, "main").select($"k").as[Long].collect().toSet === expected)
+    assert(vt.read(spark, "main").where($"k".isin(2, 5, 25)).select($"v").as[String]
+      .collect().toSet === Set("two", "five", "twenties"))
+    assert(vt.countRows(spark, "main") === expected.size.toLong)
+    assert(vt.readVersion(spark, "main", 0).count() === 40L)
+    landsNoCrc(r, "delta export") {
+      vt.exportDeltaLog("main", changeDataFeed = true, checkpointInterval = Some(2))
+    }
+    assert(spark.read.format("delta-lite").option("path", r.toString).load()
+      .select($"k").as[Long].collect().toSet === expected)
+    assert(graft.vt.DeltaLogReader.changes(spark, r.toString, 1, 2).count() > 0)
+
+    val repoRoot = Paths.get(Tables.scratch("lake_nocrc_repo"))
+    val repo = Repo.create(repoRoot.toString)
+    landsNoCrc(repoRoot, "repo stage") {
+      repo.stageWrite(rows(1, 20).repartition(2), "main", "t")
+      repo.stageAppend(rows(21, 25), "main", "t")
+      repo.commit("main", "load t")
+    }
+    assert(repo.readTable(spark, "main", "t").count() === 25L)
+  }
+
   test("mixed-codec history: snappy files of a cloned version read next to zstd rewrites") {
     // a fixture-authored Delta table: two snappy files, no stats
     val delta = Paths.get(Tables.scratch("lake_mixed_delta"))
@@ -172,8 +226,9 @@ class LakeFilesSpec extends SparkSpec {
     val dead = v0.files.toSet -- v1.files
     // one rewritten file: its directory still holds three live files
     assert(dead.size === 1 && v0.files.size === 4)
-    assert(Files.exists(vt.root.resolve(dead.head).resolveSibling(
-      s".${Paths.get(dead.head).getFileName}.crc")), "the writer left no .crc to test")
+    // lake writes land no sidecar any more; plant the one an older writer
+    // left beside the dead file, which vacuum must still remove with it
+    dead.foreach(f => Files.write(crcOf(vt.root.resolve(f)), Array[Byte](1, 2)))
     val dry = vt.vacuum(retainLast = 1, dryRun = true)
     assert(vt.vacuum(retainLast = 1) === dry)
     assert(dry >= dead.size)
@@ -187,6 +242,7 @@ class LakeFilesSpec extends SparkSpec {
     val r0 = repo.commit("main", "v0")
     repo.stageWrite(rows(1, 5), "main", "t")
     repo.commit("main", "v1")
+    r0.files.foreach(f => Files.write(crcOf(root.resolve(f)), Array[Byte](1, 2)))
     assert(repo.vacuum(retainLast = 1) >= r0.files.size)
     assert(r0.files.forall(f => !Files.exists(root.resolve(f))))
     assert(orphanCrcs(root).isEmpty, orphanCrcs(root).mkString(", "))

@@ -853,4 +853,81 @@ class PropertySpec extends SparkSpec {
     }
     assert(n >= 25)
   }
+
+  test("property: every version of a random DML history resolves to the entries its publish saw") {
+    // Random append / copy-on-write delete / update / upsert / vector delete /
+    // compact / revert / merge histories over a table of small files, so
+    // commits keep, drop and re-state manifest entries in every mix. Each
+    // version's loadCommit must equal the file → entry map tracked beside
+    // it (a revert: its target's map), its rows the tracked row model.
+    def entries(c: graft.vt.Commit) = c.files.map(f => f -> (c.fileSizes.get(f),
+      c.rowCounts.get(f), c.stats.getOrElse(f, Map.empty), c.strStats.getOrElse(f, Map.empty),
+      c.nullStats.getOrElse(f, Map.empty))).toMap
+    var sawDrops = false
+    samples(Gen.listOfN(10, Gen.choose(0, 7)), 3).zipWithIndex.foreach { case (ops, i) =>
+      val vt = VersionedTable.create(Tables.scratch(s"prop_drops_$i"))
+      val rnd = new scala.util.Random(i)
+      def batch(kv: (Long, Long)*) = kv.toDF("k", "v").coalesce(1)
+      var rows: Map[Long, Long] = (0L until 60L).map(_ -> 0L).toMap
+      val c0 = vt.write(spark.range(0, 60, 1, 6).select($"id".as("k"), lit(0L).as("v")),
+        "main", "v0", statsCols = Seq("k"))
+      // version → (files in order, file → entry, rows)
+      val model = scala.collection.mutable.Map(0L -> (c0.files, entries(c0), rows))
+      var fresh = 1000L
+      def key() = { fresh += 1; fresh }
+      ops.zipWithIndex.foreach { case (op, step) =>
+        val lo = rnd.nextInt(60).toLong
+        val some = rows.keys.toVector.sorted
+        val c = op match {
+          case 1 if some.nonEmpty =>
+            rows = rows.filterNot { case (k, _) => k >= lo && k < lo + 3 }
+            vt.delete(spark, s"k >= $lo AND k < ${lo + 3}")
+          case 2 if some.nonEmpty =>
+            rows = rows.map { case (k, v) => k -> (if (k >= lo && k < lo + 4) v + 1 else v) }
+            vt.update(spark, s"k >= $lo AND k < ${lo + 4}", Map("v" -> "v + 1"))
+          case 3 =>
+            val src = (rnd.shuffle(some).take(3) :+ key()).map(_ -> 7L)
+            rows ++= src
+            vt.upsert(spark, batch(src: _*), Seq("k"))
+          case 4 if some.nonEmpty =>
+            val k = some(rnd.nextInt(some.size))
+            rows -= k
+            vt.deleteWithVectors(spark, s"k = $k")
+          case 5 => vt.compact(spark, "main", numFiles = 2, statsCols = Seq("k"))
+          case 6 if vt.head("main").get.version > 0 =>
+            val v = rnd.nextInt(vt.head("main").get.version.toInt).toLong
+            rows = model(v)._3
+            val c = vt.revert("main", v)
+            assert(entries(vt.loadCommit(c.id)) === model(v)._2, s"case $i: revert to v$v")
+            c
+          case 7 =>
+            vt.createBranch(s"b$step", "main")
+            val (kb, km) = (key(), key())
+            vt.write(batch(kb -> 2L), s"b$step", "on b", mode = "append", statsCols = Seq("k"))
+            val cm = vt.write(batch(km -> 3L), "main", "on main", mode = "append",
+              statsCols = Seq("k"))
+            rows += km -> 3L
+            model(cm.version) = (cm.files, entries(cm), rows)
+            rows += kb -> 2L
+            vt.merge(s"b$step", "main")
+          case _ =>
+            val k = key()
+            rows += k -> 1L
+            vt.write(batch(k -> 1L), "main", "append", mode = "append", statsCols = Seq("k"))
+        }
+        assert(vt.head("main").get.id === c.id, s"case $i step $step: op $op")
+        model(c.version) = (c.files, entries(c), rows)
+        assert(vt.read(spark, "main").as[(Long, Long)].collect().toMap === rows,
+          s"case $i step $step: op $op")
+      }
+      vt.lineage("main").foreach { c =>
+        val r = vt.loadCommit(c.id)
+        assert(r.files === model(c.version)._1, s"case $i: v${c.version} files")
+        assert(entries(r) === model(c.version)._2, s"case $i: v${c.version} entries")
+        sawDrops ||= c.manifests.exists(m => graft.vt.Manifest.read(vt.root.resolve(m)).drops.nonEmpty)
+      }
+      assert(vt.countRows(spark, "main") === rows.size.toLong)
+    }
+    assert(sawDrops, "no history recorded a drop")
+  }
 }

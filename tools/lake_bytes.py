@@ -24,7 +24,8 @@ and sorts every file into one kind:
 
 Prints one table per root and, for several roots, their total. `--check`
 exits 1 when any root holds a snappy data parquet file, a `_SUCCESS` marker,
-an orphan checksum file or an empty directory.
+a checksum sidecar (`crc` or `orphan crc`; the engine writes none) or an
+empty directory.
 Needs only pyarrow.
 """
 import os
@@ -110,7 +111,7 @@ def main(argv):
     if len(roots) > 1:
         print_table("total", total)
     bad = {k: v for k, v in total.items()
-           if k in ("data parquet (snappy)", "_SUCCESS", "orphan crc", "empty dir")}
+           if k in ("data parquet (snappy)", "_SUCCESS", "crc", "orphan crc", "empty dir")}
     if "--check" in flags and bad:
         print("check failed: " + ", ".join(f"{k} x{v[0]}" for k, v in sorted(bad.items())),
               file=sys.stderr)
