@@ -734,7 +734,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         .join(affected.distinct(), keyCols, "left_semi"))
     retireOrRewrite(spark, parent, branch,
       if (message.isEmpty) s"applyCdc on (${keyCols.mkString(", ")})" else message,
-      schema, landRetired(spark, parent, branch, candidates, hits),
+      schema, landRetired(spark, parent, branch, candidates, hits, Some(affected)),
       (rewrite, _) => {
         val kept = if (rewrite.isEmpty) None
           else Some(readCommit(spark, parent.copy(files = rewrite))
@@ -743,6 +743,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         // from the already-validated snapshot and re-land unchanged
         val fresh = if (noUpserts) None else Some(guardChecks(upserts, Some(parent)))
         (kept ++ fresh).reduceOption(_ unionByName _)
+          .map(sizedByInput(_, parent, rewrite, Some(upserts)))
       })
   }
 
@@ -1031,7 +1032,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     // matched and by-source rows are disjoint, so one vector holds both
     val hits = (matchedHits ++ bySourceHits).reduceOption(_ unionByName _)
     val retired = landRetired(spark, parent, branch,
-      if (bySourceHits.isDefined) parent.files else candidates, hits)
+      if (bySourceHits.isDefined) parent.files else candidates, hits, Some(source0))
     if (retired.multiHit) {
       dropVector(retired.vector)
       throw new IllegalArgumentException(
@@ -1139,29 +1140,13 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       // UPDATE/INSERT clauses can mint constraint-violating values — the
       // fused guard aborts the write before any commit publishes
       (rewrite, retire) => (rewritePart(rewrite, retire) ++ insertPart)
-        .reduceOption(_ unionByName _).map(guardChecks(_, Some(parent))),
+        .reduceOption(_ unionByName _).map(df => sizedByInput(guardChecks(df, Some(parent)),
+          parent, rewrite ++ retire, Some(source0))),
       // an insert-only merge with zero inserts is a no-op, decided from the
       // landed footers (r21) instead of an isEmpty probe of the anti-join
       noOpIfNothingLands = true)
   }
 
-  /** Delta `DELETE FROM … WHERE`: remove the rows where `where` evaluates
-    * TRUE, as a NEW version — old versions still time-travel; rows where the
-    * predicate is NULL are KEPT (SQL/Delta semantics: DELETE removes only
-    * confirmed matches). Returns the new commit, or the unchanged head when
-    * nothing matched (no version churn, like the empty-source upsert).
-    *
-    * COPY-ON-WRITE, file-granular (Delta DELETE's find-touched-files scan):
-    * one predicate-pushed scan over the snapshot lists the files that
-    * actually CONTAIN a matching row — parquet row-group stats make
-    * non-matching files a footer-level probe, and the driver receives a
-    * bounded O(#files) list, never rows. Only those files are rewritten with
-    * their kept rows; every other file (and its data-skipping stats entry)
-    * is carried untouched, so a point delete on a petabyte key-clustered
-    * table rewrites a handful of files. The file-granular [[changes]] /
-    * [[changesFeed]] diff over the interval then scans only
-    * rewritten+replacement files and reports the removed rows as
-    * `change_type = delete`. */
   /** Per-column [lo, hi] bounds implied by a delete/read predicate, for
     * commit-log stats pruning: walks top-level conjuncts, recognizing
     * `column cmp numeric-literal` in either orientation. Anything else — OR,
@@ -1440,6 +1425,27 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       bloomCols = parent.bloomCols, bloomFiles = parent.bloomFiles)
   }
 
+  /** Delta `DELETE FROM … WHERE`: remove the rows where `where` evaluates
+    * TRUE, as a NEW version — old versions still time-travel; rows where the
+    * predicate is NULL are KEPT (SQL/Delta semantics: DELETE removes only
+    * confirmed matches). Returns the new commit, or the unchanged head when
+    * nothing matched (no version churn, like the empty-source upsert).
+    *
+    * COPY-ON-WRITE, file-granular (Delta DELETE's find-touched-files scan):
+    * one predicate-pushed scan over the snapshot lists the files that
+    * actually CONTAIN a matching row — parquet row-group stats make
+    * non-matching files a footer-level probe, and the driver receives a
+    * bounded O(#files) list, never rows. Only those files are rewritten with
+    * their kept rows; every other file (and its data-skipping stats entry)
+    * is carried untouched, so a point delete on a petabyte key-clustered
+    * table rewrites a handful of files. The kept rows of all touched files
+    * go out as one write sized by the bytes it reads ([[sizedByInput]]): one
+    * new file per `spark.sql.files.maxPartitionBytes`, not one per touched
+    * file; a touched file that keeps no row leaves no file behind
+    * ([[dropEmpty]]). The file-granular [[changes]] /
+    * [[changesFeed]] diff over the interval then scans only
+    * rewritten+replacement files and reports the removed rows as
+    * `change_type = delete`. */
   def delete(spark: SparkSession, where: String, branch: String = "main",
              message: String = ""): Commit = synchronized {
     guardWritable(branch)
@@ -1462,7 +1468,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     val kept = readCommit(spark, parent.copy(files = touched))
       .where(not(coalesce(pred, lit(false)))) // NULL predicate keeps the row
     commitDml(spark, parent, branch, if (message.isEmpty) s"delete where ($where)" else message,
-      schema, untouched, writeDataFiles(kept, branch, parent.version + 1, mapTo = Some(schema)))
+      schema, untouched, dropEmpty(writeDataFiles(sizedByInput(kept, parent, touched, None),
+        branch, parent.version + 1, mapTo = Some(schema))))
   }
 
   /** Row-level UPDATE (Delta `UPDATE t SET c = e WHERE p`): commit-log
@@ -1501,7 +1508,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     if (candidates.isEmpty) return parent // stats alone prove nothing matches
     // same DV-safe detection as delete (see comment there)
     val hits = scanWithPos(spark, parent.copy(files = candidates)).where(pred)
-    val retired = landRetired(spark, parent, branch, candidates, Some(hits))
+    val retired = landRetired(spark, parent, branch, candidates, Some(hits), None)
     if (retired.perFile.isEmpty) return parent // update matched nothing
     // All SET right-hand sides evaluate against the OLD row: build every
     // new column from the original scan in one select (no sequential
@@ -1523,7 +1530,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       (rewrite, retire) => Seq(rewrite -> lit(true), retire -> hit).collect {
         case (files, keep) if files.nonEmpty =>
           assign(readCommit(spark, parent.copy(files = files)).where(keep))
-      }.reduceOption(_ unionByName _).map(guardChecks(_, Some(parent))))
+      }.reduceOption(_ unionByName _)
+        .map(df => sizedByInput(guardChecks(df, Some(parent)), parent, rewrite ++ retire, None)))
   }
 
   /** Live rows `hits` (carrying the [[scanWithPos]] tag columns) counted
@@ -1549,20 +1557,26 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     vector.headOption.foreach(f => graft.Tables.deleteRecursively(root.resolve(f).getParent))
 
   /** Land the detection pass `hits` of [[applyCdc]], [[mergeInto]] or
-    * [[update]] — over the parent's `scanned` files — as one
-    * deletion-vector part-file in the statement's single evaluation of it,
-    * then count it per file key with one small read of that file and of
-    * the parent's vectors for the scanned files. Entries for files the
+    * [[update]] — over the parent's `scanned` files and the statement's
+    * `source` — as a deletion vector in the statement's single evaluation
+    * of it, then count it per file key with one small read of the vector
+    * and of the parent's vectors for the scanned files. The pass adds no
+    * exchange of its own: it is coalesced by the bytes it reads
+    * ([[sizedByInput]]), so a statement under
+    * `spark.sql.files.maxPartitionBytes` lands one part-file and a larger
+    * one a part-file per that many bytes. Entries for files the
     * statement ends up rewriting are dead and harmless (readers match
     * vectors by live file key); a statement that retires no file drops the
     * file again ([[retireOrRewrite]]). */
   private def landRetired(spark: SparkSession, parent: Commit, branch: String,
-                          scanned: Vector[String], hits: Option[DataFrame]): Retired = {
+                          scanned: Vector[String], hits: Option[DataFrame],
+                          source: Option[DataFrame]): Retired = {
     import org.apache.spark.sql.functions.{col, count, lit, max, sum, when}
     val deterministic = hits.forall(h =>
       !h.queryExecution.analyzed.exists(_.expressions.exists(!_.deterministic)))
     val vector = hits.map(h => writeDeletionVectors(
-      h.select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)).repartition(1),
+      sizedByInput(h.select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)),
+        parent, scanned, source),
       branch, parent.version + 1)).getOrElse(Vector.empty)
     if (vector.isEmpty) return Retired(vector, Map.empty, Map.empty, multiHit = false, deterministic)
     def dv(files: Vector[String], fresh: Boolean) = spark.read.schema(VersionedTable.DvParquetSchema)
@@ -1599,9 +1613,12 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * with it. Every other touched file, including one without a logged row
     * count, and every file a non-deterministic statement touches, is
     * rewritten. `rows(rewrite, retire)` is everything the statement lands:
-    * the kept rows of the rewritten files plus every new row image; it
-    * goes out in one write, and one commit publishes the carried files and
-    * the new ones with `dvFiles ++` the new vector. With
+    * the kept rows of the rewritten files plus every new row image, sized
+    * by the verb to one partition per `spark.sql.files.maxPartitionBytes`
+    * of what it reads ([[sizedByInput]]); it goes out in one write, whose
+    * files that hold no row are deleted ([[dropEmpty]]), and one commit
+    * publishes the carried files and the new ones with `dvFiles ++` the new
+    * vector. With
     * `noOpIfNothingLands` a statement that retires nothing and lands no
     * row returns the unchanged head. */
   private def retireOrRewrite(spark: SparkSession, parent: Commit, branch: String,
@@ -1621,17 +1638,27 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       }
     val dvNew = if (retire.isEmpty) { dropVector(retired.vector); Vector.empty } else retired.vector
     val version = parent.version + 1
-    val newFiles = try rows(rewrite, retire).map(df => writeDataFiles(df, branch, version,
-        mapTo = Some(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType])))
+    val newFiles = try rows(rewrite, retire).map(df => dropEmpty(writeDataFiles(df, branch,
+        version, mapTo = Some(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]))))
         .getOrElse(Vector.empty)
       catch { case e: Throwable => dropVector(dvNew); throw e }
-    if (noOpIfNothingLands && perFile.isEmpty &&
-        newFiles.map(f => VersionedTable.footerRowCount(root.resolve(f)).getOrElse(1L)).sum == 0L) {
-      newFiles.headOption.foreach(f => graft.Tables.deleteRecursively(root.resolve(f).getParent))
-      return parent
-    }
+    if (noOpIfNothingLands && perFile.isEmpty && newFiles.isEmpty) return parent
     commitDml(spark, parent, branch, message, schema,
       parent.files.filterNot(rewrite.toSet), newFiles, dvNew)
+  }
+
+  /** `written`, a DML statement's new data files, less every file that
+    * holds no row — a delete that empties each file it touches still lands
+    * one schema-only file. Those are deleted, with their directory when
+    * nothing else landed, before any commit publishes them: a 0-row entry
+    * carries no stats, so every later scan would open it. */
+  private def dropEmpty(written: Vector[String]): Vector[String] = {
+    val (empty, landed) =
+      written.partition(f => VersionedTable.footerRowCount(root.resolve(f)).contains(0L))
+    empty.foreach(f => LakeFiles.delete(root.resolve(f)))
+    if (landed.isEmpty) written.headOption.foreach(f =>
+      graft.Tables.deleteRecursively(root.resolve(f).getParent))
+    landed
   }
 
   /** Land the (file key, position) pairs of `hits` (carrying the
@@ -1643,8 +1670,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * cluster by file key, so the per-TASK DV load (r19,
     * [[graft.sources.DvTaskLoader]]) prunes the DV parquet by row-group
     * stats down to ~O(its own file's deletions). No extra shuffle — the
-    * scan's own partitioning (and its parallelism) is preserved;
-    * [[landRetired]] funnels its hits into one part-file first. ONE pass
+    * scan's own partitioning (and its parallelism) is preserved, so
+    * [[deleteWithVectors]] lands one part-file per scan partition, while
+    * [[landRetired]] coalesces its hits by input size first
+    * ([[sizedByInput]]). ONE pass
     * (r21): emptiness is read off the landed footers instead of an
     * `isEmpty` probe that would run the whole scan twice. */
   private def writeDeletionVectors(hits: DataFrame, branch: String,
@@ -2360,6 +2389,30 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       val staged = CommitLog.fromJson(store.read(stagedPath))
       staged.files.foreach(f => LakeFiles.delete(root.resolve(f)))
       store.delete(stagedPath)
+    }
+  }
+
+  /** `df`, a row-level DML statement's output, coalesced (no shuffle) to
+    * one partition per `spark.sql.files.maxPartitionBytes` of what it
+    * reads: the parent's logged sizes of the `files` whose rows it reads
+    * plus Catalyst's size estimate of the statement's `source`. Without
+    * this a write lands one file per scan split (Spark's open cost puts
+    * each small file in its own split) or per shuffle partition, and every
+    * file costs a PUT, a manifest entry and a footer read per later scan.
+    * Coalescing never raises the partition count; an unknown size (a
+    * file without a logged size, a source estimated at the default size)
+    * leaves the frame as it is. Apply it before any
+    * `sortWithinPartitions`, which a later coalesce would break. */
+  private def sizedByInput(df: DataFrame, parent: Commit, files: Vector[String],
+                           source: Option[DataFrame]): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    val fileBytes = files.map(parent.fileSizes.get)
+    val sourceBytes = source.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
+    if (fileBytes.contains(None) || sourceBytes.exists(_ >= conf.defaultSizeInBytes)) df
+    else {
+      val bytes = BigInt(fileBytes.flatten.sum) + sourceBytes.getOrElse(BigInt(0))
+      val per = BigInt(conf.filesMaxPartitionBytes)
+      df.coalesce(((bytes + per - 1) / per).max(1).min(Int.MaxValue).toInt)
     }
   }
 

@@ -878,6 +878,7 @@ class PropertySpec extends SparkSpec {
       ops.zipWithIndex.foreach { case (op, step) =>
         val lo = rnd.nextInt(60).toLong
         val some = rows.keys.toVector.sorted
+        val prev = vt.head("main").get.files.toSet
         val c = op match {
           case 1 if some.nonEmpty =>
             rows = rows.filterNot { case (k, _) => k >= lo && k < lo + 3 }
@@ -916,6 +917,9 @@ class PropertySpec extends SparkSpec {
             vt.write(batch(k -> 1L), "main", "append", mode = "append", statsCols = Seq("k"))
         }
         assert(vt.head("main").get.id === c.id, s"case $i step $step: op $op")
+        // row-level DML never publishes a file that holds no row
+        if (op >= 1 && op <= 3) assert(c.files.filterNot(prev).forall(f =>
+          c.rowCounts.get(f).exists(_ > 0)), s"case $i step $step: op $op added a 0-row entry")
         model(c.version) = (c.files, entries(c), rows)
         assert(vt.read(spark, "main").as[(Long, Long)].collect().toMap === rows,
           s"case $i step $step: op $op")

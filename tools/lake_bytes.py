@@ -22,7 +22,10 @@ and sorts every file into one kind:
   empty dir               directories holding nothing (0 bytes each), such
                           as commit directories a vacuum emptied
 
-Prints one table per root and, for several roots, their total. `--check`
+Prints one table per root and, for several roots, their total. Below each
+table, the data parquet files per commit directory (`<branch>-v<N>-<id>/`,
+one per write) as a max and a mean, so a statement that scatters its rows
+over many tiny files shows up. `--check`
 exits 1 when any root holds a snappy data parquet file, a `_SUCCESS` marker,
 a checksum sidecar (`crc` or `orphan crc`; the engine writes none) or an
 empty directory.
@@ -36,6 +39,7 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 
 DV_DIR = re.compile(r"-v\d+-dv-")
+COMMIT_DIR = re.compile(r"-v\d+-")
 
 
 def parquet_codec(path):
@@ -70,28 +74,38 @@ def kind_of(dirpath, name):
 
 
 def survey(root):
-    """{kind: [files, bytes]} over every regular file and every empty
-    directory under `root`."""
+    """({kind: [files, bytes]} over every regular file and every empty
+    directory under `root`, [data parquet files of each commit directory])."""
     out = defaultdict(lambda: [0, 0])
+    per_commit = []
     for dirpath, dirnames, names in os.walk(root):
         if not dirnames and not names and dirpath != root:
             out["empty dir"][0] += 1
+        data = 0
         for name in names:
             path = os.path.join(dirpath, name)
             if os.path.isfile(path) and not os.path.islink(path):
-                k = out[kind_of(dirpath, name)]
+                kind = kind_of(dirpath, name)
+                data += kind.startswith("data parquet")
+                k = out[kind]
                 k[0] += 1
                 k[1] += os.path.getsize(path)
-    return dict(out)
+        base = os.path.basename(dirpath)
+        if COMMIT_DIR.search(base) and not DV_DIR.search(base) and data:
+            per_commit.append(data)
+    return dict(out), per_commit
 
 
-def print_table(title, kinds):
+def print_table(title, kinds, per_commit):
     print(title)
     print(f"  {'kind':<26}{'files':>8}{'bytes':>14}")
     for k in sorted(kinds):
         print(f"  {k:<26}{kinds[k][0]:>8}{kinds[k][1]:>14,}")
     print(f"  {'all':<26}{sum(v[0] for v in kinds.values()):>8}"
           f"{sum(v[1] for v in kinds.values()):>14,}")
+    if per_commit:
+        print(f"  data files per commit dir: max {max(per_commit)}, "
+              f"mean {sum(per_commit) / len(per_commit):.2f} over {len(per_commit)} dirs")
 
 
 def main(argv):
@@ -102,14 +116,16 @@ def main(argv):
         return 2
     per_root = {r: survey(r) for r in roots}
     total = defaultdict(lambda: [0, 0])
-    for kinds in per_root.values():
+    total_commit = []
+    for kinds, per_commit in per_root.values():
         for k, (n, b) in kinds.items():
             total[k][0] += n
             total[k][1] += b
-    for r, kinds in per_root.items():
-        print_table(r, kinds)
+        total_commit += per_commit
+    for r, (kinds, per_commit) in per_root.items():
+        print_table(r, kinds, per_commit)
     if len(roots) > 1:
-        print_table("total", total)
+        print_table("total", total, total_commit)
     bad = {k: v for k, v in total.items()
            if k in ("data parquet (snappy)", "_SUCCESS", "crc", "orphan crc", "empty dir")}
     if "--check" in flags and bad:
