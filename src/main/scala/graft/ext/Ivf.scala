@@ -173,9 +173,7 @@ object Ivf {
     val byVersion = vt.commitRange(branch, math.max(from - 1, 0L), corpusHead)
       .map(c => c.version -> c).toMap
     (from to corpusHead).foreach { v =>
-      val appendOnly = v > 0 &&
-        byVersion(v - 1).files.toSet.subsetOf(byVersion(v).files.toSet) &&
-        byVersion(v - 1).dvFiles.toSet == byVersion(v).dvFiles.toSet
+      val appendOnly = v > 0 && VersionedTable.appendOnly(byVersion(v - 1), byVersion(v))
       val (delta, mode) =
         if (v == 0) (vt.readVersion(spark, branch, 0), "overwrite")
         else if (appendOnly)

@@ -313,7 +313,7 @@ object Versioned {
   /** Metadata-only COUNT(*) (Delta numRecords): the count comes from per-file
     * row counts in the commit log — the COW delete subtracts by rewriting
     * files (their logged counts shrink), the merge-on-read delete subtracts
-    * via its deletion vectors (base stays, only the tiny DV parquet is read).
+    * via its deletion vectors (base stays; their cardinalities are logged).
     * Zero data-file reads on the final count; VersionedTableSpec pins that by
     * hiding the data directory. */
   val qVtCount: QueryDef = q("q_vt_count")(
@@ -1817,8 +1817,8 @@ object Versioned {
          |       min(o_orderpriority) AS pmn, max(o_orderpriority) AS pmx
          |FROM vt.`${vt.root}`""".stripMargin)
     // r19 MOR leg: after a merge-on-read delete, `SELECT count(*)` still
-    // answers from metadata + the DV parquet alone (Σ rowCounts − Σ
-    // distinct deleted positions, [[graft.sources.VtMorScanBuilder]]);
+    // answers from metadata alone (Σ rowCounts − Σ descriptor
+    // cardinalities, [[graft.sources.VtMorScanBuilder]]);
     // value-dependent aggregates fall back to the (pruned, DV-subtracted)
     // scan — VtCatalogSpec ghost-proves the zero-data-file-read claim
     vt.deleteWithVectors(s, "o_orderkey % 10 < 3", "main")

@@ -375,25 +375,15 @@ final class DeltaMorScanBuilder(spark: SparkSession, tableRoot: String,
   }
 }
 
-/** One single-file split + its add action's DV DESCRIPTOR (None when the
-  * file is deletion-free) — the positions are decoded by the task itself
-  * from the roaring bitmap, never shipped from the driver. */
+/** One single-file split + its file's DV DESCRIPTOR (None when the file
+  * is deletion-free) — a foreign Delta add action's or a native manifest
+  * entry's, the same struct — and the root a relative descriptor resolves
+  * against. The positions are decoded by the task itself from the roaring
+  * bitmap, never shipped from the driver. */
 private[sources] final case class DeltaMorInputPartition(
     files: FilePartition, rootDir: String,
     dv: Option[DeletionVectors.DvDescriptor]) extends InputPartition {
   override def preferredLocations(): Array[String] = files.preferredLocations()
-}
-
-/** EXECUTOR-side roaring-DV decode, memoized per (executor, descriptor):
-  * every split of a file shares one decode; an inline (Z85) descriptor
-  * never touches the filesystem at all. */
-private[sources] object DeltaDvTaskLoader {
-  private val cache = new graft.vt.BoundedCache[(String, String), Array[Long]](64)
-
-  def positionsFor(rootDir: String, dv: DeletionVectors.DvDescriptor): Array[Long] =
-    cache.get((rootDir, dv.toString))(
-      DeletionVectors.readPositions(java.nio.file.Paths.get(rootDir), dv)
-        .distinct.sorted.toArray)
 }
 
 /** The native foreign-Delta merge-on-read batch: stats-pruned and
@@ -477,8 +467,9 @@ final class DeltaMorScan(spark: SparkSession, root: java.nio.file.Path,
 
 /** Wraps the parquet readers: emit only rows whose file-absolute index
   * (the generated last column) is not in the task-decoded deletion set;
-  * columnar passthrough when the whole scan is deletion-free. The vt twin
-  * is [[VtMorReaderFactory]]. */
+  * columnar passthrough when the whole scan is deletion-free. Serves the
+  * foreign-Delta scan, the native MOR scan ([[VtMorScan]]) and the native
+  * micro-batch stream alike. */
 private[sources] final class DeltaMorReaderFactory(
     delegate: PartitionReaderFactory, outSchema: StructType,
     allColumnar: Boolean) extends PartitionReaderFactory {
@@ -511,7 +502,7 @@ private[sources] final class DeltaMorReaderFactory(
     new PartitionReader[InternalRow] {
       // decoded lazily INSIDE the task; deletion-free files skip it
       private lazy val deleted: Array[Long] =
-        mp.dv.map(DeltaDvTaskLoader.positionsFor(mp.rootDir, _))
+        mp.dv.map(DeletionVectors.positions(mp.rootDir, _))
           .getOrElse(Array.emptyLongArray)
       override def next(): Boolean = {
         while (inner.next()) {

@@ -583,7 +583,7 @@ final class VtTable(spark: SparkSession, vt: VersionedTable, branch: String,
     // keeping metadata aggregates, runtime file skipping and columnar
     // reads through a rename). DV+mapped combines two translations; that
     // rarer shape serves the proven V1 fallback over the MOR relation.
-    if (commit.dvFiles.isEmpty)
+    if (commit.dvs.isEmpty)
       new VtMetaScanBuilder(spark, vt, commit, tableSchema, options, branch)
     else if (VersionedTable.hasColumnMapping(tableSchema))
       new VtV1ScanBuilder(spark, vt, commit)

@@ -343,7 +343,7 @@ final class VtDataSource extends RelationProvider with CreatableRelationProvider
     // DV snapshots need merge-on-read; column-mapped snapshots (r20
     // RENAME/DROP) need the physical→logical re-aliasing readCommit does —
     // both are exactly what VtMorRelation serves (pruned, filter-pushed)
-    if (commit.dvFiles.nonEmpty || VersionedTable.hasColumnMapping(schema))
+    if (commit.dvs.nonEmpty || VersionedTable.hasColumnMapping(schema))
       new VtMorRelation(sqlContext, vt, commit)
     else {
       val spark = sqlContext.sparkSession

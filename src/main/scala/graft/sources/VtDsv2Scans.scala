@@ -90,8 +90,13 @@ final class VtMetaScanBuilder(spark: SparkSession, vt: VersionedTable,
     delegate.pruneColumns(
       if (mapped) toPhysSchema(requiredSchema) else requiredSchema)
 
+  // Spark asks for complete pushdown BEFORE pushing: the metadata answer is
+  // a pure function of the aggregation, so both calls compute it
+  private def metaAnswer(agg: Aggregation): Option[(StructType, InternalRow)] =
+    if (filtered) None else VtExact.metaAnswer(vt, commit, tableSchema, agg)
+
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (!filtered) meta = metaAnswer(aggregation)
+    meta = metaAnswer(aggregation)
     // the delegate's footer-level aggregate scan reports a physical-named
     // readSchema Spark cannot bind — mapped snapshots take metadata answers
     // or the ordinary scan, never the delegate's aggregate scan
@@ -101,7 +106,8 @@ final class VtMetaScanBuilder(spark: SparkSession, vt: VersionedTable,
   }
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    meta.isDefined || (!mapped && delegate.supportCompletePushDown(aggregation))
+    metaAnswer(aggregation).isDefined ||
+      (!mapped && delegate.supportCompletePushDown(aggregation))
 
   override def build(): Scan = meta match {
     case Some((schema, row)) => new VtMetaAggScan(schema, row, commit)
@@ -113,63 +119,66 @@ final class VtMetaScanBuilder(spark: SparkSession, vt: VersionedTable,
       new VtDfScan(spark, vt, commit, dataFilters, delegate.build(), branch,
         options, logOf)
   }
+}
 
-  // ---- the provable-from-metadata decision --------------------------------
+/** The provable-from-metadata aggregate answer shared by the scan builders
+  * (clean and MOR), with its exactness helpers: resolve an aggregate's
+  * single-column reference against the table schema, and convert a
+  * double-domain stat to the column type only where exactness is
+  * PROVABLE. */
+private[sources] object VtExact {
 
-  private def columnOf(e: org.apache.spark.sql.connector.expressions.Expression)
-      : Option[StructField] = VtExact.columnOf(tableSchema, e)
-
-  private def totalRows: Option[Long] =
-    if (commit.files.forall(commit.rowCounts.contains))
-      Some(commit.files.iterator.map(commit.rowCounts).sum)
-    else None
-
-  private def nonNullRows(col: String): Option[Long] =
-    if (commit.files.forall(f => commit.rowCounts.contains(f) &&
-          commit.nullStats.get(f).exists(_.contains(col))))
-      Some(commit.files.iterator.map(f => commit.rowCounts(f) - commit.nullStats(f)(col)).sum)
-    else None
-
-  private def exactNum(d: Double, dt: DataType): Option[Any] =
-    VtExact.exactNum(d, dt)
-
-  private def minMaxOf(fld: StructField, takeMax: Boolean): Option[Any] =
-    fld.dataType match {
-      case StringType =>
+  /** An UNFILTERED, UNGROUPED `COUNT(*)` / `COUNT(col)` / `MIN(col)` /
+    * `MAX(col)` answered from the commit log alone — all or nothing, so
+    * the query runs one scan either way:
+    *  - `COUNT(*)`: Σ rowCounts − Σ deletion-vector cardinality
+    *    ([[VersionedTable.liveRowCount]], the answer `countRows` gives);
+    *  - `COUNT(col)`: Σ (rowCounts − null counts), refused under deletion
+    *    vectors (a deleted row's null-ness is unknown without reading it);
+    *  - `MIN` / `MAX`: the per-file stats, refusing truncated string bounds
+    *    and int64 beyond 2⁵³; under deletion vectors an end stays exact
+    *    whenever some file ACHIEVING it has none
+    *    ([[VersionedTable.minMaxNumFromStatsDv]]). */
+  def metaAnswer(vt: VersionedTable, commit: Commit, schema: StructType,
+                 agg: Aggregation): Option[(StructType, InternalRow)] = {
+    if (agg.groupByExpressions.nonEmpty) return None
+    val dvFree = (f: String) => !commit.dvs.contains(f)
+    def nonNullRows(col: String): Option[Long] =
+      if (commit.dvs.isEmpty && commit.files.forall(f => commit.rowCounts.contains(f) &&
+            commit.nullStats.get(f).exists(_.contains(col))))
+        Some(commit.files.iterator.map(f => commit.rowCounts(f) - commit.nullStats(f)(col)).sum)
+      else None
+    def minMaxOf(fld: StructField, takeMax: Boolean): Option[Any] = fld.dataType match {
+      case StringType if commit.dvs.isEmpty =>
         vt.minMaxStringFromStats(commit, fld.name) // refuses truncated bounds
           .map(mm => UTF8String.fromString(if (takeMax) mm._2 else mm._1))
-      case dt =>
+      case StringType =>
+        vt.minMaxStringFromStatsDv(commit, fld.name, takeMax, dvFree).map(UTF8String.fromString)
+      case dt if commit.dvs.isEmpty =>
         vt.minMaxFromStats(commit, fld.name)
           .flatMap(mm => exactNum(if (takeMax) mm._2 else mm._1, dt))
+      case dt =>
+        vt.minMaxNumFromStatsDv(commit, fld.name, takeMax, dvFree).flatMap(exactNum(_, dt))
     }
-
-  private def metaAnswer(agg: Aggregation): Option[(StructType, InternalRow)] = {
-    if (agg.groupByExpressions.nonEmpty || commit.dvFiles.nonEmpty) return None
     val answered: Array[Option[(StructField, Any)]] = agg.aggregateExpressions.map {
       case _: CountStar =>
-        totalRows.map(t => (StructField("count(*)", LongType, nullable = false), t))
+        VersionedTable.liveRowCount(commit)
+          .map(t => (StructField("count(*)", LongType, nullable = false), t))
       case c: Count if !c.isDistinct =>
-        columnOf(c.column).flatMap(f => nonNullRows(f.name)
+        columnOf(schema, c.column).flatMap(f => nonNullRows(f.name)
           .map(n => (StructField(s"count(${f.name})", LongType, nullable = false), n)))
       case m: Min =>
-        columnOf(m.column).flatMap(f => minMaxOf(f, takeMax = false)
+        columnOf(schema, m.column).flatMap(f => minMaxOf(f, takeMax = false)
           .map(v => (StructField(s"min(${f.name})", f.dataType, nullable = true), v)))
       case m: Max =>
-        columnOf(m.column).flatMap(f => minMaxOf(f, takeMax = true)
+        columnOf(schema, m.column).flatMap(f => minMaxOf(f, takeMax = true)
           .map(v => (StructField(s"max(${f.name})", f.dataType, nullable = true), v)))
       case _ => None
     }
-    if (answered.exists(_.isEmpty)) None // all-or-nothing: one scan either way
+    if (answered.isEmpty || answered.exists(_.isEmpty)) None
     else Some((StructType(answered.map(_.get._1)),
       new GenericInternalRow(answered.map(_.get._2))))
   }
-}
-
-/** Exactness helpers shared by the metadata-aggregate builders (clean and
-  * MOR): resolve an aggregate's single-column reference against the table
-  * schema, and convert a double-domain stat to the column type only where
-  * exactness is PROVABLE. */
-private[sources] object VtExact {
 
   def columnOf(schema: StructType,
                e: org.apache.spark.sql.connector.expressions.Expression)
@@ -398,62 +407,20 @@ final class VtMorScanBuilder(spark: SparkSession, vt: VersionedTable,
     required = StructType(tableSchema.fields.filter(f => names.contains(f.name)))
   }
 
-  /** Metadata aggregates on a MOR snapshot, from the commit log + one
-    * bounded DV aggregate — never a data-file scan. `COUNT(*)` (r19): Σ
-    * per-file rowCounts − Σ per-file DISTINCT deleted positions. `MIN` /
-    * `MAX` (r20): deletions only REMOVE rows, so each end stays EXACTLY
-    * the stats answer whenever some file ACHIEVING it has zero deletions —
-    * the per-file DV cardinalities are already on the driver, so the proof
-    * costs nothing extra ([[VersionedTable.minMaxNumFromStatsDv]]).
-    * `COUNT(col)` stays refused under DVs: a deleted row's null-ness is
-    * unknown without reading data. */
+  /** Metadata aggregates on a MOR snapshot, from the commit log alone —
+    * no data-file scan and no Spark job ([[VtExact.metaAnswer]]). Spark
+    * asks for complete pushdown BEFORE pushing, so both calls compute the
+    * (pure) answer. */
+  private def metaAnswer(agg: Aggregation): Option[(StructType, InternalRow)] =
+    if (dataFilters.nonEmpty) None else VtExact.metaAnswer(vt, commit, tableSchema, agg)
+
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (dataFilters.nonEmpty || aggregation.groupByExpressions.nonEmpty) return false
-    val exprs = aggregation.aggregateExpressions
-    if (exprs.isEmpty ||
-        !exprs.forall(e => e.isInstanceOf[CountStar] || e.isInstanceOf[Min] ||
-          e.isInstanceOf[Max])) return false
-    // ONE bounded aggregate serves every expression: per-file-key counts
-    // of distinct deleted positions (O(files) driver rows)
-    lazy val dvCard: Map[String, Long] = VtDvStats.cardByKey(spark, vt, commit,
-      commit.files.map(VersionedTable.fileKey).toSet)
-    def dvFree(rel: String): Boolean =
-      dvCard.getOrElse(VersionedTable.fileKey(rel), 0L) == 0L
-    def minMaxOf(fld: StructField, takeMax: Boolean): Option[Any] =
-      fld.dataType match {
-        case StringType =>
-          vt.minMaxStringFromStatsDv(commit, fld.name, takeMax, dvFree)
-            .map(UTF8String.fromString)
-        case dt =>
-          vt.minMaxNumFromStatsDv(commit, fld.name, takeMax, dvFree)
-            .flatMap(VtExact.exactNum(_, dt))
-      }
-    val answered: Array[Option[(StructField, Any)]] = exprs.map {
-      case _: CountStar =>
-        (if (commit.files.forall(commit.rowCounts.contains))
-           Some(commit.files.iterator.map(commit.rowCounts).sum -
-             dvCard.valuesIterator.sum)
-         else None)
-          .map(t => (StructField("count(*)", LongType, nullable = false), t: Any))
-      case m: Min =>
-        VtExact.columnOf(tableSchema, m.column).flatMap(f =>
-          minMaxOf(f, takeMax = false).map(v =>
-            (StructField(s"min(${f.name})", f.dataType, nullable = true), v)))
-      case m: Max =>
-        VtExact.columnOf(tableSchema, m.column).flatMap(f =>
-          minMaxOf(f, takeMax = true).map(v =>
-            (StructField(s"max(${f.name})", f.dataType, nullable = true), v)))
-      case _ => None
-    }
-    meta =
-      if (answered.exists(_.isEmpty)) None // all-or-nothing: one scan either way
-      else Some((StructType(answered.map(_.get._1)),
-        new GenericInternalRow(answered.map(_.get._2))))
+    meta = metaAnswer(aggregation)
     meta.isDefined
   }
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    meta.isDefined
+    metaAnswer(aggregation).isDefined
 
   override def build(): Scan = meta match {
     case Some((schema, row)) => new VtMetaAggScan(schema, row, commit)
@@ -469,17 +436,6 @@ final class VtMorScanBuilder(spark: SparkSession, vt: VersionedTable,
   }
 }
 
-/** Driver-side DV METADATA (r19): delegates to the ONE shared per-file-key
-  * deleted-count aggregate ([[VersionedTable.dvCardByKey]] — the same
-  * implementation `countRows` subtracts with, so the SQL `COUNT(*)` answer
-  * and the API count can never drift). O(files-with-deletions) count rows
-  * reach the driver, never positions. */
-private[sources] object VtDvStats {
-  def cardByKey(spark: SparkSession, vt: VersionedTable, commit: Commit,
-                keys: Set[String]): Map[String, Long] =
-    vt.dvCardByKey(spark, commit, keys)
-}
-
 /** Merge-on-read as a NATIVE DSv2 batch: per-file-split input partitions
   * over the stats-pruned file list; the reader factory wraps Spark's own
   * parquet readers — vectorized, filter-pushed, with the FILE-ABSOLUTE
@@ -490,17 +446,14 @@ private[sources] object VtDvStats {
   * no anti-join, columnar batches intact under the row interface, and
   * AQE gets real [[Statistics]] from the commit log.
   *
-  * DV loading is PER-TASK (r19): the driver computes only per-file DV
-  * CARDINALITIES ([[VtDvStats]] — one small aggregate, O(files) rows
-  * collected), and each reader whose file carries deletions loads ITS
-  * OWN positions from the DV parquet executor-side
-  * ([[DvTaskLoader.positionsFor]] — a parquet-hadoop read with the file
-  * key pushed as a row-group/record filter). The driver never
+  * DV loading is PER-TASK: each partition carries its file's descriptor
+  * from the commit record, and a reader whose file carries deletions
+  * decodes ITS OWN positions executor-side ([[DeletionVectors.positions]],
+  * the loader the foreign-Delta scan uses too). The driver never
   * materializes the deletion set: a 100 TB table with 1% deletions is
-  * tens of GB of positions, which the r18 shape collected whole. At
-  * 100 TB: a point read touches one file split, the DV subtraction costs
-  * log(deletions-in-that-file) per row, and DV bytes move only to the
-  * tasks that need them. */
+  * tens of GB of positions. At 100 TB: a point read touches one file
+  * split, the DV subtraction costs log(deletions-in-that-file) per row,
+  * and DV bytes move only to the tasks that need them. */
 final class VtMorScan(protected val spark: SparkSession, protected val vt: VersionedTable,
                       protected val commit: Commit,
                       pruned: Vector[String], outSchema: StructType,
@@ -520,28 +473,17 @@ final class VtMorScan(protected val spark: SparkSession, protected val vt: Versi
     new VtMicroBatchStream(spark, vt, branch, commit, readSchema(), options)
   override def description(): String =
     s"VtMorScan v${commit.version} files=${pruned.size}/${commit.files.size} " +
-      s"dv=${commit.dvFiles.size}"
-
-  /** file key → (DISTINCT deleted-position COUNT, the DV part-files that
-    * mention the key), restricted to the pruned files — counts and path
-    * lists only ([[VersionedTable.dvStatsByKey]]), never positions. */
-  private lazy val dvByKey: Map[String, (Long, Seq[String])] =
-    vt.dvStatsByKey(spark, commit, pruned.map(VersionedTable.fileKey).toSet)
+      s"dv=${commit.dvs.size}"
 
   override def planInputPartitions(): Array[InputPartition] = {
     val maxSplit = math.max(1L, FilePartition.maxSplitBytes(spark, totalBytes))
     val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
     liveFiles.foreach { rel =>
-      val key = VersionedTable.fileKey(rel)
-      // deletion-free files ship an empty path list (their readers skip
-      // the DV load entirely); deletion-carrying files ship ONLY the DV
-      // part-files that mention their key — on a long delete history a
-      // task pays for its own deletes' files, not every delete ever made
-      val paths = dvByKey.get(key).map(_._2.toArray).getOrElse(Array.empty[String])
       // splits of ONE file per partition: row indexes are file-absolute,
       // so each split filters against the same per-file position set
       splitsOf(rel, maxSplit).foreach { pf =>
-        parts += VtMorInputPartition(FilePartition(parts.length, Array(pf)), key, paths)
+        parts += DeltaMorInputPartition(FilePartition(parts.length, Array(pf)),
+          vt.root.toString, commit.dvs.get(rel))
       }
     }
     parts.toArray
@@ -549,10 +491,9 @@ final class VtMorScan(protected val spark: SparkSession, protected val vt: Versi
 
   override def createReaderFactory(): PartitionReaderFactory =
     // Spark refuses mixed row/columnar partitions, so columnar is a
-    // whole-scan decision: only when NO pruned file carries deletions
-    new VtMorReaderFactory(parquet.createReaderFactory(), outSchema,
-      allColumnar = dvByKey.isEmpty,
-      confWrapper = Dsv2Shim.serializableConf(spark.sessionState.newHadoopConf()))
+    // whole-scan decision: only when NO live file carries deletions
+    new DeltaMorReaderFactory(parquet.createReaderFactory(), outSchema,
+      allColumnar = !liveFiles.exists(commit.dvs.contains))
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong = OptionalLong.of(totalBytes)
@@ -560,128 +501,7 @@ final class VtMorScan(protected val spark: SparkSession, protected val vt: Versi
       val base = rowCountStat
       if (!base.isPresent) base
       else OptionalLong.of(base.getAsLong - liveFiles.iterator.map(f =>
-        dvByKey.get(VersionedTable.fileKey(f)).map(_._1).getOrElse(0L)).sum)
-    }
-  }
-}
-
-/** One single-file split + its file's KEY and the snapshot's DV parquet
-  * paths (empty when the file is deletion-free) — positions are loaded by
-  * the task itself, never shipped from the driver. */
-private[sources] final case class VtMorInputPartition(files: FilePartition,
-                                                      fileKey: String,
-                                                      dvPaths: Array[String])
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = files.preferredLocations()
-}
-
-/** EXECUTOR-side deletion-vector load: the sorted distinct deleted
-  * positions of ONE file key, read from the DV parquet with the key
-  * pushed as a parquet-hadoop filter — row-group statistics and
-  * dictionary filtering skip non-matching groups (the MOR delete writes
-  * DV parquet SORTED by (fk, pos) to make those stats tight), so a task
-  * reads O(its own file's deletions) plus footers. Memoized per
-  * (executor, DV set, key): every split of a file shares one load. */
-private[sources] object DvTaskLoader {
-  import org.apache.parquet.filter2.compat.FilterCompat
-  import org.apache.parquet.filter2.predicate.FilterApi
-
-  private val cache = new graft.vt.BoundedCache[(Seq[String], String), Array[Long]](64)
-
-  def positionsFor(key: String, dvPaths: Array[String],
-                   conf: org.apache.hadoop.conf.Configuration): Array[Long] = {
-    if (dvPaths.isEmpty) return Array.emptyLongArray
-    cache.get((dvPaths.toSeq, key))(load(key, dvPaths, conf))
-  }
-
-  private def load(key: String, dvPaths: Array[String],
-                   conf: org.apache.hadoop.conf.Configuration): Array[Long] = {
-    val pred = FilterApi.eq(FilterApi.binaryColumn("fk"),
-      org.apache.parquet.io.api.Binary.fromString(key))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    dvPaths.foreach { p =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new HPath(p))
-        .withConf(conf)
-        .withFilter(FilterCompat.get(pred))
-        .build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          out += g.getLong("pos", 0)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    out.distinct.sorted.toArray
-  }
-}
-
-/** Wraps the parquet readers: emit only live rows (position not in the
-  * file's deleted set — loaded BY THE TASK, [[DvTaskLoader]]), projected
-  * back to the output schema (the generated row-index column is the last
-  * field, ordinal `n`).
-  *
-  * COLUMNAR passthrough: when the stats-pruned file set carries NO
-  * deletions at all (`allColumnar` — the common case for a filtered
-  * point-read into clean regions of a MOR table), there is nothing to
-  * subtract and every reader forwards the delegate's vectorized batches
-  * intact (minus the row-index vector) — the whole scan keeps columnar
-  * batches and whole-stage codegen. Any deletion anywhere drops the
-  * whole scan to exact row-based subtraction (Spark refuses mixed
-  * row/columnar partitions, so this is a scan-level decision). */
-private[sources] final class VtMorReaderFactory(delegate: PartitionReaderFactory,
-                                                outSchema: StructType,
-                                                allColumnar: Boolean,
-                                                confWrapper: AnyRef)
-    extends PartitionReaderFactory {
-  private val n = outSchema.length
-
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    allColumnar && delegate.supportColumnarReads(
-      partition.asInstanceOf[VtMorInputPartition].files)
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val mp = partition.asInstanceOf[VtMorInputPartition]
-    require(mp.dvPaths.isEmpty, "columnar MOR read planned for a partition with deletions")
-    val inner = delegate.createColumnarReader(mp.files)
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      override def next(): Boolean = inner.next()
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
-        val b = inner.get()
-        // drop the generated row-index vector (last); the data vectors are
-        // forwarded as-is — zero copies
-        new org.apache.spark.sql.vectorized.ColumnarBatch(
-          Array.tabulate(n)(b.column), b.numRows())
-      }
-      override def close(): Unit = inner.close()
-    }
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val mp = partition.asInstanceOf[VtMorInputPartition]
-    val inner = delegate.createReader(mp.files)
-    val proj = ProjectingInternalRow(outSchema, (0 until n).toIndexedSeq)
-    new PartitionReader[InternalRow] {
-      // loaded lazily INSIDE the task (never on the driver); empty for
-      // deletion-free files, which skip the DV read entirely
-      private lazy val deleted: Array[Long] =
-        DvTaskLoader.positionsFor(mp.fileKey, mp.dvPaths, Dsv2Shim.confOf(confWrapper))
-      override def next(): Boolean = {
-        while (inner.next()) {
-          val r = inner.get()
-          if (deleted.length == 0 ||
-              java.util.Arrays.binarySearch(deleted, r.getLong(n)) < 0) {
-            proj.project(r)
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = proj
-      override def close(): Unit = inner.close()
+        commit.dvs.get(f).map(_.cardinality).getOrElse(0L)).sum)
     }
   }
 }

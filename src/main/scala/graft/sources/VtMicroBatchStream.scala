@@ -75,7 +75,7 @@ private[sources] object VtStreamOffset {
   * Scale shape: the driver touches O(versions) commit records per batch —
   * never rows; partitions are the same per-file splits the native batch
   * scans plan, readers are Spark's vectorized parquet readers behind
-  * [[VtMorReaderFactory]] (columnar passthrough when the batch carries no
+  * [[DeltaMorReaderFactory]] (columnar passthrough when the batch carries no
   * deletion vectors, per-task DV loading when it does — cherry-picked
   * commits can add files with transplanted DVs), `maxVersionsPerTrigger`
   * bounds tail catch-up after downtime, and `maxFilesPerTrigger` (Delta's
@@ -234,8 +234,8 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
     val snapshotting =
       (s < 0 && !so.tail) || so.snapPos >= 0 // fresh or mid-chunk snapshot
     // (commit that introduced them, files to emit) — the commit supplies
-    // fileSizes and the dvFiles its added files must be checked against
-    // (cherry-pick transplants DVs onto files it adds)
+    // fileSizes and the descriptors of its added files (cherry-pick
+    // transplants DVs onto files it adds)
     val emitted: Vector[(Commit, Vector[String])] =
       if (!snapshotting && e <= s) Vector.empty
       else if (snapshotting) {
@@ -259,8 +259,7 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
           val pf = pOpt.map(_.files.toSet).getOrElse(Set.empty[String])
           val added = c.files.filterNot(pf)
           val removed = pOpt.map(_.files.filterNot(c.files.toSet)).getOrElse(Vector.empty)
-          val parentDv = pOpt.map(_.dvFiles).getOrElse(Vector.empty)
-          val dvGrew = c.dvFiles.exists(!parentDv.contains(_))
+          val dvGrew = pOpt.exists(p => VersionedTable.dvChanged(p, c).nonEmpty)
           if ((removed.nonEmpty || dvGrew) && !ignoreChanges &&
               !(ignoreDeletes && added.isEmpty)) throw new IllegalStateException(
             s"streaming read of $branch hit version ${c.version}, which changes " +
@@ -283,7 +282,7 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
     val rowIdx = Dsv2Shim.rowIndexField
     val withIdx = StructType(pinnedSchema.fields :+ rowIdx)
     val synth = startCommit.copy(files = allFiles, fileSizes = sizeOf,
-      dvFiles = Vector.empty, stats = Map.empty, strStats = Map.empty,
+      dvs = Map.empty, stats = Map.empty, strStats = Map.empty,
       nullStats = Map.empty, bloomStats = Map.empty, bloomFiles = Vector.empty)
     val delegate = ParquetScanBuilder(spark, new VtFileIndex(spark, vt, synth),
       withIdx, withIdx, CaseInsensitiveStringMap.empty())
@@ -293,21 +292,17 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
     val maxSplit = math.max(1L,
       FilePartition.maxSplitBytes(spark, allFiles.iterator.map(sizeOf).sum))
     emitted.foreach { case (c, fs) =>
-      val dvStats: Map[String, (Long, Seq[String])] =
-        if (c.dvFiles.isEmpty || fs.isEmpty) Map.empty
-        else vt.dvStatsByKey(spark, c, fs.map(VersionedTable.fileKey).toSet)
       fs.foreach { rel =>
-        val key = VersionedTable.fileKey(rel)
-        val dvPaths = dvStats.get(key).map(_._2.toArray).getOrElse(Array.empty[String])
-        anyDv |= dvPaths.nonEmpty
+        val dv = c.dvs.get(rel)
+        anyDv |= dv.isDefined
         VtSplits.of(vt, rel, sizeOf(rel), maxSplit).foreach { pf =>
-          parts += VtMorInputPartition(FilePartition(parts.length, Array(pf)), key, dvPaths)
+          parts += DeltaMorInputPartition(FilePartition(parts.length, Array(pf)),
+            vt.root.toString, dv)
         }
       }
     }
-    factory = new VtMorReaderFactory(delegate.build().createReaderFactory(),
-      streamSchema, allColumnar = !anyDv,
-      confWrapper = Dsv2Shim.serializableConf(spark.sessionState.newHadoopConf()))
+    factory = new DeltaMorReaderFactory(delegate.build().createReaderFactory(),
+      streamSchema, allColumnar = !anyDv)
     parts.toArray
   }
 }

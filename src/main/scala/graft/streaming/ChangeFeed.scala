@@ -168,8 +168,7 @@ object ChangeFeed {
       source.commitRange(sourceBranch, b.fromVersion, b.toVersion)
         .sliding(2).foreach {
           case List(p, c) =>
-            if (!p.files.toSet.subsetOf(c.files.toSet) ||
-                p.dvFiles.toSet != c.dvFiles.toSet)
+            if (!graft.vt.VersionedTable.appendOnly(p, c))
               throw new IllegalStateException(
                 s"replicateAppends: source version ${c.version} is not append-only " +
                   "(files removed or deletion vectors changed); replicate it with a " +

@@ -63,10 +63,12 @@ private[vt] trait CommitGraph {
     * Everything downstream keeps seeing a fully materialized [[Commit]]; immutable
     * manifests parse once per process ([[Manifest.cached]]). A repo's
     * path-only entries resolve to files alone; legacy inline commits pass
-    * through untouched. */
+    * through untouched. A legacy commit that lists table-level vector
+    * part-files gets its per-file descriptors here, in memory, and
+    * nowhere else ([[LegacyVectors]]): the read writes nothing. */
   def loadCommit(id: String): Commit = {
     val c = rawCommit(id)
-    if (c.manifests.isEmpty) c
+    val resolved = if (c.manifests.isEmpty) c
     else {
       val entries = Manifest.resolve(c.manifests.map(m => Manifest.cached(root.resolve(m))))
       c.copy(
@@ -78,8 +80,11 @@ private[vt] trait CommitGraph {
         rowCounts = entries.iterator.flatMap(e => e.rows.map(e.file -> _)).toMap,
         nullStats = entries.iterator.filter(_.nulls.nonEmpty)
           .map(e => e.file -> e.nulls).toMap,
-        fileSizes = entries.iterator.flatMap(e => e.size.map(e.file -> _)).toMap)
+        fileSizes = entries.iterator.flatMap(e => e.size.map(e.file -> _)).toMap,
+        dvs = entries.iterator.flatMap(e => e.dv.map(e.file -> _)).toMap)
     }
+    if (resolved.legacyDvFiles.isEmpty) resolved
+    else resolved.copy(dvs = LegacyVectors.descriptors(root, resolved))
   }
 
   def head(branch: String): Option[Commit] = {

@@ -52,14 +52,20 @@ final case class Commit(
       * Kept apart from the numeric `stats` so the JSON stays back-compatible
       * (absent = empty, like mergeParent). */
     strStats: Map[String, Map[String, (String, String)]] = Map.empty,
-    /** DELETION VECTORS (Delta DV / Iceberg v2 position deletes): table-root-
-      * relative parquet paths, each holding `(fk STRING, pos BIGINT)` rows —
-      * the file key (last two path segments) and 0-based physical row index
-      * of every MERGE-ON-READ-deleted row. The snapshot's live rows are
-      * `files` minus the union of its dvFiles; readers apply them as one
-      * broadcast anti-join ([[VersionedTable.readCommit]]). Absent = empty =
-      * pure copy-on-write history (back-compatible JSON). */
-    dvFiles: Vector[String] = Vector.empty,
+    /** DELETION VECTORS (Delta DV / Iceberg v3 position deletes): file →
+      * its one descriptor ([[DeletionVectors.DvDescriptor]]) marking the
+      * 0-based physical row index of every MERGE-ON-READ-deleted row, for
+      * live files only. Resolved from the manifest entries
+      * ([[ManifestEntry.dv]]) by [[CommitGraph.loadCommit]]; the snapshot's
+      * live rows are `files` minus these positions, and its live row count
+      * is Σ `rowCounts` − Σ cardinality, from metadata alone. */
+    dvs: Map[String, DeletionVectors.DvDescriptor] = Map.empty,
+    /** LEGACY table-level vector part-files of `(fk STRING, pos BIGINT)`
+      * rows, which commits listed as `dvFiles` before vectors moved onto
+      * manifest entries. Read only: [[CommitGraph.loadCommit]] converts
+      * them into [[dvs]] in memory, and vacuum keeps them while such a
+      * commit is retained. No writer emits them. */
+    legacyDvFiles: Vector[String] = Vector.empty,
     /** Per-file physical row counts (Delta's `numRecords`). Filled by publish
       * from the parent's map plus one footer read per NEW file, so
       * `SELECT COUNT(*)`-class queries resolve from the log alone — at object-
@@ -143,13 +149,15 @@ final case class Commit(
   /** All parents, first-parent first — the DAG edge set for ancestry walks. */
   def parents: List[String] = parent.toList ++ mergeParent.toList
 
-  /** Every on-disk file this snapshot needs — data files, deletion
-    * vectors, bloom index sidecars, commit-metadata manifests. The unit of
-    * vacuum retention: dropping a retained commit's DV would silently
-    * RESURRECT its deleted rows, dropping its bloom sidecar would fail its
-    * point-lookup planning, and dropping its manifest would lose the
-    * snapshot's file list itself. */
-  def allFiles: Vector[String] = files ++ dvFiles ++ bloomFiles ++ manifests
+  /** Every on-disk file this snapshot needs — data files, deletion-vector
+    * `.bin` files (and legacy vector part-files), bloom index sidecars,
+    * commit-metadata manifests. The unit of vacuum retention: dropping a
+    * retained commit's DV would silently RESURRECT its deleted rows,
+    * dropping its bloom sidecar would fail its point-lookup planning, and
+    * dropping its manifest would lose the snapshot's file list itself. */
+  def allFiles: Vector[String] =
+    files ++ dvs.valuesIterator.flatMap(DeletionVectors.relativeFile) ++
+      legacyDvFiles ++ bloomFiles ++ manifests
 }
 
 /** JSON codec + crash-safe metadata helpers for the commit log.
@@ -202,7 +210,8 @@ object CommitLog {
       }
       m.put("strStats", sm)
     }
-    if (c.dvFiles.nonEmpty) m.put("dvFiles", c.dvFiles.asJava)
+    // a loaded legacy record round-trips; publish never sets the field
+    if (c.legacyDvFiles.nonEmpty) m.put("dvFiles", c.legacyDvFiles.asJava)
     if (inline && c.rowCounts.nonEmpty) {
       val rm = new java.util.LinkedHashMap[String, Object]()
       c.rowCounts.toSeq.sortBy(_._1).foreach { case (f, n) =>
@@ -288,7 +297,7 @@ object CommitLog {
             }.toMap
           }.toMap
       }.getOrElse(Map.empty),
-      dvFiles = Option(m.get("dvFiles"))
+      legacyDvFiles = Option(m.get("dvFiles"))
         .map(_.asInstanceOf[java.util.List[String]].asScala.toVector)
         .getOrElse(Vector.empty),
       rowCounts = Option(m.get("rowCounts")).map { raw =>

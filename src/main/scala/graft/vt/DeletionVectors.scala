@@ -7,8 +7,9 @@ import java.nio.file.{Files, Path}
   * reader feature, implemented from the public spec
   * (github.com/delta-io/delta/blob/master/PROTOCOL.md, "Deletion Vectors"
   * + the RoaringFormatSpec it references). A DV marks the 0-based physical
-  * row indices of a data file that are MERGE-ON-READ deleted — Delta's
-  * twin of this engine's native `Commit.dvFiles` machinery.
+  * row indices of a data file that are MERGE-ON-READ deleted. Native
+  * tables record the same descriptor per data file on its manifest entry
+  * ([[ManifestEntry.dv]]), so one codec serves both table kinds.
   *
   * Three storage flavors, all supported:
   *  - `i` (inline): the serialized bitmap rides in the log action itself,
@@ -308,26 +309,27 @@ object DeletionVectors {
     }
 
   /** Author an on-disk (`u`-flavor) DV file for `positions` under
-    * `tableRoot`; returns its descriptor. Used by fixtures and the
-    * versioned-table DV export. */
+    * `tableRoot`; returns its descriptor. Used by fixtures. */
   def writeDvFile(tableRoot: Path, positions: Seq[Long]): DvDescriptor =
     writeDvBytes(tableRoot, serialize(positions), positions.distinct.size.toLong)
 
-  /** On-disk (`u`-flavor) DV from an already-serialized bitmap — the
-    * executor-side half of the distributed Delta export ([[DeltaLogWriter]]
-    * builds the bytes with [[RoaringBuilder]] inside the task, so the
-    * position set never leaves the executor). */
-  def writeDvBytes(tableRoot: Path, data: Array[Byte],
-                   cardinality: Long): DvDescriptor = {
+  /** On-disk (`u`-flavor) DV from an already-serialized bitmap, written as
+    * `<tableRoot>/<prefix>/deletion_vector_<uuid>.bin` — the prefix is
+    * Delta's optional random-prefix directory, which native tables set to
+    * `data` so vacuum sweeps their vectors with their data files. Callable
+    * inside an executor task: the position set never leaves it. */
+  def writeDvBytes(tableRoot: Path, data: Array[Byte], cardinality: Long,
+                   prefix: String = ""): DvDescriptor = {
     val uuid = java.util.UUID.randomUUID()
     val buf = ByteBuffer.allocate(1 + 4 + data.length + 4).order(ByteOrder.BIG_ENDIAN)
     val crc = new java.util.zip.CRC32
     crc.update(data)
     buf.put(1.toByte).putInt(data.length).put(data).putInt(crc.getValue.toInt)
-    Files.write(tableRoot.resolve(s"deletion_vector_$uuid.bin"), buf.array())
+    val dir = if (prefix.isEmpty) tableRoot else tableRoot.resolve(prefix)
+    Files.write(dir.resolve(s"deletion_vector_$uuid.bin"), buf.array())
     val ub = ByteBuffer.allocate(16)
     ub.putLong(uuid.getMostSignificantBits).putLong(uuid.getLeastSignificantBits)
-    DvDescriptor("u", z85Encode(ub.array()), Some(1), data.length, cardinality)
+    DvDescriptor("u", prefix + z85Encode(ub.array()), Some(1), data.length, cardinality)
   }
 
   /** Inline (`i`-flavor) descriptor for `positions`. */
@@ -339,4 +341,26 @@ object DeletionVectors {
   /** Inline (`i`-flavor) descriptor from pre-serialized bytes. */
   def inlineBytes(data: Array[Byte], cardinality: Long): DvDescriptor =
     DvDescriptor("i", z85Encode(data), None, data.length, cardinality)
+
+  /** Vectors of at most this many positions ride inline in their entry;
+    * larger ones go to a `.bin` file (delta-spark's own small-DV split). */
+  val InlineDvMax = 1024
+
+  /** The table-root-relative path of a `u`-flavor descriptor's file (None
+    * for inline and absolute descriptors) — what vacuum retains. */
+  def relativeFile(dv: DvDescriptor): Option[String] =
+    if (dv.storageType != "u") None
+    else dvFile(java.nio.file.Paths.get(""), dv).map(_.toString)
+
+  // Memoized decode per (table root, descriptor): every split of a file,
+  // and every read of one snapshot in a JVM, shares one decode. Inline
+  // descriptors never touch the filesystem.
+  private val positionCache = new BoundedCache[(String, DvDescriptor), Array[Long]](256)
+
+  /** Sorted distinct deleted positions of `dv`, memoized — the one
+    * position loader of the native and foreign-Delta merge-on-read
+    * readers, executor- or driver-side. */
+  def positions(tableRoot: String, dv: DvDescriptor): Array[Long] =
+    positionCache.get((tableRoot, dv))(
+      readPositions(java.nio.file.Paths.get(tableRoot), dv).distinct.sorted.toArray)
 }

@@ -884,9 +884,8 @@ object DeltaLogReader {
     * convention) — Delta's own rule. Files carrying a DELETION VECTOR are
     * read per-file with the parquet `_metadata.row_index` column and their
     * MOR-deleted positions filtered out (small DVs as a codegen'd NOT-IN
-    * literal, large ones as a broadcast anti-join) — the same
-    * position-anti-join shape [[VersionedTable.readCommit]] applies to
-    * native dvFiles. DV-free tables keep the single multi-file vectorized
+    * literal, large ones as a broadcast anti-join). DV-free tables keep the
+    * single multi-file vectorized
     * scan (pushdown/pruning intact). */
   def read(spark: SparkSession, tableRoot: String,
            versionAsOf: Option[Long] = None): DataFrame = {

@@ -37,12 +37,11 @@ import org.apache.spark.sql.types._
   * suffix of the lineage is written on re-export after further commits —
   * O(new versions), the same cost profile as delta-spark's own log appends.
   *
-  * MERGE-ON-READ deletion vectors (`Commit.dvFiles`) export as Delta's OWN
-  * DV vocabulary: the native (fileKey, row_index) relation maps 1:1 onto
-  * Delta `add.deletionVector` descriptors (both record physical row
-  * positions per data file), serialized by [[DeletionVectors]] — inline
-  * (Z85) for small vectors, a `deletion_vector_<uuid>.bin` file above the
-  * threshold, exactly delta-spark's own split. The first DV-carrying
+  * MERGE-ON-READ deletion vectors (`Commit.dvs`) are already Delta's OWN
+  * DV vocabulary: each native file's descriptor is copied onto its `add`
+  * action as `deletionVector` — inline (Z85) for small vectors, a
+  * `data/deletion_vector_<uuid>.bin` file above the threshold, exactly
+  * delta-spark's own split. The first DV-carrying
   * version emits a `protocol` UPGRADE action (minReader 3 +
   * `readerFeatures: [deletionVectors]`), so DV-free lineages stay maximally
   * readable at protocol v1 and the upgrade point is a deterministic
@@ -50,19 +49,14 @@ import org.apache.spark.sql.types._
   * only CHANGES a file's DV exports as Delta's remove-and-re-add of that
   * path with the new descriptor.
   *
-  * Scale: the export writes O(versions) small JSON objects; DV-free
-  * versions read no data (sizes/mtimes are per-file stat calls), DV-bearing
-  * versions additionally read their dv-parquet — O(deleted positions), the
-  * size the descriptors must carry anyway.
+  * Scale: the export writes O(versions) small JSON objects and reads no
+  * data (sizes/mtimes are per-file stat calls; descriptors come from the
+  * commit record).
   */
 object DeltaLogWriter {
 
   /** Export `branch`'s lineage as a Delta log inside the table root; returns
     * the newest exported version. See object doc for semantics. */
-  /** Positions above this count go to a `deletion_vector_<uuid>.bin` file
-    * instead of riding inline in the log (delta-spark's own small-DV split). */
-  private val InlineDvMax = 1024
-
   /** With `changeDataFeed = true` the export also speaks Delta's CHANGE
     * DATA FEED vocabulary: `delta.enableChangeDataFeed=true` rides the
     * metaData configuration, the protocol declares writer CDF support, and
@@ -124,7 +118,7 @@ object DeltaLogWriter {
       m.toMap
     }
     // deterministic protocol-upgrade point: the first DV-carrying version
-    val firstDvVersion = commits.find(_.dvFiles.nonEmpty).map(_.version)
+    val firstDvVersion = commits.find(_.dvs.nonEmpty).map(_.version)
     val logDir = vt.root.resolve("_delta_log")
     Files.createDirectories(logDir)
     // CDF enablement is stamped into v0's protocol/metaData, which an
@@ -160,30 +154,11 @@ object DeltaLogWriter {
         val parentFiles = prev.map(_.files.toSet).getOrElse(Set.empty)
         val adds = c.files.filterNot(parentFiles)
         // a surviving file whose DV changed re-enters the log as
-        // remove + add-with-new-descriptor (Delta's MOR-delete shape).
-        // Which files changed is decided from the dvFiles SYMMETRIC
-        // DIFFERENCE (dv parquet is immutable, so an unchanged dvFiles set
-        // means unchanged DVs; a changed set touches exactly the fks its
-        // differing files mention) — O(changed fks) metadata, never a
-        // position read
-        val changedFks = dvChangedFks(vt, prev, c)
-        val dvChanged = c.files.filter(f =>
-          parentFiles.contains(f) && changedFks(VersionedTable.fileKey(f)))
+        // remove + add-with-new-descriptor (Delta's MOR-delete shape)
+        val dvChanged = prev.fold(Set.empty[String])(VersionedTable.dvChanged(_, c))
+        val dvChangedFiles = c.files.filter(dvChanged)
         val removes =
-          prev.map(_.files.filterNot(c.files.toSet)).getOrElse(Vector.empty) ++ dvChanged
-        // descriptors are built DISTRIBUTIVELY: executors stream each file's
-        // sorted positions into a Roaring bitmap and write/inline it in the
-        // task; the driver collects only the O(files) descriptors
-        // descriptor build and the CDF block below are INDEPENDENT Spark
-        // jobs (descriptors feed only the add lines; cdc files come from
-        // the change feed) — overlap them (guide §2.6) instead of letting
-        // the cluster idle through each one's tail. SparkSession.active
-        // falls back to the default session on the pool thread.
-        val descriptorsF = scala.concurrent.Future {
-          graft.Tables.timed(s"export v${c.version}: dvDescriptors") {
-            dvDescriptors(vt, c, adds ++ dvChanged)
-          }
-        }(scala.concurrent.ExecutionContext.global)
+          prev.map(_.files.filterNot(c.files.toSet)).getOrElse(Vector.empty) ++ dvChangedFiles
         val schemaChanged = prev.forall(_.schemaJson != c.schemaJson)
         // table properties export as metaData CONFIGURATION: CHECK
         // constraints translate to Delta's `delta.constraints.<name>` keys
@@ -210,7 +185,7 @@ object DeltaLogWriter {
         actions += DeltaLogFixture.commitInfoLine(c.ts,
           if (prev.isEmpty) "WRITE"
           else if (!c.dataChange && removes.nonEmpty) "OPTIMIZE"
-          else if (dvChanged.nonEmpty) "DELETE"
+          else if (dvChangedFiles.nonEmpty) "DELETE"
           else if (removes.isEmpty) "APPEND" else "OVERWRITE")
         val mapActive = firstMappedVersion.exists(_ <= c.version)
         val dvActive = firstDvVersion.exists(_ <= c.version)
@@ -287,13 +262,11 @@ object DeltaLogWriter {
         }
         removes.foreach(r => actions += DeltaLogFixture.removeLine(encodePath(r),
           dataChange = !restatement))
-        val descriptors = scala.concurrent.Await.result(
-          descriptorsF, scala.concurrent.duration.Duration.Inf)
-        (adds ++ dvChanged).foreach { rel =>
+        (adds ++ dvChangedFiles).foreach { rel =>
           val p = vt.root.resolve(rel)
           actions += DeltaLogFixture.addLine(encodePath(rel), Files.size(p),
             mtime = Files.getLastModifiedTime(p).toMillis,
-            stats = statsJson(c, rel), dv = descriptors.get(rel),
+            stats = statsJson(c, rel), dv = c.dvs.get(rel),
             dataChange = !restatement)
         }
         writeAtomically(target, actions.result().mkString("", "\n", "\n"))
@@ -310,91 +283,6 @@ object DeltaLogWriter {
     }
     commits.last.version
   }
-
-  /** File keys whose deletion vector DIFFERS between `prev` and `c`: the
-    * distinct fks mentioned by the dvFiles the two commits do NOT share.
-    * Sound because dv parquet is immutable — identical dvFiles sets imply
-    * identical per-file DV relations, and any per-file change must ride a
-    * differing dv file. (A dv-file rewrite restating identical positions
-    * would flag its fks spuriously, producing a harmless remove/re-add with
-    * an equivalent descriptor.) Cost: one distinct over the differing files
-    * only; zero I/O when the sets match. */
-  private def dvChangedFks(vt: VersionedTable, prev: Option[Commit],
-                           c: Commit): Set[String] = {
-    val pdv = prev.map(_.dvFiles.toSet).getOrElse(Set.empty)
-    val cdv = c.dvFiles.toSet
-    val diff = (pdv diff cdv) ++ (cdv diff pdv)
-    // cached per dv-delta file set (VersionedTable.dvDistinctFks): the CDC
-    // feed the CDF leg runs next asks the same question over the same files
-    VersionedTable.dvDistinctFks(SparkSession.active,
-      diff.toSeq.map(f => vt.root.resolve(f).toString))
-  }
-
-  /** Deletion-vector descriptors for the files in `rels`, keyed by relative
-    * path — built WITHOUT materializing positions on the driver: the
-    * commit's dv rows shuffle by fk, each executor task streams its files'
-    * sorted positions through [[DeletionVectors.RoaringBuilder]]
-    * (O(serialized size) memory, never O(positions)) and either inlines the
-    * small result or writes the `deletion_vector_<uuid>.bin` in the task;
-    * the driver collects only the O(files) descriptor rows. Files in `rels`
-    * with no deleted positions simply have no entry. */
-  private def dvDescriptors(vt: VersionedTable, c: Commit,
-                            rels: Seq[String]): Map[String, DeletionVectors.DvDescriptor] =
-    if (c.dvFiles.isEmpty || rels.isEmpty) Map.empty
-    else {
-      val spark = SparkSession.active
-      import spark.implicits._
-      val byFk = rels.map(f => VersionedTable.fileKey(f) -> f).toMap
-      val needed = spark.sparkContext.broadcast(byFk.keySet)
-      val rootStr = vt.root.toString
-      val inlineMax = InlineDvMax
-      var dv = spark.read.schema(VersionedTable.DvParquetSchema)
-        .parquet(c.dvFiles.map(f => vt.root.resolve(f).toString): _*)
-        .select("fk", "pos")
-      // pre-shuffle prune when the needed set is small (the incremental
-      // re-export case); the post-shuffle broadcast lookup filters exactly
-      // either way
-      if (byFk.size <= 1000)
-        dv = dv.where(org.apache.spark.sql.functions.col("fk")
-          .isInCollection(byFk.keySet))
-      val rows = dv
-        .repartition(org.apache.spark.sql.functions.col("fk"))
-        .sortWithinPartitions("fk", "pos")
-        .mapPartitions { it =>
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(String, String, String, Option[Int], Int, Long)]
-          var curFk: String = null
-          var builder: DeletionVectors.RoaringBuilder = null
-          def flush(): Unit = if (builder != null) {
-            val data = builder.result()
-            val card = builder.cardinality
-            val d =
-              if (card <= inlineMax) DeletionVectors.inlineBytes(data, card)
-              else DeletionVectors.writeDvBytes(
-                java.nio.file.Paths.get(rootStr), data, card)
-            out += ((curFk, d.storageType, d.pathOrInlineDv, d.offset,
-              d.sizeInBytes, d.cardinality))
-            builder = null
-          }
-          it.foreach { r =>
-            val fk = r.getString(0)
-            if (needed.value.contains(fk)) {
-              if (fk != curFk) {
-                flush(); curFk = fk
-                builder = new DeletionVectors.RoaringBuilder
-              }
-              builder.add(r.getLong(1))
-            }
-          }
-          flush()
-          out.iterator
-        }
-        .collect()
-      rows.flatMap { case (fk, st, pv, off, size, card) =>
-        byFk.get(fk).map(_ ->
-          DeletionVectors.DvDescriptor(st, pv, off, size, card))
-      }.toMap
-    }
 
   /** Materialize one commit's change data as `_change_data/cdc-<v>-<i>
     * .parquet` files — one file PER PARTITION of the feed, written by the

@@ -51,10 +51,12 @@ private[graft] object LakeFiles {
     Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
   }
 
-  /** Vacuum-managed files: parquet (data, deletion vectors), `.bloom`
-    * sidecars and commit-metadata manifests. */
+  /** Vacuum-managed files: parquet (data, legacy vector part-files),
+    * `deletion_vector_<uuid>.bin` vectors, `.bloom` sidecars and
+    * commit-metadata manifests. */
   def dataPlane(name: String): Boolean =
-    name.endsWith(".parquet") || name.endsWith(".bloom") || name.endsWith(".manifest")
+    name.endsWith(".parquet") || name.endsWith(".bloom") || name.endsWith(".manifest") ||
+      (name.startsWith("deletion_vector_") && name.endsWith(".bin"))
 
   /** Delete every data-plane file under `dataDir` whose `root`-relative path
     * is not in `retained` (only count them when `dryRun`), then prune every

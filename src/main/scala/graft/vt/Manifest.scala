@@ -11,14 +11,25 @@ import java.nio.file.{Files, Path}
   * carried by reference into a child commit iff every entry it holds is
   * byte-for-byte the child's metadata for a still-live file — so the check
   * is `entry == childEntry`, and the codec below round-trips doubles as raw
-  * bits to keep that equality exact. */
+  * bits to keep that equality exact.
+  *
+  * `dv` is the file's DELETION VECTOR (Delta's `add.deletionVector`, one
+  * per data file as Iceberg v3 requires): the 0-based positions of its
+  * merge-on-read deleted rows, inline (`i`, up to
+  * [[DeletionVectors.InlineDvMax]] positions) or in a
+  * `data/deletion_vector_<uuid>.bin` file (`u`), with its cardinality.
+  * A statement that deletes more rows of a file publishes a drop plus a
+  * fresh entry whose descriptor is the union — Delta's remove-plus-add of
+  * the same path — so the vector leaves with the entry when the file is
+  * rewritten. */
 final case class ManifestEntry(
     file: String,
     size: Option[Long],
     rows: Option[Long],
     stats: Map[String, (Double, Double)],
     strStats: Map[String, (String, String)],
-    nulls: Map[String, Long])
+    nulls: Map[String, Long],
+    dv: Option[DeletionVectors.DvDescriptor] = None)
 
 /** What one manifest file holds: per-file entries, plus (format 2) DROPS —
   * paths of entries in OTHER manifests of the same commit that this
@@ -59,9 +70,15 @@ final case class ManifestFile(entries: Vector[ManifestEntry], drops: Vector[Stri
   * min/max as len+UTF-8 — NOT writeUTF, whose 64 KB modified-UTF-8 ceiling
   * a long string min/max would trip), null counts (int32 n, per col: name,
   * int64). Version 2 appends int32 drop count and the dropped paths
-  * (len+UTF-8); a drop-free manifest is written as version 1. A reader
-  * refuses any other version, so an engine that predates drops fails
-  * loudly instead of resurrecting a dropped file. */
+  * (len+UTF-8). Version 3, the only version written now, is the version 2
+  * body (drop count always present) inside ONE zstd frame, with each
+  * entry followed by its deletion vector: a tag byte (0 none, 1 inline,
+  * 2 `u`, 3 `p`), then for inline the int64 cardinality and the raw
+  * portable-roaring bytes (len+bytes — Z85 is only for exported Delta
+  * JSON), else the path (len+UTF-8), int32 offset (-1 = none), int32 size
+  * and int64 cardinality. Versions 1 and 2 stay readable. A reader
+  * refuses any other version, so an engine that predates a format fails
+  * loudly instead of resurrecting a dropped file or a deleted row. */
 object Manifest {
 
   private val Magic = 0x474d4654 // "GMFT"
@@ -80,9 +97,12 @@ object Manifest {
 
   def write(path: Path, entries: Seq[ManifestEntry], drops: Seq[String] = Nil): Unit = {
     val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(Magic)
-    out.writeInt(if (drops.isEmpty) 1 else 2)
+    val head = new java.io.DataOutputStream(bos)
+    head.writeInt(Magic)
+    head.writeInt(3)
+    head.flush()
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+      new com.github.luben.zstd.ZstdOutputStream(bos)))
     out.writeInt(entries.size)
     entries.foreach { e =>
       writeStr(out, e.file)
@@ -102,21 +122,38 @@ object Manifest {
       e.nulls.toSeq.sortBy(_._1).foreach { case (col, n) =>
         writeStr(out, col); out.writeLong(n)
       }
+      e.dv match {
+        case None => out.writeByte(0)
+        case Some(d) if d.storageType == "i" =>
+          out.writeByte(1)
+          out.writeLong(d.cardinality)
+          val raw = DeletionVectors.z85Decode(d.pathOrInlineDv, d.sizeInBytes)
+          out.writeInt(raw.length); out.write(raw)
+        case Some(d) =>
+          out.writeByte(if (d.storageType == "u") 2 else 3)
+          writeStr(out, d.pathOrInlineDv)
+          out.writeInt(d.offset.getOrElse(-1))
+          out.writeInt(d.sizeInBytes)
+          out.writeLong(d.cardinality)
+      }
     }
-    if (drops.nonEmpty) {
-      out.writeInt(drops.size)
-      drops.foreach(writeStr(out, _))
-    }
-    out.flush()
+    out.writeInt(drops.size)
+    drops.foreach(writeStr(out, _))
+    out.close()
     Files.write(path, bos.toByteArray)
   }
 
   def read(path: Path): ManifestFile = {
-    val in = new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(Files.readAllBytes(path)))
-    require(in.readInt() == Magic, s"$path is not a graft commit manifest")
-    val ver = in.readInt()
-    require(ver == 1 || ver == 2, s"unsupported manifest version $ver in $path")
+    val bytes = Files.readAllBytes(path)
+    val head = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    require(head.readInt() == Magic, s"$path is not a graft commit manifest")
+    val ver = head.readInt()
+    require(ver >= 1 && ver <= 3, s"unsupported manifest version $ver in $path")
+    val in =
+      if (ver < 3) head
+      else new java.io.DataInputStream(new java.io.BufferedInputStream(
+        new com.github.luben.zstd.ZstdInputStream(
+          new java.io.ByteArrayInputStream(bytes, 8, bytes.length - 8))))
     val n = in.readInt()
     val entries = Vector.fill(n) {
       val file = readStr(in)
@@ -131,9 +168,21 @@ object Manifest {
         (readStr(in), (readStr(in), readStr(in)))
       }.toMap
       val nulls = Vector.fill(in.readInt()) { (readStr(in), in.readLong()) }.toMap
-      ManifestEntry(file, size, rows, stats, strStats, nulls)
+      val dv = if (ver < 3) None else in.readByte() match {
+        case 0 => None
+        case 1 =>
+          val card = in.readLong()
+          val raw = new Array[Byte](in.readInt())
+          in.readFully(raw)
+          Some(DeletionVectors.inlineBytes(raw, card))
+        case t =>
+          Some(DeletionVectors.DvDescriptor(if (t == 2) "u" else "p", readStr(in),
+            in.readInt() match { case -1 => None; case o => Some(o) },
+            in.readInt(), in.readLong()))
+      }
+      ManifestEntry(file, size, rows, stats, strStats, nulls, dv)
     }
-    ManifestFile(entries, if (ver == 2) Vector.fill(in.readInt())(readStr(in)) else Vector.empty)
+    ManifestFile(entries, if (ver >= 2) Vector.fill(in.readInt())(readStr(in)) else Vector.empty)
   }
 
   // Bounded process-wide cache keyed by absolute manifest path: manifests

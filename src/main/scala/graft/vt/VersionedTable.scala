@@ -254,8 +254,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
                      else Map.empty[String, Map[String, Long]]) ++ newNullStats,
         // append keeps the old files, so their deletion vectors stay live;
         // overwrite replaces the snapshot, so none carry
-        dvFiles = if (app) base.map(_.dvFiles).getOrElse(Vector.empty)
-                  else Vector.empty,
+        dvs = if (app) base.map(_.dvs).getOrElse(Map.empty) else Map.empty,
         bloomStats = if (app) base.map(_.bloomStats).getOrElse(Map.empty)
                      else Map.empty[String, Map[String, String]],
         bloomCols = effBloomCols,
@@ -684,10 +683,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * Scale shape: the affected keys' range per numeric, timestamp or string
     * key column prunes files through the commit-log stats
     * ([[mergeCandidates]]); one semi-join of the remaining files against
-    * the affected keys lands the positions of the live rows it replaces or
-    * removes as a deletion vector, counted per file ([[landRetired]]); then
-    * [[retireOrRewrite]] applies the 1/20 rule — a file with few dead rows
-    * keeps its entry, stats and bloom bits and its lost rows go into one
+    * the affected keys finds the live rows it replaces or removes, and the
+    * same pass builds each touched file's new descriptor ([[retireHits]]);
+    * then [[retireOrRewrite]] applies the 1/20 rule — a file with few dead
+    * rows keeps its stats and bloom bits and its lost rows join its
     * deletion vector, a file past the rule is rewritten with its kept rows
     * (one anti-join), and every untouched file carries as it was. 1/20 is
     * the deleted-rows ratio at which Delta's OPTIMIZE purges a file's
@@ -734,7 +733,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         .join(affected.distinct(), keyCols, "left_semi"))
     retireOrRewrite(spark, parent, branch,
       if (message.isEmpty) s"applyCdc on (${keyCols.mkString(", ")})" else message,
-      schema, landRetired(spark, parent, branch, candidates, hits, Some(affected)),
+      schema, retireHits(spark, parent, candidates, hits, Some(affected), retireAll = false),
       (rewrite, _) => {
         val kept = if (rewrite.isEmpty) None
           else Some(readCommit(spark, parent.copy(files = rewrite))
@@ -843,9 +842,9 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * commit-log stats exactly like [[upsert]] — numeric and timestamp keys
     * against the double-domain stats, STRING keys (doc_id/uuid, the common
     * LLM-corpus merge shape) against the truncation-sound strStats under
-    * unsigned-UTF-8 order; an exact detection pass lands the positions of
-    * the rows some clause APPLIES to as a deletion vector, counted per file
-    * ([[landRetired]]). [[retireOrRewrite]] then decides per
+    * unsigned-UTF-8 order; an exact detection pass finds the rows some
+    * clause APPLIES to and builds each touched file's new descriptor
+    * ([[retireHits]]). [[retireOrRewrite]] then decides per
     * touched file: while its dead rows stay at or below 1/20 of its row
     * count (Delta OPTIMIZE's deleted-rows purge ratio, which also caps a
     * hot file's read amplification) the file keeps its entry, stats and
@@ -1015,10 +1014,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     }
 
     // ---- exact detection: the rows some clause APPLIES to, per file -----
-    // One pass lands their (file, pos) pairs as the statement's deletion
-    // vector and carries Delta's cardinality check: for src-present rows
-    // "some matched clause applies" ⟺ anyCond(matched), so a position the
-    // vector records twice is a target row two source copies modify.
+    // One pass builds each touched file's descriptor and carries Delta's
+    // cardinality check: for src-present rows "some matched clause
+    // applies" ⟺ anyCond(matched), so a position the pass meets twice is a
+    // target row two source copies modify.
     val matchedHits: Option[DataFrame] =
       if (matched.isEmpty || candidates.isEmpty) None
       else Some(tgtScan(parent.copy(files = candidates)).join(src, onExpr, "inner")
@@ -1031,17 +1030,18 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         .select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)))
     // matched and by-source rows are disjoint, so one vector holds both
     val hits = (matchedHits ++ bySourceHits).reduceOption(_ unionByName _)
-    val retired = landRetired(spark, parent, branch,
-      if (bySourceHits.isDefined) parent.files else candidates, hits, Some(source0))
+    val retired = retireHits(spark, parent,
+      if (bySourceHits.isDefined) parent.files else candidates, hits, Some(source0),
+      retireAll = false)
     if (retired.multiHit) {
-      dropVector(retired.vector)
+      dropDvs(retired.dvs.values)
       throw new IllegalArgumentException(
         "mergeInto: multiple source rows match and attempt to modify the " +
           "same target row — de-duplicate the source or tighten the ON / " +
           "clause conditions (Delta MERGE raises the same error)")
     }
     // clauses touch nothing: no-op, no churn
-    if (retired.perFile.isEmpty && notMatched.isEmpty) return parent
+    if (retired.touched.isEmpty && notMatched.isEmpty) return parent
 
     // ---- the rewrite + insert plan, one write ----------------------------
     // (r22, guide §2.4/§1.2): formerly a UNION of filtered branches — kept
@@ -1051,7 +1051,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     // per-column CASE over the applied-clause index routes every row in a
     // SINGLE execution of the join (the shape Delta's writeAllChanges uses).
     // Rows of a rewritten file emit when kept or updated; rows of a file
-    // that takes a deletion vector emit only as update images, since its
+    // whose deletion vector grows emit only as update images, since its
     // kept rows stay where they are.
     //
     // Kept-exactly-once: a target row with SEVERAL source copies where none
@@ -1389,18 +1389,23 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     }
   }
 
-  /** Merge-on-read DELETE (Delta deletion vectors / Iceberg v2 position
+  /** Merge-on-read DELETE (Delta deletion vectors / Iceberg v3 position
     * deletes): instead of rewriting every touched file ([[delete]]'s
-    * copy-on-write), record the matched ROW POSITIONS in a small deletion-
-    * vector parquet and publish a commit with the SAME file list — O(matched
-    * rows) bytes written, zero data rewritten. This is the point-delete
-    * shape a petabyte table needs: deleting 3 rows clustered in a 1 GB file
-    * costs kilobytes, where copy-on-write rewrites the gigabyte. Readers
-    * subtract DVs with one broadcast anti-join on (file key, row position)
-    * ([[readCommit]]); [[compact]] materializes them away. Semantics match
-    * [[delete]]: NULL predicate keeps the row, a no-match delete returns the
-    * unchanged head, stats pruning bounds the find-matches scan, and rows
-    * already deleted by earlier DVs are never re-recorded (the scan applies
+    * copy-on-write), add the matched ROW POSITIONS to each touched file's
+    * deletion vector and publish a commit with the SAME file list — each
+    * touched file's entry is re-stated with the union descriptor (a drop
+    * plus a fresh entry), O(matched rows) bytes written, zero data
+    * rewritten. This is the point-delete shape a petabyte table needs:
+    * deleting 3 rows clustered in a 1 GB file costs a few hundred bytes of
+    * inline vector, where copy-on-write rewrites the gigabyte. One pass
+    * finds the rows and builds the descriptors ([[retireHits]]): up to
+    * [[DeletionVectors.InlineDvMax]] positions ride inline in the entry,
+    * larger vectors land as `data/deletion_vector_<uuid>.bin` written by
+    * the task. Readers drop deleted positions per file ([[scanWithPos]],
+    * the native MOR scan); [[compact]] materializes them away. Semantics
+    * match [[delete]]: NULL predicate keeps the row, a no-match delete
+    * returns the unchanged head, stats pruning bounds the find-matches
+    * scan, and rows already deleted are never re-recorded (the scan applies
     * existing vectors first). */
   def deleteWithVectors(spark: SparkSession, where: String, branch: String = "main",
                         message: String = ""): Commit = synchronized {
@@ -1410,15 +1415,15 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     if (parent.files.isEmpty) return parent
     val candidates = statsCandidates(parent, where)
     if (candidates.isEmpty) return parent
-    val dvNew = writeDeletionVectors(
-      scanWithPos(spark, parent.copy(files = candidates)).where(expr(where)),
-      branch, parent.version + 1)
-    if (dvNew.isEmpty) return parent // the delete matched nothing
+    val retired = retireHits(spark, parent, candidates,
+      Some(scanWithPos(spark, parent.copy(files = candidates)).where(expr(where))), None,
+      retireAll = true)
+    if (retired.dvs.isEmpty) return parent // the delete matched nothing
     publish(branch, Some(parent),
       if (message.isEmpty) s"delete (merge-on-read) where ($where)" else message,
       DataType.fromJson(parent.schemaJson).asInstanceOf[StructType], parent.files,
       parent.stats, strStats = parent.strStats, nullStats = parent.nullStats,
-      dvFiles = parent.dvFiles ++ dvNew,
+      dvs = parent.dvs ++ retired.dvs,
       // blooms carry verbatim: a deleted row's bits become false positives,
       // which only KEEP files — skipping stays sound
       bloomStats = parent.bloomStats,
@@ -1473,9 +1478,9 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
   }
 
   /** Row-level UPDATE (Delta `UPDATE t SET c = e WHERE p`): commit-log
-    * stats prune the candidate files as for [[delete]], one scan lands the
-    * matching rows' positions as a deletion vector and counts them per file
-    * ([[landRetired]]), and [[retireOrRewrite]] decides per touched
+    * stats prune the candidate files as for [[delete]], one scan finds the
+    * matching rows and builds each touched file's new descriptor
+    * ([[retireHits]]), and [[retireOrRewrite]] decides per touched
     * file. A file whose dead rows stay at or below 1/20 of its row count
     * (Delta OPTIMIZE's deleted-rows purge ratio, which also caps a hot
     * file's read amplification) keeps its entry, stats and bloom bits: its
@@ -1508,8 +1513,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     if (candidates.isEmpty) return parent // stats alone prove nothing matches
     // same DV-safe detection as delete (see comment there)
     val hits = scanWithPos(spark, parent.copy(files = candidates)).where(pred)
-    val retired = landRetired(spark, parent, branch, candidates, Some(hits), None)
-    if (retired.perFile.isEmpty) return parent // update matched nothing
+    val retired = retireHits(spark, parent, candidates, Some(hits), None, retireAll = false)
+    if (retired.touched.isEmpty) return parent // update matched nothing
     // All SET right-hand sides evaluate against the OLD row: build every
     // new column from the original scan in one select (no sequential
     // withColumn, which would let later assignments see earlier ones).
@@ -1541,110 +1546,140 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     hits.groupBy(VersionedTable.FkCol).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  /** What a row-level DML statement's detection pass retired: `vector` is
-    * the new deletion-vector part-file holding the (file key, position) of
-    * every live row the statement replaces or deletes; per touched file
-    * key, `perFile` counts those rows and `deadBefore` the rows the
-    * parent's vectors already delete. `multiHit` is set when one position
-    * was hit more than once (several source rows applying to one target
-    * row of a MERGE). */
-  private case class Retired(vector: Vector[String], perFile: Map[String, Long],
-                             deadBefore: Map[String, Long], multiHit: Boolean,
-                             deterministic: Boolean)
+  /** What a row-level DML statement's detection pass retired: `touched`
+    * holds the keys of the files with a live row the statement replaces or
+    * deletes. `dvs` holds, for each touched file that keeps its entry, its
+    * new descriptor — the union of its vector and those rows; a touched
+    * file without one is rewritten. `multiHit` is set when one position was
+    * hit more than once (several source rows applying to one target row of
+    * a MERGE). */
+  private case class Retired(touched: Set[String],
+                             dvs: Map[String, DeletionVectors.DvDescriptor],
+                             multiHit: Boolean)
 
-  /** Remove a landed but unpublished deletion-vector part-file set. */
-  private def dropVector(vector: Vector[String]): Unit =
-    vector.headOption.foreach(f => graft.Tables.deleteRecursively(root.resolve(f).getParent))
+  /** Remove the `.bin` files of descriptors a statement built but will not
+    * publish. */
+  private def dropDvs(dvs: Iterable[DeletionVectors.DvDescriptor]): Unit =
+    dvs.foreach(d => DeletionVectors.relativeFile(d).foreach(f => LakeFiles.delete(root.resolve(f))))
 
-  /** Land the detection pass `hits` of [[applyCdc]], [[mergeInto]] or
-    * [[update]] — over the parent's `scanned` files and the statement's
-    * `source` — as a deletion vector in the statement's single evaluation
-    * of it, then count it per file key with one small read of the vector
-    * and of the parent's vectors for the scanned files. The pass adds no
-    * exchange of its own: it is coalesced by the bytes it reads
-    * ([[sizedByInput]]), so a statement under
-    * `spark.sql.files.maxPartitionBytes` lands one part-file and a larger
-    * one a part-file per that many bytes. Entries for files the
-    * statement ends up rewriting are dead and harmless (readers match
-    * vectors by live file key); a statement that retires no file drops the
-    * file again ([[retireOrRewrite]]). */
-  private def landRetired(spark: SparkSession, parent: Commit, branch: String,
-                          scanned: Vector[String], hits: Option[DataFrame],
-                          source: Option[DataFrame]): Retired = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, sum, when}
-    val deterministic = hits.forall(h =>
-      !h.queryExecution.analyzed.exists(_.expressions.exists(!_.deterministic)))
-    val vector = hits.map(h => writeDeletionVectors(
-      sizedByInput(h.select(col(VersionedTable.FkCol), col(VersionedTable.PosCol)),
-        parent, scanned, source),
-      branch, parent.version + 1)).getOrElse(Vector.empty)
-    if (vector.isEmpty) return Retired(vector, Map.empty, Map.empty, multiHit = false, deterministic)
-    def dv(files: Vector[String], fresh: Boolean) = spark.read.schema(VersionedTable.DvParquetSchema)
-      .parquet(files.map(f => root.resolve(f).toString): _*)
-      .withColumn("__new", lit(if (fresh) 1 else 0))
-    val all = if (parent.dvFiles.isEmpty) dv(vector, fresh = true)
-      else dv(vector, fresh = true).unionByName(dv(parent.dvFiles, fresh = false)
-        .where(col("fk").isInCollection(scanned.map(VersionedTable.fileKey))))
-    // one exchange: partitioning by fk co-locates every (fk, pos) group, so
-    // both aggregates run above it. Old positions count DISTINCT, as
-    // dvCardByKey does (merged branches can record one deleted row in two
-    // vector files); a fresh position counted twice is a multi-hit
-    val perFk = all.repartition(col("fk"))
-      .groupBy(col("fk"), col("pos"))
-      .agg(sum(col("__new")).as("__n"), count(lit(1)).as("__all"))
-      .groupBy(col("fk"))
-      .agg(sum(col("__n")).as("n"), count(when(col("__all") > col("__n"), lit(1))).as("dead"),
-        max(col("__n")).as("mx"))
-      .where(col("n") > 0)
-      .collect()
-    Retired(vector, perFk.map(r => r.getString(0) -> r.getLong(1)).toMap,
-      perFk.map(r => r.getString(0) -> r.getLong(2)).toMap,
-      multiHit = perFk.exists(_.getLong(3) > 1L), deterministic)
+  /** The detection pass `hits` of a row-level DML statement (carrying the
+    * [[scanWithPos]] tag columns) over the parent's `scanned` files, run
+    * ONCE: its positions are grouped by file key and sorted, and each task
+    * decides per touched file what Delta's remove-plus-add of the same path
+    * needs. With `retireAll` (the vector delete) every touched file keeps
+    * its entry; otherwise a file keeps it while its dead rows after the
+    * statement — its descriptor's cardinality plus this statement's rows —
+    * stay at or below 1/[[VersionedTable.DvDeadRowsDivisor]] of its logged
+    * row count, and the statement is deterministic (the vector and the new
+    * row images come from separate evaluations, so a rand() condition
+    * would retire other rows than it replaces: it rewrites, which
+    * evaluates each row once). For a kept file the task streams the union
+    * of its existing positions and the new ones through
+    * [[DeletionVectors.RoaringBuilder]] and inlines the bitmap up to
+    * [[DeletionVectors.InlineDvMax]] positions, else writes it as
+    * `data/deletion_vector_<uuid>.bin`; the driver collects only
+    * `(file, descriptor)`. */
+  private def retireHits(spark: SparkSession, parent: Commit, scanned: Vector[String],
+                         hits: Option[DataFrame], source: Option[DataFrame],
+                         retireAll: Boolean): Retired = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val h = hits.getOrElse(return Retired(Set.empty, Map.empty, multiHit = false))
+    val deterministic = !h.queryExecution.analyzed.exists(_.expressions.exists(!_.deterministic))
+    // per scanned file key: (file, its descriptor, logged rows or -1)
+    val byKey: Map[String, (String, Option[DeletionVectors.DvDescriptor], Long)] =
+      scanned.map(f => VersionedTable.fileKey(f) ->
+        (f, parent.dvs.get(f), parent.rowCounts.getOrElse(f, -1L))).toMap
+    val pairs = h.select(col(VersionedTable.FkCol), col(VersionedTable.PosCol).cast("long"))
+    // a DML verb's pass over under one maxPartitionBytes groups in one task
+    // without an exchange, as its write does; the vector delete, which
+    // has no write to size, keeps its scan's parallelism
+    val grouped =
+      if (!retireAll && inputSlices(spark, parent, scanned, source).contains(1)) pairs.coalesce(1)
+      else pairs.repartition(col(VersionedTable.FkCol))
+    val rootStr = root.toString
+    val divisor = VersionedTable.DvDeadRowsDivisor
+    val rows = grouped.sortWithinPartitions(VersionedTable.FkCol, VersionedTable.PosCol)
+      .mapPartitions { it =>
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(String, Boolean, String, String, Option[Int], Int, Long)]
+        var fk: String = null
+        val fresh = new scala.collection.mutable.ArrayBuilder.ofLong
+        var multi = false
+        var last = -1L
+        def flush(): Unit = if (fk != null) {
+          val ps = fresh.result()
+          fresh.clear()
+          val (_, old, logged) = byKey(fk)
+          val dead = old.map(_.cardinality).getOrElse(0L)
+          if (retireAll || (deterministic && logged >= 0 &&
+              divisor * (dead + ps.length) <= logged)) {
+            val olds = old.map(DeletionVectors.positions(rootStr, _)).getOrElse(Array.emptyLongArray)
+            val b = new DeletionVectors.RoaringBuilder
+            var i = 0
+            var j = 0
+            while (i < olds.length || j < ps.length) {
+              if (j >= ps.length || (i < olds.length && olds(i) <= ps(j))) { b.add(olds(i)); i += 1 }
+              else { b.add(ps(j)); j += 1 }
+            }
+            val d =
+              if (b.cardinality <= DeletionVectors.InlineDvMax)
+                DeletionVectors.inlineBytes(b.result(), b.cardinality)
+              else DeletionVectors.writeDvBytes(java.nio.file.Paths.get(rootStr),
+                b.result(), b.cardinality, "data")
+            out += ((fk, multi, d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
+              d.cardinality))
+          } else out += ((fk, multi, null, null, None, 0, 0L))
+          multi = false
+          last = -1L
+        }
+        it.foreach { r =>
+          val k = r.getString(0)
+          val p = r.getLong(1)
+          if (k != fk) { flush(); fk = k }
+          if (p == last) multi = true else { fresh += p; last = p }
+        }
+        flush()
+        out.iterator
+      }.collect()
+    Retired(rows.map(_._1).toSet,
+      rows.collect { case r if r._3 != null =>
+        byKey(r._1)._1 -> DeletionVectors.DvDescriptor(r._3, r._4, r._5, r._6, r._7)
+      }.toMap,
+      rows.exists(_._2))
   }
 
   /** The one commit path of [[applyCdc]] (so [[upsert]]), [[mergeInto]] and
-    * [[update]]: retire a touched file's changed rows with a deletion
+    * [[update]]: retire a touched file's changed rows with its deletion
     * vector, or rewrite the file.
     *
-    * A file whose dead rows after the statement — its existing DV
-    * cardinality plus this statement's `retired` rows — stay at or below
-    * 1/[[VersionedTable.DvDeadRowsDivisor]] of its logged row count keeps
-    * its entry, stats and bloom bits, and `retired.vector` is published
-    * with it. Every other touched file, including one without a logged row
-    * count, and every file a non-deterministic statement touches, is
-    * rewritten. `rows(rewrite, retire)` is everything the statement lands:
-    * the kept rows of the rewritten files plus every new row image, sized
-    * by the verb to one partition per `spark.sql.files.maxPartitionBytes`
-    * of what it reads ([[sizedByInput]]); it goes out in one write, whose
-    * files that hold no row are deleted ([[dropEmpty]]), and one commit
-    * publishes the carried files and the new ones with `dvFiles ++` the new
-    * vector. With
-    * `noOpIfNothingLands` a statement that retires nothing and lands no
-    * row returns the unchanged head. */
+    * A touched file that [[retireHits]] gave a new descriptor keeps its
+    * stats and bloom bits and is re-stated with that descriptor — a drop
+    * plus a fresh manifest entry. Every other touched file is rewritten.
+    * `rows(rewrite, retire)` is everything the statement lands: the kept
+    * rows of the rewritten files plus every new row image, sized by the
+    * verb to one partition per `spark.sql.files.maxPartitionBytes` of what
+    * it reads ([[sizedByInput]]); it goes out in one write, whose files
+    * that hold no row are deleted ([[dropEmpty]]), and one commit
+    * publishes the carried files and the new ones. A rewritten file's
+    * vector leaves the commit with its entry. With `noOpIfNothingLands` a
+    * statement that retires nothing and lands no row returns the unchanged
+    * head. */
   private def retireOrRewrite(spark: SparkSession, parent: Commit, branch: String,
       message: String, schema: StructType, retired: Retired,
       rows: (Vector[String], Vector[String]) => Option[DataFrame],
       noOpIfNothingLands: Boolean = false): Commit = {
-    val perFile = retired.perFile
-    // the vector and the new row images come from separate evaluations of
-    // the statement, so a non-deterministic one (a rand() condition) would
-    // retire other rows than it replaces: it rewrites, which evaluates each
-    // row once
-    val (retire, rewrite) = parent.files.filter(f => perFile.contains(VersionedTable.fileKey(f)))
-      .partition { f =>
-        val fk = VersionedTable.fileKey(f)
-        retired.deterministic && parent.rowCounts.get(f).exists(n =>
-          VersionedTable.DvDeadRowsDivisor * (retired.deadBefore.getOrElse(fk, 0L) + perFile(fk)) <= n)
-      }
-    val dvNew = if (retire.isEmpty) { dropVector(retired.vector); Vector.empty } else retired.vector
+    val (retire, rewrite) = parent.files
+      .filter(f => retired.touched(VersionedTable.fileKey(f)))
+      .partition(retired.dvs.contains)
     val version = parent.version + 1
     val newFiles = try rows(rewrite, retire).map(df => dropEmpty(writeDataFiles(df, branch,
         version, mapTo = Some(DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]))))
         .getOrElse(Vector.empty)
-      catch { case e: Throwable => dropVector(dvNew); throw e }
-    if (noOpIfNothingLands && perFile.isEmpty && newFiles.isEmpty) return parent
+      catch { case e: Throwable => dropDvs(retired.dvs.values); throw e }
+    if (noOpIfNothingLands && retired.touched.isEmpty && newFiles.isEmpty) return parent
     commitDml(spark, parent, branch, message, schema,
-      parent.files.filterNot(rewrite.toSet), newFiles, dvNew)
+      parent.files.filterNot(rewrite.toSet), newFiles, retired.dvs)
   }
 
   /** `written`, a DML statement's new data files, less every file that
@@ -1661,47 +1696,14 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     landed
   }
 
-  /** Land the (file key, position) pairs of `hits` (carrying the
-    * [[scanWithPos]] tag columns) as one deletion-vector part-file set
-    * under `data/<branch>-v<version>-dv-<id>/`; returns its root-relative
-    * files, or nothing (and no directory) when no position landed.
-    *
-    * Sorted WITHIN partitions by (fk, pos): each DV part-file's row groups
-    * cluster by file key, so the per-TASK DV load (r19,
-    * [[graft.sources.DvTaskLoader]]) prunes the DV parquet by row-group
-    * stats down to ~O(its own file's deletions). No extra shuffle — the
-    * scan's own partitioning (and its parallelism) is preserved, so
-    * [[deleteWithVectors]] lands one part-file per scan partition, while
-    * [[landRetired]] coalesces its hits by input size first
-    * ([[sizedByInput]]). ONE pass
-    * (r21): emptiness is read off the landed footers instead of an
-    * `isEmpty` probe that would run the whole scan twice. */
-  private def writeDeletionVectors(hits: DataFrame, branch: String,
-                                   version: Long): Vector[String] = {
-    import org.apache.spark.sql.functions.col
-    val out = dataDir.resolve(
-      s"$branch-v$version-dv-${java.util.UUID.randomUUID.toString.take(8)}")
-    val dvNew = LakeFiles.write(
-      hits.select(col(VersionedTable.FkCol).as("fk"),
-        col(VersionedTable.PosCol).cast("long").as("pos"))
-        .sortWithinPartitions("fk", "pos"), out, root)
-    if (dvNew.map(f => VersionedTable.footerRowCount(root.resolve(f)).getOrElse(1L)).sum > 0L) dvNew
-    else {
-      graft.Tables.deleteRecursively(out)
-      Vector.empty
-    }
-  }
-
   /** Publish a row-level DML result: `carried` parent files keep their
-    * entries, stats and bloom bits, `newFiles` get fresh stats over the
-    * parent's tracked column set (so skip-reads keep working) and a bloom
-    * sidecar, and `dvNew` joins the parent's deletion vectors. Entries of
-    * rewritten files left in the carried vectors are dead and harmless:
-    * readers and [[countRows]] match vectors by live file key. */
+    * stats and bloom bits, `newFiles` get fresh stats over the parent's
+    * tracked column set (so skip-reads keep working) and a bloom sidecar,
+    * and `dvNew` replaces the descriptors of the files it names. */
   private def commitDml(spark: SparkSession, parent: Commit, branch: String,
                         message: String, schema: StructType, carried: Vector[String],
                         newFiles: Vector[String],
-                        dvNew: Vector[String] = Vector.empty): Commit = {
+                        dvNew: Map[String, DeletionVectors.DvDescriptor] = Map.empty): Commit = {
     val statCols = (parent.stats.values.flatMap(_.keys) ++
       parent.strStats.values.flatMap(_.keys)).toSeq.distinct
     val (newStats, newStrStats, newNullStats) =
@@ -1716,7 +1718,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       parent.stats.view.filterKeys(carriedSet).toMap ++ newStats,
       strStats = parent.strStats.view.filterKeys(carriedSet).toMap ++ newStrStats,
       nullStats = parent.nullStats.view.filterKeys(carriedSet).toMap ++ newNullStats,
-      dvFiles = parent.dvFiles ++ dvNew,
+      dvs = parent.dvs ++ dvNew,
       bloomStats = bLegacy, bloomCols = bCols, bloomFiles = bFiles)
   }
 
@@ -1778,7 +1780,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       if (message.nonEmpty) message
       else s"ALTER TABLE ADD COLUMNS (${newCols.map(_.name).mkString(", ")})",
       evolved, parent.files, parent.stats, strStats = parent.strStats,
-      dvFiles = parent.dvFiles, nullStats = parent.nullStats,
+      dvs = parent.dvs, nullStats = parent.nullStats,
       bloomStats = parent.bloomStats, bloomCols = bloomColsOf(parent),
       bloomFiles = parent.bloomFiles, dataChange = false)
   }
@@ -1841,7 +1843,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       renamed, parent.files,
       rekey(parent.stats), strStats = rekey(parent.strStats),
       nullStats = rekey(parent.nullStats),
-      dvFiles = parent.dvFiles, bloomStats = parent.bloomStats,
+      dvs = parent.dvs, bloomStats = parent.bloomStats,
       bloomCols = bloomColsOf(parent).map(c => if (c == from) to else c),
       bloomFiles = parent.bloomFiles, dataChange = false,
       props = Some(parent.props + (VersionedTable.ColMapProp -> "name")))
@@ -1910,7 +1912,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       remaining, parent.files,
       purge(parent.stats), strStats = purge(parent.strStats),
       nullStats = purge(parent.nullStats),
-      dvFiles = parent.dvFiles, bloomStats = parent.bloomStats,
+      dvs = parent.dvs, bloomStats = parent.bloomStats,
       bloomCols = bloomColsOf(parent).filterNot(_ == name),
       bloomFiles = parent.bloomFiles, dataChange = false,
       props = Some(parent.props + (VersionedTable.ColMapProp -> "name")))
@@ -1966,7 +1968,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       schema, parent.files,
       merge(parent.stats, num), strStats = merge(parent.strStats, str),
       nullStats = merge(parent.nullStats, nulls),
-      dvFiles = parent.dvFiles, bloomStats = parent.bloomStats,
+      dvs = parent.dvs, bloomStats = parent.bloomStats,
       bloomCols = bloomColsOf(parent), bloomFiles = parent.bloomFiles,
       dataChange = false)
   }
@@ -1995,7 +1997,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       if (message.nonEmpty) message
       else s"ANALYZE: bloom index on (${cols.mkString(", ")})",
       schema, parent.files, parent.stats, strStats = parent.strStats,
-      nullStats = parent.nullStats, dvFiles = parent.dvFiles,
+      nullStats = parent.nullStats, dvs = parent.dvs,
       bloomStats = parent.bloomStats,
       bloomCols = (bloomColsOf(parent) ++ cols).distinct,
       bloomFiles = parent.bloomFiles ++ sidecar,
@@ -2026,7 +2028,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       else s"ALTER TABLE SET TBLPROPERTIES (${(set.keys ++ unset).mkString(", ")})",
       DataType.fromJson(parent.schemaJson).asInstanceOf[StructType],
       parent.files, parent.stats, strStats = parent.strStats,
-      dvFiles = parent.dvFiles, nullStats = parent.nullStats,
+      dvs = parent.dvs, nullStats = parent.nullStats,
       bloomStats = parent.bloomStats, bloomCols = bloomColsOf(parent),
       bloomFiles = parent.bloomFiles, dataChange = false,
       props = Some(parent.props -- unset ++ set))
@@ -2075,7 +2077,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         if (message.nonEmpty) message
         else s"ALTER TABLE ADD CONSTRAINT $key CHECK ($predicateSql)",
         schema, parent.files, parent.stats, strStats = parent.strStats,
-        dvFiles = parent.dvFiles, nullStats = parent.nullStats,
+        dvs = parent.dvs, nullStats = parent.nullStats,
         bloomStats = parent.bloomStats, bloomCols = bloomColsOf(parent),
         bloomFiles = parent.bloomFiles, dataChange = false,
         props = Some(parent.props +
@@ -2102,7 +2104,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       if (message.nonEmpty) message else s"ALTER TABLE DROP CONSTRAINT $key",
       DataType.fromJson(parent.schemaJson).asInstanceOf[StructType],
       parent.files, parent.stats, strStats = parent.strStats,
-      dvFiles = parent.dvFiles, nullStats = parent.nullStats,
+      dvs = parent.dvs, nullStats = parent.nullStats,
       bloomStats = parent.bloomStats, bloomCols = bloomColsOf(parent),
       bloomFiles = parent.bloomFiles, dataChange = false,
       props = Some(parent.props - propKey))
@@ -2131,14 +2133,15 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       }
   }
 
-  /** Enforce `checks` over the LIVE rows of `files` (merged `dvFiles`
+  /** Enforce `checks` over the LIVE rows of `files` (merged `dvs`
     * applied — a violating row both sides agreed to MOR-delete is not
     * incoming data). Used by the version-graph ops that import rows a
     * branch's own write-time guard never saw (merge, cherry-pick); needs a
     * session, taken from the active/default one — version-graph ops keep
     * their sessionless signatures and only demand a session when there is
     * actually something to validate. */
-  private def enforceChecksOnFiles(files: Vector[String], dvFiles: Vector[String],
+  private def enforceChecksOnFiles(files: Vector[String],
+                                   dvs: Map[String, DeletionVectors.DvDescriptor],
                                    schemaJson: String,
                                    checks: Map[String, String],
                                    context: String): Unit = {
@@ -2151,7 +2154,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
           "files, which needs an active SparkSession"))
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     val snap = Commit("VALIDATE", None, -1L, files, schemaJson, "", 0L,
-      dvFiles = dvFiles)
+      dvs = dvs)
     firstCheckViolation(readCommit(spark, snap),
       schema.fieldNames.toIndexedSeq, checks.toSeq.sortBy(_._1)).foreach {
       case (name, sql, row) => throw new IllegalStateException(
@@ -2269,7 +2272,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
           parent.map(_.stats).getOrElse(Map.empty),
           strStats = parent.map(_.strStats).getOrElse(Map.empty),
           nullStats = parent.map(_.nullStats).getOrElse(Map.empty),
-          dvFiles = parent.map(_.dvFiles).getOrElse(Vector.empty),
+          dvs = parent.map(_.dvs).getOrElse(Map.empty),
           bloomStats = parent.map(_.bloomStats).getOrElse(Map.empty),
           bloomCols = cols,
           bloomFiles = parent.map(_.bloomFiles).getOrElse(Vector.empty) ++ sidecar,
@@ -2404,15 +2407,21 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * leaves the frame as it is. Apply it before any
     * `sortWithinPartitions`, which a later coalesce would break. */
   private def sizedByInput(df: DataFrame, parent: Commit, files: Vector[String],
-                           source: Option[DataFrame]): DataFrame = {
-    val conf = df.sparkSession.sessionState.conf
+                           source: Option[DataFrame]): DataFrame =
+    inputSlices(df.sparkSession, parent, files, source).fold(df)(df.coalesce)
+
+  /** The partition count [[sizedByInput]] coalesces to; None when a size is
+    * unknown. */
+  private def inputSlices(spark: SparkSession, parent: Commit, files: Vector[String],
+                          source: Option[DataFrame]): Option[Int] = {
+    val conf = spark.sessionState.conf
     val fileBytes = files.map(parent.fileSizes.get)
     val sourceBytes = source.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-    if (fileBytes.contains(None) || sourceBytes.exists(_ >= conf.defaultSizeInBytes)) df
+    if (fileBytes.contains(None) || sourceBytes.exists(_ >= conf.defaultSizeInBytes)) None
     else {
       val bytes = BigInt(fileBytes.flatten.sum) + sourceBytes.getOrElse(BigInt(0))
       val per = BigInt(conf.filesMaxPartitionBytes)
-      df.coalesce(((bytes + per - 1) / per).max(1).min(Int.MaxValue).toInt)
+      Some(((bytes + per - 1) / per).max(1).min(Int.MaxValue).toInt)
     }
   }
 
@@ -2431,7 +2440,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
                       stats: Map[String, Map[String, (Double, Double)]] = Map.empty,
                       mergeParent: Option[String] = None,
                       strStats: Map[String, Map[String, (String, String)]] = Map.empty,
-                      dvFiles: Vector[String] = Vector.empty,
+                      dvs: Map[String, DeletionVectors.DvDescriptor] = Map.empty,
                       nullStats: Map[String, Map[String, Long]] = Map.empty,
                       bloomStats: Map[String, Map[String, String]] = Map.empty,
                       bloomCols: Seq[String] = Nil,
@@ -2477,6 +2486,16 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         catch { case _: java.io.IOException => None }
       }.map(f -> _)
     }.toMap
+    // one descriptor per LIVE file; an inline one past the inline cap (a
+    // legacy conversion or a merge's union) moves to a `.bin` file here,
+    // once, so every recorded vector obeys the cap
+    val fileSet = files.toSet
+    val liveDvs = dvs.collect {
+      case (f, d) if fileSet(f) =>
+        f -> (if (d.storageType != "i" || d.cardinality <= DeletionVectors.InlineDvMax) d
+              else DeletionVectors.writeDvBytes(root,
+                DeletionVectors.z85Decode(d.pathOrInlineDv, d.sizeInBytes), d.cardinality, "data"))
+    }
     // r20: per-file metadata moves to immutable shared MANIFEST files; the
     // commit record carries only their paths, so an append's record is
     // O(its new files) — not O(table) — and unchanged segments are reused
@@ -2486,10 +2505,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         mergeParentCommit.map(_.manifests).getOrElse(Vector.empty), files,
       f => ManifestEntry(f, fileSizes.get(f), rowCounts.get(f),
         stats.getOrElse(f, Map.empty), strStats.getOrElse(f, Map.empty),
-        nullStats.getOrElse(f, Map.empty)))
+        nullStats.getOrElse(f, Map.empty), liveDvs.get(f)))
     val c = Commit(newCommitId(branch, version), parent.map(_.id), version, orderedFiles,
       schema.json, message, System.currentTimeMillis(), stats, mergeParent, strStats,
-      dvFiles, rowCounts, nullStats, fileSizes, bloomStats, bloomCols, bloomFiles, dataChange,
+      liveDvs, Vector.empty, rowCounts, nullStats, fileSizes, bloomStats, bloomCols, bloomFiles,
+      dataChange,
       txn.map(_._1), txn.map(_._2),
       props = props.getOrElse(parent.map(_.props).getOrElse(Map.empty)),
       manifests = manifestRefs)
@@ -2619,12 +2639,9 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       val raw = physFrame(spark, c, schema)
       val base = if (!VersionedTable.hasColumnMapping(schema)) raw
                  else raw.toDF(schema.fieldNames.toIndexedSeq: _*)
-      if (c.dvFiles.isEmpty) base
+      if (!c.files.exists(c.dvs.contains)) base
       else
-        // merge-on-read: subtract the deletion vectors with ONE broadcast
-        // anti-join on (file key, physical row index). The DV side is tiny
-        // (only deleted positions), the corpus side never shuffles, and data
-        // predicates still push below the join into the parquet scan.
+        // merge-on-read: drop each file's deleted positions ([[scanWithPos]])
         scanWithPos(spark, c).drop(VersionedTable.FkCol, VersionedTable.PosCol)
     }
   }
@@ -2648,84 +2665,18 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
 
   /** Metadata-only `SELECT COUNT(*)` (Delta answers it from `numRecords` in
-    * the log; so does this). When every file has a logged row count and the
-    * snapshot has no deletion vectors, the answer is a driver-side sum over
-    * the commit record — ZERO file reads, the shape a 10⁶-file table needs
-    * (a scan-based count costs a footer GET per file at minimum). With DVs,
-    * the base sum still comes from the log and only the TINY vector files
-    * are read: each live DV entry marks exactly one deleted row
-    * ([[deleteWithVectors]] never re-records an already-deleted position),
-    * and entries pointing at rewritten files (dead, left by copy-on-write
-    * ops that carry `dvFiles` forward) are dropped by a broadcast semi-join
-    * against the live file keys. The same (fk,pos) can appear in TWO vector
-    * files — merge/cherry-pick union `dvFiles` from both parents, and two
-    * branches may MOR-delete the same row of a shared base file (the
-    * conflict check allows it: both sides agree the row is gone) — so the
-    * subtrahend is the count of DISTINCT live positions, matching the
-    * anti-join semantics of [[scanWithPos]]. Files missing a logged count
-    * (pre-rowCounts history) fall back to one real scan-based count. */
+    * the log; so does this): when every file has a logged row count, the
+    * answer is Σ `rowCounts` − Σ deletion-vector cardinality over the
+    * commit record — ZERO file reads and no Spark job, deletion vectors or
+    * not, the shape a 10⁶-file table needs (a scan-based count costs a
+    * footer GET per file at minimum). Each file carries one descriptor
+    * whose cardinality counts its distinct deleted positions, so the
+    * subtrahend is exact. Files missing a logged count (pre-rowCounts
+    * history) fall back to one real scan-based count. */
   def countRows(spark: SparkSession, branch: String = "main"): Long = {
     val c = headOrThrow(branch)
-    if (!c.files.forall(c.rowCounts.contains)) readCommit(spark, c).count()
-    else {
-      val base = c.files.iterator.map(c.rowCounts).sum
-      if (c.dvFiles.isEmpty) base
-      else base - dvCardByKey(spark, c,
-        c.files.map(VersionedTable.fileKey).toSet).valuesIterator.sum
-    }
+    VersionedTable.liveRowCount(c).getOrElse(readCommit(spark, c).count())
   }
-
-  /** THE one implementation of "how many rows has each file MOR-deleted,
-    * and which DV parquet part-files say so": per-file-key DISTINCT
-    * deleted-position counts PLUS the set of DV part-file paths mentioning
-    * the key, from one distributed aggregate over the snapshot's DV
-    * parquet, restricted to `keys` (dead entries for rewritten-away files
-    * drop out; duplicated (fk,pos) entries across DV files — merged
-    * branches deleting the same base row — mark ONE row). The driver
-    * receives O(files-with-deletions) rows — counts and path lists, never
-    * positions. Feeds [[countRows]], the native MOR scan's statistics /
-    * columnar / per-task-load routing, and the SQL `COUNT(*)` metadata
-    * answer ([[graft.sources.VtMorScanBuilder]]) — a future DV-semantics
-    * change lands in all of them at once. The path set is what lets each
-    * MOR task open ONLY the DV part-files that mention its key: on a long
-    * delete history a task pays footer reads for its own deletes' files,
-    * not every delete ever made. */
-  private[graft] def dvStatsByKey(spark: SparkSession, c: Commit,
-                                  keys: Set[String])
-      : Map[String, (Long, Seq[String])] = {
-    import org.apache.spark.sql.functions.{col, collect_set, count_distinct, input_file_name}
-    if (c.dvFiles.isEmpty) Map.empty
-    else spark.read.schema(VersionedTable.DvParquetSchema)
-      .parquet(c.dvFiles.map(f => root.resolve(f).toString): _*)
-      // restrict to the CALLER'S keys BELOW the aggregate (isInCollection
-      // compiles to an InSet hash probe, and the DV parquet is sorted by
-      // fk so row-group stats skip non-matching groups): a point read on a
-      // heavily-deleted table must collect O(its files), not one row +
-      // path set per file-with-deletions table-wide
-      .where(col("fk").isInCollection(keys))
-      // input_file_name() materializes BELOW the aggregate (Catalyst
-      // refuses non-deterministic expressions inside aggregate arguments)
-      .select(col("fk"), col("pos"), input_file_name().as("__src"))
-      .groupBy(col("fk"))
-      .agg(count_distinct(col("pos")).as("n"),
-        collect_set(col("__src")).as("srcs"))
-      .collect().iterator
-      .map { r =>
-        // input_file_name() yields percent-encoded URIs — decode to plain
-        // filesystem paths (same trap [[inputFileToRel]] documents)
-        val srcs = r.getSeq[String](2).map { raw =>
-          try java.nio.file.Paths.get(new java.net.URI(raw).getPath).toString
-          catch { case _: Exception => raw.stripPrefix("file:") }
-        }
-        r.getString(0) -> (r.getLong(1), srcs)
-      }
-      .filter { case (k, _) => keys(k) }
-      .toMap
-  }
-
-  private[graft] def dvCardByKey(spark: SparkSession, c: Commit,
-                                 keys: Set[String]): Map[String, Long] =
-    dvStatsByKey(spark, c, keys).view.mapValues(_._1).toMap
 
   /** Metadata-only `SELECT MIN(col), MAX(col)` from the commit log's
     * per-file stats — ZERO file reads, not even footers (Spark's own
@@ -2814,7 +2765,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
   private def minMaxFrom[T](c: Commit, column: String,
                             statsOf: Map[String, Map[String, (T, T)]])
                            (lo: (T, T) => T, hi: (T, T) => T): Option[(T, T)] = {
-    if (c.dvFiles.nonEmpty || c.files.isEmpty) None
+    if (c.dvs.nonEmpty || c.files.isEmpty) None
     else {
       // per file: Some(Some(mm)) contributes, Some(None) provably all-null
       // (contributes nothing), None = unknown → no metadata answer
@@ -2838,14 +2789,22 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     }
   }
 
+  /** Sorted deleted positions of an optional descriptor of this table. */
+  private def dvPositions(d: Option[DeletionVectors.DvDescriptor]): Array[Long] =
+    d.fold(Array.emptyLongArray)(DeletionVectors.positions(root.toString, _))
+
   /** The live rows of `c` tagged with their provenance — `__graft_fk` (file
     * key: last two path segments) and `__graft_pos` (0-based physical row
     * index from `_metadata.row_index`, stable because data files are
-    * immutable) — with `c`'s deletion vectors already subtracted. The
+    * immutable) — with `c`'s deletion vectors already subtracted: one
+    * filter drops a row whose position its file's descriptor marks, each
+    * task decoding only the descriptors of the files it reads
+    * ([[DeletionVectors.positions]], memoized per JVM). No join, no
+    * shuffle, and data predicates still push into the parquet scan. The
     * building block of the merge-on-read path: [[readCommit]] drops the tag
-    * columns; [[deleteWithVectors]] keeps them to record new deletions. */
+    * columns; row-level DML keeps them to record new deletions. */
   private def scanWithPos(spark: SparkSession, c: Commit): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, concat_ws, slice, split}
+    import org.apache.spark.sql.functions.{col, concat_ws, slice, split, udf}
     val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
     // column mapping: tag positions on the PHYSICAL scan (metadata columns
     // resolve only on the scan relation), then re-alias data columns to
@@ -2858,12 +2817,13 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       if (!VersionedTable.hasColumnMapping(schema)) raw
       else raw.toDF((schema.fieldNames :+ VersionedTable.FkCol :+
         VersionedTable.PosCol).toIndexedSeq: _*)
-    if (c.dvFiles.isEmpty) tagged
+    // only the scanned files' descriptors ride the task closure
+    val byKey = c.files.flatMap(f => c.dvs.get(f).map(VersionedTable.fileKey(f) -> _)).toMap
+    if (byKey.isEmpty) tagged
     else {
-      val dv = spark.read.schema(VersionedTable.DvParquetSchema)
-        .parquet(c.dvFiles.map(f => root.resolve(f).toString): _*)
-        .select(col("fk").as(VersionedTable.FkCol), col("pos").as(VersionedTable.PosCol))
-      tagged.join(broadcast(dv), Seq(VersionedTable.FkCol, VersionedTable.PosCol), "left_anti")
+      val mask = new VersionedTable.LiveMask(root.toString, byKey)
+      val live = udf((fk: String, pos: Long) => mask.live(fk, pos))
+      tagged.where(live(col(VersionedTable.FkCol), col(VersionedTable.PosCol)))
     }
   }
 
@@ -3008,7 +2968,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         target.files.map(abs),
         absKeys(target.stats), strStats = absKeys(target.strStats),
         nullStats = absKeys(target.nullStats),
-        dvFiles = target.dvFiles.map(abs),
+        // a vector file stays the source's: address it absolutely
+        dvs = absKeys(target.dvs).map { case (f, d) =>
+          f -> DeletionVectors.dvFile(src.root, d).fold(d)(p =>
+            d.copy(storageType = "p", pathOrInlineDv = p.toAbsolutePath.toString))
+        },
         props = Some(target.props),
         seedRowCounts = absKeys(target.rowCounts),
         seedFileSizes = absKeys(target.fileSizes))
@@ -3093,9 +3057,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * outcome — an overwrite snapshot silently interleaved with the other
     * side's appended rows — is ambiguous enough that we refuse it loudly;
     * redo the overwrite on the merged head instead. Likewise two sides
-    * that both retired rows of one base file by deletion vector conflict
-    * when either side also added files, since that is how a merge-on-read
-    * upsert, MERGE or UPDATE replaces a row; two vector deletes compose.
+    * that both changed the deletion vector of one base file conflict when
+    * either side also added files, since that is how a merge-on-read
+    * upsert, MERGE or UPDATE replaces a row; two descriptor-only changes
+    * of one file compose, and the merged entry carries the union.
     *
     * The merge commit records the source head as [[Commit.mergeParent]], so
     * the merge base ADVANCES: keep committing appends on `from` and merging —
@@ -3116,42 +3081,32 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       // an overwrite replaced the very objects the other side's deletion
       // vectors point into, so silently unioning them would drop the delete
       // intent (append + MOR-delete still merge cleanly below — DV union)
-      val srcDvChanged = src.dvFiles.toSet != base.dvFiles.toSet
-      val dstDvChanged = dst.dvFiles.toSet != base.dvFiles.toSet
-      if (srcRemoved.nonEmpty && (dstAdded.nonEmpty || dstRemoved.nonEmpty || dstDvChanged))
+      val srcDv = VersionedTable.dvChanged(base, src)
+      val dstDv = VersionedTable.dvChanged(base, dst)
+      if (srcRemoved.nonEmpty && (dstAdded.nonEmpty || dstRemoved.nonEmpty || dstDv.nonEmpty))
         throw new IllegalStateException(
           s"merge conflict: $from replaced base files (overwrite/compact/revert) while " +
             s"$into also changed — merging would silently combine an overwrite snapshot " +
             "with the other side's rows; redo the rewrite on the merged head instead")
-      if (dstRemoved.nonEmpty && (srcAdded.nonEmpty || srcDvChanged))
+      if (dstRemoved.nonEmpty && (srcAdded.nonEmpty || srcDv.nonEmpty))
         throw new IllegalStateException(
           s"merge conflict: $into replaced base files (overwrite/compact/revert) while " +
             s"$from appended — merging would silently graft $from's rows onto the rewritten " +
             "snapshot; redo the append on the merged head instead")
-      // a side that retired rows of a base file by deletion vector AND
-      // added files may have replaced those rows (upsert, MERGE or UPDATE
-      // on the retire side, or a vector delete plus an append); if the
-      // other side retired rows of the same file too, the union could keep
-      // two images of one row. File-granular, as copy-on-write was (both
-      // sides rewrote that file): refuse. Sides that only delete by vector
-      // still compose — a row deleted twice is deleted once.
-      val srcDvAdded = src.dvFiles.filterNot(base.dvFiles.toSet)
-      val dstDvAdded = dst.dvFiles.filterNot(base.dvFiles.toSet)
-      if (srcDvAdded.nonEmpty && dstDvAdded.nonEmpty && (srcAdded.nonEmpty || dstAdded.nonEmpty)) {
-        val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-          .getOrElse(throw new IllegalStateException(
-            s"merge $from into $into must compare both sides' deletion vectors, " +
-              "which needs an active SparkSession"))
-        def fks(dvs: Vector[String]) =
-          VersionedTable.dvDistinctFks(spark, dvs.map(f => root.resolve(f).toString))
-        val both = fks(srcDvAdded) intersect fks(dstDvAdded) intersect
-          base.files.map(VersionedTable.fileKey).toSet
-        if (both.nonEmpty) throw new IllegalStateException(
+      // a side that grew the deletion vector of a base file AND added files
+      // may have replaced those rows (upsert, MERGE or UPDATE on the retire
+      // side, or a vector delete plus an append); if the other side grew
+      // the same file's vector too, the union could keep two images of one
+      // row. File-granular, as copy-on-write was (both sides rewrote that
+      // file): refuse. Sides that only delete by vector still compose — a
+      // row deleted twice is deleted once.
+      val both = srcDv intersect dstDv
+      if (both.nonEmpty && (srcAdded.nonEmpty || dstAdded.nonEmpty))
+        throw new IllegalStateException(
           s"merge conflict: $from and $into both retired rows of ${both.size} base " +
             s"file(s) by deletion vector since the merge base, and rows were added " +
             s"as well (e.g. ${both.toSeq.sorted.take(3).mkString(", ")}) — merging " +
             "could keep two versions of one row; redo one side's change on the merged head")
-      }
       if (src.schemaJson != dst.schemaJson) throw new IllegalStateException(
         s"merge conflict: $from and $into disagree on the table schema")
       // TABLE-PROPERTIES 3-way merge (constraints included), git's per-key
@@ -3172,7 +3127,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         }.toMap
       val merged = (dst.files.filterNot(srcRemoved.contains) ++
         src.files.filter(srcAdded.contains)).distinct.sorted.toVector
-      val mergedDvs = (dst.dvFiles ++ src.dvFiles).distinct.sorted.toVector
+      // deletion vectors: each side's own files keep theirs; a base file
+      // takes the side that changed its vector, or the union when both did
+      val mergedDvs = dst.dvs ++ src.dvs.view.filterKeys(f => !baseFiles(f) || srcDv(f)) ++
+        both.map(f => f -> DeletionVectors.inlineDescriptor(
+          (dvPositions(src.dvs.get(f)) ++ dvPositions(dst.dvs.get(f))).toSeq))
       // CHECK constraints judge the rows each side IMPORTS (a branch's own
       // writes were fused-guarded when they landed, but a branch that never
       // carried the constraint enforced nothing): constraints the TARGET
@@ -3201,9 +3160,9 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         dst.stats ++ src.stats, mergeParent = Some(src.id),
         strStats = dst.strStats ++ src.strStats,
         nullStats = dst.nullStats ++ src.nullStats,
-        // deletion vectors union: concurrent merge-on-read deletes compose —
-        // the merged snapshot subtracts BOTH sides' deleted positions
-        dvFiles = mergedDvs,
+        // concurrent merge-on-read deletes compose — the merged snapshot
+        // subtracts BOTH sides' deleted positions
+        dvs = mergedDvs,
         bloomStats = dst.bloomStats ++ src.bloomStats,
         bloomCols = (dst.bloomCols ++ src.bloomCols).distinct,
         bloomFiles = (dst.bloomFiles ++ src.bloomFiles).distinct.sorted,
@@ -3229,7 +3188,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     publish(branch, Some(parent), message,
       DataType.fromJson(target.schemaJson).asInstanceOf[StructType], target.files,
       target.stats, strStats = target.strStats, nullStats = target.nullStats,
-      dvFiles = target.dvFiles, bloomStats = target.bloomStats,
+      dvs = target.dvs, bloomStats = target.bloomStats,
       bloomCols = target.bloomCols, bloomFiles = target.bloomFiles,
       props = Some(target.props))
 
@@ -3288,11 +3247,16 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     val parentFiles = pickedParent.map(_.files.toSet).getOrElse(Set.empty)
     val added = picked.files.filterNot(parentFiles.contains)
     val removed = parentFiles -- picked.files.toSet
-    // a merge-on-read delete's whole delta is its new deletion vectors
-    val dvAdded = picked.dvFiles
-      .filterNot(pickedParent.map(_.dvFiles.toSet).getOrElse(Set.empty))
+    // a merge-on-read delete's whole delta is the positions it added to
+    // surviving files' vectors
+    val dvDelta: Map[String, Array[Long]] = pickedParent.toSeq.flatMap { pp =>
+      VersionedTable.dvChanged(pp, picked).map { f =>
+        val before = dvPositions(pp.dvs.get(f)).toSet
+        f -> dvPositions(picked.dvs.get(f)).filterNot(before)
+      }
+    }.toMap
     val dst = headOrThrow(into)
-    if (added.isEmpty && removed.isEmpty && dvAdded.isEmpty) return dst
+    if (added.isEmpty && removed.isEmpty && dvDelta.isEmpty) return dst
     val dstFiles = dst.files.toSet
     val missing = removed.filterNot(dstFiles.contains)
     if (missing.nonEmpty) throw new IllegalStateException(
@@ -3307,10 +3271,13 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     // the transplanted files were written under the SOURCE branch's
     // constraint set — the target's CHECK constraints must judge them
     // (bounded by the pick's delta; DV-deleted rows don't count)
-    enforceChecksOnFiles(added, (dst.dvFiles ++ dvAdded).distinct.sorted.toVector,
-      dst.schemaJson, VersionedTable.checkConstraints(dst),
-      s"cherry-pick $fromBranch@v$version into $into")
     val files = (dst.files.filterNot(removed.contains) ++ added).distinct.sorted.toVector
+    val dvs = dst.dvs ++ picked.dvs.view.filterKeys(added.toSet) ++
+      dvDelta.collect { case (f, ps) if dst.files.contains(f) && ps.nonEmpty =>
+        f -> DeletionVectors.inlineDescriptor((dvPositions(dst.dvs.get(f)) ++ ps).toSeq)
+      }
+    enforceChecksOnFiles(added, dvs, dst.schemaJson, VersionedTable.checkConstraints(dst),
+      s"cherry-pick $fromBranch@v$version into $into")
     publish(into, Some(dst),
       s"cherry-pick $fromBranch@v$version (${picked.id.take(8)}): ${picked.message}",
       DataType.fromJson(dst.schemaJson).asInstanceOf[StructType], files,
@@ -3320,7 +3287,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         picked.strStats.view.filterKeys(added.contains).toMap,
       nullStats = dst.nullStats.view.filterKeys(files.contains).toMap ++
         picked.nullStats.view.filterKeys(added.contains).toMap,
-      dvFiles = (dst.dvFiles ++ dvAdded).distinct.sorted.toVector,
+      dvs = dvs,
       bloomStats = dst.bloomStats.view.filterKeys(files.contains).toMap ++
         picked.bloomStats.view.filterKeys(added.contains).toMap,
       bloomCols = (dst.bloomCols ++ picked.bloomCols).distinct,
@@ -3410,8 +3377,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * reads total), not twice per interval. */
   private def changesBetween(spark: SparkSession, from: Commit, to: Commit): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val appendOnly = from.files.toSet.subsetOf(to.files.toSet) &&
-      from.schemaJson == to.schemaJson && from.dvFiles.toSet == to.dvFiles.toSet
+    val appendOnly = VersionedTable.appendOnly(from, to) && from.schemaJson == to.schemaJson
     if (appendOnly) {
       val added = to.files.filterNot(from.files.toSet)
       readCommit(spark, to.copy(files = added))
@@ -3440,61 +3406,42 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       // reading the interval's small DV delta, never the corpus)
       val toSet = to.files.toSet
       val fromSet = from.files.toSet
-      val dvDelta = (to.dvFiles.toSet diff from.dvFiles.toSet) ++
-        (from.dvFiles.toSet diff to.dvFiles.toSet) // reverts drop DVs too
+      val dvTouched = VersionedTable.dvChanged(from, to) // reverts drop DVs too
       // PURE-DV step (r21, guide §2.3/§2.4): same file set, same schema, only
       // deletion vectors moved — a MOR delete (or its revert). The bag diff
       // below shuffles EVERY row of the touched files through two exceptAll
       // aggregations; but the change set is, by construction, exactly the
-      // rows at the symmetric position difference of the two DV relations.
+      // rows at the symmetric position difference of the two descriptors.
       // Read the touched files once with `_metadata.row_index` and inner-
-      // broadcast-join the O(changed rows) position delta — zero shuffle of
-      // data rows. Values are bag-identical to the exceptAll form (positions
-      // are unique per file, so each changed position contributes exactly
-      // its row once — even when equal-valued rows exist elsewhere).
-      // Bounded: the position delta is broadcast, so fall back to the bag
-      // diff when the DV delta's footer row counts exceed the cap (a
-      // 100 TB mega-delete keeps the shuffle path).
+      // broadcast-join the O(changed rows) position delta, decoded from the
+      // descriptors on the driver — zero shuffle of data rows. Values are
+      // bag-identical to the exceptAll form (positions are unique per file,
+      // so each changed position contributes exactly its row once — even
+      // when equal-valued rows exist elsewhere). Bounded: the position delta
+      // is broadcast, so fall back to the bag diff when the touched
+      // descriptors' cardinalities exceed the cap (a 100 TB mega-delete
+      // keeps the shuffle path).
       val pureDvCap = 2000000L
-      lazy val dvDeltaRows: Option[Long] =
-        dvDelta.toSeq.foldLeft(Option(0L)) { (acc, f) =>
-          acc.flatMap(a => VersionedTable.footerRowCount(root.resolve(f)).map(a + _))
-        }
-      if (fromSet == toSet && from.schemaJson == to.schemaJson &&
-          dvDelta.nonEmpty && dvDeltaRows.exists(_ <= pureDvCap)) {
+      def card(c2: Commit, f: String) = c2.dvs.get(f).map(_.cardinality).getOrElse(0L)
+      if (fromSet == toSet && from.schemaJson == to.schemaJson && dvTouched.nonEmpty &&
+          dvTouched.iterator.map(f => card(from, f) + card(to, f)).sum <= pureDvCap) {
         import org.apache.spark.sql.functions.{broadcast, col}
-        def dvPos(c2: Commit) =
-          if (c2.dvFiles.isEmpty)
-            spark.createDataFrame(new java.util.ArrayList[Row](),
-              StructType(Seq(
-                org.apache.spark.sql.types.StructField("fk", org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType))))
-          else spark.read.schema(VersionedTable.DvParquetSchema)
-            .parquet(c2.dvFiles.map(f => root.resolve(f).toString): _*)
-            .select(col("fk"), col("pos"))
-        val fromPos = dvPos(from)
-        val toPos = dvPos(to)
-        val delPos = toPos.except(fromPos)   // newly deleted positions
-        val insPos = fromPos.except(toPos)   // un-deleted positions (revert)
-        // fks whose DV changed: scan only those files (raw, NO DV
-        // subtraction); cached per dv-delta file set — the Delta-log
-        // export asks the same question over the same files
-        val touchedFks = VersionedTable.dvDistinctFks(spark,
-          dvDelta.toSeq.map(f => root.resolve(f).toString))
-        val touched = to.files.filter(f => touchedFks.contains(VersionedTable.fileKey(f)))
-        val rows = scanWithPos(spark, to.copy(files = touched, dvFiles = Vector.empty))
-        def attach(pos: DataFrame, kind: String) =
-          align(rows.join(broadcast(pos
-              .withColumnRenamed("fk", VersionedTable.FkCol)
-              .withColumnRenamed("pos", VersionedTable.PosCol)),
+        import spark.implicits._
+        val delta = dvTouched.toSeq.flatMap { f =>
+          val (was, now) = (dvPositions(from.dvs.get(f)).toSet, dvPositions(to.dvs.get(f)).toSet)
+          val fk = VersionedTable.fileKey(f)
+          (now -- was).toSeq.map(p => (fk, p, "delete")) ++ // newly deleted positions
+            (was -- now).toSeq.map(p => (fk, p, "insert"))  // un-deleted (revert)
+        }.toDF(VersionedTable.FkCol, VersionedTable.PosCol, "change_type")
+        // only the touched files, raw (NO DV subtraction)
+        val rows = scanWithPos(spark, to.copy(files = to.files.filter(dvTouched), dvs = Map.empty))
+        def attach(kind: String) =
+          align(rows.join(broadcast(delta.where(col("change_type") === kind).drop("change_type")),
             Seq(VersionedTable.FkCol, VersionedTable.PosCol))
             .drop(VersionedTable.FkCol, VersionedTable.PosCol))
             .withColumn("change_type", lit(kind))
-        return attach(insPos, "insert").unionByName(attach(delPos, "delete"))
+        return attach("insert").unionByName(attach("delete"))
       }
-      val dvTouchedFks: Set[String] = VersionedTable.dvDistinctFks(spark,
-        dvDelta.toSeq.map(f => root.resolve(f).toString))
-      def dvTouched(rel: String) = dvTouchedFks.contains(VersionedTable.fileKey(rel))
       val before = align(readCommit(spark,
         from.copy(files = from.files.filter(f => !toSet(f) || dvTouched(f)))))
       val after = align(readCommit(spark,
@@ -3531,8 +3478,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     final case class Run(schemaJson: String, pairs: List[(String, Long)])
     val segments = scala.collection.mutable.ListBuffer.empty[Either[Run, (Commit, Commit)]]
     steps.foreach { case (from, to) =>
-      val appendOnly = from.files.toSet.subsetOf(to.files.toSet) &&
-        from.schemaJson == to.schemaJson && from.dvFiles.toSet == to.dvFiles.toSet
+      val appendOnly = VersionedTable.appendOnly(from, to) && from.schemaJson == to.schemaJson
       if (appendOnly) {
         val added = to.files.filterNot(from.files.toSet).map(_ -> to.version).toList
         segments.lastOption match {
@@ -3739,9 +3685,9 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
           strStats = parent.strStats.view.filterKeys(untouchedSet).toMap ++ newStrStats,
           nullStats = parent.nullStats.view.filterKeys(untouchedSet).toMap ++ newNullStats,
           // untouched files keep their deletion vectors; the touched
-          // region's DVs were applied during the rewrite (dead entries stay
-          // harmless)
-          dvFiles = parent.dvFiles,
+          // region's were applied during the rewrite and leave with its
+          // entries
+          dvs = parent.dvs,
           bloomStats = bLegacy, bloomCols = bCols, bloomFiles = bFiles,
           dataChange = false)
       }
@@ -3829,39 +3775,52 @@ object VersionedTable {
     * the dominant commit-path driver cost before r21). Immutable use only. */
   private[vt] lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
+  /** Files of `a` still live in `b` whose deletion vector differs between
+    * the two — the vector half of "what changed" for merge, cherry-pick,
+    * change feeds, streaming and the Delta export. Descriptors are values
+    * (a changed vector is a fresh descriptor), so this is O(files)
+    * metadata, never a position read. */
+  private[graft] def dvChanged(a: Commit, b: Commit): Set[String] =
+    if (a.dvs.isEmpty && b.dvs.isEmpty) Set.empty
+    else {
+      val live = b.files.toSet
+      a.files.iterator.filter(f => live(f) && a.dvs.get(f) != b.dvs.get(f)).toSet
+    }
+
+  /** Row filter of [[VersionedTable.scanWithPos]]: a row is live unless
+    * its file's descriptor marks its position. Each task deserializes its
+    * own copy and decodes a file's positions once, on its first row. */
+  private[vt] final class LiveMask(root: String,
+                                   byKey: Map[String, DeletionVectors.DvDescriptor])
+      extends Serializable {
+    @transient private lazy val decoded = new java.util.HashMap[String, Array[Long]]()
+    def live(fk: String, pos: Long): Boolean = byKey.get(fk) match {
+      case None => true
+      case Some(d) =>
+        val ps = decoded.computeIfAbsent(fk, _ => DeletionVectors.positions(root, d))
+        java.util.Arrays.binarySearch(ps, pos) < 0
+    }
+  }
+
+  /** `b` only added files to `a`: every file of `a` survives with its
+    * deletion vector unchanged (an added file may carry its own). */
+  private[graft] def appendOnly(a: Commit, b: Commit): Boolean =
+    a.files.toSet.subsetOf(b.files.toSet) && dvChanged(a, b).isEmpty
+
+  /** The snapshot's live row count from metadata alone — Σ `rowCounts` −
+    * Σ deletion-vector cardinality — or None when a file lacks a logged
+    * count. Serves `countRows` and the SQL `COUNT(*)` answer alike. */
+  private[graft] def liveRowCount(c: Commit): Option[Long] =
+    if (!c.files.forall(c.rowCounts.contains)) None
+    else Some(c.files.iterator.map(f =>
+      c.rowCounts(f) - c.dvs.get(f).map(_.cardinality).getOrElse(0L)).sum)
+
   /** Footer metadata cache, keyed by (path, size, mtime) — data files are
     * immutable once written (UUID'd directory names), but a few artifacts
     * (cdc files) reuse deterministic names across re-exports, so the key
     * carries the stat fingerprint. Failures are NOT cached. Shared by
     * publish's rowCounts and the footer stats fast path, so one commit
     * reads each new file's footer at most once. */
-  /** Distinct `fk` values of a SET of deletion-vector parquet files,
-    * cached by the (immutable — UUID'd dirs) resolved file list: the CDC
-    * diff and the Delta-log export both ask "which files' DVs changed"
-    * over the SAME dv delta within one pipeline, and without the cache
-    * each ran its own scan+distinct Spark job (r22, guide §2.4). */
-  private val dvFkCache = new BoundedCache[String, Set[String]](256)
-
-  /** The fixed schema of deletion-vector delta parquet (written by
-    * deleteWithVectors / cherry-pick transplants). Passed explicitly to
-    * every DV read: without it each `spark.read.parquet` over dv files ran
-    * a schema-inference footer job first — one extra driver round-trip per
-    * MOR read/CDC diff/export (r22, guide §1). */
-  private[vt] val DvParquetSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("fk",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("pos",
-      org.apache.spark.sql.types.LongType)))
-
-  private[graft] def dvDistinctFks(spark: SparkSession,
-                                   paths: Seq[String]): Set[String] =
-    if (paths.isEmpty) Set.empty
-    else dvFkCache.get(paths.sorted.mkString("\n")) {
-      spark.read.schema(DvParquetSchema).parquet(paths: _*)
-        .select("fk").distinct()
-        .collect().map(_.getString(0)).toSet
-    }
-
   private val footerMetaCache =
     new BoundedCache[(String, Long, Long),
       org.apache.parquet.hadoop.metadata.ParquetMetadata](4096)

@@ -87,8 +87,9 @@ class CloneSpec extends SparkSpec {
     src.deleteWithVectors(spark, "k = 4", "main") // MOR delete: DV, no rewrite
     val dst = VersionedTable.create(Tables.scratch("clone_dv_dst"))
     val c = dst.shallowCloneFrom(src)
-    // the MOR state clones: absolute DV refs, subtraction intact
-    assert(c.dvFiles.nonEmpty && c.dvFiles.forall(_.startsWith(src.root.toString)))
+    // the MOR state clones: absolute file and DV refs, subtraction intact
+    assert(c.dvs.nonEmpty && c.dvs.keys.forall(_.startsWith(src.root.toString)) &&
+      c.dvs.values.forall(_.storageType != "u"))
     assert(dst.read(spark, "main").as[(Long, String)].collect().map(_._1).sorted
       === (1L to 10L).filterNot(_ == 4L).toArray)
     assert(dst.countRows(spark, "main") === 9L)

@@ -882,8 +882,8 @@ class DeltaLogSpec extends SparkSpec {
     val vt = VersionedTable.create(Tables.scratch("delta_dv_dist"))
     vt.write((1L to 20000L).map(k => (k, k % 7)).toDF("k", "m")
       .repartitionByRange(4, col("k")), "main", "v0")
-    // ~17k MOR-deleted positions, >InlineDvMax in every one of the 4 files
-    vt.deleteWithVectors(spark, "m != 0", "main")
+    // ~17k MOR-deleted positions, >InlineDvMax in every one of the 4 files;
+    // the delete builds the descriptors, the export copies them
     val taskCounts = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
@@ -891,7 +891,7 @@ class DeltaLogSpec extends SparkSpec {
         taskCounts.add(s.stageInfo.numTasks)
     }
     spark.sparkContext.addSparkListener(listener)
-    try vt.exportDeltaLog("main")
+    try vt.deleteWithVectors(spark, "m != 0", "main")
     finally {
       // the listener bus is async; give it a moment to drain before detaching
       val deadline = System.currentTimeMillis() + 20000
@@ -902,6 +902,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(taskCounts.asScala.exists(_ >= 2),
       "the DV descriptor build must run as a multi-task (distributed) stage — " +
         "a single-task build means positions funneled through one slot")
+    vt.exportDeltaLog("main")
     val dvAdds = actions(vt.root, 1)
       .filter(a => a.has("add") && a.get("add").has("deletionVector"))
     assert(dvAdds.size === 4, "every file was MOR-touched")
@@ -928,10 +929,11 @@ class DeltaLogSpec extends SparkSpec {
     // thing standing between the DV bins and the sweep
     Files.delete(log.resolve(f"${0L}%020d.json"))
     Files.delete(log.resolve(f"${1L}%020d.json"))
+    // the export copies the table's own descriptors: their bins live in data/
     def dvBins = {
-      val st = Files.list(vt.root)
-      try st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.matches("""deletion_vector_.*\.bin""")).toVector
+      val st = Files.list(vt.root.resolve("data"))
+      try st.iterator().asScala.map(p => vt.root.relativize(p).toString)
+        .filter(_.matches("""data/deletion_vector_.*\.bin""")).toVector
       finally st.close()
     }
     val liveBins = dvBins
@@ -967,10 +969,11 @@ class DeltaLogSpec extends SparkSpec {
     vt.deleteWithVectors(spark, "m = 0", "main")
     vt.upsert(spark, Seq((1L, 9L)).toDF("k", "m"), keyCols = Seq("k"))
     vt.exportDeltaLog("main", changeDataFeed = true)
+    // the export copies the table's own descriptors: their bins live in data/
     def dvBins = {
-      val st = Files.list(vt.root)
-      try st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.matches("""deletion_vector_.*\.bin""")).toVector
+      val st = Files.list(vt.root.resolve("data"))
+      try st.iterator().asScala.map(p => vt.root.relativize(p).toString)
+        .filter(_.matches("""data/deletion_vector_.*\.bin""")).toVector
       finally st.close()
     }
     def cdcFiles = {
@@ -981,7 +984,8 @@ class DeltaLogSpec extends SparkSpec {
     }
     val (liveBins, liveCdcs) = (dvBins, cdcFiles)
     assert(liveBins.nonEmpty && liveCdcs.nonEmpty, "fixture needs live artifacts")
-    // plant orphans: a crashed export's DV bin, cdc parquet, and tmp dirs
+    // plant orphans: a crashed export's top-level DV bin, cdc parquet, and
+    // tmp dirs
     val orphanBin = DeletionVectors.dvFile(vt.root,
       DeletionVectors.writeDvFile(vt.root, Seq(1L, 2L, 3L))).get
     val orphanCdc = vt.root.resolve("_change_data").resolve(
@@ -1014,15 +1018,17 @@ class DeltaLogSpec extends SparkSpec {
     // upsert's one key lives in the first file, which (a third of its rows
     // dead) was rewritten; the second file holds no upserted key and was
     // carried with its vector. So the first file's DV bin and the cdc files
-    // become genuinely unreferenced history — the sweep reclaims exactly
-    // them, keeps the bin the checkpointed snapshot still references, and
-    // that snapshot still reads in full (delta-spark's VACUUM retires aged
-    // _change_data the same way)
+    // become genuinely unreferenced history — the export sweep reclaims the
+    // cdc files, the table's own vacuum the bin (the table owns it), the bin
+    // the checkpointed snapshot still references stays, and that snapshot
+    // still reads in full (delta-spark's VACUUM retires aged _change_data
+    // the same way)
     assert(liveBins.size === 2, "one DV bin per file")
     DeltaLogWriter.writeCheckpoint(spark, vt.root.toString, 2L)
     (0L to 2L).foreach(v =>
       Files.delete(vt.root.resolve("_delta_log").resolve(f"$v%020d.json")))
-    assert(vt.vacuumDeltaExport(spark) === liveBins.size - 1 + liveCdcs.size)
+    assert(vt.vacuumDeltaExport(spark) === liveCdcs.size)
+    vt.vacuum(retainLast = 1)
     assert(dvBins.size === 1 && liveBins.contains(dvBins.head) && cdcFiles.isEmpty)
     assert(DeltaLogReader.read(spark, vt.root.toString, None).count() ===
       (1L to 8000L).count(_ % 3 != 0).toLong)

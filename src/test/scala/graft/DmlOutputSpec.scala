@@ -60,7 +60,7 @@ class DmlOutputSpec extends SparkSpec {
     val d = vt.delete(spark, "(k >= 100 AND k < 130) OR (k >= 900 AND k < 930)")
     Seq(m -> 2, u -> 1, up -> 2, d -> 2).foreach { case (c, touched) =>
       val parent = vt.loadCommit(c.parent.get)
-      assert(c.dvFiles === parent.dvFiles, s"${c.message} must rewrite, not retire")
+      assert(c.dvs === parent.dvs, s"${c.message} must rewrite, not retire")
       assert(parent.files.count(f => !c.files.contains(f)) === touched,
         s"${c.message} must rewrite $touched file(s)")
       assert(added(vt, c).size === 1, s"${c.message} added ${added(vt, c)}")
@@ -86,7 +86,7 @@ class DmlOutputSpec extends SparkSpec {
     val probe = merge(vt, "probe")
     assert(added(vt, probe).size === 1)
     val rewritten = parent.files.filterNot(probe.files.toSet)
-    assert(rewritten.size === 2 && probe.dvFiles === parent.dvFiles)
+    assert(rewritten.size === 2 && probe.dvs === parent.dvs)
     // the statement's input: the rewritten files plus the source estimate
     val bytes = rewritten.map(parent.fileSizes).sum +
       mergeSource.queryExecution.optimizedPlan.stats.sizeInBytes.toLong

@@ -70,6 +70,18 @@ class LakeFilesSpec extends SparkSpec {
     out
   }
 
+  /** Run a vector delete and check it landed no parquet, no `_SUCCESS`
+    * marker and no `.crc` sidecar: its positions ride inline on the touched
+    * files' manifest entries, one descriptor per file. */
+  private def vectorsOnly(root: Path, what: String)(op: => graft.vt.Commit): Unit = {
+    val (parquet, sums) = (parquetFiles(root), crcs(root))
+    val c = op
+    assert(parquetFiles(root) === parquet, s"$what wrote a parquet file")
+    assert(c.dvs.nonEmpty && c.dvs.values.forall(_.storageType == "i"), s"$what: ${c.dvs}")
+    assert(crcs(root) === sums && !walk(root).exists(_.getFileName.toString == "_SUCCESS"),
+      s"$what left a checksum sidecar or a _SUCCESS marker")
+  }
+
   /** Checksum sidecars `.<name>.crc` whose file is gone. */
   private def orphanCrcs(root: Path): Vector[Path] = walk(root).filter { p =>
     val n = p.getFileName.toString
@@ -95,7 +107,7 @@ class LakeFilesSpec extends SparkSpec {
     }
     landsZstd(r, "delete")(vt.delete(spark, "k between 10 and 12"))
     landsZstd(r, "update")(vt.update(spark, "k = 20", Map("v" -> "'twenty'")))
-    landsZstd(r, "deleteWithVectors")(vt.deleteWithVectors(spark, "k between 30 and 33"))
+    vectorsOnly(r, "deleteWithVectors")(vt.deleteWithVectors(spark, "k between 30 and 33"))
     val expected = ((1 to 50).toSet ++ Set(60, 70) -- Set(4) -- (10 to 12) -- (30 to 33))
       .map(_.toLong)
     assert(vt.read(spark, "main").select($"k").as[Long].collect().toSet === expected)
@@ -167,7 +179,7 @@ class LakeFilesSpec extends SparkSpec {
     }
     landsNoCrc(r, "delete")(vt.delete(spark, "k between 10 and 12"))
     landsNoCrc(r, "update")(vt.update(spark, "k between 20 and 29", Map("v" -> "'twenties'")))
-    landsNoCrc(r, "deleteWithVectors")(vt.deleteWithVectors(spark, "k = 33"))
+    vectorsOnly(r, "deleteWithVectors")(vt.deleteWithVectors(spark, "k = 33"))
     val expected = ((1 to 40).toSet ++ Set(60, 70) -- (10 to 12) - 33).map(_.toLong)
     assert(vt.read(spark, "main").select($"k").as[Long].collect().toSet === expected)
     assert(vt.read(spark, "main").where($"k".isin(2, 5, 25)).select($"v").as[String]
@@ -203,7 +215,7 @@ class LakeFilesSpec extends SparkSpec {
     val vt = VersionedTable.create(Tables.scratch("lake_mixed_vt"))
     val v0 = vt.shallowCloneFromDelta(spark, delta.toString)
     landsZstd(vt.root, "update")(vt.update(spark, "k = 3", Map("v" -> "'three'")))
-    landsZstd(vt.root, "deleteWithVectors")(vt.deleteWithVectors(spark, "k in (12, 13)"))
+    vectorsOnly(vt.root, "deleteWithVectors")(vt.deleteWithVectors(spark, "k in (12, 13)"))
     landsZstd(vt.root, "append")(vt.write(rows(21, 22), "main", "v3", mode = "append"))
     val head = vt.head("main").get
     assert(head.files.exists(f => codecs(vt.root.resolve(f)) == Set("SNAPPY")) &&

@@ -250,13 +250,14 @@ class ManifestSpec extends SparkSpec {
     Manifest.write(p, entries)
     assert(Manifest.read(p) === ManifestFile(entries, Vector.empty))
     assert(Manifest.cached(p) === ManifestFile(entries, Vector.empty))
-    // drops make a format-2 manifest; a drop-free one stays format 1
+    // every manifest is written as format 3 (one zstd frame), with drops or
+    // without; formats 1 and 2 stay readable (DvDescriptorSpec)
     val v2 = dir.resolve("d.manifest")
     Manifest.write(v2, entries.take(1), Seq("data/gone.parquet", long))
     assert(Manifest.read(v2) === ManifestFile(entries.take(1), Vector("data/gone.parquet", long)))
     def version(f: java.nio.file.Path) =
       java.nio.ByteBuffer.wrap(Files.readAllBytes(f), 4, 4).getInt
-    assert(version(p) === 1 && version(v2) === 2)
+    assert(version(p) === 3 && version(v2) === 3)
   }
 
   test("a one-file delete on a 200-file single-manifest table writes O(1) manifest bytes") {
@@ -275,7 +276,15 @@ class ManifestSpec extends SparkSpec {
       s"the delete must write one entry and one drop: $fresh")
     val (freshBytes, baseBytes) = (Files.size(vt.root.resolve(c1.manifests.last)),
       Files.size(vt.root.resolve(base)))
-    assert(freshBytes * 50 < baseBytes, s"$freshBytes B against a $baseBytes B base")
+    // O(1): the same delete on a 20-file table writes a fresh manifest of
+    // the same size, while the base manifest grows with the table
+    val small = VersionedTable.create(Tables.scratch("mf_drop_scale_20"))
+    val s0 = small.write(band(0, 100, 20), "main", "v0", statsCols = Seq("k", "v"))
+    val s1 = small.delete(spark, "k = 7")
+    val (smallFresh, smallBase) = (Files.size(small.root.resolve(s1.manifests.last)),
+      Files.size(small.root.resolve(s0.manifests.head)))
+    assert(math.abs(freshBytes - smallFresh) <= 16 && baseBytes > 5 * smallBase,
+      s"$freshBytes B against a $baseBytes B base; $smallFresh B against $smallBase B at 20 files")
     assertResolves(vt, c1)
     assert(entries(vt.loadCommit(c1.id)) ===
       entries(c0) -- gone ++ entries(c1).view.filterKeys(added.toSet))

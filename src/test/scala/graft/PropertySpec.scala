@@ -247,7 +247,7 @@ class PropertySpec extends SparkSpec {
           val c0 = vt.write(tableRows.toDF("k", "v").repartitionByRange(4, col("k")),
             "main", "v0", statsCols = Seq("k"))
           val c1 = vt.upsert(spark, srcRows.toDF("k", "v"), keyCols = Seq("k"))
-          if (c1.dvFiles.nonEmpty) retired += 1
+          if (c1.dvs.nonEmpty) retired += 1
           if (!c0.files.forall(c1.files.contains)) rewritten += 1
           val got = vt.read(spark, "main").as[(Int, Int)].collect().toSet
           val srcKeys = srcRows.map(_._1).toSet

@@ -51,17 +51,20 @@ class RetireOrRewriteSpec extends SparkSpec {
     assert(d0.files.forall(f => d0.rowCounts(f) == 250L))
     val d1 = stmt(dv)
     val c1 = stmt(cow)
-    // retiring side: every base file keeps its entry, stats and bloom
-    // bits; the statement adds exactly one DV part-file
+    // retiring side: every base file keeps its stats and bloom bits; each
+    // touched base file carries one descriptor counting its retired rows
     assert(d0.files.forall(d1.files.contains), s"a base file was rewritten: ${d1.files}")
     d0.files.foreach { f =>
       assert(d1.stats(f) === d0.stats(f) && d1.strStats(f) === d0.strStats(f))
       assert(d1.rowCounts(f) === 250L)
     }
     assert(d0.bloomFiles.forall(d1.bloomFiles.contains), "bloom sidecars carry")
-    assert(d1.dvFiles.size === d0.dvFiles.size + 1, s"one DV part-file: ${d1.dvFiles}")
+    assert(d1.dvs.nonEmpty && d1.dvs.keySet.subsetOf(d0.files.toSet),
+      s"one descriptor per touched base file: ${d1.dvs.keys}")
+    assert(d1.dvs.valuesIterator.map(_.cardinality).sum ===
+      1000L - dv.readCommit(spark, d1.copy(files = d0.files)).count())
     // rewriting side: no vector, touched files replaced
-    assert(c1.dvFiles === c0.dvFiles)
+    assert(c1.dvs === c0.dvs)
     assert(!c0.files.forall(c1.files.contains), "the rewriting copy rewrote nothing")
     // reads agree
     val want = snap(cow.read(spark, "main"))
@@ -83,7 +86,7 @@ class RetireOrRewriteSpec extends SparkSpec {
         snap(dv.readVersion(spark, "main", v)), s"Delta export v$v"))
     // compaction materializes the vectors
     val cc = dv.compact(spark, "main", numFiles = 2)
-    assert(cc.dvFiles.isEmpty && snap(dv.read(spark, "main")) === want)
+    assert(cc.dvs.isEmpty && snap(dv.read(spark, "main")) === want)
     assert(dv.countRows(spark, "main") === want.size.toLong)
     dv
   }
@@ -139,7 +142,7 @@ class RetireOrRewriteSpec extends SparkSpec {
     // 10 dead of 250: retired
     val c1 = first(vt)
     first(cow)
-    assert(c0.files.forall(c1.files.contains) && c1.dvFiles.size === 1)
+    assert(c0.files.forall(c1.files.contains) && c1.dvs.values.map(_.cardinality).toSeq === Seq(10L))
     // 3 more rows of the same file: 13 dead > 250 / 20, so it is rewritten
     // (its old vector materialized); the other three files stay put
     def second(t: VersionedTable) =
@@ -150,7 +153,8 @@ class RetireOrRewriteSpec extends SparkSpec {
     val firstFile = c0.files.find(f => c0.stats(f)("k")._1 == 1.0).get
     assert(!c2.files.contains(firstFile), "the hot file must be rewritten")
     assert(c0.files.filterNot(_ == firstFile).forall(c2.files.contains))
-    assert(c2.dvFiles === c1.dvFiles, "a rewrite adds no vector")
+    assert(c2.dvs === c1.dvs - firstFile,
+      "a rewrite adds no vector, and the rewritten file's leaves with its entry")
     assert(snap(vt.read(spark, "main")) === snap(cow.read(spark, "main")))
     assert(vt.countRows(spark, "main") === 1000L)
     assert(snap(vt.readVersion(spark, "main", 1)) === snap(cow.readVersion(spark, "main", 1)))
@@ -250,7 +254,8 @@ class RetireOrRewriteSpec extends SparkSpec {
     assert(vt.countRows(spark, "main") === 1000L)
     // a valid statement on the same rows still retires them
     val ok = vt.upsert(spark, bad.withColumn("n", lit(3)), Seq("k"))
-    assert(ok.dvFiles.size === 1 && h.files.forall(ok.files.contains))
+    assert(ok.dvs.size === 2 && ok.dvs.values.forall(_.cardinality == 1L) &&
+      h.files.forall(ok.files.contains))
   }
 
   test("a non-deterministic statement rewrites the files it touches instead of retiring rows") {
@@ -258,14 +263,14 @@ class RetireOrRewriteSpec extends SparkSpec {
     val c0 = vt.head("main").get
     // rand() < 2 always holds, but is evaluated anew by every pass
     val c1 = vt.update(spark, "k = 10 AND rand() < 2", Map("n" -> "n + 1"))
-    assert(c1.dvFiles.isEmpty && c0.files.count(c1.files.contains) === 3)
+    assert(c1.dvs.isEmpty && c0.files.count(c1.files.contains) === 3)
     val c2 = vt.mergeInto(spark, Seq(260L).toDF("k"), "t.k = s.k",
       matched = Seq(MergeClause.update(Map("n" -> "t.n + 1"), Some("rand() < 2"))))
-    assert(c2.dvFiles.isEmpty && c0.files.count(c2.files.contains) === 2)
+    assert(c2.dvs.isEmpty && c0.files.count(c2.files.contains) === 2)
     assert(vt.read(spark, "main").where($"k".isin(10L, 260L)).select("n").as[Int]
       .collect().sorted === Array(10 % 7 + 1, 260 % 7 + 1).sorted)
     // the same statements without rand() retire
-    assert(vt.update(spark, "k = 510", Map("n" -> "n + 1")).dvFiles.size === 1)
+    assert(vt.update(spark, "k = 510", Map("n" -> "n + 1")).dvs.size === 1)
   }
 
   test("string-keyed upsert prunes files by strStats: a moved-away disjoint file is carried") {

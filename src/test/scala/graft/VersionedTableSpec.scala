@@ -321,9 +321,8 @@ class VersionedTableSpec extends SparkSpec {
   test("countRows dedups DV entries duplicated across merged branches") {
     // Two branches MOR-delete the SAME row of a shared base file — the merge
     // conflict check allows it (both sides agree the row is gone) and the
-    // merge unions dvFiles, so the merged snapshot carries the (fk,pos) entry
-    // in TWO vector files. The scan anti-join dedups naturally; countRows
-    // must count DISTINCT positions, not raw joined rows.
+    // merged entry carries the UNION of both sides' descriptors, so the
+    // shared position counts once in its cardinality.
     val vt = freshVt("count_dv_dup")
     vt.write(Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
       .coalesce(1), "main", "v0")
@@ -332,7 +331,9 @@ class VersionedTableSpec extends SparkSpec {
     vt.deleteWithVectors(spark, "k <= 2", "dev")       // deletes (f0, pos0) AND pos1
     vt.merge("dev", "main")
     val merged = vt.head("main").get
-    assert(merged.dvFiles.size === 2, "merge must union both sides' DV files")
+    assert(merged.dvs.size === 1 &&
+      graft.vt.DeletionVectors.readPositions(vt.root, merged.dvs.values.head) === Vector(0L, 1L),
+      "the merged descriptor must be the union of both sides'")
     val scanCount = vt.read(spark, "main").count()
     assert(scanCount === 2, "rows 1 and 2 deleted exactly once")
     assert(vt.countRows(spark, "main") === scanCount,
@@ -604,15 +605,16 @@ class VersionedTableSpec extends SparkSpec {
       statsCols = Seq("n_nationkey"))
     // DV delete: SAME file list, no data rewritten, one small DV added
     val c1 = vt.deleteWithVectors(spark, "n_nationkey < 3")
-    assert(c1.files === c0.files, "merge-on-read must not rewrite data files")
-    assert(c1.dvFiles.nonEmpty && c0.dvFiles.isEmpty)
+    assert(c1.files.sorted === c0.files.sorted, "merge-on-read must not rewrite data files")
+    assert(c1.dvs.nonEmpty && c0.dvs.isEmpty)
     assert(vt.read(spark, "main").where("n_nationkey < 3").count() === 0)
     assert(vt.read(spark, "main").count() === nation.count() - 3)
     // time travel to v0 still sees everything
     assert(vt.readVersion(spark, "main", 0).count() === nation.count())
     // stacked DV deletes compose; already-deleted rows are not re-recorded
     val c2 = vt.deleteWithVectors(spark, "n_nationkey < 5")
-    assert(c2.files === c0.files && c2.dvFiles.size > c1.dvFiles.size)
+    assert(c2.files.sorted === c0.files.sorted && c2.dvs.valuesIterator.map(_.cardinality).sum >
+      c1.dvs.valuesIterator.map(_.cardinality).sum)
     assert(vt.read(spark, "main").count() === nation.count() - 5)
     // a no-match DV delete is a no-op (stats-pruned, no version churn)
     assert(vt.deleteWithVectors(spark, "n_nationkey = 9999").id === c2.id)
@@ -621,13 +623,13 @@ class VersionedTableSpec extends SparkSpec {
     assert(chg.where("change_type = 'delete'").count() === 3)
     assert(chg.where("change_type = 'insert'").count() === 0)
     // the CDC scan touches only DV-affected data files, not the whole snapshot
-    assert(chg.inputFiles.length < c0.files.size + c1.dvFiles.size + 1)
+    assert(chg.inputFiles.length < c0.files.size + c1.allFiles.count(_.endsWith(".bin")) + 1)
     // appends on top keep the DVs live
     vt.write(nation.where(col("n_nationkey") === 0).limit(1), "main", "re-add", mode = "append")
     assert(vt.read(spark, "main").count() === nation.count() - 5 + 1)
     // compact materializes deletions and drops the vectors
     val cc = vt.compact(spark, "main", numFiles = 2)
-    assert(cc.dvFiles.isEmpty)
+    assert(cc.dvs.isEmpty)
     assert(vt.read(spark, "main").count() === nation.count() - 5 + 1)
     // vacuum with full retention keeps every DV file; deep retention drops
     // old versions but the head keeps reading correctly

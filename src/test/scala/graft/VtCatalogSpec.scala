@@ -150,7 +150,7 @@ class VtCatalogSpec extends SparkSpec {
     spark.sql(s"DELETE FROM $t WHERE k >= 14 AND k <= 16")
     val head = vt.head("main").get
     assert(head.version === 3L, "SQL DELETE must land as ONE commit")
-    assert(head.dvFiles.isEmpty, "default mode is copy-on-write, not DVs")
+    assert(head.dvs.isEmpty, "default mode is copy-on-write, not DVs")
     assert((filesBefore -- head.files.toSet).size === 1,
       "stats pruning must confine the rewrite to the one file holding 14..16")
     assert(spark.sql(s"SELECT k FROM $t").as[Long].collect().sorted
@@ -167,8 +167,10 @@ class VtCatalogSpec extends SparkSpec {
       val before = vt.head("main").get
       spark.sql(s"DELETE FROM $t WHERE k = 20")
       val after = vt.head("main").get
-      assert(after.files === before.files, "mor delete must rewrite nothing")
-      assert(after.dvFiles.nonEmpty, "mor delete must attach deletion vectors")
+      // a file whose vector grows is re-stated (drop plus fresh entry), so
+      // only the resolution ORDER of the same files may change
+      assert(after.files.sorted === before.files.sorted, "mor delete must rewrite nothing")
+      assert(after.dvs.nonEmpty, "mor delete must attach deletion vectors")
       assert(spark.sql(s"SELECT count(*) AS c FROM $t").as[Long].head() === 24L)
       // and a second SQL delete THROUGH the DV-carrying snapshot still works
       spark.sql(s"DELETE FROM $t WHERE k = 21")

@@ -116,7 +116,7 @@ class VtDataSourceSpec extends SparkSpec {
     vt.write(part(21, 30), "main", "C", mode = "append", statsCols = Seq("k"))
     vt.deleteWithVectors(spark, "k % 10 = 5", "main")
     val commit = vt.head("main").get
-    assert(commit.dvFiles.nonEmpty && commit.files.size === 3)
+    assert(commit.dvs.nonEmpty && commit.files.size === 3)
     // E2E: filtered MOR reads stay exact — deletions respected, no loss
     val q = readVt(vt.root.toString).where($"k".between(12, 18))
     assert(q.select("k").as[Long].collect().sorted === Array(12L, 13, 14, 16, 17, 18))
@@ -374,7 +374,7 @@ class VtDataSourceSpec extends SparkSpec {
     vt.update(spark, "k = 'id-0006'", Map("v" -> "999"))
     val q2 = readVt(root).where($"k" === "id-0006")
     assert(q2.as[(String, Long)].collect().toSeq === Seq(("id-0006", 999L)))
-    assert(vt.head("main").get.dvFiles.nonEmpty && morOpened("id-0006") === 2,
+    assert(vt.head("main").get.dvs.nonEmpty && morOpened("id-0006") === 2,
       "A's carried bloom keeps the retired key")
     // COW update: two more of A's rows push it past 1/20, so A is rewritten
     // with a fresh bloom (its vector materialized); untouched files keep

@@ -9,7 +9,9 @@ and sorts every file into one kind:
   data parquet (<codec>)  table data, split by the footer's column codec
                           (`empty` for a file with no row groups, `mixed`
                           when its column chunks differ)
-  dv parquet              deletion vectors (`<branch>-v<N>-dv-<id>/` dirs)
+  dv parquet              legacy table-level deletion vectors
+                          (`<branch>-v<N>-dv-<id>/` dirs)
+  dv bin                  per-file deletion vectors (`deletion_vector_*.bin`)
   cdc parquet             Delta-export change data (`_change_data/`)
   checkpoint parquet      Delta-export checkpoints (`_delta_log/`)
   manifest                commit-metadata manifests (`.manifest`)
@@ -18,11 +20,14 @@ and sorts every file into one kind:
   crc                     Hadoop checksum sidecars of a present file
   orphan crc              checksum sidecars whose file is gone
   _SUCCESS                job-commit markers
-  other                   everything else (refs, locks, Delta DV binaries)
+  other                   everything else (refs, locks)
   empty dir               directories holding nothing (0 bytes each), such
                           as commit directories a vacuum emptied
 
-Prints one table per root and, for several roots, their total. Below each
+Each root is resolved to its real path and surveyed once, however often it
+is named; a root inside another root is refused (its files would count
+twice in the total). Prints one table per root and, for several roots,
+their total. Below each
 table, the data parquet files per commit directory (`<branch>-v<N>-<id>/`,
 one per write) as a max and a mean, so a statement that scatters its rows
 over many tiny files shows up. `--check`
@@ -66,6 +71,8 @@ def kind_of(dirpath, name):
         if DV_DIR.search(os.path.basename(dirpath)):
             return "dv parquet"
         return f"data parquet ({parquet_codec(os.path.join(dirpath, name))})"
+    if name.startswith("deletion_vector_") and name.endswith(".bin"):
+        return "dv bin"
     for ext, kind in ((".manifest", "manifest"), (".json", "commit json"),
                       (".bloom", "bloom")):
         if name.endswith(ext):
@@ -110,9 +117,15 @@ def print_table(title, kinds, per_commit):
 
 def main(argv):
     flags = {a for a in argv if a.startswith("--")}
-    roots = [a for a in argv if not a.startswith("--")]
+    roots = list(dict.fromkeys(os.path.realpath(a) for a in argv if not a.startswith("--")))
     if not roots or flags - {"--check"}:
         print(__doc__.strip(), file=sys.stderr)
+        return 2
+    nested = [(a, b) for a in roots for b in roots
+              if a != b and os.path.commonpath([a, b]) == b]
+    if nested:
+        print("refusing nested roots: " + ", ".join(f"{a} is inside {b}" for a, b in nested),
+              file=sys.stderr)
         return 2
     per_root = {r: survey(r) for r in roots}
     total = defaultdict(lambda: [0, 0])
