@@ -27,6 +27,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Optimizer rule: bounded levenshtein predicates gain a free
     // length-difference prefilter and switch to the banded threshold DP.
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinPrefilter)
+    // Planner strategy: a metadata-answered aggregate's alias projection
+    // over its one-row local scan plans as a local relation — no Spark job.
+    ext.injectPlannerStrategy(_ => graft.plans.LocalScanProject)
     // Delta's CDF table-valued function, registered through the analyzer's
     // own TVF door (same registry as the built-in `range`):
     // SELECT … FROM table_changes('[branch@]path', start[, end]).

@@ -1624,7 +1624,7 @@ object Versioned {
     * relation's cost pinned by the gates. v0 is a key-range layout with
     * per-file o_orderkey stats; a 30% MOR delete attaches deletion
     * vectors (no rewrite), making every `format("vt")` read take
-    * [[graft.sources.VtMorRelation]] — which, as a PrunedFilteredScan,
+    * [[graft.sources.ReplayRelation]] — which, as a PrunedFilteredScan,
     * prunes the commit's files from the pushed BETWEEN before any scan
     * and runs the predicate below the DV anti-join. At 10× rows the
     * band-read leg should cost ~the same (it touches the same files);
@@ -1892,7 +1892,8 @@ object Versioned {
     * side is an EXPORTED table (a stock `_delta_log` with per-file stats),
     * range-laid-out on the join key; the broadcast dim's key values
     * re-prune its file list at execution time against the add-action
-    * stats ([[graft.sources.DeltaDfScan]]'s `SupportsRuntimeV2Filtering`)
+    * stats ([[graft.sources.VtDfScan]]'s `SupportsRuntimeV2Filtering`, the
+    * scan native commits take too)
     * — Delta's dynamic file pruning, DSv1 could only do this for
     * directory partitions. DeltaLiteSpec ghost-proves the skip; the bench
     * carries the end-to-end cost (export + star join). Bands derive from

@@ -110,28 +110,21 @@ final class DeltaChanges extends StreamSourceProvider with DataSourceRegister {
 
 object DeltaChanges {
   // stream start calls this twice back-to-back (sourceSchema, then the
-  // Source's schema val) — cache per root, invalidated by the head version,
-  // so one log replay serves both instead of two checkpoint bootstraps.
-  // BOUNDED (LRU, 64 roots): a long-lived session tailing many tables must
-  // not grow this per-JVM map without limit; evicted roots just pay one
-  // extra replay on their next stream start.
+  // Source's schema val) — cache per (root, head version), so one log
+  // replay serves both instead of two checkpoint bootstraps. BOUNDED (LRU,
+  // 64 entries): a long-lived session tailing many tables must not grow
+  // this per-JVM map without limit; an evicted root just pays one extra
+  // replay on its next stream start.
   private[sources] val SchemaCacheCap = 64
-  private[sources] val schemaCache =
-    new BoundedCache[String, (Long, StructType)](SchemaCacheCap)
+  private val schemaCache =
+    new graft.vt.BoundedCache[(String, Long), StructType](SchemaCacheCap)
 
   /** Pinned feed columns: the LATEST snapshot schema plus Delta's three
     * CDF columns, in that order. */
-  private[sources] def feedSchema(spark: SparkSession, tableRoot: String): StructType = {
-    val head = DeltaLogReader.latestVersion(tableRoot)
-    schemaCache.get(tableRoot) match {
-      case Some((v, s)) if v == head => s
-      case _ =>
-        val s = DeltaLogReader.snapshot(tableRoot, None, Some(spark)).schema
-          .add("_change_type", StringType)
-          .add("_commit_version", LongType)
-          .add("_commit_timestamp", TimestampType)
-        schemaCache.put(tableRoot, (head, s))
-        s
-    }
-  }
+  private[sources] def feedSchema(spark: SparkSession, tableRoot: String): StructType =
+    schemaCache.get((tableRoot, DeltaLogReader.latestVersion(tableRoot)))(
+      DeltaLogReader.snapshot(tableRoot, None, Some(spark)).schema
+        .add("_change_type", StringType)
+        .add("_commit_version", LongType)
+        .add("_commit_timestamp", TimestampType))
 }

@@ -1,130 +1,33 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.SessionShim
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.vt.{DeltaLogReader, VersionedTable}
-import graft.vt.DeltaLogReader.{DeltaSnapshot, FileEntry}
+import graft.vt.DeltaLogReader
+import graft.vt.DeltaLogReader.DeltaSnapshot
 
-/** Per-file survival of a FOREIGN Delta snapshot's metadata against a set
-  * of [[StatsWindows]] — shared by [[DeltaFileIndex]] (data-skipping
-  * during native scan planning) and [[DeltaLiteMorRelation]] (the same
-  * skipping under the fallback, where windows on PARTITION columns test
-  * the add action's `partitionValues` instead of stats — conservative is
-  * safe there because the fallback re-applies every pushed filter as an
-  * ordinary row predicate). Stats keys are PHYSICAL names in
-  * column-mapped tables; both name forms are consulted. Files without
-  * stats for a bounded column are conservatively kept. */
-private[sources] final class DeltaStatsTester(schema: StructType,
-                                              partitionColumns: Seq[String]) {
-  private val mapper = new ObjectMapper()
-  // logical -> on-disk key for stats/partitionValues lookups: PHYSICAL
-  // names in column-mapped tables, the logical name otherwise
-  private val physByLogical: Map[String, String] =
-    schema.fields.map(f => f.name -> DeltaLogReader.physName(f)).toMap
-  def physKey(logical: String): String = physByLogical.getOrElse(logical, logical)
-
-  /** Partition columns by their LOGICAL names (metaData.partitionColumns
-    * may carry either form in a mapped table). */
-  val partNames: Set[String] = schema.fields
-    .filter(f => partitionColumns.contains(f.name) ||
-      partitionColumns.contains(DeltaLogReader.physName(f)))
-    .map(_.name).toSet
-
-  def statsSurvive(stats: Option[String],
-                   bounds: List[StatsWindows.Window],
-                   nulls: List[(String, Boolean)]): Boolean =
-    stats match {
-      case None => true
-      case Some(s) =>
-        val node = mapper.readTree(s)
-        val mins = node.path("minValues"); val maxs = node.path("maxValues")
-        val nullCounts = node.path("nullCount")
-        val numRecords = node.path("numRecords")
-        nulls.forall { case (colName, wantNull) =>
-          val nc = nullCounts.path(physKey(colName))
-          if (!nc.isNumber) true
-          else if (wantNull) nc.asLong() > 0L // IS NULL: skip zero-null files
-          else !numRecords.isNumber || nc.asLong() < numRecords.asLong()
-        } && bounds.forall {
-          case (colName, Left(ranges)) =>
-            val mn = mins.path(physKey(colName)); val mx = maxs.path(physKey(colName))
-            !(mn.isNumber && mx.isNumber) ||
-              StatsWindows.numSurvives(mn.asDouble(), mx.asDouble(), ranges)
-          case (colName, Right(ranges)) =>
-            val mn = mins.path(physKey(colName)); val mx = maxs.path(physKey(colName))
-            !(mn.isTextual && mx.isTextual) ||
-              StatsWindows.strSurvives(mn.asText(), mx.asText(), ranges)(
-                VersionedTable.utf8Cmp)
-        }
-    }
-
-  /** Conservative window test against a file's single partition VALUE:
-    * every window-producing shape is a comparison (never true of NULL),
-    * so a null/empty partition value fails bounds windows outright, and a
-    * value that parses tests point-exactly. Unparseable values (e.g. a
-    * date string under a numeric window) keep the file. */
-  private def partSurvives(pv: Map[String, String],
-                           bounds: List[StatsWindows.Window],
-                           nulls: List[(String, Boolean)]): Boolean = {
-    def raw(c: String): Option[String] = pv.get(physKey(c)).orElse(pv.get(c))
-    bounds.forall { case (c, ranges) =>
-      raw(c) match {
-        case None => true
-        case Some(v) if v == null || v.isEmpty => false
-        case Some(v) => ranges match {
-          case Left(rs) => v.toDoubleOption.forall(d => StatsWindows.numSurvives(d, d, rs))
-          case Right(rs) => StatsWindows.strSurvives(v, v, rs)(VersionedTable.utf8Cmp)
-        }
-      }
-    } && nulls.forall { case (c, wantNull) =>
-      raw(c) match {
-        case None => true
-        case Some(v) =>
-          val isNull = v == null || v.isEmpty
-          if (wantNull) isNull else !isNull
-      }
-    }
-  }
-
-  /** The full per-file test for the fallback relation: partition-column
-    * windows against `partitionValues`, the rest against `stats`. */
-  def fileSurvives(fe: FileEntry,
-                   bounds: List[StatsWindows.Window],
-                   nulls: List[(String, Boolean)]): Boolean = {
-    val (partB, dataB) = bounds.partition(w => partNames(w._1))
-    val (partN, dataN) = nulls.partition(w => partNames(w._1))
-    partSurvives(fe.partitionValues, partB, partN) &&
-      statsSurvive(fe.stats, dataB, dataN)
-  }
-}
-
-/** [[FileIndex]] over a FOREIGN Delta table's snapshot: the log's live
-  * file set with BOTH pruning layers folded into scan planning —
-  * partition pruning from each add action's `partitionValues` (evaluated
-  * against the scan's partition filters) and data skipping from the
-  * per-file `stats` JSON (`minValues`/`maxValues`, numeric compared as
-  * doubles, strings as unsigned UTF-8 bytes — Delta's stats ordering).
-  * This is delta-spark's TahoeFileIndex role re-expressed on
-  * [[DeltaLogReader]]'s snapshot: `spark.read.format("delta-lite")` plans
-  * the same pruned parquet scan a Delta-jar reader would, with pushdown,
-  * vectorization and whole-stage codegen intact. Files without stats for
-  * a bounded column are conservatively kept; unrecognized predicate
-  * shapes prune nothing. */
+/** [[FileIndex]] over a directory-PARTITIONED foreign Delta snapshot (the
+  * unpartitioned ones plan through [[VtFileIndex]]): the log's live file
+  * set with both pruning layers folded into scan planning — partition
+  * pruning from each add action's `partitionValues`, evaluated EXACTLY
+  * against the scan's partition filters, and data skipping from the
+  * per-file stats through the one survival test ([[VtPruning]] over
+  * [[DeltaLogReader.asCommit]]). This is delta-spark's TahoeFileIndex role
+  * re-expressed on [[DeltaLogReader]]'s snapshot: `format("delta-lite")`
+  * plans the same pruned parquet scan a Delta-jar reader would, with
+  * pushdown, vectorization and whole-stage codegen intact. */
 final class DeltaFileIndex(spark: SparkSession, root: java.nio.file.Path,
                            snap: DeltaSnapshot) extends FileIndex {
 
-  private val tester = new DeltaStatsTester(snap.schema, snap.partitionColumns)
+  private lazy val commit = DeltaLogReader.asCommit(snap)
   // metaData.partitionColumns may carry either name form in a mapped
   // table (the tolerance DeltaLogReader.readSnapshot applies): resolve
   // each against logical OR physical field names
@@ -177,14 +80,10 @@ final class DeltaFileIndex(spark: SparkSession, root: java.nio.file.Path,
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val partNames = partFields.map(_.name).toSet
-    val dataWins = dataFilters.flatMap(StatsWindows.windows)
-      .filterNot { case (c, _) => partNames(c) }.toList
-    val dataNulls = dataFilters.flatMap(StatsWindows.nullWindows)
-      .filterNot { case (c, _) => partNames(c) }.toList
+    val kept = VtPruning.pruneExprs(commit, commit.files, dataFilters, VtPruning.NoBloom).toSet
     val groups = statuses.groupBy(_._1.partitionValues).toSeq.map { case (pv, group) =>
       val row = InternalRow.fromSeq(partFields.toSeq.map(f =>
-        partValue(f, pv.get(tester.physKey(f.name)).orElse(pv.get(f.name)).orNull)))
+        partValue(f, pv.get(DeltaLogReader.physName(f)).orElse(pv.get(f.name)).orNull)))
       (row, group)
     }
     // Partition pruning is EXACT evaluation, never a conservative window:
@@ -210,9 +109,7 @@ final class DeltaFileIndex(spark: SparkSession, root: java.nio.file.Path,
         groups.filter { case (row, _) => pred.eval(row) }
       }
     pruned.map { case (row, group) =>
-      PartitionDirectory(row,
-        group.filter(g => tester.statsSurvive(g._1.stats, dataWins, dataNulls))
-          .map(_._2).toArray)
+      PartitionDirectory(row, group.collect { case (f, st) if kept(f.path) => st }.toArray)
     }
   }
 
@@ -224,60 +121,11 @@ final class DeltaFileIndex(spark: SparkSession, root: java.nio.file.Path,
   override def sizeInBytes: Long = statuses.map(_._2.getLen).sum
 }
 
-/** Fallback relation for the snapshot shapes a bare file scan cannot
-  * express — deletion vectors (merge-on-read), renamed name-mode schemas
-  * without parquet field ids, exotic partition types: delegates to the
-  * snapshot replay ([[DeltaLogReader.read]]'s machinery, which handles
-  * all of them). It is a [[PrunedFilteredScan]]: pushed filters (a)
-  * prune the snapshot's file list through the SAME per-file stats and
-  * partitionValues the native index uses — one MOR delete on a 100 TB
-  * table no longer turns every filtered read into a full scan — and (b)
-  * are re-expressed as Column predicates on the inner DataFrame, below
-  * the DV position subtraction, where parquet pushdown sees them (a
-  * filter never resurrects a deleted row, so filtering under the
-  * anti-join is exact). Untranslatable conjuncts are reported via
-  * `unhandledFilters` and Spark re-applies them above the scan. */
-final class DeltaLiteMorRelation(ctx: SQLContext, tableRoot: String,
-                                 version: Option[Long],
-                                 preResolved: Option[DeltaSnapshot] = None)
-    extends BaseRelation with PrunedFilteredScan {
-  override def sqlContext: SQLContext = ctx
-  // ONE log replay per relation — and ZERO when the provider already
-  // resolved the snapshot to route here (it passes it in): schema and
-  // every buildScan share it (the data plan itself is rebuilt per scan
-  // over the PRUNED file subset)
-  private lazy val snap = preResolved.getOrElse(
-    DeltaLogReader.snapshot(tableRoot, version, Some(ctx.sparkSession)))
-  private lazy val tester = new DeltaStatsTester(snap.schema, snap.partitionColumns)
-  override def schema: StructType = snap.schema
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    FilterColumns.unhandled(filters)
-
-  /** The pruned, filtered, projected inner plan — package-visible so specs
-    * can assert the file-skipping evidence (`scanPlan(...).inputFiles`). */
-  private[graft] def scanPlan(requiredColumns: Array[String],
-                                filters: Array[Filter]): DataFrame = {
-    val (bounds, nulls) = StatsWindows.fromFilters(filters.toSeq)
-    val kept =
-      if (bounds.isEmpty && nulls.isEmpty) snap.files
-      else snap.files.filter(f => tester.fileSurvives(f, bounds, nulls))
-    val df = FilterColumns.applyAll(
-      DeltaLogReader.readPinnedSnapshot(ctx.sparkSession, tableRoot,
-        snap.copy(files = kept)), filters)
-    if (requiredColumns.isEmpty) df
-    else df.select(requiredColumns.head, requiredColumns.tail: _*)
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] =
-    scanPlan(requiredColumns, filters).rdd
-}
-
 /** `spark.read.format("delta-lite")`: batch reads of a STOCK Delta table
   * without the Delta jar, planned through Spark's native file-scan
   * machinery with the log's partition values and per-file stats pruning
-  * folded in ([[DeltaFileIndex]]). Options: `path` (required),
+  * folded in ([[VtFileIndex]] over the replay, [[DeltaFileIndex]] when
+  * partitioned). Options: `path` (required),
   * `versionAsOf`, `timestampAsOf` (epoch millis, ISO instant, or a
   * session-zone date/date-time — [[SourcePaths.parseTimestamp]];
   * mutually exclusive with `versionAsOf`).
@@ -292,7 +140,7 @@ final class DeltaLiteMorRelation(ctx: SQLContext, tableRoot: String,
   * ([[SessionShim.withConf]]) — the user's session is never mutated.
   * Snapshots with deletion vectors, renamed name-mode schemas without
   * file field ids, or partition types beyond the primitive set fall back
-  * to [[DeltaLiteMorRelation]] (correct, pruned, filter-pushed).
+  * to [[ReplayRelation]] (correct, pruned, filter-pushed).
   *
   * Note: as with Spark's own partitioned reads, partition columns
   * surface AFTER the data columns in the relation's schema. */
@@ -314,8 +162,7 @@ final class DeltaLite extends RelationProvider with DataSourceRegister {
     val mode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
     val hasDv = snap.files.exists(_.dv.isDefined)
     val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    def fallback = new DeltaLiteMorRelation(sqlContext, path,
-      version.orElse(Some(snap.version)), preResolved = Some(snap))
+    def fallback = ReplayRelation.foreign(sqlContext, path, snap)
     if (hasDv || !DeltaLite.partTypesSupported(snap)) fallback
     else {
       val dataFields = snap.schema.fields
@@ -353,7 +200,10 @@ final class DeltaLite extends RelationProvider with DataSourceRegister {
             if (needsIds) SessionShim.withConf(spark,
               "spark.sql.parquet.fieldId.read.enabled" -> "true")
             else spark
-          val index = new DeltaFileIndex(relSession, root, snap)
+          val index =
+            if (snap.partitionColumns.nonEmpty) new DeltaFileIndex(relSession, root, snap)
+            else new VtFileIndex(relSession, root, DeltaLogReader.asCommit(snap),
+              VtPruning.NoBloom)
           HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
             new ParquetFileFormat, Map.empty[String, String])(relSession)
       }

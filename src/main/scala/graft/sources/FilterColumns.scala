@@ -4,8 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.{sources => f}
 
-/** `sources.Filter` → `Column` translation for the merge-on-read fallback
-  * relations ([[VtMorRelation]], [[DeltaLiteMorRelation]]): the inverse of
+/** `sources.Filter` → `Column` translation for the fallback relation
+  * ([[ReplayRelation]], over either table kind's replay): the inverse of
   * Spark's own `DataSourceStrategy.translateFilter`, so a pushed filter can
   * be applied to the INNER DataFrame the relation delegates to — putting
   * the predicate below the DV anti-join where parquet pushdown and footer

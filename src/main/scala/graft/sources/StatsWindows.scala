@@ -42,9 +42,10 @@ private[graft] object SourcePaths {
 }
 
 /** Shared predicate→window extraction for file-skipping scan planning
-  * ([[VtFileIndex]], [[DeltaFileIndex]], and the merge-on-read fallback
-  * relations): turns filter conjuncts into per-column DISJUNCTIONS of
-  * [lower, upper] ranges a file's min/max stats can be tested against —
+  * ([[VtFileIndex]], [[DeltaFileIndex]], the batch scans' runtime filters
+  * and the [[ReplayRelation]] fallback): turns filter conjuncts into
+  * per-column DISJUNCTIONS of [lower, upper] ranges a file's min/max
+  * stats can be tested against —
   * a plain comparison yields one range, `IN (…)` one POINT range per
   * value (the union-of-point-windows semantics, exact where a single
   * min..max envelope would keep every file straddling the list's hull).
@@ -60,8 +61,8 @@ private[graft] object SourcePaths {
   * these windows for PARTITION filters of a partitioned relation: Spark
   * strips partition-only filters from the post-scan filter set, so
   * partition pruning must evaluate the filter exactly
-  * ([[DeltaFileIndex.listFiles]]), not conservatively. (The merge-on-read
-  * relations MAY window partition columns — there the pushed filters are
+  * ([[DeltaFileIndex.listFiles]]), not conservatively. (The fallback
+  * relation MAY window partition columns — there the pushed filters are
   * re-applied as ordinary row predicates, so conservative is safe.) */
 private[sources] object StatsWindows {
 

@@ -33,11 +33,12 @@ import graft.vt.{Commit, CommitGraph, VersionedTable}
   * converts to the commit log's millisecond clock.
   *
   * Reads plan through the same commit-pinned [[VtFileIndex]] as the DSv1
-  * path: DV-free snapshots serve Spark's own `ParquetScan` (catalyst
-  * filter pushdown, commit-log stats pruning in `listFiles`,
-  * vectorization, codegen) wrapped by [[VtMetaScanBuilder]] for
-  * metadata-only aggregate pushdown, and DV-carrying snapshots serve the
-  * NATIVE merge-on-read batch [[VtMorScan]] (r18 — file-pruned,
+  * path, and through the same scans the `dlite` catalog serves foreign
+  * Delta snapshots with: DV-free snapshots serve Spark's own
+  * `ParquetScan` (catalyst filter pushdown, commit-log stats pruning in
+  * `listFiles`, vectorization, codegen) wrapped by [[VtMetaScanBuilder]]
+  * for metadata-only aggregate pushdown, and DV-carrying snapshots serve
+  * the NATIVE merge-on-read batch [[VtMorScan]] (file-pruned,
   * filter-pushed, deletion vectors subtracted by generated row index in
   * the readers themselves). Writes bridge through [[V1Write]]:
   * `INSERT INTO` appends one commit, `INSERT OVERWRITE` replaces
@@ -575,19 +576,18 @@ final class VtTable(spark: SparkSession, vt: VersionedTable, branch: String,
     * AND the parquet reader for footer skipping; column pruning;
     * vectorized batches) PLUS metadata-only COUNT/MIN/MAX pushdown from
     * the commit log. DV snapshots: [[VtMorScanBuilder]] — a NATIVE batch
-    * whose readers subtract deletion vectors by generated row index
-    * (r18; no `V1Scan`/`RDD[Row]` bridge). */
+    * whose readers subtract deletion vectors by generated row index.
+    * Column-mapped DV-free snapshots stay native (r20: the builder
+    * translates the delegate into physical name space); DV+mapped
+    * combines two translations, so that rarer shape serves the V1 scan
+    * over the replay relation. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    // DV-free snapshots take the native builder — column-mapped ones
-    // included (r20: it translates the delegate into physical name space,
-    // keeping metadata aggregates, runtime file skipping and columnar
-    // reads through a rename). DV+mapped combines two translations; that
-    // rarer shape serves the proven V1 fallback over the MOR relation.
     if (commit.dvs.isEmpty)
-      new VtMetaScanBuilder(spark, vt, commit, tableSchema, options, branch)
+      new VtMetaScanBuilder(spark, vt.root, commit, tableSchema, Some(vt), branch, options)
     else if (VersionedTable.hasColumnMapping(tableSchema))
-      new VtV1ScanBuilder(spark, vt, commit)
-    else new VtMorScanBuilder(spark, vt, commit, tableSchema, branch, options)
+      new ReplayV1ScanBuilder(tableSchema, s"$ident v${commit.version}",
+        ReplayRelation.native(_, vt, commit))
+    else new VtMorScanBuilder(spark, vt.root, commit, tableSchema, Some(vt), branch, options)
 
   /** SQL `DELETE FROM vt.\`path\` WHERE …`, on any session with the
     * catalog conf set — Spark's analyzer keeps `DeleteFromTable` intact for
@@ -707,10 +707,3 @@ private final class VtStagedTable(spark: SparkSession, vt: VersionedTable,
       VersionedTable.delete(vt.root.toString)
   }
 }
-
-// The merge-on-read DSv2 scan machinery lives in VtDsv2Scans.scala
-// ([[VtMorScanBuilder]] / [[VtMorScan]] / [[VtMetaScanBuilder]]): since
-// r18 it is a NATIVE Batch — per-file-split partitions whose readers
-// subtract deletion vectors by the parquet-generated row index — and the
-// DV-free path adds metadata-only aggregate pushdown. The r17
-// `V1Scan`/`RDD[Row]` bridge is gone.

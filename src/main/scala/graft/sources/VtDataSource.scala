@@ -14,28 +14,35 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, Da
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.vt.{Commit, VersionedTable}
+import graft.vt.{Commit, DeltaLogReader, VersionedTable}
+import graft.vt.DeltaLogReader.DeltaSnapshot
 
-/** The one per-file survival test of a versioned commit's stats against a
-  * set of [[StatsWindows]] — shared by [[VtFileIndex]] (planning-time
-  * pruning under the native file-scan relation) and [[VtMorRelation]]
-  * (the same pruning under the merge-on-read fallback, where it is the
-  * difference between a filtered point-read touching one file and a full
-  * scan of a 100 TB snapshot). Numeric windows test the double stats,
-  * string windows the UTF-8-byte-ordered string stats; files without
-  * stats for a bounded column are conservatively kept. */
-private[sources] object VtPruning {
+/** The one per-file survival test of a snapshot's stats against a set of
+  * [[StatsWindows]], for native commits and foreign Delta replays alike
+  * (a Delta add's stats JSON and partition values arrive as the same
+  * [[Commit]] maps, [[graft.vt.DeltaLogReader.asCommit]]). Numeric windows
+  * test the double stats, string windows the UTF-8-byte-ordered string
+  * stats; every window is a comparison, never true of NULL, so a file
+  * whose null count equals its row count fails any window on that column.
+  * Files without stats for a bounded column are conservatively kept. */
+private[graft] object VtPruning {
 
   /** "No bloom index" lookup — the default for callers without a table
     * handle; probes then never prune (conservative). */
   val NoBloom: (String, String) => Option[Array[Byte]] = (_, _) => None
 
+  def bloomOf(vt: Option[VersionedTable], c: Commit): (String, String) => Option[Array[Byte]] =
+    vt.fold(NoBloom)(_.bloomLookup(c))
+
   def survives(commit: Commit, rel: String,
                bounds: List[StatsWindows.Window],
                nulls: List[(String, Boolean)],
                probes: List[StatsWindows.Probe] = Nil,
-               bloom: (String, String) => Option[Array[Byte]] = NoBloom): Boolean =
+               bloom: (String, String) => Option[Array[Byte]] = NoBloom): Boolean = {
+    val nullCount = (c: String) => commit.nullStats.get(rel).flatMap(_.get(c))
+    val rows = commit.rowCounts.get(rel)
     bounds.forall {
+      case (colName, _) if rows.isDefined && nullCount(colName) == rows => false
       case (colName, Left(ranges)) =>
         commit.stats.get(rel).flatMap(_.get(colName)) match {
           case Some((mn, mx)) => StatsWindows.numSurvives(mn, mx, ranges)
@@ -63,13 +70,27 @@ private[sources] object VtPruning {
         case None => true
       }
     } && nulls.forall { case (colName, wantNull) =>
-      val nullCount = commit.nullStats.get(rel).flatMap(_.get(colName))
-      if (wantNull) !nullCount.contains(0L) // IS NULL: skip zero-null files
-      else (nullCount, commit.rowCounts.get(rel)) match {
-        case (Some(n), Some(rows)) => n < rows // IS NOT NULL: skip all-null files
+      if (wantNull) !nullCount(colName).contains(0L) // IS NULL: skip zero-null files
+      else (nullCount(colName), rows) match {
+        case (Some(n), Some(r)) => n < r // IS NOT NULL: skip all-null files
         case _ => true
       }
     }
+  }
+
+  /** `files` (of `commit`) that survive the windows and probes. */
+  def prune(commit: Commit, files: Vector[String], bounds: List[StatsWindows.Window],
+            nulls: List[(String, Boolean)], probes: List[StatsWindows.Probe],
+            bloom: (String, String) => Option[Array[Byte]]): Vector[String] =
+    if (bounds.isEmpty && nulls.isEmpty && probes.isEmpty) files
+    else files.filter(survives(commit, _, bounds, nulls, probes, bloom))
+
+  /** `files` pruned by a scan's catalyst data filters. */
+  def pruneExprs(commit: Commit, files: Vector[String], filters: Seq[Expression],
+                 bloom: (String, String) => Option[Array[Byte]]): Vector[String] =
+    prune(commit, files, filters.flatMap(StatsWindows.windows).toList,
+      filters.flatMap(StatsWindows.nullWindows).toList,
+      filters.flatMap(StatsWindows.pointProbes).toList, bloom)
 
   /** The commit's file list pruned by a `PrunedFilteredScan`'s pushed
     * conjuncts (exposed for spec-level evidence too). */
@@ -77,9 +98,8 @@ private[sources] object VtPruning {
                   bloom: (String, String) => Option[Array[Byte]] = NoBloom)
       : Vector[String] = {
     val (bounds, nulls) = StatsWindows.fromFilters(filters)
-    val probes = filters.flatMap(StatsWindows.filterPointProbes).toList
-    if (bounds.isEmpty && nulls.isEmpty && probes.isEmpty) commit.files
-    else commit.files.filter(survives(commit, _, bounds, nulls, probes, bloom))
+    prune(commit, commit.files, bounds, nulls,
+      filters.flatMap(StatsWindows.filterPointProbes).toList, bloom)
   }
 }
 
@@ -91,27 +111,28 @@ private[sources] object VtPruning {
   * data-skipping integration (TahoeFileIndex). Extending the
   * partitioning-aware base (trivially, with an empty partition spec)
   * makes the same index serve BOTH front ends: the DSv1
-  * `HadoopFsRelation` and the DSv2 `ParquetScan` behind the `vt` catalog
-  * ([[VtCatalog]]). Numeric bounds prune against the double stats,
-  * string bounds against the UTF-8-byte-ordered string stats
-  * ([[VersionedTable.utf8Cmp]] — the ordering the stats were computed
-  * under); files without stats for a bounded column are conservatively
-  * kept, and unrecognized predicate shapes prune nothing. At 100 TB this
+  * `HadoopFsRelation` and the DSv2 `ParquetScan` behind the `vt` and
+  * `dlite` catalogs, over native commits and unpartitioned foreign Delta
+  * replays alike ([[VtPruning]] is the one survival test). At 100 TB this
   * is the difference between touching 1% of a million files and paying a
   * footer read on every one. */
-final class VtFileIndex(spark: SparkSession, vt: VersionedTable, commit: Commit)
+final class VtFileIndex(spark: SparkSession, root: java.nio.file.Path, commit: Commit,
+                        bloom: (String, String) => Option[Array[Byte]])
     extends PartitioningAwareFileIndex(spark, Map.empty, None) {
 
-  private val rootPath = new HPath(vt.root.toUri)
+  def this(spark: SparkSession, vt: VersionedTable, commit: Commit) =
+    this(spark, vt.root, commit, vt.bloomLookup(commit))
+
+  private val rootPath = new HPath(root.toUri)
 
   /** One FileStatus per file, from the COMMIT LOG'S recorded byte sizes
-    * (publish stats each new file once); only files a pre-`fileSizes`
-    * commit recorded pay a real getFileStatus — stat-free scan planning,
-    * the same trust-the-log rule the Delta index applies. */
+    * (publish stats each new file once, a Delta add records its size); only
+    * files without a recorded size pay a real getFileStatus — stat-free scan
+    * planning. */
   private lazy val statuses: Vector[(String, FileStatus)] = {
     lazy val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     commit.files.map { f =>
-      val p = new HPath(vt.root.resolve(f).toUri)
+      val p = VtFileIndex.pathOf(root, f)
       val status = commit.fileSizes.get(f) match {
         case Some(size) => new FileStatus(size, false, 1, 0L, 0L, p)
         case None => fs.getFileStatus(p)
@@ -145,38 +166,45 @@ final class VtFileIndex(spark: SparkSession, vt: VersionedTable, commit: Commit)
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val bounds = dataFilters.flatMap(StatsWindows.windows).toList
-    val nulls = dataFilters.flatMap(StatsWindows.nullWindows).toList
-    val probes = dataFilters.flatMap(StatsWindows.pointProbes).toList
-    val bloom = if (probes.isEmpty) VtPruning.NoBloom else vt.bloomLookup(commit)
-    val kept = statuses.filter { case (rel, _) =>
-      VtPruning.survives(commit, rel, bounds, nulls, probes, bloom)
-    }
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
+    val kept = VtPruning.pruneExprs(commit, commit.files, dataFilters, bloom).toSet
+    Seq(PartitionDirectory(InternalRow.empty,
+      statuses.collect { case (rel, st) if kept(rel) => st }.toArray))
   }
 
   override def inputFiles: Array[String] =
-    commit.files.map(f => vt.root.resolve(f).toString).toArray
+    commit.files.map(f => if (f.contains("://")) f else root.resolve(f).toString).toArray
 
   override def refresh(): Unit = () // a commit is immutable
 
   override def sizeInBytes: Long = statuses.map(_._2.getLen).sum
 }
 
-/** Fallback relation for snapshots WITH deletion vectors: merge-on-read
-  * cannot be expressed as a bare file scan, so the relation delegates to
-  * [[VersionedTable.readCommit]] (scan + broadcast DV anti-join). It is a
-  * [[PrunedFilteredScan]]: pushed filters (a) prune the commit's file
-  * list through the SAME commit-log stats the native index uses — a
-  * point-read of a DV-carrying 100 TB snapshot touches one file, not all
-  * of them — and (b) are re-expressed as Column predicates on the inner
-  * DataFrame, BELOW the DV anti-join, where parquet pushdown and footer
-  * skipping see them (a filter never resurrects a deleted row, so
-  * filtering before the position subtraction is exact). Untranslatable
-  * conjuncts are reported via `unhandledFilters` and Spark re-applies
-  * them above the scan. The moment the branch is compacted the provider
-  * serves the native file-scan relation again. */
-final class VtMorRelation(ctx: SQLContext, vt: VersionedTable, commit: Commit)
+object VtFileIndex {
+  /** A snapshot file as a Hadoop path: root-relative (or absolute) local
+    * paths resolve against the root; a Delta add's full URI stays as is. */
+  def pathOf(root: java.nio.file.Path, f: String): HPath =
+    if (f.contains("://")) new HPath(java.net.URI.create(f))
+    else new HPath(root.resolve(f).toUri)
+}
+
+/** Fallback relation for the snapshot shapes a bare file scan cannot
+  * express — deletion vectors without a native batch, column-mapped
+  * schemas the scans cannot address, renamed foreign schemas without
+  * parquet field ids, exotic partition types: it delegates to the
+  * snapshot's own replay ([[VersionedTable.readCommit]] or
+  * [[graft.vt.DeltaLogReader.readPinnedSnapshot]]), which handles all of
+  * them. It is a [[PrunedFilteredScan]]: pushed filters (a) prune the
+  * snapshot's file list through the one survival test ([[VtPruning]]) —
+  * a point-read of a DV-carrying 100 TB snapshot touches one file, not
+  * all of them — and (b) are re-expressed as Column predicates on the
+  * replayed DataFrame, below the deletion-vector filter, where parquet
+  * pushdown and footer skipping see them (a filter never resurrects a
+  * deleted row, so filtering before the position subtraction is exact).
+  * Untranslatable conjuncts are reported via `unhandledFilters` and Spark
+  * re-applies them above the scan. */
+final class ReplayRelation(ctx: SQLContext, commit: Commit,
+                           bloom: (String, String) => Option[Array[Byte]],
+                           replay: Commit => DataFrame)
     extends BaseRelation with PrunedFilteredScan {
   override def sqlContext: SQLContext = ctx
   override val schema: StructType =
@@ -189,10 +217,8 @@ final class VtMorRelation(ctx: SQLContext, vt: VersionedTable, commit: Commit)
     * can assert the file-skipping evidence (`scanPlan(...).inputFiles`). */
   private[graft] def scanPlan(requiredColumns: Array[String],
                                 filters: Array[Filter]): DataFrame = {
-    val pruned = commit.copy(files =
-      VtPruning.prunedFiles(commit, filters.toSeq, vt.bloomLookup(commit)))
-    val df = FilterColumns.applyAll(
-      vt.readCommit(ctx.sparkSession, pruned), filters)
+    val pruned = commit.copy(files = VtPruning.prunedFiles(commit, filters.toSeq, bloom))
+    val df = FilterColumns.applyAll(replay(pruned), filters)
     if (requiredColumns.isEmpty) df
     else df.select(requiredColumns.head, requiredColumns.tail: _*)
   }
@@ -202,21 +228,33 @@ final class VtMorRelation(ctx: SQLContext, vt: VersionedTable, commit: Commit)
     scanPlan(requiredColumns, filters).rdd
 }
 
-/** DSv2 → DSv1 bridge for COLUMN-MAPPED snapshots (r20 RENAME/DROP): the
-  * native batch builders address parquet by the table's LOGICAL names,
-  * which a mapped snapshot's files do not carry — so the `vt` catalog
-  * serves these shapes through a [[V1Scan]] over [[VtMorRelation]]
-  * (readCommit's positional physical→logical aliasing, commit-log
-  * stats/bloom file pruning, pushed filters below any DV subtraction;
-  * untranslatable conjuncts re-applied by Spark). The same fallback rule
-  * the delta-lite catalog applies to foreign renamed tables. */
-final class VtV1ScanBuilder(spark: SparkSession, vt: VersionedTable,
-                            commit: Commit)
+object ReplayRelation {
+  /** A native commit, replayed by [[VersionedTable.readCommit]]. */
+  def native(ctx: SQLContext, vt: VersionedTable, commit: Commit): ReplayRelation =
+    new ReplayRelation(ctx, commit, vt.bloomLookup(commit),
+      vt.readCommit(ctx.sparkSession, _))
+
+  /** A foreign Delta snapshot, replayed by
+    * [[graft.vt.DeltaLogReader.readPinnedSnapshot]] over the kept adds. */
+  def foreign(ctx: SQLContext, tableRoot: String, snap: DeltaSnapshot): ReplayRelation =
+    new ReplayRelation(ctx, DeltaLogReader.asCommit(snap), VtPruning.NoBloom, kept => {
+      val keep = kept.files.toSet
+      DeltaLogReader.readPinnedSnapshot(ctx.sparkSession, tableRoot,
+        snap.copy(files = snap.files.filter(f => keep(f.path))))
+    })
+}
+
+/** DSv2 → DSv1 bridge over a [[ReplayRelation]]: the snapshot shapes the
+  * native batch builders cannot serve (column-mapped native commits with
+  * deletion vectors; foreign snapshots with directory partitions or
+  * renamed schemas) plan through a [[V1Scan]], pruned by the same
+  * survival test, pushed filters below any DV subtraction, untranslatable
+  * conjuncts re-applied by Spark. */
+final class ReplayV1ScanBuilder(full: StructType, label: String,
+                                relation: SQLContext => ReplayRelation)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private val full: StructType =
-    DataType.fromJson(commit.schemaJson).asInstanceOf[StructType]
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = full
 
@@ -236,19 +274,17 @@ final class VtV1ScanBuilder(spark: SparkSession, vt: VersionedTable,
 
   override def build(): Scan = new V1Scan {
     override def readSchema(): StructType = required
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: org.apache.spark.sql.SQLContext): T = {
-      val rel = new VtMorRelation(context, vt, commit)
+    override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T = {
+      val rel = relation(context)
       val cols = required.fieldNames
       val filters = pushed
       (new BaseRelation with TableScan {
-        override def sqlContext: org.apache.spark.sql.SQLContext = context
+        override def sqlContext: SQLContext = context
         override def schema: StructType = required
         override def buildScan(): RDD[Row] = rel.scanPlan(cols, filters).rdd
       }).asInstanceOf[T]
     }
-    override def description(): String =
-      s"VtV1Scan v${commit.version} (column-mapped fallback)"
+    override def description(): String = s"ReplayV1Scan $label"
   }
 }
 
@@ -261,7 +297,7 @@ final class VtV1ScanBuilder(spark: SparkSession, vt: VersionedTable,
   * pinned schema and [[VtFileIndex]]: parquet pushdown, column pruning,
   * vectorization and whole-stage codegen all intact, PLUS commit-log
   * stats pruning folded into scan planning. Snapshots carrying deletion
-  * vectors fall back to [[VtMorRelation]] (correct merge-on-read, pruned
+  * vectors fall back to [[ReplayRelation]] (correct merge-on-read, pruned
   * columns, pushed filters, stats file-skipping) rather than silently
   * resurrecting deleted rows. */
 final class VtDataSource extends RelationProvider with CreatableRelationProvider
@@ -342,9 +378,9 @@ final class VtDataSource extends RelationProvider with CreatableRelationProvider
     val schema = DataType.fromJson(commit.schemaJson).asInstanceOf[StructType]
     // DV snapshots need merge-on-read; column-mapped snapshots (r20
     // RENAME/DROP) need the physical→logical re-aliasing readCommit does —
-    // both are exactly what VtMorRelation serves (pruned, filter-pushed)
+    // both are exactly what the replay relation serves (pruned, filter-pushed)
     if (commit.dvs.nonEmpty || VersionedTable.hasColumnMapping(schema))
-      new VtMorRelation(sqlContext, vt, commit)
+      ReplayRelation.native(sqlContext, vt, commit)
     else {
       val spark = sqlContext.sparkSession
       HadoopFsRelation(new VtFileIndex(spark, vt, commit), StructType(Nil),

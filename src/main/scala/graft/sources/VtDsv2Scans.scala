@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.OptionalLong
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, In
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.vt.{Commit, VersionedTable}
+import graft.vt.{Commit, DeletionVectors, VersionedTable}
 
 /** DSv2 scan builder for DV-FREE snapshots: Spark's own
   * [[ParquetScanBuilder]] over the commit-pinned [[VtFileIndex]] (full
@@ -34,11 +33,15 @@ import graft.vt.{Commit, VersionedTable}
   * a DV (this builder is only used DV-free), a stats-less file, a string
   * stat at the truncation limit, an int64 beyond 2⁵³ — falls through to
   * the normal scan, exactly the refusal contract of
-  * [[VersionedTable.minMaxFromStats]]. */
-final class VtMetaScanBuilder(spark: SparkSession, vt: VersionedTable,
+  * [[VersionedTable.minMaxFromStats]]. A foreign Delta replay comes
+  * without a table handle (`vt = None`): the same pruned, runtime-filtered
+  * scan, but no metadata answers, bloom probes or stream. */
+final class VtMetaScanBuilder(spark: SparkSession, root: java.nio.file.Path,
                               commit: Commit, tableSchema: StructType,
-                              options: CaseInsensitiveStringMap,
-                              branch: String = "main")
+                              vt: Option[VersionedTable],
+                              branch: String = "main",
+                              options: CaseInsensitiveStringMap =
+                                CaseInsensitiveStringMap.empty())
     extends ScanBuilder with CatalystFilterPushdown
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
@@ -66,7 +69,8 @@ final class VtMetaScanBuilder(spark: SparkSession, vt: VersionedTable,
     StructType(s.fields.map(f => f.copy(name = physOf.getOrElse(f.name, f.name))))
 
   private val delegate =
-    ParquetScanBuilder(spark, new VtFileIndex(spark, vt, physCommit),
+    ParquetScanBuilder(spark,
+      new VtFileIndex(spark, root, physCommit, VtPruning.bloomOf(vt, physCommit)),
       VersionedTable.physicalSchema(tableSchema),
       VersionedTable.physicalSchema(tableSchema), options)
   private var dataFilters: Seq[Expression] = Nil
@@ -93,7 +97,7 @@ final class VtMetaScanBuilder(spark: SparkSession, vt: VersionedTable,
   // Spark asks for complete pushdown BEFORE pushing: the metadata answer is
   // a pure function of the aggregation, so both calls compute it
   private def metaAnswer(agg: Aggregation): Option[(StructType, InternalRow)] =
-    if (filtered) None else VtExact.metaAnswer(vt, commit, tableSchema, agg)
+    vt.filter(_ => !filtered).flatMap(VtExact.metaAnswer(_, commit, tableSchema, agg))
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     meta = metaAnswer(aggregation)
@@ -116,7 +120,7 @@ final class VtMetaScanBuilder(spark: SparkSession, vt: VersionedTable,
     // file skipping, commit-log statistics) around the delegate's readers
     case None if delegateAggPushed => delegate.build()
     case None =>
-      new VtDfScan(spark, vt, commit, dataFilters, delegate.build(), branch,
+      new VtDfScan(spark, root, commit, vt, dataFilters, delegate.build(), branch,
         options, logOf)
   }
 }
@@ -214,20 +218,27 @@ final class VtMetaAggScan(schema: StructType, row: InternalRow, commit: Commit)
     s"VtMetaAggScan v${commit.version} (commit-log metadata, zero file reads)"
 }
 
-/** Machinery shared by the native vt scans ([[VtDfScan]], [[VtMorScan]]):
-  * the LIVE file list (statically stats-pruned, shrunk further by runtime
-  * filters), the join-driven dynamic-file-skipping contract, memoized
-  * per-file sizes, the per-file split planner, and the commit-log row
-  * statistics — one implementation, so a fix to the pruning or packing
-  * rules can never diverge between the two scan shapes. */
+/** Machinery shared by the batch scans ([[VtDfScan]], [[VtMorScan]]) over
+  * native commits and foreign Delta replays: the LIVE file list
+  * (statically stats-pruned, shrunk further by runtime filters), the
+  * join-driven dynamic-file-skipping contract, memoized per-file sizes,
+  * the per-file split planner, and the commit-log row statistics — one
+  * implementation, so a fix to the pruning or packing rules can never
+  * diverge between scan shapes or table kinds. */
 private[sources] trait VtRuntimePrunedScan
     extends Scan with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 
   protected def spark: SparkSession
-  protected def vt: VersionedTable
+  protected def root: java.nio.file.Path
   protected def commit: Commit
+  /** The table handle, where one exists (bloom probes, streams). */
+  protected def vt: Option[VersionedTable]
+  protected def branch: String
+  protected def options: CaseInsensitiveStringMap
   /** The planning-time stats-pruned file list. */
   protected def staticFiles: Vector[String]
+
+  protected final lazy val bloom = VtPruning.bloomOf(vt, commit)
 
   // seeded on first read (never during trait init, where a subclass
   // constructor val behind staticFiles might not be assigned yet)
@@ -260,48 +271,46 @@ private[sources] trait VtRuntimePrunedScan
   }
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    val v1 = predicates.flatMap(Dsv2Shim.toV1(_).toSeq)
-    val (bounds, nulls) = StatsWindows.fromFilters(v1.toSeq)
-    val probes = v1.toSeq.flatMap(StatsWindows.filterPointProbes).toList
-    val bloom = if (probes.isEmpty) VtPruning.NoBloom else vt.bloomLookup(commit)
-    if (bounds.nonEmpty || nulls.nonEmpty || probes.nonEmpty)
-      shrunk = liveFiles.filter(VtPruning.survives(commit, _, bounds, nulls, probes, bloom))
+    val v1 = predicates.flatMap(Dsv2Shim.toV1(_).toSeq).toSeq
+    val (bounds, nulls) = StatsWindows.fromFilters(v1)
+    shrunk = VtPruning.prune(commit, liveFiles, bounds, nulls,
+      v1.flatMap(StatsWindows.filterPointProbes).toList, bloom)
   }
 
   /** Per-file byte sizes, memoized over the static list — the commit log
-    * carries them, so only pre-`fileSizes` history pays a real stat call
-    * (and exactly once, not per planning round). */
+    * carries them, so only files without a recorded size pay a real stat
+    * call (and exactly once, not per planning round). */
   protected final lazy val sizeOf: Map[String, Long] = staticFiles.map { f =>
-    f -> commit.fileSizes.getOrElse(f, java.nio.file.Files.size(vt.root.resolve(f)))
+    f -> commit.fileSizes.getOrElse(f, java.nio.file.Files.size(root.resolve(f)))
   }.toMap
   protected final def totalBytes: Long = liveFiles.iterator.map(sizeOf).sum
 
-  /** One [[PartitionedFile]] per ≤ `maxSplit` chunk of `rel` — row indexes
-    * (where requested) are file-absolute, so chunking is always safe. */
-  protected final def splitsOf(rel: String, maxSplit: Long): Seq[PartitionedFile] =
-    VtSplits.of(vt, rel, sizeOf(rel), maxSplit)
+  /** One [[PartitionedFile]] per ≤ `maxSplit` chunk of `rel` — the one
+    * per-file split planner of the batch scans and, through [[VtMorScan]],
+    * the micro-batch stream. Row indexes (where requested) are
+    * file-absolute, so chunking is always safe. */
+  protected final def splitsOf(rel: String, maxSplit: Long): Seq[PartitionedFile] = {
+    val size = sizeOf(rel)
+    val path = SparkPath.fromPath(VtFileIndex.pathOf(root, rel))
+    (0L until size by maxSplit).map(start =>
+      PartitionedFile(InternalRow.empty, path, start,
+        math.min(maxSplit, size - start), Array.empty, 0L, size, Map.empty))
+  }
 
   /** Live-row count from the commit log, when every live file logged one. */
   protected final def rowCountStat: OptionalLong =
     if (liveFiles.forall(commit.rowCounts.contains))
       OptionalLong.of(liveFiles.iterator.map(commit.rowCounts).sum)
     else OptionalLong.empty()
-}
 
-/** The one per-file split planner shared by the native batch scans, the
-  * micro-batch stream ([[VtMicroBatchStream]]) and the foreign-Delta scan
-  * ([[DeltaDfScan]]) — row indexes are file-absolute, so byte-range
-  * chunking is always safe; a fix to the packing rule lands everywhere. */
-private[sources] object VtSplits {
-  def of(vt: VersionedTable, rel: String, size: Long, maxSplit: Long): Seq[PartitionedFile] =
-    ofPath(vt.root.resolve(rel), size, maxSplit)
-
-  def ofPath(abs: java.nio.file.Path, size: Long, maxSplit: Long): Seq[PartitionedFile] = {
-    val path = SparkPath.fromPath(new HPath(abs.toUri))
-    (0L until size by maxSplit).map(start =>
-      PartitionedFile(InternalRow.empty, path, start,
-        math.min(maxSplit, size - start), Array.empty, 0L, size, Map.empty))
-  }
+  /** The stream over this scan's snapshot, where the table handle exists
+    * (`spark.readStream.table(...)`, [[VtMicroBatchStream]]); this scan's
+    * pruned readSchema pins the stream's column set. */
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new VtMicroBatchStream(spark, vt.getOrElse(throw new UnsupportedOperationException(
+      s"${description()}: a foreign Delta snapshot serves batch reads only")),
+      branch, commit, readSchema(), options)
 }
 
 /** NATIVE batch for DV-FREE snapshots (r18): the delegate [[ParquetScan]]
@@ -316,11 +325,11 @@ private[sources] object VtSplits {
   * the per-file stats (dynamic file pruning). Spark's own `FileScan`
   * runtime-filters only PARTITION columns, which a versioned table does
   * not have; per-file stats are its partition pruning. */
-final class VtDfScan(protected val spark: SparkSession, protected val vt: VersionedTable,
-                     protected val commit: Commit,
+final class VtDfScan(protected val spark: SparkSession, protected val root: java.nio.file.Path,
+                     protected val commit: Commit, protected val vt: Option[VersionedTable],
                      dataFilters: Seq[Expression], parquet: ParquetScan,
-                     branch: String = "main",
-                     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+                     protected val branch: String,
+                     protected val options: CaseInsensitiveStringMap,
                      // physical→logical column names for mapped snapshots
                      // (r20): the delegate reads physical-named parquet;
                      // Spark binds the batch's columns POSITIONALLY against
@@ -328,27 +337,16 @@ final class VtDfScan(protected val spark: SparkSession, protected val vt: Versio
                      nameMap: Map[String, String] = Map.empty)
     extends Batch with SupportsReportStatistics with VtRuntimePrunedScan {
 
-  protected val staticFiles: Vector[String] = {
-    // dataFilters and the commit are both LOGICAL-keyed here — the builder
-    // keeps this scan's pruning inputs in the query's own name space
-    val bounds = dataFilters.flatMap(StatsWindows.windows).toList
-    val nulls = dataFilters.flatMap(StatsWindows.nullWindows).toList
-    val probes = dataFilters.flatMap(StatsWindows.pointProbes).toList
-    val bloom = if (probes.isEmpty) VtPruning.NoBloom else vt.bloomLookup(commit)
-    commit.files.filter(VtPruning.survives(commit, _, bounds, nulls, probes, bloom))
-  }
+  // dataFilters and the commit are both LOGICAL-keyed here — the builder
+  // keeps this scan's pruning inputs in the query's own name space
+  protected lazy val staticFiles: Vector[String] =
+    VtPruning.pruneExprs(commit, commit.files, dataFilters, bloom)
 
   override def readSchema(): StructType =
     if (nameMap.isEmpty) parquet.readSchema()
     else StructType(parquet.readSchema().fields.map(f =>
       f.copy(name = nameMap.getOrElse(f.name, f.name))))
   override def toBatch: Batch = this
-  /** `spark.readStream.table(...)` — snapshot-then-tail over the commit
-    * log ([[VtMicroBatchStream]]); this scan's pruned readSchema pins the
-    * stream's column set. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new VtMicroBatchStream(spark, vt, branch, commit, readSchema(), options)
   override def description(): String =
     s"VtDfScan v${commit.version} files=${liveFiles.size}/${commit.files.size} " +
       s"PushedFilters: [${parquet.pushedFilters.mkString(", ")}]"
@@ -376,9 +374,11 @@ final class VtDfScan(protected val spark: SparkSession, protected val vt: Versio
   * is a real [[Batch]] whose reader factory applies the deletion vector
   * BELOW everything — see [[VtMorScan]]. Every pushed conjunct is also
   * returned as residual (the `FileScanBuilder` rule), so correctness
-  * never depends on the translation. */
-final class VtMorScanBuilder(spark: SparkSession, vt: VersionedTable,
+  * never depends on the translation. Serves foreign Delta replays too
+  * (`vt = None`: no metadata answers, bloom probes or stream). */
+final class VtMorScanBuilder(spark: SparkSession, root: java.nio.file.Path,
                              commit: Commit, tableSchema: StructType,
+                             vt: Option[VersionedTable],
                              branch: String = "main",
                              options: CaseInsensitiveStringMap =
                                CaseInsensitiveStringMap.empty())
@@ -388,7 +388,8 @@ final class VtMorScanBuilder(spark: SparkSession, vt: VersionedTable,
   private val rowIdx = Dsv2Shim.rowIndexField
   private val dataWithIdx = StructType(tableSchema.fields :+ rowIdx)
   private val delegate =
-    ParquetScanBuilder(spark, new VtFileIndex(spark, vt, commit),
+    ParquetScanBuilder(spark,
+      new VtFileIndex(spark, root, commit, VtPruning.bloomOf(vt, commit)),
       dataWithIdx, dataWithIdx, CaseInsensitiveStringMap.empty())
   private var dataFilters: Seq[Expression] = Nil
   private var required: StructType = tableSchema
@@ -412,7 +413,7 @@ final class VtMorScanBuilder(spark: SparkSession, vt: VersionedTable,
     * asks for complete pushdown BEFORE pushing, so both calls compute the
     * (pure) answer. */
   private def metaAnswer(agg: Aggregation): Option[(StructType, InternalRow)] =
-    if (dataFilters.nonEmpty) None else VtExact.metaAnswer(vt, commit, tableSchema, agg)
+    vt.filter(_ => dataFilters.isEmpty).flatMap(VtExact.metaAnswer(_, commit, tableSchema, agg))
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     meta = metaAnswer(aggregation)
@@ -426,13 +427,8 @@ final class VtMorScanBuilder(spark: SparkSession, vt: VersionedTable,
     case Some((schema, row)) => new VtMetaAggScan(schema, row, commit)
     case None =>
       delegate.pruneColumns(StructType(required.fields :+ rowIdx))
-      val bounds = dataFilters.flatMap(StatsWindows.windows).toList
-      val nulls = dataFilters.flatMap(StatsWindows.nullWindows).toList
-      val probes = dataFilters.flatMap(StatsWindows.pointProbes).toList
-      val bloom = if (probes.isEmpty) VtPruning.NoBloom else vt.bloomLookup(commit)
-      val pruned = commit.files.filter(VtPruning.survives(commit, _, bounds, nulls, probes, bloom))
-      new VtMorScan(spark, vt, commit, pruned, required, delegate.build(),
-        branch, options)
+      new VtMorScan(spark, root, commit, vt, dataFilters, required,
+        delegate.build(), branch, options)
   }
 }
 
@@ -453,26 +449,23 @@ final class VtMorScanBuilder(spark: SparkSession, vt: VersionedTable,
   * materializes the deletion set: a 100 TB table with 1% deletions is
   * tens of GB of positions. At 100 TB: a point read touches one file
   * split, the DV subtraction costs log(deletions-in-that-file) per row,
-  * and DV bytes move only to the tasks that need them. */
-final class VtMorScan(protected val spark: SparkSession, protected val vt: VersionedTable,
-                      protected val commit: Commit,
-                      pruned: Vector[String], outSchema: StructType,
+  * and DV bytes move only to the tasks that need them. The micro-batch
+  * stream plans each batch through this scan too. */
+final class VtMorScan(protected val spark: SparkSession, protected val root: java.nio.file.Path,
+                      protected val commit: Commit, protected val vt: Option[VersionedTable],
+                      dataFilters: Seq[Expression], outSchema: StructType,
                       parquet: ParquetScan,
-                      branch: String = "main",
-                      options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+                      protected val branch: String,
+                      protected val options: CaseInsensitiveStringMap)
     extends Batch with SupportsReportStatistics with VtRuntimePrunedScan {
 
-  protected def staticFiles: Vector[String] = pruned
+  protected lazy val staticFiles: Vector[String] =
+    VtPruning.pruneExprs(commit, commit.files, dataFilters, bloom)
 
   override def readSchema(): StructType = outSchema
   override def toBatch: Batch = this
-  /** `spark.readStream.table(...)` on a DV-carrying head: the stream's
-    * initial snapshot applies the deletion vectors per task, then tails. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new VtMicroBatchStream(spark, vt, branch, commit, readSchema(), options)
   override def description(): String =
-    s"VtMorScan v${commit.version} files=${pruned.size}/${commit.files.size} " +
+    s"VtMorScan v${commit.version} files=${liveFiles.size}/${commit.files.size} " +
       s"dv=${commit.dvs.size}"
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -482,8 +475,8 @@ final class VtMorScan(protected val spark: SparkSession, protected val vt: Versi
       // splits of ONE file per partition: row indexes are file-absolute,
       // so each split filters against the same per-file position set
       splitsOf(rel, maxSplit).foreach { pf =>
-        parts += DeltaMorInputPartition(FilePartition(parts.length, Array(pf)),
-          vt.root.toString, commit.dvs.get(rel))
+        parts += MorInputPartition(FilePartition(parts.length, Array(pf)),
+          root.toString, commit.dvs.get(rel))
       }
     }
     parts.toArray
@@ -492,7 +485,7 @@ final class VtMorScan(protected val spark: SparkSession, protected val vt: Versi
   override def createReaderFactory(): PartitionReaderFactory =
     // Spark refuses mixed row/columnar partitions, so columnar is a
     // whole-scan decision: only when NO live file carries deletions
-    new DeltaMorReaderFactory(parquet.createReaderFactory(), outSchema,
+    new MorReaderFactory(parquet.createReaderFactory(), outSchema,
       allColumnar = !liveFiles.exists(commit.dvs.contains))
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -502,6 +495,73 @@ final class VtMorScan(protected val spark: SparkSession, protected val vt: Versi
       if (!base.isPresent) base
       else OptionalLong.of(base.getAsLong - liveFiles.iterator.map(f =>
         commit.dvs.get(f).map(_.cardinality).getOrElse(0L)).sum)
+    }
+  }
+}
+
+/** One single-file split + its file's DV DESCRIPTOR (None when the file
+  * is deletion-free) — a foreign Delta add action's or a native manifest
+  * entry's, the same struct — and the root a relative descriptor resolves
+  * against. The positions are decoded by the task itself from the roaring
+  * bitmap, never shipped from the driver. */
+private[sources] final case class MorInputPartition(
+    files: FilePartition, rootDir: String,
+    dv: Option[DeletionVectors.DvDescriptor]) extends InputPartition {
+  override def preferredLocations(): Array[String] = files.preferredLocations()
+}
+
+/** Wraps the parquet readers: emit only rows whose file-absolute index
+  * (the generated last column) is not in the task-decoded deletion set;
+  * columnar passthrough when the whole scan is deletion-free. Serves
+  * [[VtMorScan]] over native and foreign snapshots and the micro-batch
+  * stream alike. */
+private[sources] final class MorReaderFactory(
+    delegate: PartitionReaderFactory, outSchema: StructType,
+    allColumnar: Boolean) extends PartitionReaderFactory {
+  private val n = outSchema.length
+
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    allColumnar && delegate.supportColumnarReads(
+      partition.asInstanceOf[MorInputPartition].files)
+
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val mp = partition.asInstanceOf[MorInputPartition]
+    require(mp.dv.isEmpty, "columnar MOR read planned for a partition with deletions")
+    val inner = delegate.createColumnarReader(mp.files)
+    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+      override def next(): Boolean = inner.next()
+      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
+        val b = inner.get()
+        new org.apache.spark.sql.vectorized.ColumnarBatch(
+          Array.tabulate(n)(b.column), b.numRows())
+      }
+      override def close(): Unit = inner.close()
+    }
+  }
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val mp = partition.asInstanceOf[MorInputPartition]
+    val inner = delegate.createReader(mp.files)
+    val proj = ProjectingInternalRow(outSchema, (0 until n).toIndexedSeq)
+    new PartitionReader[InternalRow] {
+      // decoded lazily INSIDE the task; deletion-free files skip it
+      private lazy val deleted: Array[Long] =
+        mp.dv.map(DeletionVectors.positions(mp.rootDir, _))
+          .getOrElse(Array.emptyLongArray)
+      override def next(): Boolean = {
+        while (inner.next()) {
+          val r = inner.get()
+          if (deleted.length == 0 ||
+              java.util.Arrays.binarySearch(deleted, r.getLong(n)) < 0) {
+            proj.project(r)
+            return true
+          }
+        }
+        false
+      }
+      override def get(): InternalRow = proj
+      override def close(): Unit = inner.close()
     }
   }
 }

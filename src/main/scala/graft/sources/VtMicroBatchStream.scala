@@ -3,9 +3,6 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.graft.Dsv2Shim
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -73,9 +70,9 @@ private[sources] object VtStreamOffset {
   *    batch with a restart instruction instead of null-filling.
   *
   * Scale shape: the driver touches O(versions) commit records per batch —
-  * never rows; partitions are the same per-file splits the native batch
-  * scans plan, readers are Spark's vectorized parquet readers behind
-  * [[DeltaMorReaderFactory]] (columnar passthrough when the batch carries no
+  * never rows; each batch plans through [[VtMorScan]] — the same per-file
+  * splits, Spark's vectorized parquet readers behind
+  * [[MorReaderFactory]] (columnar passthrough when the batch carries no
   * deletion vectors, per-task DV loading when it does — cherry-picked
   * commits can add files with transplanted DVs), `maxVersionsPerTrigger`
   * bounds tail catch-up after downtime, and `maxFilesPerTrigger` (Delta's
@@ -270,39 +267,23 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
           (c, added)
         }
       }
-    val allFiles = emitted.flatMap(_._2)
-    val sizeOf: Map[String, Long] = emitted.flatMap { case (c, fs) =>
-      fs.map(f => f -> c.fileSizes.getOrElse(f,
-        java.nio.file.Files.size(vt.root.resolve(f))))
-    }.toMap
-    // reader factory over THIS batch's files, with the stream's pinned
-    // schema: Spark's own vectorized parquet readers + the generated
-    // row-index column, deletion vectors (when any) subtracted per task —
-    // the exact machinery of the native MOR batch scan
-    val rowIdx = Dsv2Shim.rowIndexField
-    val withIdx = StructType(pinnedSchema.fields :+ rowIdx)
-    val synth = startCommit.copy(files = allFiles, fileSizes = sizeOf,
-      dvs = Map.empty, stats = Map.empty, strStats = Map.empty,
-      nullStats = Map.empty, bloomStats = Map.empty, bloomFiles = Vector.empty)
-    val delegate = ParquetScanBuilder(spark, new VtFileIndex(spark, vt, synth),
-      withIdx, withIdx, CaseInsensitiveStringMap.empty())
-    delegate.pruneColumns(StructType(streamSchema.fields :+ rowIdx))
-    val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var anyDv = false
-    val maxSplit = math.max(1L,
-      FilePartition.maxSplitBytes(spark, allFiles.iterator.map(sizeOf).sum))
-    emitted.foreach { case (c, fs) =>
-      fs.foreach { rel =>
-        val dv = c.dvs.get(rel)
-        anyDv |= dv.isDefined
-        VtSplits.of(vt, rel, sizeOf(rel), maxSplit).foreach { pf =>
-          parts += DeltaMorInputPartition(FilePartition(parts.length, Array(pf)),
-            vt.root.toString, dv)
-        }
-      }
-    }
-    factory = new DeltaMorReaderFactory(delegate.build().createReaderFactory(),
-      streamSchema, allColumnar = !anyDv)
-    parts.toArray
+    // the batch is a snapshot of its own — the emitted files, their sizes
+    // and the descriptors of the commits that introduced them, without
+    // stats — planned by the native MOR scan's partition planner and
+    // reader factory: Spark's vectorized parquet readers, per-file splits,
+    // deletion vectors (when any) subtracted per task
+    val synth = startCommit.copy(files = emitted.flatMap(_._2),
+      fileSizes = emitted.flatMap { case (c, fs) =>
+        fs.map(f => f -> c.fileSizes.getOrElse(f,
+          java.nio.file.Files.size(vt.root.resolve(f))))
+      }.toMap,
+      dvs = emitted.flatMap { case (c, fs) => fs.flatMap(f => c.dvs.get(f).map(f -> _)) }.toMap,
+      stats = Map.empty, strStats = Map.empty, nullStats = Map.empty,
+      bloomStats = Map.empty, bloomFiles = Vector.empty)
+    val builder = new VtMorScanBuilder(spark, vt.root, synth, pinnedSchema, None)
+    builder.pruneColumns(streamSchema)
+    val batch = builder.build().toBatch
+    factory = batch.createReaderFactory()
+    batch.planInputPartitions()
   }
 }

@@ -352,15 +352,23 @@ object DeletionVectors {
     if (dv.storageType != "u") None
     else dvFile(java.nio.file.Paths.get(""), dv).map(_.toString)
 
-  // Memoized decode per (table root, descriptor): every split of a file,
-  // and every read of one snapshot in a JVM, shares one decode. Inline
-  // descriptors never touch the filesystem.
-  private val positionCache = new BoundedCache[(String, DvDescriptor), Array[Long]](256)
+  // Memoized decode per (table root, descriptor, file stamp): every split
+  // of a file, and every read of one snapshot in a JVM, shares one decode.
+  // A file-backed vector's key carries its file's modification time, so a
+  // file changed in place is decoded (and checksummed) afresh, the rule
+  // the footer cache follows; inline descriptors never touch the
+  // filesystem.
+  private val positionCache =
+    new BoundedCache[(String, DvDescriptor, Option[java.nio.file.attribute.FileTime]),
+      Array[Long]](256)
 
   /** Sorted distinct deleted positions of `dv`, memoized — the one
     * position loader of the native and foreign-Delta merge-on-read
     * readers, executor- or driver-side. */
-  def positions(tableRoot: String, dv: DvDescriptor): Array[Long] =
-    positionCache.get((tableRoot, dv))(
-      readPositions(java.nio.file.Paths.get(tableRoot), dv).distinct.sorted.toArray)
+  def positions(tableRoot: String, dv: DvDescriptor): Array[Long] = {
+    val root = java.nio.file.Paths.get(tableRoot)
+    val stamp = dvFile(root, dv).filter(Files.exists(_)).map(Files.getLastModifiedTime(_))
+    positionCache.get((tableRoot, dv, stamp))(
+      readPositions(root, dv).distinct.sorted.toArray)
+  }
 }

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, concat_ws, lit, slice, split}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
 
 /** READ-ONLY replayer for the open Delta Lake transaction-log format — lets
   * this engine open the reference's actual output tables (`jobs/vdt4.py:39-45`
@@ -565,48 +565,68 @@ object DeltaLogReader {
   private def decodePath(p: String): String =
     if (p.contains("://")) p else new java.net.URI(p).getPath
 
-  /** Add-action stats → the commit log's quadrants, for zero-copy IMPORT
-    * ([[VersionedTable.shallowCloneFromDelta]]): per-file NUMERIC min/max,
-    * null counts, and row counts, keyed by `abs(path)`. Only numeric
-    * columns import — Delta's numeric stats are exact, while its STRING
-    * stats may be truncated envelopes (sound for pruning, but vt's
-    * metadata MIN/MAX treats `strStats` as exact answers, so importing
-    * them could surface a padded maximum as a query result). A column
-    * missing from a file's stats simply has no entry; every vt prune path
-    * keeps files with missing stats. */
-  private[vt] def vtStatsOf(snap: DeltaSnapshot, abs: String => String)
-      : (Map[String, Map[String, (Double, Double)]],
-         Map[String, Map[String, Long]],
-         Map[String, Long]) = {
-    val numericCols = snap.schema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-    }.toSet
-    val mm = Map.newBuilder[String, Map[String, (Double, Double)]]
-    val nulls = Map.newBuilder[String, Map[String, Long]]
-    val counts = Map.newBuilder[String, Long]
-    snap.files.foreach { f =>
-      f.stats.foreach { s =>
-        val node = mapper.readTree(s)
-        val mins = node.path("minValues")
-        val maxs = node.path("maxValues")
-        val fileMm = numericCols.flatMap { c =>
-          (Option(mins.get(c)), Option(maxs.get(c))) match {
-            case (Some(mn), Some(mx)) if mn.isNumber && mx.isNumber =>
-              Some(c -> (mn.asDouble(), mx.asDouble()))
-            case _ => None
-          }
-        }.toMap
-        if (fileMm.nonEmpty) mm += abs(f.path) -> fileMm
-        val nc = node.path("nullCount")
-        val fileNulls = snap.schema.fieldNames.flatMap { c =>
-          Option(nc.get(c)).filter(_.isNumber).map(c -> _.asLong())
-        }.toMap
-        if (fileNulls.nonEmpty) nulls += abs(f.path) -> fileNulls
-        if (node.hasNonNull("numRecords"))
-          counts += abs(f.path) -> node.get("numRecords").asLong()
+  /** The snapshot in the shape the native scans read — a [[Commit]] whose
+    * `files` are the adds' decoded paths (root-relative, or absolute),
+    * `fileSizes` their sizes, `rowCounts` their `numRecords`, `dvs` their
+    * vectors, and whose `stats` / `strStats` / `nullStats` come from each
+    * add's stats JSON, parsed once here and keyed by LOGICAL column name
+    * (stats keys are physical in column-mapped tables). Numeric columns
+    * keep numeric bounds and string columns textual ones (delta-spark may
+    * truncate those, which only widens the envelope). A partition value is
+    * its file's `(v, v)` stat — numeric when the column is not a string
+    * and the value parses, textual otherwise — with null count 0, and a
+    * null partition value is a null count equal to the file's rows, so
+    * partition values prune through the same survival test as stats. */
+  private[graft] def asCommit(snap: DeltaSnapshot): Commit = {
+    val partSet = snap.partitionColumns.toSet
+    val num = Map.newBuilder[String, Map[String, (Double, Double)]]
+    val str = Map.newBuilder[String, Map[String, (String, String)]]
+    val nul = Map.newBuilder[String, Map[String, Long]]
+    val rowCounts = Map.newBuilder[String, Long]
+    snap.files.foreach { fe =>
+      val st = fe.stats.map(mapper.readTree).getOrElse(mapper.createObjectNode())
+      val rows = Some(st.path("numRecords")).filter(_.isNumber).map(_.asLong())
+      rows.foreach(rowCounts += fe.path -> _)
+      val fn = Map.newBuilder[String, (Double, Double)]
+      val fs = Map.newBuilder[String, (String, String)]
+      val fnul = Map.newBuilder[String, Long]
+      snap.schema.fields.foreach { f =>
+        val part = if (partSet(f.name) || partSet(physName(f)))
+          fe.partitionValues.get(physName(f)).orElse(fe.partitionValues.get(f.name))
+        else None
+        part match {
+          case Some(v) if v == null || v.isEmpty => rows.foreach(fnul += f.name -> _)
+          case Some(v) =>
+            fnul += f.name -> 0L
+            v.toDoubleOption.filter(_ => f.dataType != StringType) match {
+              case Some(d) => fn += f.name -> (d, d)
+              case None => fs += f.name -> (v, v)
+            }
+          case None =>
+            def quad(q: String): JsonNode = {
+              val byPhys = st.path(q).path(physName(f))
+              if (byPhys.isMissingNode) st.path(q).path(f.name) else byPhys
+            }
+            val (mn, mx, nc) = (quad("minValues"), quad("maxValues"), quad("nullCount"))
+            f.dataType match {
+              case _: NumericType if mn.isNumber && mx.isNumber =>
+                fn += f.name -> (mn.asDouble(), mx.asDouble())
+              case StringType if mn.isTextual && mx.isTextual =>
+                fs += f.name -> (mn.asText(), mx.asText())
+              case _ =>
+            }
+            if (nc.isNumber) fnul += f.name -> nc.asLong()
+        }
       }
+      Seq(fn.result()).filter(_.nonEmpty).foreach(num += fe.path -> _)
+      Seq(fs.result()).filter(_.nonEmpty).foreach(str += fe.path -> _)
+      Seq(fnul.result()).filter(_.nonEmpty).foreach(nul += fe.path -> _)
     }
-    (mm.result(), nulls.result(), counts.result())
+    Commit(s"delta-v${snap.version}", None, snap.version, snap.files.map(_.path),
+      snap.schema.json, "", 0L, stats = num.result(), strStats = str.result(),
+      nullStats = nul.result(), rowCounts = rowCounts.result(),
+      dvs = snap.files.flatMap(f => f.dv.map(f.path -> _)).toMap,
+      fileSizes = snap.files.collect { case f if f.size >= 0L => f.path -> f.size }.toMap)
   }
 
   // ---- column mapping (PROTOCOL.md §Column Mapping, name + id modes) -----
@@ -920,39 +940,7 @@ object DeltaLogReader {
     require(declared.get.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"readWhere needs a numeric column; '$column' is ${declared.get.simpleString} " +
         "— a double cast on it would yield null and silently drop every row")
-    val physicalName = snap.schema.fields.find(_.name == column).map(physName)
-    // a PARTITION column's values live in partitionValues, not in stats:
-    // prune by the literal value instead (Delta's partition pruning)
-    val isPartCol = snap.partitionColumns.contains(column) ||
-      physicalName.exists(snap.partitionColumns.contains)
-    val keep = snap.files.filter { f =>
-      if (isPartCol) {
-        val raw = physicalName.flatMap(f.partitionValues.get)
-          .orElse(f.partitionValues.get(column))
-        raw match {
-          case None => true // no recorded value: conservative keep
-          case Some(v) if v == null || v.isEmpty => false // null can't BETWEEN
-          case Some(v) => v.toDoubleOption.forall(d => d >= lower && d <= upper)
-        }
-      } else f.stats match {
-        case None => true
-        case Some(s) =>
-          val node = mapper.readTree(s)
-          def field(quad: String): Option[JsonNode] =
-            (Seq(column) ++ physicalName).iterator
-              .map(n => node.path(quad).get(n)).find(v => v != null && v.isNumber)
-          val allNull = {
-            val nulls = field("nullCount").filter(_ => node.has("numRecords"))
-            nulls.exists(_.asLong() == node.get("numRecords").asLong())
-          }
-          if (allNull) false // BETWEEN can't match an all-null column
-          else (field("minValues"), field("maxValues")) match {
-            case (Some(mn), Some(mx)) => mx.asDouble() >= lower && mn.asDouble() <= upper
-            case _ => true
-          }
-      }
-    }
-    readSnapshot(spark, tableRoot, snap.copy(files = keep))
+    readKept(spark, tableRoot, snap, column, Left(List((lower, upper))))
       .where(col(column).cast("double").between(lower, upper))
   }
 
@@ -972,41 +960,17 @@ object DeltaLogReader {
       s"no such column '$column' in ${snap.schema.fieldNames.mkString(", ")}")
     require(declared.get == org.apache.spark.sql.types.StringType,
       s"readWhereString needs a string column; '$column' is ${declared.get.simpleString}")
-    val physicalName = snap.schema.fields.find(_.name == column).map(physName)
-    val isPartCol = snap.partitionColumns.contains(column) ||
-      physicalName.exists(snap.partitionColumns.contains)
-    val keep = snap.files.filter { f =>
-      if (isPartCol) {
-        val raw = physicalName.flatMap(f.partitionValues.get)
-          .orElse(f.partitionValues.get(column))
-        raw match {
-          case None => true
-          case Some(v) if v == null || v.isEmpty => false
-          case Some(v) => VersionedTable.utf8Cmp(v, lower) >= 0 &&
-            VersionedTable.utf8Cmp(v, upper) <= 0
-        }
-      } else f.stats match {
-        case None => true
-        case Some(s) =>
-          val node = mapper.readTree(s)
-          def field(quad: String): Option[JsonNode] =
-            (Seq(column) ++ physicalName).iterator
-              .map(n => node.path(quad).get(n)).find(_ != null)
-          val allNull = field("nullCount").filter(_.isNumber)
-            .filter(_ => node.has("numRecords"))
-            .exists(_.asLong() == node.get("numRecords").asLong())
-          if (allNull) false
-          else (field("minValues").filter(_.isTextual),
-              field("maxValues").filter(_.isTextual)) match {
-            case (Some(mn), Some(mx)) =>
-              VersionedTable.utf8Cmp(mx.asText(), lower) >= 0 &&
-                VersionedTable.utf8Cmp(mn.asText(), upper) <= 0
-            case _ => true
-          }
-      }
-    }
-    readSnapshot(spark, tableRoot, snap.copy(files = keep))
+    readKept(spark, tableRoot, snap, column, Right(List((lower, upper))))
       .where(col(column).between(lower, upper))
+  }
+
+  /** The snapshot's replay over the adds whose stats (or partition value)
+    * can hold a row of `column` inside the window. */
+  private def readKept(spark: SparkSession, tableRoot: String, snap: DeltaSnapshot,
+      column: String, window: Either[List[(Double, Double)], List[(String, String)]])
+      : DataFrame = {
+    val keep = VersionedTable.keptIn(asCommit(snap), column, window).toSet
+    readSnapshot(spark, tableRoot, snap.copy(files = snap.files.filter(f => keep(f.path))))
   }
 
   /** Delta CDF's `startingTimestamp` / `endingTimestamp` resolution: the
@@ -1036,8 +1000,8 @@ object DeltaLogReader {
 
   /** Replay a PINNED snapshot (possibly with a pruned file subset — the
     * fallback relation's skipping path) into a DataFrame. Package-visible
-    * so [[graft.sources.DeltaLiteMorRelation]] can serve a stats-pruned
-    * file list through the same machinery. */
+    * so [[graft.sources.ReplayRelation]] can serve a stats-pruned file list
+    * through the same machinery. */
   private[graft] def readPinnedSnapshot(spark: SparkSession, tableRoot: String,
                                         snap: DeltaSnapshot): DataFrame =
     readSnapshot(spark, tableRoot, snap)
@@ -1090,110 +1054,25 @@ object DeltaLogReader {
         val v = if (raw == null || raw.isEmpty) lit(null) else lit(raw)
         d.withColumn(f.name, v.cast(f.dataType))
       }
-    val (dvFiles, plain) = snap.files.partition(_.dv.isDefined)
-    if (dvFiles.isEmpty && partFields.isEmpty)
-      return renameToLogical(
-        scanSession.read.schema(fileSchema).parquet(snap.files.map(f => abs(f.path)): _*))
-    val plainScans = plain.groupBy(_.partitionValues).toSeq.map { case (pv, group) =>
-      withPartCols(renameToLogical(
-        scanSession.read.schema(fileSchema).parquet(group.map(f => abs(f.path)): _*)), pv)
+    // deletion vectors: one filter per scan drops a row whose position its
+    // file's descriptor marks — keyed by the decoded absolute file path, so
+    // same-named files in different directories never share a vector —
+    // each task decoding only the vectors of the files it reads
+    // ([[VersionedTable.LiveMask]], the filter native merge-on-read uses)
+    def key(p: String): String = if (p.contains("://")) new java.net.URI(p).getPath else p
+    val dvs = snap.files.flatMap(f => f.dv.map(key(abs(f.path)) -> _)).toMap
+    val mask = new VersionedTable.LiveMask(root.toString, dvs)
+    val live = org.apache.spark.sql.functions.udf((fp: String, pos: Long) =>
+      mask.live(new java.net.URI(fp).getPath, pos))
+    def scan(group: Vector[FileEntry]): DataFrame = {
+      val df = scanSession.read.schema(fileSchema).parquet(group.map(f => abs(f.path)): _*)
+      renameToLogical(if (group.forall(_.dv.isEmpty)) df
+        else df.where(live(col("_metadata.file_path"), col("_metadata.row_index"))))
     }
-    // temp row-position column name must not shadow a real table column
-    // (withColumn REPLACES a same-named data column and drop would lose it)
-    var posCol = VersionedTable.PosCol
-    while (fileSchema.fieldNames.contains(posCol)) posCol = "_" + posCol
-    var fkCol = VersionedTable.FkCol
-    while (fileSchema.fieldNames.contains(fkCol)) fkCol = "_" + fkCol
-    // ONE scan + ONE broadcast anti-join for all DV-carrying files of a
-    // partition group (guide §2.4/§3.1): the per-file shape planned one
-    // scan, one broadcast build and one union branch PER FILE — at N files
-    // that is N driver round-trips, N broadcast exchanges and N× the task
-    // launches for the same deleted-position bytes. Rows are matched on
-    // (last-two-path-segments, row_index), the same key the native MOR
-    // scan uses. The driver-side key comes from the DECODED add path while
-    // `_metadata.file_path` is a percent-ENCODED URI — only file names that
-    // are identity under percent-encoding may share a grouped scan; odd
-    // names (spaces, '%', unicode) keep the exact per-file shape.
-    val encodingSafe = "[A-Za-z0-9._=-]+/[A-Za-z0-9._=-]+".r
-    def fileKey(f: FileEntry): String =
-      abs(f.path).split('/').takeRight(2).mkString("/")
-    // driver-side DV position loads are independent per descriptor — load
-    // them in PARALLEL (r22, the commit-footer-prefetch shape): a snapshot
-    // with many DV-carrying files paid one serial read+CRC each at replay
-    // planning. Failures must still surface with their own exception type
-    // (the CRC guard refuses to silently resurrect rows), so the cause is
-    // unwrapped.
-    val dvPositions: Map[String, Vector[Long]] =
-      if (dvFiles.sizeIs <= 2)
-        dvFiles.map(f => f.path -> DeletionVectors.readPositions(root, f.dv.get)).toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, dvFiles.size))
-        try {
-          val futs = dvFiles.map(f => f.path -> pool.submit(
-            new java.util.concurrent.Callable[Vector[Long]] {
-              def call(): Vector[Long] = DeletionVectors.readPositions(root, f.dv.get)
-            }))
-          futs.map { case (p, fut) =>
-            p -> (try fut.get()
-                  catch {
-                    case e: java.util.concurrent.ExecutionException =>
-                      throw e.getCause
-                  })
-          }.toMap
-        } finally { pool.shutdown(); () }
-      }
-    val (groupable0, oddNamed0) = dvFiles.partition(f =>
-      encodingSafe.matches(fileKey(f)))
-    // two adds in DIFFERENT subdirectories can share a last-two-segment key
-    // (a=1/b=2/part-0 vs a=2/b=2/part-0); inside one grouped scan that would
-    // let one file's DV delete the other's rows — colliding keys keep the
-    // exact per-file shape
-    val dupKeys = groupable0.groupBy(f => (f.partitionValues, fileKey(f)))
-      .collect { case (k, fs) if fs.size > 1 => k }.toSet
-    val (groupable, collided) = groupable0.partition(f =>
-      !dupKeys((f.partitionValues, fileKey(f))))
-    val oddNamed = oddNamed0 ++ collided
-    val dvGroupScans = groupable.groupBy(_.partitionValues).toSeq.map {
-      case (pv, group) =>
-        val base = scanSession.read.schema(fileSchema)
-          .parquet(group.map(f => abs(f.path)): _*)
-          .withColumn(posCol, col("_metadata.row_index"))
-        val kept =
-          if (group.size == 1) { // no file-key column needed
-            val positions = dvPositions(group.head.path)
-            if (positions.size <= 1024) base.where(!col(posCol).isin(positions: _*))
-            else {
-              import spark.implicits._
-              base.join(broadcast(positions.toDF(posCol)), Seq(posCol), "left_anti")
-            }
-          } else {
-            import spark.implicits._
-            val pairs = group.flatMap { f =>
-              val key = fileKey(f)
-              dvPositions(f.path).map(p => (key, p))
-            }
-            base.withColumn(fkCol, concat_ws("/",
-                slice(split(col("_metadata.file_path"), "/"), -2, 2)))
-              .join(broadcast(pairs.toDF(fkCol, posCol)),
-                Seq(fkCol, posCol), "left_anti")
-              .drop(fkCol)
-          }
-        withPartCols(renameToLogical(kept.drop(posCol)), pv)
-    }
-    val dvOddScans = oddNamed.map { f =>
-      val positions = dvPositions(f.path)
-      val base = scanSession.read.schema(fileSchema).parquet(abs(f.path))
-        .withColumn(posCol, col("_metadata.row_index"))
-      val kept =
-        if (positions.size <= 1024) base.where(!col(posCol).isin(positions: _*))
-        else {
-          import spark.implicits._
-          base.join(broadcast(positions.toDF(posCol)), Seq(posCol), "left_anti")
-        }
-      withPartCols(renameToLogical(kept.drop(posCol)), f.partitionValues)
-    }
-    (plainScans ++ dvGroupScans ++ dvOddScans).reduce(_ unionByName _)
+    if (partFields.isEmpty) scan(snap.files)
+    else snap.files.groupBy(_.partitionValues).toSeq
+      .map { case (pv, group) => withPartCols(scan(group), pv) }
+      .reduce(_ unionByName _)
       .select(snap.schema.fieldNames.map(col): _*)
   }
 }

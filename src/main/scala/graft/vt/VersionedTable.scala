@@ -2534,13 +2534,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
                 lower: Double, upper: Double): DataFrame = {
     import org.apache.spark.sql.functions.col
     val c = headOrThrow(branch)
-    val keep = c.files.filter { f =>
-      c.stats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => mx >= lower && mn <= upper
-        case None => true
-      }
-    }
-    readCommit(spark, c.copy(files = keep))
+    readCommit(spark, c.copy(files = VersionedTable.keptIn(c, column, Left(List((lower, upper))))))
       .where(col(column).cast("double").between(lower, upper))
   }
 
@@ -2556,15 +2550,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
   def readWhereString(spark: SparkSession, branch: String, column: String,
                       lower: String, upper: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    import VersionedTable.utf8Cmp
     val c = headOrThrow(branch)
-    val keep = c.files.filter { f =>
-      c.strStats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => utf8Cmp(mx, lower) >= 0 && utf8Cmp(mn, upper) <= 0
-        case None => true
-      }
-    }
-    readCommit(spark, c.copy(files = keep))
+    readCommit(spark, c.copy(files = VersionedTable.keptIn(c, column, Right(List((lower, upper))))))
       .where(col(column).between(lower, upper))
   }
 
@@ -3019,7 +3006,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     val droot = java.nio.file.Paths.get(deltaRoot).toAbsolutePath.normalize
     require(droot != root.toAbsolutePath, "SHALLOW CLONE of a table into itself")
     def abs(p: String) = droot.resolve(p).toString
-    val (stats, nullStats, rowCounts) = DeltaLogReader.vtStatsOf(snap, abs)
+    // numeric stats only: delta-spark's string stats may be truncated
+    // envelopes, and the clone's metadata MIN/MAX answers strStats exactly
+    val imported = DeltaLogReader.asCommit(snap)
+    def byAbs[V](m: Map[String, V]): Map[String, V] = m.map { case (f, v) => abs(f) -> v }
     // the source's own CHECK constraints (`delta.constraints.<name>` in the
     // metaData configuration — Delta predicates are Spark SQL) import into
     // the clone's constraint namespace: the source enforced them over the
@@ -3038,12 +3028,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       if (message.nonEmpty) message
       else s"SHALLOW CLONE of Delta table $deltaRoot v${snap.version}",
       snap.schema, snap.files.map(f => abs(f.path)),
-      stats, nullStats = nullStats,
+      byAbs(imported.stats), nullStats = byAbs(imported.nullStats),
       props = Some(importedChecks),
-      seedRowCounts = rowCounts,
-      seedFileSizes = snap.files.collect {
-        case f if f.size >= 0 => abs(f.path) -> f.size
-      }.toMap)
+      seedRowCounts = byAbs(imported.rowCounts),
+      seedFileSizes = byAbs(imported.fileSizes))
   }
 
   /** V5 `merge from into`: fast-forward when `into` hasn't moved since the
@@ -3787,9 +3775,12 @@ object VersionedTable {
       a.files.iterator.filter(f => live(f) && a.dvs.get(f) != b.dvs.get(f)).toSet
     }
 
-  /** Row filter of [[VersionedTable.scanWithPos]]: a row is live unless
-    * its file's descriptor marks its position. Each task deserializes its
-    * own copy and decodes a file's positions once, on its first row. */
+  /** Row filter of [[VersionedTable.scanWithPos]] and the Delta replay
+    * ([[DeltaLogReader]]): a row is live unless its file's descriptor marks
+    * its position. Keys are whatever identifies a file in the scan — the
+    * native file key, or a foreign file's decoded absolute path. Each task
+    * deserializes its own copy and decodes a file's positions once, on its
+    * first row. */
   private[vt] final class LiveMask(root: String,
                                    byKey: Map[String, DeletionVectors.DvDescriptor])
       extends Serializable {
@@ -3806,6 +3797,14 @@ object VersionedTable {
     * deletion vector unchanged (an added file may carry its own). */
   private[graft] def appendOnly(a: Commit, b: Commit): Boolean =
     a.files.toSet.subsetOf(b.files.toSet) && dvChanged(a, b).isEmpty
+
+  /** The files of `c` whose stats can hold a row of `column` inside the
+    * one window — the `readWhere` prune, through the one survival test
+    * ([[graft.sources.VtPruning]]) both table kinds share. */
+  private[graft] def keptIn(c: Commit, column: String,
+      window: Either[List[(Double, Double)], List[(String, String)]]): Vector[String] =
+    graft.sources.VtPruning.prune(c, c.files, List(column -> window), Nil, Nil,
+      graft.sources.VtPruning.NoBloom)
 
   /** The snapshot's live row count from metadata alone — Σ `rowCounts` −
     * Σ deletion-vector cardinality — or None when a file lacks a logged

@@ -60,7 +60,7 @@ class ColumnMappingSpec extends SparkSpec {
     assert(vt.head("main").get.bloomCols === Seq("key"))
     // a point probe on the renamed column still skips to one file
     val probed = vt.read(spark, "main").where($"key" === 3000003L)
-    val rel = new graft.sources.VtMorRelation(
+    val rel = graft.sources.ReplayRelation.native(
       spark.sqlContext, vt, vt.head("main").get)
     val plan = rel.scanPlan(Array("key", "v"),
       Array(org.apache.spark.sql.sources.EqualTo("key", 3000003L)))

@@ -138,6 +138,12 @@ class DeltaLiteSpec extends SparkSpec {
     val dirs = idx.listFiles(Nil, Nil)
     assert(dirs.map(_.files.map(_.getLen).sum).sum === 1234L)
     assert(idx.sizeInBytes === 1234L)
+    // an unpartitioned snapshot plans through the native index over its
+    // replay: the same log-only planning
+    val vtIdx = new graft.sources.VtFileIndex(spark, root.toAbsolutePath.normalize,
+      DeltaLogReader.asCommit(snap), graft.sources.VtPruning.NoBloom)
+    assert(vtIdx.listFiles(Nil, Nil).map(_.files.map(_.getLen).sum).sum === 1234L)
+    assert(vtIdx.sizeInBytes === 1234L)
   }
 
   test("delta-lite serves id-mode column-mapped tables NATIVELY: field ids bind, stats prune") {
@@ -193,8 +199,8 @@ class DeltaLiteSpec extends SparkSpec {
     val q = readDl(vt.root.toString).where($"k".between(12, 18))
     assert(q.select("k").as[Long].collect().sorted === Array(12L, 13, 14, 16, 17, 18))
     // evidence: the pushed window prunes the snapshot's files before any scan
-    val rel = new graft.sources.DeltaLiteMorRelation(spark.sqlContext,
-      vt.root.toString, None)
+    val rel = graft.sources.ReplayRelation.foreign(spark.sqlContext,
+      vt.root.toString, graft.vt.DeltaLogReader.snapshot(vt.root.toString, None, Some(spark)))
     val plan = rel.scanPlan(Array("k"),
       Array(fs.GreaterThanOrEqual("k", 12L), fs.LessThanOrEqual("k", 18L)))
     assert(plan.inputFiles.length === 1,
@@ -226,8 +232,8 @@ class DeltaLiteSpec extends SparkSpec {
     assert(read.where($"bucket" === 1).select("k").as[Long].collect().sorted
       === (1L to 30L).filter(_ % 3 == 1).toArray)
     // pushed partition-column filters prune whole partitionValues groups
-    val rel = new graft.sources.DeltaLiteMorRelation(spark.sqlContext,
-      root.toString, None)
+    val rel = graft.sources.ReplayRelation.foreign(spark.sqlContext,
+      root.toString, graft.vt.DeltaLogReader.snapshot(root.toString, None, Some(spark)))
     assert(rel.scanPlan(Array("k"), Array(fs.EqualTo("bucket", 1)))
       .inputFiles.length === 1)
     assert(rel.scanPlan(Array("k"), Array(fs.In("bucket", Array(0, 2))))
@@ -356,8 +362,8 @@ class DeltaLiteSpec extends SparkSpec {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
       }.get
       assert(scanExec.runtimeFilters.nonEmpty, "the join must inject a runtime filter")
-      assert(scanExec.scan.isInstanceOf[graft.sources.DeltaDfScan],
-        s"native foreign-Delta reads take DeltaDfScan, got ${scanExec.scan}")
+      assert(scanExec.scan.isInstanceOf[graft.sources.VtDfScan],
+        s"native foreign-Delta reads take VtDfScan, got ${scanExec.scan}")
     } finally Files.move(tmp, vt.root.resolve(cFile))
     // SQL time travel through the catalog
     assert(spark.sql(s"SELECT count(*) AS c FROM $t VERSION AS OF 0")
@@ -423,7 +429,7 @@ class DeltaLiteSpec extends SparkSpec {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
       }.get
       assert(scanExec.runtimeFilters.nonEmpty, "the join must inject a runtime filter")
-      assert(scanExec.scan.isInstanceOf[graft.sources.DeltaMorScan],
+      assert(scanExec.scan.isInstanceOf[graft.sources.VtMorScan],
         s"DV-carrying flat exports must take the native MOR batch, got ${scanExec.scan}")
     } finally moved.foreach { case (f, tmp) => Files.move(tmp, vt.root.resolve(f)) }
     // static pushdown into the clean region: stats prune to file C, whose

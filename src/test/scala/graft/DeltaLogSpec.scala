@@ -1248,6 +1248,37 @@ class DeltaLogSpec extends SparkSpec {
       "each file must be filtered by ITS OWN deletion vector only")
   }
 
+  test("DV replay: partitioned adds with colliding keys and odd file names read row-exact") {
+    import graft.vt.DeletionVectors
+    val root = freshRoot("dv_part_odd")
+    Seq("a=1/b=2", "a=2/b=2", "a=1/b=3").foreach(d => Files.createDirectories(root.resolve(d)))
+    def file(rel: String, ks: Seq[Long]) =
+      F.writeDataFile(root, ks.toDF("k").orderBy("k").coalesce(1), rel)._2
+    // a=1/b=2/part-0 and a=2/b=2/part-0 share their last two path segments;
+    // the third file's name carries a space and a '%' (percent-encoded in
+    // the add path, as the protocol requires)
+    val s1 = file("a=1/b=2/part-0", Seq(10L, 11L, 12L, 13L))
+    val s2 = file("a=2/b=2/part-0", Seq(20L, 21L, 22L, 23L))
+    val s3 = file("a=1/b=3/part 1%", Seq(30L, 31L, 32L, 33L))
+    def add(path: String, size: Long, a: Int, b: Int, deleted: Long*) =
+      F.addLine(path, size, Map("a" -> a.toString, "b" -> b.toString),
+        dv = Some(DeletionVectors.inlineDescriptor(deleted)))
+    val schema = Seq((0L, 0, 0)).toDF("k", "a", "b").schema
+    F.writeCommit(root, 0, Seq(F.protocolV3Line(Seq("deletionVectors")),
+      F.metaDataLine(schema.json, Seq("a", "b")),
+      add("a=1/b=2/part-0.parquet", s1, 1, 2, 0L),
+      add("a=2/b=2/part-0.parquet", s2, 2, 2, 3L),
+      add("a=1/b=3/part%201%25.parquet", s3, 1, 3, 1L, 2L)))
+    val want = Seq((11L, 1, 2), (12L, 1, 2), (13L, 1, 2), (20L, 2, 2), (21L, 2, 2),
+      (22L, 2, 2), (30L, 1, 3), (33L, 1, 3))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "a", "b").as[(Long, Int, Int)].collect().toSeq.sorted
+    assert(rows(DeltaLogReader.read(spark, root.toString)) === want,
+      "each file must lose exactly the positions of ITS OWN vector")
+    assert(rows(spark.read.format("delta-lite").option("path", root.toString).load()
+      .where($"a" === 1)) === want.filter(_._2 == 1))
+  }
+
   test("file-based (u) deletion vector: uuid path resolution, CRC verified, corruption loud") {
     import graft.vt.DeletionVectors
     val root = freshRoot("dv_file")
@@ -1266,9 +1297,13 @@ class DeltaLogSpec extends SparkSpec {
     val bytes = Files.readAllBytes(dvFile)
     bytes(7) = (bytes(7) ^ 0x1).toByte // inside the serialized bitmap
     Files.write(dvFile, bytes)
-    val e = intercept[IllegalArgumentException](
+    // the vector is decoded by the task that reads its file, so Spark
+    // reports the refusal as the cause of the failed job
+    val e = intercept[org.apache.spark.SparkException](
       DeltaLogReader.read(spark, root.toString, None).collect())
-    assert(e.getMessage.contains("checksum"))
+    val refusal = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae }
+    assert(refusal.exists(_.getMessage.contains("checksum")), s"no checksum refusal in $e")
   }
 
   test("reader-feature gate: deletionVectors accepted, unknown v3 features refused") {

@@ -83,11 +83,29 @@ class DvDescriptorSpec extends SparkSpec {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("LocalTableScan") && !plan.contains("Exchange") &&
       !plan.contains("BatchScan"), s"COUNT(*) must be answered from metadata: $plan")
-    // the answer is one local row; Spark's alias projection over it is the
-    // only job (no file read, no shuffle), where the aggregate used to run
-    // a partial and a final stage
-    val (sql, sqlJobs) = jobsDuring(q.as[Long].head())
-    assert(sql === scanned && sqlJobs <= 1, s"SQL COUNT(*) ran $sqlJobs job(s)")
+    // the answer is one local row; on a plain session Spark's alias
+    // projection over it is the only job (no file read, no shuffle) ...
+    val (plain, plainJobs) = jobsDuring(q.as[Long].head())
+    assert(plain === scanned && plainJobs <= 1, s"SQL COUNT(*) ran $plainJobs job(s)")
+    // ... and on a GraftExtensions session that projection plans as a
+    // local relation too, so the statement runs no job at all
+    val shared = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val ext = org.apache.spark.sql.SparkSession.builder()
+        .master("local[2]").config("spark.ui.enabled", "false")
+        .withExtensions(new graft.functions.GraftExtensions)
+        .getOrCreate()
+      ext.conf.set("spark.sql.catalog.vt", classOf[graft.sources.VtCatalog].getName)
+      val eq = ext.sql(s"SELECT count(*) FROM vt.`dev@${vt.root}`")
+      assert(eq.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+      val (sql, sqlJobs) = jobsDuring(eq.as[Long].head())
+      assert(sql === scanned && sqlJobs === 0, s"SQL COUNT(*) ran $sqlJobs job(s)")
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
+      org.apache.spark.sql.SparkSession.setActiveSession(shared)
+    }
   }
 
   test("50 retiring statements and a compaction: descriptors stay per live file, vacuum reclaims dead .bin") {

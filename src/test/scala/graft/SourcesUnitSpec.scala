@@ -235,14 +235,20 @@ class SourcesUnitSpec extends AnyFunSuite {
   }
 
   test("BoundedCache: hard cap with LRU eviction; recently-used roots survive") {
-    val c = new BoundedCache[String, Int](3)
-    (1 to 3).foreach(i => c.put(s"r$i", i))
-    assert(c.size === 3)
-    c.get("r1") // refresh r1's recency: r2 is now the eldest
-    c.put("r4", 4)
-    assert(c.size === 3, "the cap is hard — inserting past it evicts")
-    assert(!c.contains("r2"), "least-recently-USED is evicted")
-    assert(c.contains("r1") && c.contains("r3") && c.contains("r4"))
+    val c = new graft.vt.BoundedCache[String, Int](3)
+    var loads = 0
+    def get(k: String): Int = c.get(k) { loads += 1; k.drop(1).toInt }
+    (1 to 3).foreach(i => get(s"r$i"))
+    assert(loads === 3)
+    get("r1") // refresh r1's recency: r2 is now the eldest
+    assert(loads === 3, "a cached key is served without a load")
+    get("r4")
+    assert(loads === 4)
+    // r1, r3, r4 are still held (hits refresh but evict nothing) ...
+    Seq("r1", "r3", "r4").foreach(get)
+    assert(loads === 4, "the recently-used keys survive the insert past the cap")
+    // ... and the least-recently-USED r2 was evicted: it loads again
+    assert(get("r2") === 2 && loads === 5, "the cap is hard — inserting past it evicts")
     // the schema cache is an instance of this with a per-JVM cap
     assert(graft.sources.DeltaChanges.SchemaCacheCap === 64)
   }

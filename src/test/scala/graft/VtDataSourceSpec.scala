@@ -124,7 +124,7 @@ class VtDataSourceSpec extends SparkSpec {
     assert(qIn.select("k").as[Long].collect().sorted === Array(2L, 21),
       "IN must respect the MOR deletion of k=15")
     // evidence: pushed filters prune the commit's file list BEFORE any scan
-    val rel = new graft.sources.VtMorRelation(spark.sqlContext, vt, commit)
+    val rel = graft.sources.ReplayRelation.native(spark.sqlContext, vt, commit)
     // inputFiles returns URIs; compare by the trailing dir/file key
     def key(p: String) = p.split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
     val dataFiles = commit.files.map(key).toSet
@@ -363,7 +363,7 @@ class VtDataSourceSpec extends SparkSpec {
     def morOpened(key: String): Int = {
       val h = vt.head("main").get
       def fk(p: String) = p.split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
-      new graft.sources.VtMorRelation(spark.sqlContext, vt, h)
+      graft.sources.ReplayRelation.native(spark.sqlContext, vt, h)
         .scanPlan(Array("k", "v"), Array(org.apache.spark.sql.sources.EqualTo("k", key)))
         .inputFiles.map(fk).count(h.files.map(fk).toSet)
     }
