@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.vt.DeltaLogReader
 import graft.vt.DeltaLogReader.DeltaSnapshot
 
-/** [[FileIndex]] over a directory-PARTITIONED foreign Delta snapshot (the
-  * unpartitioned ones plan through [[VtFileIndex]]): the log's live file
+/** [[FileIndex]] over a foreign Delta snapshot, partitioned or not (an
+  * unpartitioned one is one empty partition group): the log's live file
   * set with both pruning layers folded into scan planning — partition
   * pruning from each add action's `partitionValues`, evaluated EXACTLY
   * against the scan's partition filters, and data skipping from the
@@ -50,7 +50,7 @@ final class DeltaFileIndex(spark: SparkSession, root: java.nio.file.Path,
     lazy val fs =
       new HPath(root.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
     snap.files.map { f =>
-      val p = new HPath(root.resolve(f.path).toUri)
+      val p = VtFileIndex.pathOf(root, f.path)
       val status =
         if (f.size >= 0L) new FileStatus(f.size, false, 1, 0L, f.modTime, p)
         else fs.getFileStatus(p)
@@ -124,8 +124,7 @@ final class DeltaFileIndex(spark: SparkSession, root: java.nio.file.Path,
 /** `spark.read.format("delta-lite")`: batch reads of a STOCK Delta table
   * without the Delta jar, planned through Spark's native file-scan
   * machinery with the log's partition values and per-file stats pruning
-  * folded in ([[VtFileIndex]] over the replay, [[DeltaFileIndex]] when
-  * partitioned). Options: `path` (required),
+  * folded in ([[DeltaFileIndex]]). Options: `path` (required),
   * `versionAsOf`, `timestampAsOf` (epoch millis, ISO instant, or a
   * session-zone date/date-time — [[SourcePaths.parseTimestamp]];
   * mutually exclusive with `versionAsOf`).
@@ -200,10 +199,7 @@ final class DeltaLite extends RelationProvider with DataSourceRegister {
             if (needsIds) SessionShim.withConf(spark,
               "spark.sql.parquet.fieldId.read.enabled" -> "true")
             else spark
-          val index =
-            if (snap.partitionColumns.nonEmpty) new DeltaFileIndex(relSession, root, snap)
-            else new VtFileIndex(relSession, root, DeltaLogReader.asCommit(snap),
-              VtPruning.NoBloom)
+          val index = new DeltaFileIndex(relSession, root, snap)
           HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
             new ParquetFileFormat, Map.empty[String, String])(relSession)
       }

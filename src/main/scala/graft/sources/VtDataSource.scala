@@ -111,9 +111,10 @@ private[graft] object VtPruning {
   * data-skipping integration (TahoeFileIndex). Extending the
   * partitioning-aware base (trivially, with an empty partition spec)
   * makes the same index serve BOTH front ends: the DSv1
-  * `HadoopFsRelation` and the DSv2 `ParquetScan` behind the `vt` and
-  * `dlite` catalogs, over native commits and unpartitioned foreign Delta
-  * replays alike ([[VtPruning]] is the one survival test). At 100 TB this
+  * `HadoopFsRelation` of `format("vt")` and the DSv2 `ParquetScan` behind
+  * the `vt` and `dlite` catalogs, over native commits and unpartitioned
+  * foreign Delta replays alike ([[VtPruning]] is the one survival test;
+  * `format("delta-lite")` plans through [[DeltaFileIndex]]). At 100 TB this
   * is the difference between touching 1% of a million files and paying a
   * footer read on every one. */
 final class VtFileIndex(spark: SparkSession, root: java.nio.file.Path, commit: Commit,

@@ -1054,20 +1054,27 @@ object DeltaLogReader {
         val v = if (raw == null || raw.isEmpty) lit(null) else lit(raw)
         d.withColumn(f.name, v.cast(f.dataType))
       }
-    // deletion vectors: one filter per scan drops a row whose position its
-    // file's descriptor marks — keyed by the decoded absolute file path, so
-    // same-named files in different directories never share a vector —
-    // each task decoding only the vectors of the files it reads
-    // ([[VersionedTable.LiveMask]], the filter native merge-on-read uses)
-    def key(p: String): String = if (p.contains("://")) new java.net.URI(p).getPath else p
+    // deletion vectors: the files that carry one are scanned apart, under
+    // one filter that drops a row whose position its file's descriptor
+    // marks — keyed by the absolute file path in the form Spark's
+    // `_metadata.file_path` decodes to (Hadoop-normalized: no `//`, `.`
+    // or `..` segments), so same-named files in different directories
+    // never share a vector — each task decoding only the vectors of the
+    // files it reads ([[VersionedTable.LiveMask]], the filter native
+    // merge-on-read uses); the other files scan plain
+    def key(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val dvs = snap.files.flatMap(f => f.dv.map(key(abs(f.path)) -> _)).toMap
     val mask = new VersionedTable.LiveMask(root.toString, dvs)
     val live = org.apache.spark.sql.functions.udf((fp: String, pos: Long) =>
-      mask.live(new java.net.URI(fp).getPath, pos))
+      mask.liveAtUri(fp, pos))
     def scan(group: Vector[FileEntry]): DataFrame = {
-      val df = scanSession.read.schema(fileSchema).parquet(group.map(f => abs(f.path)): _*)
-      renameToLogical(if (group.forall(_.dv.isEmpty)) df
-        else df.where(live(col("_metadata.file_path"), col("_metadata.row_index"))))
+      def read(fs: Vector[FileEntry]) =
+        scanSession.read.schema(fileSchema).parquet(fs.map(f => abs(f.path)): _*)
+      val (withDv, plain) = group.partition(_.dv.isDefined)
+      val masked = if (withDv.isEmpty) None
+        else Some(read(withDv).where(live(col("_metadata.file_path"), col("_metadata.row_index"))))
+      renameToLogical((masked.toSeq ++ Option.when(plain.nonEmpty)(read(plain)))
+        .reduce(_ unionByName _))
     }
     if (partFields.isEmpty) scan(snap.files)
     else snap.files.groupBy(_.partitionValues).toSeq

@@ -3791,6 +3791,14 @@ object VersionedTable {
         val ps = decoded.computeIfAbsent(fk, _ => DeletionVectors.positions(root, d))
         java.util.Arrays.binarySearch(ps, pos) < 0
     }
+    // a foreign replay's rows name their file by the URI string Spark
+    // reads (`_metadata.file_path`): decode it once per file, not per row
+    @transient private var lastUri: String = _
+    @transient private var lastKey: String = _
+    def liveAtUri(uri: String, pos: Long): Boolean = {
+      if (uri != lastUri) { lastKey = new java.net.URI(uri).getPath; lastUri = uri }
+      live(lastKey, pos)
+    }
   }
 
   /** `b` only added files to `a`: every file of `a` survives with its

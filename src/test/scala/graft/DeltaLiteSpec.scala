@@ -138,7 +138,7 @@ class DeltaLiteSpec extends SparkSpec {
     val dirs = idx.listFiles(Nil, Nil)
     assert(dirs.map(_.files.map(_.getLen).sum).sum === 1234L)
     assert(idx.sizeInBytes === 1234L)
-    // an unpartitioned snapshot plans through the native index over its
+    // the dlite catalog's scans plan through the native index over the
     // replay: the same log-only planning
     val vtIdx = new graft.sources.VtFileIndex(spark, root.toAbsolutePath.normalize,
       DeltaLogReader.asCommit(snap), graft.sources.VtPruning.NoBloom)

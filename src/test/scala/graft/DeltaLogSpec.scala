@@ -1251,7 +1251,8 @@ class DeltaLogSpec extends SparkSpec {
   test("DV replay: partitioned adds with colliding keys and odd file names read row-exact") {
     import graft.vt.DeletionVectors
     val root = freshRoot("dv_part_odd")
-    Seq("a=1/b=2", "a=2/b=2", "a=1/b=3").foreach(d => Files.createDirectories(root.resolve(d)))
+    Seq("a=1/b=2", "a=2/b=2", "a=1/b=3", "a=2/b=3").foreach(d =>
+      Files.createDirectories(root.resolve(d)))
     def file(rel: String, ks: Seq[Long]) =
       F.writeDataFile(root, ks.toDF("k").orderBy("k").coalesce(1), rel)._2
     // a=1/b=2/part-0 and a=2/b=2/part-0 share their last two path segments;
@@ -1260,6 +1261,9 @@ class DeltaLogSpec extends SparkSpec {
     val s1 = file("a=1/b=2/part-0", Seq(10L, 11L, 12L, 13L))
     val s2 = file("a=2/b=2/part-0", Seq(20L, 21L, 22L, 23L))
     val s3 = file("a=1/b=3/part 1%", Seq(30L, 31L, 32L, 33L))
+    // the fourth add path carries a `./` segment, which Spark's file path
+    // does not: the vector must still find its file
+    val s4 = file("a=2/b=3/part-0", Seq(40L, 41L, 42L))
     def add(path: String, size: Long, a: Int, b: Int, deleted: Long*) =
       F.addLine(path, size, Map("a" -> a.toString, "b" -> b.toString),
         dv = Some(DeletionVectors.inlineDescriptor(deleted)))
@@ -1268,15 +1272,18 @@ class DeltaLogSpec extends SparkSpec {
       F.metaDataLine(schema.json, Seq("a", "b")),
       add("a=1/b=2/part-0.parquet", s1, 1, 2, 0L),
       add("a=2/b=2/part-0.parquet", s2, 2, 2, 3L),
-      add("a=1/b=3/part%201%25.parquet", s3, 1, 3, 1L, 2L)))
+      add("a=1/b=3/part%201%25.parquet", s3, 1, 3, 1L, 2L),
+      add("./a=2/b=3/part-0.parquet", s4, 2, 3, 0L, 2L)))
     val want = Seq((11L, 1, 2), (12L, 1, 2), (13L, 1, 2), (20L, 2, 2), (21L, 2, 2),
-      (22L, 2, 2), (30L, 1, 3), (33L, 1, 3))
+      (22L, 2, 2), (30L, 1, 3), (33L, 1, 3), (41L, 2, 3))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "a", "b").as[(Long, Int, Int)].collect().toSeq.sorted
     assert(rows(DeltaLogReader.read(spark, root.toString)) === want,
       "each file must lose exactly the positions of ITS OWN vector")
     assert(rows(spark.read.format("delta-lite").option("path", root.toString).load()
       .where($"a" === 1)) === want.filter(_._2 == 1))
+    assert(rows(spark.read.format("delta-lite").option("path", root.toString).load()
+      .where($"b" === 3)) === want.filter(_._3 == 3))
   }
 
   test("file-based (u) deletion vector: uuid path resolution, CRC verified, corruption loud") {
