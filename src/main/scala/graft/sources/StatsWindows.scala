@@ -115,6 +115,15 @@ private[sources] object StatsWindows {
               (a.dataType == org.apache.spark.sql.types.IntegerType ||
                 a.dataType == org.apache.spark.sql.types.LongType)) =>
         Some(a)
+      // a DOUBLE cast of any numeric or timestamp column IS the stats
+      // domain (the writer records cast-to-double min/max, timestamps as
+      // epoch seconds), so its window is exact even where Spark calls the
+      // cast no upcast (decimal, timestamp) — the shape of a merge
+      // source's key range ([[graft.vt.VersionedTable]]'s keyBounds)
+      case Cast(a: AttributeReference, org.apache.spark.sql.types.DoubleType, _, _)
+          if a.dataType.isInstanceOf[NumericType] ||
+            a.dataType == org.apache.spark.sql.types.TimestampType =>
+        Some(a)
       case _ => None
     }
   }

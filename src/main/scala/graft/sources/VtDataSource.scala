@@ -2,9 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter => LogicalFilter, LocalRelation}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.Sink
@@ -91,6 +92,27 @@ private[graft] object VtPruning {
     prune(commit, files, filters.flatMap(StatsWindows.windows).toList,
       filters.flatMap(StatsWindows.nullWindows).toList,
       filters.flatMap(StatsWindows.pointProbes).toList, bloom)
+
+  /** The files of `commit` a row-level statement's predicate could match:
+    * `pred` is optimized against the commit's all-nullable logical schema
+    * over an empty RDD (no Spark job; an empty local relation would fold the
+    * filter away), giving what a scan's file index receives — `BETWEEN`
+    * split, literals coerced. A predicate folded to false/NULL selects no
+    * file; one removed or unresolvable selects all (the scan then fails). */
+  def select(spark: SparkSession, commit: Commit, pred: Column,
+             bloom: (String, String) => Option[Array[Byte]]): Vector[String] = {
+    val schema = VersionedTable.nullNormalized(DataType.fromJson(commit.schemaJson))
+      .asInstanceOf[StructType]
+    val plan =
+      try Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .where(pred).queryExecution.optimizedPlan)
+      catch { case scala.util.control.NonFatal(_) => None }
+    plan match {
+      case Some(LogicalFilter(cond, _)) => pruneExprs(commit, commit.files, Seq(cond), bloom)
+      case Some(r: LocalRelation) if r.data.isEmpty => Vector.empty
+      case _ => commit.files
+    }
+  }
 
   /** The commit's file list pruned by a `PrunedFilteredScan`'s pushed
     * conjuncts (exposed for spec-level evidence too). */

@@ -681,11 +681,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * shape).
     *
     * Scale shape: the affected keys' range per numeric, timestamp or string
-    * key column prunes files through the commit-log stats
-    * ([[mergeCandidates]]); one semi-join of the remaining files against
-    * the affected keys finds the live rows it replaces or removes, and the
-    * same pass builds each touched file's new descriptor ([[retireHits]]);
-    * then [[retireOrRewrite]] applies the 1/20 rule — a file with few dead
+    * key column prunes files by the scans' own stats test ([[keyBounds]]);
+    * one semi-join of the remaining files against the affected keys finds
+    * the live rows it replaces or removes, and the same pass builds each
+    * touched file's new descriptor ([[retireHits]]); then
+    * [[retireOrRewrite]] applies the 1/20 rule — a file with few dead
     * rows keeps its stats and bloom bits and its lost rows join its
     * deletion vector, a file past the rule is rewritten with its kept rows
     * (one anti-join), and every untouched file carries as it was. 1/20 is
@@ -725,8 +725,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     val noUpserts = upserts.isEmpty
     if (noUpserts && delKeys.forall(_.isEmpty)) return parent
     val affected = delKeys.foldLeft(upserts.select(keyCols.map(col): _*))(_ unionByName _)
-    val (numRange, strRange) = keyRanges(schema, affected, keyCols.map(k => k -> k))
-    val candidates = mergeCandidates(parent, numRange, strRange)
+    val candidates = graft.sources.VtPruning.pruneExprs(parent, parent.files,
+      keyBounds(schema, affected, keyCols.map(k => k -> k)), bloomLookup(parent))
     // the live rows an affected key replaces or removes
     val hits = if (candidates.isEmpty) None
       else Some(scanWithPos(spark, parent.copy(files = candidates))
@@ -746,69 +746,56 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       })
   }
 
-  /** Per-key [min, max] of `frame`'s key columns, as [[mergeCandidates]]
-    * takes them: `keys` pairs a target column with the `frame` column
-    * holding its values. Numeric and timestamp keys land in the
-    * double-domain stats (timestamps as epoch seconds, which the cast
-    * yields), STRING keys keep their values for the strStats window; other
-    * key types prune nothing. One bounded aggregate, skipped when no key
-    * column can prune. */
-  private def keyRanges(schema: StructType, frame: DataFrame, keys: Seq[(String, String)])
-      : (Map[String, (Double, Double)], Map[String, (String, String)]) = {
+  /** The key range of `frame` as conjuncts on the target's key columns
+    * (`keys` pairs a target column with its `frame` column): numeric and
+    * timestamp keys bound `cast(k AS DOUBLE)`, the stats' own domain, string
+    * keys bound `k`; other types prune nothing. One bounded aggregate. */
+  private def keyBounds(schema: StructType, frame: DataFrame, keys: Seq[(String, String)])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, GreaterThanOrEqual, LessThanOrEqual, Literal}
     import org.apache.spark.sql.functions.{col, max, min}
-    val numKeys = keys.filter { case (tc, _) =>
-      val dt = schema(tc).dataType
-      dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
-        dt == org.apache.spark.sql.types.TimestampType
-    }
-    val strKeys = keys.filter { case (tc, _) =>
-      schema(tc).dataType == org.apache.spark.sql.types.StringType
-    }
-    if (numKeys.isEmpty && strKeys.isEmpty) return (Map.empty, Map.empty)
-    val aggs = numKeys.flatMap { case (tc, sc) =>
-      Seq(min(col(sc).cast("double")).as(s"__mn_$tc"), max(col(sc).cast("double")).as(s"__mx_$tc"))
-    } ++ strKeys.flatMap { case (tc, sc) =>
-      Seq(min(col(sc)).as(s"__smn_$tc"), max(col(sc)).as(s"__smx_$tc"))
-    }
-    val r = frame.agg(aggs.head, aggs.tail: _*).collect().head
-    val nums = numKeys.map(_._1).zipWithIndex.collect {
-      case (tc, i) if !r.isNullAt(2 * i) && !r.isNullAt(2 * i + 1) =>
-        tc -> (r.getDouble(2 * i), r.getDouble(2 * i + 1))
-    }.toMap
-    val base = 2 * numKeys.size
-    val strs = strKeys.map(_._1).zipWithIndex.collect {
-      case (tc, i) if !r.isNullAt(base + 2 * i) && !r.isNullAt(base + 2 * i + 1) =>
-        tc -> (r.getString(base + 2 * i), r.getString(base + 2 * i + 1))
-    }.toMap
-    (nums, strs)
-  }
-
-  /** The candidate-file set a merge source with the given per-key ranges
-    * could possibly match: a file is DROPPED only when some key's file
-    * stats are provably disjoint from the source's [min, max] on that key
-    * — numeric/timestamp keys against the double-domain stats, string keys
-    * against the truncation-sound strStats under unsigned-UTF-8 order.
-    * Missing stats keep the file (conservative); soundness is pinned by
-    * the ScalaCheck pruning property and the ghost-file merge spec. */
-  private[graft] def mergeCandidates(parent: Commit,
-      numRange: Map[String, (Double, Double)],
-      strRange: Map[String, (String, String)]): Vector[String] =
-    parent.files.filterNot { f =>
-      numRange.exists { case (k, (lo, hi)) =>
-        parent.stats.get(f).flatMap(_.get(k)) match {
-          case Some((mn, mx)) => mx < lo || mn > hi // provably no equi-key match
-          case None => false
-        }
-      } || strRange.exists { case (k, (lo, hi)) =>
-        parent.strStats.get(f).flatMap(_.get(k)) match {
-          // file stats are truncation-SOUND bounds (statsLower ≤ true min,
-          // statsUpper ≥ true max), so disjointness stays a proof
-          case Some((mn, mx)) =>
-            VersionedTable.utf8Cmp(mx, lo) < 0 || VersionedTable.utf8Cmp(mn, hi) > 0
-          case None => false
-        }
+    import org.apache.spark.sql.types.{DoubleType, NumericType, StringType, TimestampType}
+    val bounded = keys.flatMap { case (tc, sc) =>
+      val k = AttributeReference(tc, schema(tc).dataType)()
+      k.dataType match {
+        case _: NumericType | TimestampType => Some(Cast(k, DoubleType) -> col(sc).cast(DoubleType))
+        case StringType => Some(k -> col(sc))
+        case _ => None
       }
     }
+    if (bounded.isEmpty) return Nil
+    val aggs = bounded.flatMap { case (_, v) => Seq(min(v), max(v)) }
+    val r = frame.agg(aggs.head, aggs.tail: _*).collect().head
+    bounded.zipWithIndex.flatMap {
+      case ((k, _), i) if !r.isNullAt(2 * i) && !r.isNullAt(2 * i + 1) =>
+        Seq(GreaterThanOrEqual(k, Literal(r.get(2 * i))),
+          LessThanOrEqual(k, Literal(r.get(2 * i + 1))))
+      case _ => Nil
+    }
+  }
+
+  /** `tc IN (…)` over `frame`'s distinct non-null `sc` values, when at most
+    * [[VersionedTable.MaxMergeBloomProbes]] and each lies exactly in the
+    * key's bloom hash domain (else a cast-mismatched join could match values
+    * the probe misses). One bounded `distinct().limit(cap + 1)` job. */
+  private def keyList(schema: StructType, frame: DataFrame, tc: String, sc: String)
+      : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, In, Literal}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val cap = VersionedTable.MaxMergeBloomProbes
+    val vals = frame.select(org.apache.spark.sql.functions.col(sc)).distinct()
+      .limit(cap + 1).collect()
+    val isStr = schema(tc).dataType == StringType
+    val keys = vals.filterNot(_.isNullAt(0)).map(_.get(0)).map {
+      case s: String if isStr => Some(Literal(s))
+      case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
+                _: java.lang.Long) if !isStr => Some(Literal(n.asInstanceOf[Number].longValue))
+      case _ => None
+    }
+    val k = AttributeReference(tc, schema(tc).dataType)()
+    if (vals.length > cap || keys.isEmpty || keys.exists(_.isEmpty)) None
+    else Some(In(if (isStr || k.dataType == LongType) k else Cast(k, LongType), keys.flatten.toSeq))
+  }
 
   /** Generalized `MERGE INTO` (the full Delta/Spark statement, where
     * [[upsert]] is the classic two-clause special case): target rows join
@@ -953,64 +940,23 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
             case _ => None
           }
       }.flatten.filter { case (tc, _) => schema.fieldNames.contains(tc) }
-    // numeric AND timestamp keys prune through the double-domain stats;
-    // STRING keys — the common LLM-corpus shape, doc_id/uuid — prune
-    // through strStats under unsigned-UTF-8 order, exactly like
-    // delete/update's statsCandidates. One bounded agg computes every range.
-    val (srcRange, srcStrRange) = keyRanges(schema, source0, equiKeys)
-    val candidates = {
-      val base = mergeCandidates(parent, srcRange, srcStrRange)
-      // BLOOM probe (r19): when the source's DISTINCT keys on a
-      // bloom-indexed equi-key column are FEW (the point-upsert shape —
-      // exactly where scattered uuid/long-id keys defeat the range
-      // windows above), probe each surviving candidate's bloom with every
-      // source key; a file whose bloom provably misses them all cannot
-      // hold a match and carries untouched. One bounded `distinct().
-      // limit(cap+1)` job per probed column; a bigger-than-cap source
-      // skips the probe (range pruning already did its part). False
-      // positives only ever KEEP files, so the rewrite set stays sound.
-      val bloomKeyCols = equiKeys.filter { case (tc, _) =>
-        bloomColsOf(parent).contains(tc) &&
-          VersionedTable.bloomSupported(schema(tc).dataType)
-      }
-      if (base.isEmpty || bloomKeyCols.isEmpty) base
-      else {
-        val bloom = bloomLookup(parent)
-        bloomKeyCols.foldLeft(base) { case (files, (tc, sc)) =>
-          val cap = VersionedTable.MaxMergeBloomProbes
-          val vals = source0.select(col(sc)).distinct().limit(cap + 1).collect()
-          if (files.isEmpty || vals.length > cap) files
-          else {
-            val isStr = schema(tc).dataType == org.apache.spark.sql.types.StringType
-            // every non-null source key must convert EXACTLY into the
-            // bloom's hash domain, else probe nothing (a cast-mismatched
-            // join could match values the probe image misses)
-            val probes: Option[Seq[Either[Long, String]]] = {
-              val conv = vals.filterNot(_.isNullAt(0)).map(_.get(0)).map {
-                case s: String if isStr => Some(scala.Right(s))
-                case b: java.lang.Byte if !isStr => Some(scala.Left(b.toLong))
-                case sh: java.lang.Short if !isStr => Some(scala.Left(sh.toLong))
-                case i: java.lang.Integer if !isStr => Some(scala.Left(i.toLong))
-                case l: java.lang.Long if !isStr => Some(scala.Left(l.longValue))
-                case _ => None
-              }
-              if (conv.forall(_.isDefined)) Some(conv.toSeq.map(_.get)) else None
-            }
-            probes match {
-              case None => files
-              case Some(ks) => files.filter { f =>
-                bloom(f, tc) match {
-                  case Some(bits) => ks.exists {
-                    case scala.Left(l) => VersionedTable.bloomMightContainLong(bits, l)
-                    case scala.Right(s) => VersionedTable.bloomMightContain(bits, s)
-                  }
-                  case None => true
-                }
-              }
-            }
-          }
-        }
-      }
+    // the source's key range prunes through the scans' own test: numeric
+    // and timestamp keys against the double-domain stats, STRING keys — the
+    // common LLM-corpus shape, doc_id/uuid — against strStats under
+    // unsigned-UTF-8 order. One bounded agg computes every range.
+    val bloom = bloomLookup(parent)
+    val byRange = graft.sources.VtPruning.pruneExprs(parent, parent.files,
+      keyBounds(schema, source0, equiKeys), bloom)
+    // BLOOM probe (r19): a FEW distinct keys on a bloom-indexed equi-key
+    // (the point-upsert shape, where scattered uuid/long ids defeat ranges)
+    // probe each surviving candidate as an IN-list; false positives only
+    // ever KEEP files.
+    val candidates = equiKeys.filter { case (tc, _) =>
+      bloomColsOf(parent).contains(tc) && VersionedTable.bloomSupported(schema(tc).dataType)
+    }.foldLeft(byRange) { case (files, (tc, sc)) =>
+      if (files.isEmpty) files
+      else graft.sources.VtPruning.pruneExprs(parent, files,
+        keyList(schema, source0, tc, sc).toSeq, bloom)
     }
 
     // ---- exact detection: the rows some clause APPLIES to, per file -----
@@ -1147,247 +1093,15 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
       noOpIfNothingLands = true)
   }
 
-  /** Per-column [lo, hi] bounds implied by a delete/read predicate, for
-    * commit-log stats pruning: walks top-level conjuncts, recognizing
-    * `column cmp numeric-literal` in either orientation. Anything else — OR,
-    * NOT, function-wrapped columns, non-numeric literals — contributes NO
-    * constraint, so pruning stays conservative: a file is skipped only when
-    * a recognized bound provably excludes every row it could hold (and the
-    * residual predicate still runs exactly on the survivors). NaN bounds are
-    * dropped too: Spark orders NaN above +Inf while Java's NaN comparisons
-    * are all-false, so a NaN range check would wrongly skip files. */
-  private[graft] def predicateBounds(
-      pred: org.apache.spark.sql.catalyst.expressions.Expression): Map[String, (Double, Double)] =
-    allPredicateBounds(pred)._1
-
-  private[graft] def predicateStrBounds(
-      pred: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Map[String, (Option[String], Option[String])] =
-    allPredicateBounds(pred)._2
-
-  /** Numeric and string bounds in one walk. String bounds are Options (no
-    * ±∞ exists for strings) and combine under the UNSIGNED UTF-8 BYTE order
-    * — the ordering the stats were computed under (see [[readWhereString]]);
-    * comparing with Java's UTF-16 `compareTo` instead would wrongly skip
-    * files around supplementary-plane code points. */
-  private def allPredicateBounds(
-      pred: org.apache.spark.sql.catalyst.expressions.Expression)
-      : (Map[String, (Double, Double)], Map[String, (Option[String], Option[String])]) = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def colName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def num(e: Expression): Option[Double] = e match {
-      // TimestampType literals carry MICROseconds; the stats live in the
-      // cast-to-double domain (epoch SECONDS) — normalize, or the bound
-      // wrongly prunes files holding matching rows. Date/NTZ literals have
-      // no stats domain at all (the writer refuses such statsCols): no bound.
-      case Literal(v: java.lang.Long, org.apache.spark.sql.types.TimestampType) =>
-        Some(v.toDouble / 1e6)
-      case Literal(_, dt) if dt == org.apache.spark.sql.types.DateType ||
-          dt == org.apache.spark.sql.types.TimestampNTZType => None
-      case Literal(v: Number, _) => Some(v.doubleValue()).filterNot(_.isNaN)
-      case Literal(d: org.apache.spark.sql.types.Decimal, _) => Some(d.toDouble)
-      case _ => None
-    }
-    def str(e: Expression): Option[String] = e match {
-      case Literal(s: org.apache.spark.unsafe.types.UTF8String,
-                   org.apache.spark.sql.types.StringType) => Some(s.toString)
-      case _ => None
-    }
-    // one constraint: col ∈ [lo, hi] (numeric) or [slo, shi] (string)
-    final case class B(c: String, lo: Double = Double.NegativeInfinity,
-                       hi: Double = Double.PositiveInfinity,
-                       slo: Option[String] = None, shi: Option[String] = None)
-    def cmp(c: Expression, v: Expression,
-            mk: (String, Either[Double, String]) => B,
-            mkRev: (String, Either[Double, String]) => B): Seq[B] = {
-      val fwd = colName(c).flatMap(n =>
-        num(v).map(x => mk(n, scala.Left(x))).orElse(str(v).map(s => mk(n, scala.Right(s)))))
-      val rev = colName(v).flatMap(n =>
-        num(c).map(x => mkRev(n, scala.Left(x))).orElse(str(c).map(s => mkRev(n, scala.Right(s)))))
-      (fwd orElse rev).toSeq
-    }
-    def ge(n: String, x: Either[Double, String]) =
-      x.fold(v => B(n, lo = v), s => B(n, slo = Some(s)))
-    def le(n: String, x: Either[Double, String]) =
-      x.fold(v => B(n, hi = v), s => B(n, shi = Some(s)))
-    def eq(n: String, x: Either[Double, String]) =
-      x.fold(v => B(n, lo = v, hi = v), s => B(n, slo = Some(s), shi = Some(s)))
-    def walk(e: Expression): Seq[B] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case EqualTo(c, v) => cmp(c, v, eq, eq)
-      case GreaterThan(c, v) => cmp(c, v, ge, le)
-      case GreaterThanOrEqual(c, v) => cmp(c, v, ge, le)
-      case LessThan(c, v) => cmp(c, v, le, ge)
-      case LessThanOrEqual(c, v) => cmp(c, v, le, ge)
-      case _ => Nil
-    }
-    def u8max(a: Option[String], b: Option[String]) = (a, b) match {
-      case (Some(x), Some(y)) => Some(if (VersionedTable.utf8Cmp(x, y) >= 0) x else y)
-      case _ => a orElse b
-    }
-    def u8min(a: Option[String], b: Option[String]) = (a, b) match {
-      case (Some(x), Some(y)) => Some(if (VersionedTable.utf8Cmp(x, y) <= 0) x else y)
-      case _ => a orElse b
-    }
-    val grouped = walk(pred).groupBy(_.c)
-    val numB = grouped.collect {
-      case (c, bs) if bs.exists(b => b.lo > Double.NegativeInfinity || b.hi < Double.PositiveInfinity) =>
-        c -> (bs.map(_.lo).max, bs.map(_.hi).min)
-    }
-    val strB = grouped.collect {
-      case (c, bs) if bs.exists(b => b.slo.isDefined || b.shi.isDefined) =>
-        c -> (bs.map(_.slo).reduce(u8max), bs.map(_.shi).reduce(u8min))
-    }
-    (numB, strB)
-  }
-
-  /** Commit-log stats pruning shared by the delete paths: the files of
-    * `parent` that COULD hold a row matching `where` — a file whose recorded
-    * [min,max] excludes a recognized predicate bound never enters the scan,
-    * so a point delete on a key-clustered petabyte table probes a handful of
-    * files' worth of metadata, not a million parquet footers. Files without
-    * stats for a bounded column are conservatively kept. */
-  /** Top-level-conjunct `IS NULL` / `IS NOT NULL` column demands — the null-
-    * stats complement of [[allPredicateBounds]]. Anything under OR/NOT or
-    * wrapped in a function contributes nothing (conservative, like bounds). */
-  private[graft] def nullDemands(
-      pred: org.apache.spark.sql.catalyst.expressions.Expression)
-      : (Set[String], Set[String]) = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def colName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def walk(e: Expression): (Set[String], Set[String]) = e match {
-      case And(l, r) =>
-        val (a1, b1) = walk(l); val (a2, b2) = walk(r); (a1 ++ a2, b1 ++ b2)
-      case IsNull(c) => (colName(c).toSet, Set.empty)
-      case IsNotNull(c) => (Set.empty, colName(c).toSet)
-      case _ => (Set.empty, Set.empty)
-    }
-    walk(pred)
-  }
-
-  /** Bloom POINT PROBES of a DML predicate (r19): top-level equality / IN
-    * conjuncts pinning a column to integral or string literal(s) — the
-    * scattered-key shape (`doc_id = '…'`, `id IN (…)`) whose min/max
-    * windows prune nothing. Same conservatism as the scan-side extraction
-    * ([[graft.sources.StatsWindows.pointProbes]]): unrecognized shapes,
-    * mixed/partial IN lists and non-exact value types probe nothing. */
-  private def predicateProbes(pred: org.apache.spark.sql.catalyst.expressions.Expression)
-      : List[(String, Either[List[Long], List[String]])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def colName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def longOf(e: Expression): Option[Long] = e match {
-      case Literal(v: java.lang.Byte, _) => Some(v.toLong)
-      case Literal(v: java.lang.Short, _) => Some(v.toLong)
-      case Literal(v: java.lang.Integer, _) => Some(v.toLong)
-      case Literal(v: java.lang.Long, dt)
-          if dt != org.apache.spark.sql.types.TimestampType => Some(v.longValue)
-      case _ => None
-    }
-    def strOf(e: Expression): Option[String] = e match {
-      case Literal(s: org.apache.spark.unsafe.types.UTF8String,
-                   org.apache.spark.sql.types.StringType) => Some(s.toString)
-      case _ => None
-    }
-    def group(n: String, vs: Seq[Expression])
-        : List[(String, Either[List[Long], List[String]])] = {
-      val longs = vs.map(longOf)
-      val strs = vs.map(strOf)
-      if (vs.nonEmpty && longs.forall(_.isDefined))
-        List(n -> scala.Left(longs.map(_.get).toList))
-      else if (vs.nonEmpty && strs.forall(_.isDefined))
-        List(n -> scala.Right(strs.map(_.get).toList))
-      else Nil
-    }
-    def walk(e: Expression): List[(String, Either[List[Long], List[String]])] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case EqualTo(c, v) =>
-        colName(c).map(group(_, Seq(v)))
-          .orElse(colName(v).map(group(_, Seq(c)))).getOrElse(Nil)
-      case In(c, vs) => colName(c).map(group(_, vs)).getOrElse(Nil)
-      case _ => Nil
-    }
-    walk(pred)
-  }
-
-  private def statsCandidates(parent: Commit, where: String): Vector[String] = {
-    val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(where)
-    val (bounds, strBounds) = allPredicateBounds(parsed)
-    val (needNull, needNotNull) = nullDemands(parsed)
-    // bloom probes confine a point-keyed DML (the scattered doc_id/uuid
-    // delete/update shape) to the files that might hold a probed key —
-    // lazily loaded, zero cost for range predicates. The probe's hash
-    // domain must be the COLUMN's, not the literal's: Spark evaluates the
-    // predicate with implicit casts (`long_col = '5'` can match rows), so
-    // a literal whose type disagrees with the column probes NOTHING — a
-    // string probe against a long-image bloom would "prove" every file
-    // missing and silently skip rows the predicate matches.
-    val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
-    def integral(dt: DataType): Boolean =
-      dt == org.apache.spark.sql.types.ByteType ||
-        dt == org.apache.spark.sql.types.ShortType ||
-        dt == org.apache.spark.sql.types.IntegerType ||
-        dt == org.apache.spark.sql.types.LongType
-    val probes = predicateProbes(parsed).filter {
-      case (c, scala.Left(_)) =>
-        schema.fieldNames.contains(c) && integral(schema(c).dataType)
-      case (c, scala.Right(_)) =>
-        schema.fieldNames.contains(c) &&
-          schema(c).dataType == org.apache.spark.sql.types.StringType
-    }
-    lazy val bloom = bloomLookup(parent)
-    def bloomSurvives(f: String): Boolean =
-      probes.forall { case (c, g) =>
-        bloom(f, c) match {
-          case Some(bits) => g match {
-            case scala.Left(ls) => ls.exists(VersionedTable.bloomMightContainLong(bits, _))
-            case scala.Right(ss) => ss.exists(VersionedTable.bloomMightContain(bits, _))
-          }
-          case None => true
-        }
-      }
-    parent.files.filter { f =>
-      bounds.forall { case (k, (lo, hi)) =>
-        parent.stats.get(f).flatMap(_.get(k)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      } && strBounds.forall { case (k, (slo, shi)) =>
-        parent.strStats.get(f).flatMap(_.get(k)) match {
-          case Some((mn, mx)) =>
-            slo.forall(lo => VersionedTable.utf8Cmp(mx, lo) >= 0) &&
-              shi.forall(hi => VersionedTable.utf8Cmp(mn, hi) <= 0)
-          case None => true
-        }
-      } && needNull.forall { k =>
-        // `k IS NULL` can match only files recording at least one null
-        parent.nullStats.get(f).flatMap(_.get(k)) match {
-          case Some(nc) => nc > 0
-          case None => true
-        }
-      } && needNotNull.forall { k =>
-        // `k IS NOT NULL` can match only files that are not ALL-null in k
-        (parent.nullStats.get(f).flatMap(_.get(k)), parent.rowCounts.get(f)) match {
-          case (Some(nc), Some(rc)) => nc < rc
-          case _ => true
-        }
-      } && (probes.isEmpty || bloomSurvives(f))
-    }
-  }
+  /** The files of `parent` that could hold a row matching a row-level
+    * statement's predicate — the scans' own selection
+    * ([[graft.sources.VtPruning.select]]: stats windows, null counts and
+    * bloom probes of the predicate as the optimizer leaves it). A point
+    * delete on a key-clustered petabyte table probes a handful of files'
+    * worth of metadata, not a million parquet footers. */
+  private def selectFiles(spark: SparkSession, parent: Commit,
+                          pred: org.apache.spark.sql.Column): Vector[String] =
+    graft.sources.VtPruning.select(spark, parent, pred, bloomLookup(parent))
 
   /** Merge-on-read DELETE (Delta deletion vectors / Iceberg v3 position
     * deletes): instead of rewriting every touched file ([[delete]]'s
@@ -1411,12 +1125,13 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
                         message: String = ""): Commit = synchronized {
     guardWritable(branch)
     import org.apache.spark.sql.functions.expr
+    val pred = expr(where)
     val parent = headOrThrow(branch)
     if (parent.files.isEmpty) return parent
-    val candidates = statsCandidates(parent, where)
+    val candidates = selectFiles(spark, parent, pred)
     if (candidates.isEmpty) return parent
     val retired = retireHits(spark, parent, candidates,
-      Some(scanWithPos(spark, parent.copy(files = candidates)).where(expr(where))), None,
+      Some(scanWithPos(spark, parent.copy(files = candidates)).where(pred)), None,
       retireAll = true)
     if (retired.dvs.isEmpty) return parent // the delete matched nothing
     publish(branch, Some(parent),
@@ -1455,10 +1170,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
              message: String = ""): Commit = synchronized {
     guardWritable(branch)
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+    val pred = expr(where)
     val parent = headOrThrow(branch)
     if (parent.files.isEmpty) return parent
-    val pred = expr(where)
-    val candidates = statsCandidates(parent, where)
+    val candidates = selectFiles(spark, parent, pred)
     if (candidates.isEmpty) return parent // stats alone prove nothing matches
     // find touched files via the provenance scan's file-key column, not
     // input_file_name(): on a DV-bearing snapshot the live-row scan is a
@@ -1503,13 +1218,13 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     guardWritable(branch)
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(set.nonEmpty, "update needs at least one SET column")
+    val pred = expr(where)
     val parent = headOrThrow(branch)
     val schema = DataType.fromJson(parent.schemaJson).asInstanceOf[StructType]
     val unknown = set.keySet.diff(schema.fieldNames.toSet)
     require(unknown.isEmpty, s"update SET names unknown column(s): ${unknown.mkString(", ")}")
     if (parent.files.isEmpty) return parent
-    val pred = expr(where)
-    val candidates = statsCandidates(parent, where)
+    val candidates = selectFiles(spark, parent, pred)
     if (candidates.isEmpty) return parent // stats alone prove nothing matches
     // same DV-safe detection as delete (see comment there)
     val hits = scanWithPos(spark, parent.copy(files = candidates)).where(pred)
@@ -2980,7 +2695,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * ([[graft.streaming.ChangeFeed.replicateFromDelta]]): PARTITIONED
     * sources (partition values live in the log, not the parquet — a direct
     * scan would drop those columns), sources with live DELETION VECTORS
-    * (Delta's DV binary format is not this engine's), and COLUMN-MAPPED
+    * (the clone does not carry them yet; the copy imports them), and COLUMN-MAPPED
     * tables (the parquet carries physical names). String stats are not
     * imported: delta-spark truncates them, and vt's metadata MIN/MAX
     * treats `strStats` as exact (pruning simply stays conservative). */
@@ -2998,8 +2713,8 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         "replicateFromDelta instead")
     require(snap.files.forall(_.dv.isEmpty),
       "cannot shallow-clone a Delta table with live deletion vectors " +
-        "(Delta's DV binary format differs) — import it with " +
-        "replicateFromDelta instead")
+        "(the shallow clone does not carry live vectors yet) — import it " +
+        "with replicateFromDelta, which imports them")
     require(snap.configuration.getOrElse("delta.columnMapping.mode", "none") == "none",
       "cannot shallow-clone a column-mapped Delta table (parquet files " +
         "carry physical column names) — import it with replicateFromDelta instead")
@@ -3624,7 +3339,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
 
   /** Delta `OPTIMIZE … WHERE` (r19): SELECTIVE compaction — only the files
     * whose commit-log stats windows intersect `where` (the same
-    * [[statsCandidates]] test delete/update prune with) are rewritten,
+    * [[selectFiles]] test delete/update prune with) are rewritten,
     * coalesced into `numFiles` (z-ordered when `zorderCols` is set); every
     * other file carries with its IDENTITY, stats, and bloom entries
     * untouched. On a petabyte table this compacts yesterday's hot
@@ -3639,11 +3354,12 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * through the same lost-race-rebase rule as [[compact]]. */
   def compactWhere(spark: SparkSession, branch: String, where: String,
                    numFiles: Int = 1, zorderCols: Seq[String] = Nil,
-                   maxRetries: Int = 3): Commit =
+                   maxRetries: Int = 3): Commit = {
+    val pred = org.apache.spark.sql.functions.expr(where)
     retryLayoutCommit(maxRetries) { () =>
       guardWritable(branch)
       val parent = headOrThrow(branch)
-      val touchedSet = statsCandidates(parent, where).toSet
+      val touchedSet = selectFiles(spark, parent, pred).toSet
       if (touchedSet.isEmpty) parent
       else synchronized {
         val (touched, untouched) = parent.files.partition(touchedSet.contains)
@@ -3680,6 +3396,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
           dataChange = false)
       }
     }
+  }
 
   /** V10 upload/rm analog: raw object ops under the table root (staging dir). */
   /** Export `branch`'s lineage as a Delta `_delta_log` INSIDE the table root

@@ -33,29 +33,6 @@ class DvDescriptorSpec extends SparkSpec {
     vt
   }
 
-  /** Spark jobs started while `op` runs: a sentinel job after it marks the
-    * end, so the asynchronous listener bus has delivered every earlier
-    * start by the time the sentinel's arrives. */
-  private def jobsDuring[T](op: => T): (T, Int) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = op
-      spark.sparkContext.setJobDescription("dvd-sentinel")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 20000
-      while (!seen.asScala.exists(_ == "dvd-sentinel") && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      (out, seen.asScala.takeWhile(_ != "dvd-sentinel").size)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   private def bins(vt: VersionedTable): Set[String] = {
     val st = Files.walk(vt.root.resolve("data"))
     try st.iterator().asScala.map(p => vt.root.relativize(p).toString)

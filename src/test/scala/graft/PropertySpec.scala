@@ -459,7 +459,14 @@ class PropertySpec extends SparkSpec {
       Gen.choose(0, 60).map(a => s"k = $a"),
       Gen.const("v < 5"),   // no stats on v: everything is a candidate
       Gen.const("k >= 100")) // matches nothing: must be a no-op
-    samples(Gen.zip(tableGen, predGen), 5).zipWithIndex.foreach {
+    // the shapes a DML predicate only prunes by once resolved and optimized
+    val resolvedShapes: Seq[Gen[String]] = Seq(
+      Gen.zip(Gen.choose(0, 60), Gen.choose(0, 60))
+        .map { case (a, b) => s"k BETWEEN ${a min b} AND ${a max b}" },
+      Gen.listOfN(3, Gen.choose(0, 60)).map(ks => s"k IN (${ks.mkString(", ")})"),
+      Gen.const("k IS NULL"))
+    (samples(Gen.zip(tableGen, predGen), 5) ++
+      resolvedShapes.flatMap(g => samples(Gen.zip(tableGen, g), 1))).zipWithIndex.foreach {
       case ((rows, pred), i) =>
         if (rows.nonEmpty) {
           val vt = VersionedTable.create(Tables.scratch(s"prop_optwhere_$i"))
@@ -496,26 +503,36 @@ class PropertySpec extends SparkSpec {
     // old-row-RHS rule), and the CDC must be the exact value-level delta.
     val tableGen: Gen[List[(Int, Int)]] = Gen.listOfN(30,
       for { k <- Gen.choose(0, 49); v <- Gen.choose(0, 9) } yield (k, v))
-    val predGen: Gen[(Int, Int)] = // an [lo, hi] key range, sometimes empty
+    val rangeGen: Gen[(Int, Int)] = // an [lo, hi] key range, sometimes empty
       for { a <- Gen.choose(0, 55); b <- Gen.choose(0, 55) } yield (a min b, a max b)
-    samples(Gen.zip(tableGen, predGen), 6).zipWithIndex.foreach {
-      case ((tableRows, (lo, hi)), i) =>
+    // each predicate with the rows it matches
+    val predGen: Gen[(String, Int => Boolean)] = rangeGen.map { case (lo, hi) =>
+      (s"k >= $lo AND k <= $hi", (k: Int) => k >= lo && k <= hi) }
+    val resolvedShapes: Seq[Gen[(String, Int => Boolean)]] = Seq(
+      rangeGen.map { case (lo, hi) =>
+        (s"k BETWEEN $lo AND $hi", (k: Int) => k >= lo && k <= hi) },
+      Gen.listOfN(3, Gen.choose(0, 55)).map(ks =>
+        (s"k IN (${ks.mkString(", ")})", (k: Int) => ks.contains(k))),
+      Gen.const(("k IS NULL", (_: Int) => false)))
+    (samples(Gen.zip(tableGen, predGen), 6) ++
+      resolvedShapes.flatMap(g => samples(Gen.zip(tableGen, g), 1))).zipWithIndex.foreach {
+      case ((tableRows, (pred, matches)), i) =>
         if (tableRows.nonEmpty) {
           val vt = VersionedTable.create(Tables.scratch(s"prop_upd_$i"))
           vt.write(tableRows.toDF("k", "v").repartitionByRange(4, col("k")),
             "main", "v0", statsCols = Seq("k"))
           // SET v = v + 100, k = v: both RHS must see the OLD row
-          vt.update(spark, s"k >= $lo AND k <= $hi", Map("v" -> "v + 100", "k" -> "v"))
+          vt.update(spark, pred, Map("v" -> "v + 100", "k" -> "v"))
           val got = vt.read(spark, "main").as[(Int, Int)].collect()
             .groupBy(identity).view.mapValues(_.length).toMap
           val expectedRows = tableRows.map { case (k, v) =>
-            if (k >= lo && k <= hi) (v, v + 100) else (k, v)
+            if (matches(k)) (v, v + 100) else (k, v)
           }
           val expected = expectedRows.groupBy(identity).view.mapValues(_.length).toMap
-          assert(got === expected, s"case $i: table=$tableRows pred=[$lo,$hi]")
+          assert(got === expected, s"case $i: table=$tableRows pred=$pred")
           // no-match predicates must not even have created a version
           val headV = vt.head("main").get.version
-          if (tableRows.forall { case (k, _) => k < lo || k > hi })
+          if (!tableRows.exists { case (k, _) => matches(k) })
             assert(headV === 0, s"case $i: no-op update must not commit")
           else {
             assert(headV === 1)

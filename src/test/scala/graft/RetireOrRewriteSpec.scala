@@ -297,4 +297,29 @@ class RetireOrRewriteSpec extends SparkSpec {
     assert(got("id-0001") === 1L && got("id-0012") === 1200L && got("id-0025") === 2500L &&
       got("id-0099") === 9900L)
   }
+
+  test("each row-level verb runs a pinned number of Spark jobs on a small table") {
+    // ceilings, not targets: a change may lower a verb's count, never raise it
+    val vt = table("jobs", 4)
+    val (_, cdcJobs) = jobsDuring(vt.applyCdc(spark,
+      rows(1, 1000).where($"k".isin(10L, 260L)).withColumn("n", $"n" + 1)
+        .unionByName(rows(1001, 1002)),
+      Some(Seq(20L, 520L).toDF("k")), Seq("k")))
+    val (_, mergeJobs) = jobsDuring(vt.mergeInto(spark,
+      Seq((30L, "u"), (530L, "u"), (2001L, "i")).toDF("k", "op"), "t.k = s.k",
+      matched = Seq(MergeClause.update(Map("v" -> "s.op"))),
+      notMatched = Seq(MergeClause.insert(Map("k" -> "s.k", "v" -> "s.op", "n" -> "0")))))
+    val (_, deleteJobs) = jobsDuring(vt.delete(spark, "k BETWEEN 300 AND 302"))
+    val (_, dvJobs) = jobsDuring(vt.deleteWithVectors(spark, "k IN (600, 601)"))
+    val (_, updateJobs) = jobsDuring(vt.update(spark, "k BETWEEN 800 AND 805",
+      Map("n" -> "n + 1")))
+    assert(vt.read(spark, "main").count() === 1000L + 2 - 2 + 1 - 3 - 2)
+    val counts = Map("applyCdc" -> cdcJobs, "mergeInto" -> mergeJobs,
+      "delete" -> deleteJobs, "deleteWithVectors" -> dvJobs, "update" -> updateJobs)
+    val pinned = Map("applyCdc" -> 11, "mergeInto" -> 11, "delete" -> 5,
+      "deleteWithVectors" -> 2, "update" -> 4)
+    pinned.foreach { case (verb, n) =>
+      assert(counts(verb) <= n, s"$verb ran ${counts(verb)} jobs, pinned at $n: $counts")
+    }
+  }
 }

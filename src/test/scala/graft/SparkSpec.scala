@@ -8,6 +8,30 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `op` runs: a sentinel job after it marks the
+    * end, so the asynchronous listener bus has delivered every earlier
+    * start by the time the sentinel's arrives. */
+  def jobsDuring[T](op: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = op
+      spark.sparkContext.setJobDescription("jobs-sentinel")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 20000
+      while (!seen.asScala.exists(_ == "jobs-sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      (out, seen.asScala.takeWhile(_ != "jobs-sentinel").size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 /** Store-agnostic test backdoors (aging objects for stale-slot sweeps). */

@@ -32,6 +32,18 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.create(root, storeFor(root))
   }
 
+  /** The files of `c` that `where`, resolved and optimized against the
+    * table's schema, keeps through the scans' survival test. */
+  private def kept(c: graft.vt.Commit, where: String): Set[String] = {
+    val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val conds = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .where(where).queryExecution.optimizedPlan.collect {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _) => cond
+      }
+    graft.sources.VtPruning.pruneExprs(c, c.files, conds, graft.sources.VtPruning.NoBloom).toSet
+  }
+
   /** Age a control-plane object via whichever backdoor the backend offers. */
   protected def backdate(store: MetaStore, key: java.nio.file.Path, toMs: Long): Unit =
     StoreOps.backdate(store, key, toMs)
@@ -215,7 +227,6 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("null-count stats prune IS NULL / IS NOT NULL predicates by file") {
-    import org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression
     val vt = freshVt("null_stats")
     // file A: no nulls in v; file B: all-null v; file C: mixed
     val dfA = Seq((1, Some("a")), (2, Some("b"))).toDF("k", "v")
@@ -226,10 +237,13 @@ class VersionedTableSpec extends SparkSpec {
     vt.write(dfC, "main", "C", mode = "append", statsCols = Seq("k", "v"))
     val h = vt.head("main").get
     assert(h.nullStats.nonEmpty && h.files.forall(h.nullStats.contains))
-    // demand extraction: conjuncts only, OR contributes nothing
-    assert(vt.nullDemands(parseExpression("v IS NULL AND k > 0")) === (Set("v"), Set.empty))
-    assert(vt.nullDemands(parseExpression("v IS NOT NULL")) === (Set.empty, Set("v")))
-    assert(vt.nullDemands(parseExpression("v IS NULL OR k = 1")) === (Set.empty, Set.empty))
+    // null demands come from conjuncts only; under OR they prune nothing
+    val withNulls = h.files.filter(f => h.nullStats(f)("v") > 0L).toSet
+    val notAllNull = h.files.filter(f => h.nullStats(f)("v") < h.rowCounts(f)).toSet
+    assert(withNulls.size < h.files.size && notAllNull.size < h.files.size)
+    assert(kept(h, "v IS NULL AND k > 0") === withNulls)
+    assert(kept(h, "v IS NOT NULL") === notAllNull)
+    assert(kept(h, "v IS NULL OR k = 1") === h.files.toSet)
     // IS NULL delete: file A (zero nulls) is excluded from the rewrite —
     // its file entry carries to the new version untouched
     val c1 = vt.delete(spark, "v IS NULL")
@@ -565,20 +579,18 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("delete prunes files via commit-log stats before scanning") {
-    import org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression
     val vt = freshVt("delete_prune")
     val nation = Tables.nation(spark, sf).select("n_nationkey", "n_name", "n_regionkey")
     val c0 = vt.write(nation.repartitionByRange(4, col("n_nationkey")), "main",
       "v0", statsCols = Seq("n_nationkey"))
-    // bounds extraction: conjuncts intersect, both orientations, junk ignored
-    val b = vt.predicateBounds(parseExpression("n_nationkey >= 3 AND 7 > n_nationkey AND f(n_name) = 'x'"))
-    assert(b === Map("n_nationkey" -> (3.0, 7.0)))
-    assert(vt.predicateBounds(parseExpression("n_nationkey = 5 OR n_regionkey = 1")).isEmpty)
-    // string bounds: equality and ranges, both orientations, under byte order
-    assert(vt.predicateStrBounds(parseExpression("n_name = 'CHINA' AND n_nationkey = 1"))
-      === Map("n_name" -> (Some("CHINA"), Some("CHINA"))))
-    assert(vt.predicateStrBounds(parseExpression("n_name >= 'B' AND 'M' > n_name"))
-      === Map("n_name" -> (Some("B"), Some("M"))))
+    // bounds: conjuncts intersect, both orientations, unrecognized ignored
+    def overlapping(c: graft.vt.Commit, lo: Double, hi: Double) = c.files.filter { f =>
+      val (mn, mx) = c.stats(f)("n_nationkey"); mx >= lo && mn <= hi
+    }.toSet
+    assert(kept(c0, "n_nationkey >= 3 AND 7 > n_nationkey AND upper(n_name) = 'x'")
+      === overlapping(c0, 3, 7))
+    assert(overlapping(c0, 3, 7).size < c0.files.size)
+    assert(kept(c0, "n_nationkey = 5 OR n_regionkey = 1") === c0.files.toSet)
     // a predicate provably outside every file's range: no scan, no version
     val same = vt.delete(spark, "n_nationkey = 9999")
     assert(same.id === c0.id, "stats-excluded delete must be a metadata-only no-op")
@@ -592,10 +604,55 @@ class VersionedTableSpec extends SparkSpec {
     val vtS = freshVt("delete_prune_str")
     val cS0 = vtS.write(nation.repartitionByRange(4, col("n_name")), "main", "v0",
       statsCols = Seq("n_name"))
+    // string bounds: equality and ranges, both orientations, under byte order
+    def strOverlapping(lo: String, hi: String) = cS0.files.filter { f =>
+      val (mn, mx) = cS0.strStats(f)("n_name")
+      VersionedTable.utf8Cmp(mx, lo) >= 0 && VersionedTable.utf8Cmp(mn, hi) <= 0
+    }.toSet
+    assert(kept(cS0, "n_name = 'CHINA' AND n_nationkey = 1") === strOverlapping("CHINA", "CHINA"))
+    assert(kept(cS0, "n_name >= 'B' AND 'M' > n_name") === strOverlapping("B", "M"))
     assert(vtS.delete(spark, "n_name = 'zzzz'").id === cS0.id)
     val cS1 = vtS.delete(spark, "n_name = 'CHINA'")
     assert(vtS.read(spark, "main").where("n_name = 'CHINA'").count() === 0)
     assert((cS0.files.toSet intersect cS1.files.toSet).nonEmpty)
+  }
+
+  test("BETWEEN and IN predicates prune delete, update, vector delete and OPTIMIZE WHERE — ghost files prove the skip") {
+    val vt = freshVt("between_prune")
+    def part(lo: Long, hi: Long) = (lo to hi).map(k => (k, k)).toDF("k", "v").coalesce(1)
+    vt.write(part(1, 100), "main", "A", statsCols = Seq("k"))
+    Seq((101L, 200L), (201L, 300L), (301L, 400L)).foreach { case (lo, hi) =>
+      vt.write(part(lo, hi), "main", s"$lo", mode = "append", statsCols = Seq("k"))
+    }
+    def fileOf(k: Long): String = {
+      val h = vt.head("main").get
+      h.files.find { f => val (mn, mx) = h.stats(f)("k"); mn <= k && k <= mx }.get
+    }
+    // move a file disjoint from the statement's range away while it runs:
+    // the statement can only succeed if it never opens that file
+    def ghost[T](k: Long)(body: => T): T = {
+      val f = fileOf(k)
+      val tmp = vt.root.resolve("between_ghost.parquet")
+      Files.move(vt.root.resolve(f), tmp)
+      try body finally Files.move(tmp, vt.root.resolve(f))
+    }
+    def keys: Set[Long] = vt.read(spark, "main").select("k").as[Long].collect().toSet
+    ghost(350) { vt.delete(spark, "k BETWEEN 105 AND 110") }
+    assert(keys === (1L to 400L).toSet -- (105L to 110L))
+    ghost(50) { vt.update(spark, "k BETWEEN 121 AND 125", Map("v" -> "v + 1000")) }
+    assert(vt.read(spark, "main").where($"k".between(121, 125)).select("v").as[Long]
+      .collect().sorted === (1121L to 1125L).toArray)
+    ghost(250) { vt.deleteWithVectors(spark, "k BETWEEN 131 AND 135") }
+    assert(keys === (1L to 400L).toSet -- (105L to 110L) -- (131L to 135L))
+    ghost(50) { vt.delete(spark, "k IN (250, 260)") }
+    assert(keys === (1L to 400L).toSet -- (105L to 110L) -- (131L to 135L) - 250L - 260L)
+    // OPTIMIZE WHERE rewrites only the file holding 140..150
+    val before = vt.head("main").get
+    val hot = fileOf(145)
+    val after = ghost(350) { vt.compactWhere(spark, "main", "k BETWEEN 140 AND 150") }
+    assert(!after.files.contains(hot) && before.files.filterNot(_ == hot).forall(after.files.contains),
+      s"only $hot may be rewritten: ${before.files} -> ${after.files}")
+    assert(keys === (1L to 400L).toSet -- (105L to 110L) -- (131L to 135L) - 250L - 260L)
   }
 
   test("merge-on-read delete: no data rewrite, correct reads, CDC, compact materialization, vacuum safety") {
@@ -1537,8 +1594,7 @@ class VersionedTableSpec extends SparkSpec {
     val before = vt.head("main").get
     // the candidate decision itself (pure metadata): a banded string source
     // range keeps only the middle file
-    assert(vt.mergeCandidates(before, Map.empty,
-      Map("k" -> ("id-0012", "id-0013"))).size === 1)
+    assert(kept(before, "k >= 'id-0012' AND k <= 'id-0013'").size === 1)
     // ghost proof the detection scan NEVER opens a pruned file: physically
     // move file A (range id-0001..id-0010, disjoint from the source band)
     // away — the merge must succeed without reading it
