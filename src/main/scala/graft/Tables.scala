@@ -9,20 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exercised by round-trip queries in [[graft.ops.Relational]].
   */
 object Tables {
-  /** Dev-only driver-phase timer (guide §1): `SPARK_GRAFT_TIMING=1` prints
-    * the wall time of labelled driver-side phases (plan/commit machinery
-    * that Profile's per-job view reports only as inter-job gaps). A plain
-    * pass-through when the env var is absent — never set by Bench/Verify. */
-  private val timingOn = sys.env.contains("SPARK_GRAFT_TIMING")
-  private[graft] def timed[T](label: => String)(f: => T): T =
-    if (!timingOn) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[timing] ${(System.nanoTime() - t0) / 1e9}%7.3f s  $label")
-      r
-    }
-
   /** Inferred schemas of the (immutable, read-only) testdata files, one
     * footer-inference pass per path per JVM (r22, guide §1 "know your
     * data" — the same class as the fixed DV-parquet schema): every

@@ -701,9 +701,10 @@ object Versioned {
 
   /** Merge-on-read DELETE (Delta deletion vectors / Iceberg v2 position
     * deletes): same user-visible semantics as `q_vt_delete`, but ZERO data
-    * files rewritten — the commit records the matched row positions in a
-    * small deletion-vector parquet and readers subtract them with one
-    * broadcast anti-join (the point-delete shape a petabyte table needs).
+    * files rewritten — the commit records the matched row positions as a
+    * deletion-vector descriptor on each touched file's entry and readers
+    * drop those positions per row, each task decoding only its own files'
+    * vectors (the point-delete shape a petabyte table needs).
     * The oracle is deliberately IDENTICAL in structure to q_vt_delete's:
     * head content and CDC deletes must match the copy-on-write path
     * row-for-row; VersionedTableSpec pins the no-rewrite property
@@ -1626,7 +1627,8 @@ object Versioned {
     * vectors (no rewrite), making every `format("vt")` read take
     * [[graft.sources.ReplayRelation]] — which, as a PrunedFilteredScan,
     * prunes the commit's files from the pushed BETWEEN before any scan
-    * and runs the predicate below the DV anti-join. At 10× rows the
+    * and runs the predicate in the replay's scan, below the per-row
+    * deletion-vector filter. At 10× rows the
     * band-read leg should cost ~the same (it touches the same files);
     * without the r17 pushdown it would scan the whole snapshot. Output =
     * the band aggregated by priority; the oracle applies the same delete
@@ -1818,7 +1820,7 @@ object Versioned {
          |FROM vt.`${vt.root}`""".stripMargin)
     // r19 MOR leg: after a merge-on-read delete, `SELECT count(*)` still
     // answers from metadata alone (Σ rowCounts − Σ descriptor
-    // cardinalities, [[graft.sources.VtMorScanBuilder]]);
+    // cardinalities, [[graft.sources.VtMetaScanBuilder]]);
     // value-dependent aggregates fall back to the (pruned, DV-subtracted)
     // scan — VtCatalogSpec ghost-proves the zero-data-file-read claim
     vt.deleteWithVectors(s, "o_orderkey % 10 < 3", "main")

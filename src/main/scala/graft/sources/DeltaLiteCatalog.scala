@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.vt.DeltaLogReader
@@ -32,11 +32,10 @@ import graft.vt.DeltaLogReader.DeltaSnapshot
   * (`VERSION/TIMESTAMP AS OF`) the relation options could only spell as
   * reader options.
   *
-  * Snapshot shapes the native batches cannot serve — directory-partitioned
-  * layouts, renamed column-mapped schemas — fall back to a V1 scan over
-  * the same [[ReplayRelation]] the DSv1 provider uses (correct,
-  * stats-pruned, filter-pushed; no runtime skipping). DDL is refused: the
-  * table belongs to its writer. */
+  * Every snapshot shape — directory-partitioned layouts, renamed or
+  * id-mapped column-mapped schemas, deletion vectors — plans the same
+  * runtime-filtered batch. DDL is refused: the table belongs to its
+  * writer. */
 final class DeltaLiteCatalog extends TableCatalog {
 
   private var catalogName: String = "dlite"
@@ -115,29 +114,17 @@ final class DeltaLiteTable(spark: SparkSession, tableRoot: String,
     extends Table with SupportsRead {
 
   override def name(): String = ident
-  override def schema(): StructType = snap.schema
+  private lazy val commit = DeltaLogReader.asCommit(snap)
+
+  override def schema(): StructType =
+    DataType.fromJson(commit.schemaJson).asInstanceOf[StructType]
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  private lazy val commit = DeltaLogReader.asCommit(snap)
-
-  /** Native when a bare file scan binds correctly: column mapping off (or
-    * never renamed) and no directory partitions (their values live in
-    * paths, not files — the replay reconstitutes them); deletion vectors
-    * take the merge-on-read batch. Everything else → the
-    * [[ReplayRelation]] behind a V1 scan. */
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val mode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    val root = java.nio.file.Paths.get(tableRoot).toAbsolutePath.normalize
-    if (snap.partitionColumns.nonEmpty ||
-        (mode != "none" && !DeltaLite.unrenamed(snap.schema)))
-      new ReplayV1ScanBuilder(snap.schema, s"$ident v${snap.version}",
-        ReplayRelation.foreign(_, tableRoot, snap))
-    else if (commit.dvs.isEmpty)
-      new VtMetaScanBuilder(spark, root, commit, snap.schema, None)
-    else
-      // DV-bearing flat snapshots (r20): native merge-on-read batch with
-      // per-task roaring-DV subtraction AND runtime file skipping
-      new VtMorScanBuilder(spark, root, commit, snap.schema, None)
-  }
+  /** The one scan builder native commits use, for every snapshot shape:
+    * directory partitions from the log, renamed columns by physical name,
+    * id-mapped columns by field id, deletion vectors subtracted per task. */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new VtMetaScanBuilder(spark,
+      java.nio.file.Paths.get(tableRoot).toAbsolutePath.normalize, commit, None)
 }

@@ -4,12 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.{sources => f}
 
-/** `sources.Filter` → `Column` translation for the fallback relation
+/** `sources.Filter` → `Column` translation for the DSv1 fallback relation
   * ([[ReplayRelation]], over either table kind's replay): the inverse of
   * Spark's own `DataSourceStrategy.translateFilter`, so a pushed filter can
   * be applied to the INNER DataFrame the relation delegates to — putting
-  * the predicate below the DV anti-join where parquet pushdown and footer
-  * skipping see it. Semantics are exact by construction (each case maps to
+  * the predicate into the replay's scan, below the deletion-vector row
+  * filter, where parquet pushdown and footer skipping see it. Semantics are exact by construction (each case maps to
   * the very Catalyst expression the filter was translated FROM), so a
   * translated filter may be declared handled; anything untranslatable is
   * reported back through `unhandledFilters` and Spark re-applies it above

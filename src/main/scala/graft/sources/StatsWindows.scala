@@ -42,8 +42,8 @@ private[graft] object SourcePaths {
 }
 
 /** Shared predicate→window extraction for file-skipping scan planning
-  * ([[VtFileIndex]], [[DeltaFileIndex]], the batch scans' runtime filters
-  * and the [[ReplayRelation]] fallback): turns filter conjuncts into
+  * ([[VtFileIndex]], the batch scans' static and runtime filters and the
+  * [[ReplayRelation]] fallback): turns filter conjuncts into
   * per-column DISJUNCTIONS of [lower, upper] ranges a file's min/max
   * stats can be tested against —
   * a plain comparison yields one range, `IN (…)` one POINT range per
@@ -61,9 +61,10 @@ private[graft] object SourcePaths {
   * these windows for PARTITION filters of a partitioned relation: Spark
   * strips partition-only filters from the post-scan filter set, so
   * partition pruning must evaluate the filter exactly
-  * ([[DeltaFileIndex.listFiles]]), not conservatively. (The fallback
-  * relation MAY window partition columns — there the pushed filters are
-  * re-applied as ordinary row predicates, so conservative is safe.) */
+  * ([[VtFileIndex.listFiles]]), not conservatively. (The batch scans and
+  * the fallback relation MAY window partition columns — there every
+  * pushed filter is re-applied as an ordinary row predicate, so
+  * conservative is safe.) */
 private[sources] object StatsWindows {
 
   /** Disjunction of inclusive ranges: a file survives iff ANY range

@@ -33,14 +33,13 @@ import graft.vt.{Commit, CommitGraph, VersionedTable}
   * converts to the commit log's millisecond clock.
   *
   * Reads plan through the same commit-pinned [[VtFileIndex]] as the DSv1
-  * path, and through the same scans the `dlite` catalog serves foreign
-  * Delta snapshots with: DV-free snapshots serve Spark's own
-  * `ParquetScan` (catalyst filter pushdown, commit-log stats pruning in
-  * `listFiles`, vectorization, codegen) wrapped by [[VtMetaScanBuilder]]
-  * for metadata-only aggregate pushdown, and DV-carrying snapshots serve
-  * the NATIVE merge-on-read batch [[VtMorScan]] (file-pruned,
-  * filter-pushed, deletion vectors subtracted by generated row index in
-  * the readers themselves). Writes bridge through [[V1Write]]:
+  * path, and through the one scan builder the `dlite` catalog serves
+  * foreign Delta snapshots with ([[VtMetaScanBuilder]]: Spark's own
+  * `ParquetScan` — catalyst filter pushdown, commit-log stats pruning,
+  * vectorization, codegen — plus metadata-only aggregate pushdown); DV-
+  * carrying snapshots serve the NATIVE merge-on-read batch [[VtMorScan]]
+  * (file-pruned, filter-pushed, deletion vectors subtracted by generated
+  * row index in the readers themselves). Writes bridge through [[V1Write]]:
   * `INSERT INTO` appends one commit, `INSERT OVERWRITE` replaces
   * (`SupportsTruncate`). DDL (r19): `CREATE TABLE` / `CREATE TABLE … AS
   * SELECT` publish an empty schema-pinning v0 (+ the data as v1), and
@@ -570,24 +569,15 @@ final class VtTable(spark: SparkSession, vt: VersionedTable, branch: String,
       TableCapability.V1_BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.TRUNCATE)
 
-  /** DV-free snapshots: [[VtMetaScanBuilder]] — Spark's own parquet
+  /** [[VtMetaScanBuilder]] for every snapshot shape — Spark's own parquet
     * ScanBuilder over the commit-pinned [[VtFileIndex]] (full DSv2
-    * pushdown: catalyst data filters reach `listFiles` for stats pruning
-    * AND the parquet reader for footer skipping; column pruning;
-    * vectorized batches) PLUS metadata-only COUNT/MIN/MAX pushdown from
-    * the commit log. DV snapshots: [[VtMorScanBuilder]] — a NATIVE batch
-    * whose readers subtract deletion vectors by generated row index.
-    * Column-mapped DV-free snapshots stay native (r20: the builder
-    * translates the delegate into physical name space); DV+mapped
-    * combines two translations, so that rarer shape serves the V1 scan
-    * over the replay relation. */
+    * pushdown: catalyst data filters reach the stats pruning AND the
+    * parquet reader for footer skipping; column pruning; vectorized
+    * batches) PLUS metadata-only COUNT/MIN/MAX pushdown from the commit
+    * log; deletion vectors subtract in the readers by generated row
+    * index, renamed columns read under their physical names. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (commit.dvs.isEmpty)
-      new VtMetaScanBuilder(spark, vt.root, commit, tableSchema, Some(vt), branch, options)
-    else if (VersionedTable.hasColumnMapping(tableSchema))
-      new ReplayV1ScanBuilder(tableSchema, s"$ident v${commit.version}",
-        ReplayRelation.native(_, vt, commit))
-    else new VtMorScanBuilder(spark, vt.root, commit, tableSchema, Some(vt), branch, options)
+    new VtMetaScanBuilder(spark, vt.root, commit, Some(vt), branch, options)
 
   /** SQL `DELETE FROM vt.\`path\` WHERE …`, on any session with the
     * catalog conf set — Spark's analyzer keeps `DeleteFromTable` intact for

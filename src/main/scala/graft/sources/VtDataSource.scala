@@ -4,19 +4,18 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LogicalFilter, LocalRelation}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSinkProvider, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.vt.{Commit, DeltaLogReader, VersionedTable}
-import graft.vt.DeltaLogReader.DeltaSnapshot
+import graft.vt.{Commit, VersionedTable}
 
 /** The one per-file survival test of a snapshot's stats against a set of
   * [[StatsWindows]], for native commits and foreign Delta replays alike
@@ -130,15 +129,17 @@ private[graft] object VtPruning {
   * to the scan's data filters so files whose range cannot match are
   * pruned DURING QUERY PLANNING — `spark.read.format("vt").load().where(
   * $"k" between (a, b))` skips them without any listing, exactly Delta's
-  * data-skipping integration (TahoeFileIndex). Extending the
-  * partitioning-aware base (trivially, with an empty partition spec)
-  * makes the same index serve BOTH front ends: the DSv1
-  * `HadoopFsRelation` of `format("vt")` and the DSv2 `ParquetScan` behind
-  * the `vt` and `dlite` catalogs, over native commits and unpartitioned
-  * foreign Delta replays alike ([[VtPruning]] is the one survival test;
-  * `format("delta-lite")` plans through [[DeltaFileIndex]]). At 100 TB this
-  * is the difference between touching 1% of a million files and paying a
-  * footer read on every one. */
+  * data-skipping integration (TahoeFileIndex). One index serves every
+  * front end — the DSv1 `HadoopFsRelation`s of `format("vt")`,
+  * `format("delta-lite")` and the snapshot replay, and the DSv2
+  * `ParquetScan` behind the `vt` and `dlite` catalogs — over native
+  * commits and foreign Delta replays alike ([[VtPruning]] is the one
+  * survival test). A Delta replay's partition columns form the partition
+  * schema: each file's typed values come from the log through Catalyst's
+  * string cast (the replay's conversion) and partition filters are
+  * evaluated EXACTLY; each file reports the add's logged modification
+  * time. At 100 TB this is the difference between touching
+  * 1% of a million files and paying a footer read on every one. */
 final class VtFileIndex(spark: SparkSession, root: java.nio.file.Path, commit: Commit,
                         bloom: (String, String) => Option[Array[Byte]])
     extends PartitioningAwareFileIndex(spark, Map.empty, None) {
@@ -149,15 +150,16 @@ final class VtFileIndex(spark: SparkSession, root: java.nio.file.Path, commit: C
   private val rootPath = new HPath(root.toUri)
 
   /** One FileStatus per file, from the COMMIT LOG'S recorded byte sizes
-    * (publish stats each new file once, a Delta add records its size); only
-    * files without a recorded size pay a real getFileStatus — stat-free scan
-    * planning. */
+    * and modification times (publish stats each new file once, a Delta add
+    * records both); only files without a recorded size pay a real
+    * getFileStatus — stat-free scan planning. */
   private lazy val statuses: Vector[(String, FileStatus)] = {
     lazy val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     commit.files.map { f =>
       val p = VtFileIndex.pathOf(root, f)
       val status = commit.fileSizes.get(f) match {
-        case Some(size) => new FileStatus(size, false, 1, 0L, 0L, p)
+        case Some(size) =>
+          new FileStatus(size, false, 1, 0L, commit.modTimes.getOrElse(f, 0L), p)
         case None => fs.getFileStatus(p)
       }
       f -> status
@@ -168,7 +170,23 @@ final class VtFileIndex(spark: SparkSession, root: java.nio.file.Path, commit: C
 
   override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
 
-  override def partitionSchema: StructType = StructType(Nil)
+  override lazy val partitionSchema: StructType = {
+    val schema = DataType.fromJson(commit.schemaJson).asInstanceOf[StructType]
+    StructType(commit.partitionColumns.map(schema(_)))
+  }
+
+  private val timeZone = spark.sessionState.conf.sessionLocalTimeZone
+
+  /** The typed partition values of one file (empty when unpartitioned). */
+  def partitionRow(rel: String): InternalRow =
+    if (partitionSchema.isEmpty) InternalRow.empty
+    else {
+      val raw = commit.partitionValues.getOrElse(rel, Map.empty)
+      InternalRow.fromSeq(partitionSchema.map(f => raw.get(f.name).orNull match {
+        case null => null
+        case v => Cast(Literal(UTF8String.fromString(v)), f.dataType, Some(timeZone)).eval()
+      }))
+    }
 
   // materialized ONCE (the commit is immutable): PartitioningAwareFileIndex
   // internals consult these repeatedly during DSv2 planning
@@ -190,8 +208,31 @@ final class VtFileIndex(spark: SparkSession, root: java.nio.file.Path, commit: C
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val kept = VtPruning.pruneExprs(commit, commit.files, dataFilters, bloom).toSet
-    Seq(PartitionDirectory(InternalRow.empty,
-      statuses.collect { case (rel, st) if kept(rel) => st }.toArray))
+    val live = statuses.filter { case (rel, _) => kept(rel) }
+    if (partitionSchema.isEmpty)
+      Seq(PartitionDirectory(InternalRow.empty, live.map(_._2).toArray))
+    else {
+      val groups = live.groupBy { case (rel, _) => commit.partitionValues.get(rel) }.values
+        .map(g => (partitionRow(g.head._1), g.map(_._2).toArray)).toSeq
+      // EXACT evaluation, never a conservative window: FileSourceStrategy
+      // REMOVES partition-only filters from the post-scan filter set and
+      // trusts listFiles to enforce them (the contract Delta's
+      // TahoeFileIndex honors) — every filter shape (!=, IN, OR, IS NULL,
+      // …) is bound to the partition row and evaluated for real
+      val keep: InternalRow => Boolean =
+        if (partitionFilters.isEmpty) _ => true
+        else {
+          val pred = Predicate.createInterpreted(partitionFilters.reduce(And(_, _)).transform {
+            case a: AttributeReference =>
+              val idx = partitionSchema.fieldNames.indexOf(a.name)
+              require(idx >= 0, s"partition filter references non-partition column '${a.name}'")
+              BoundReference(idx, partitionSchema(idx).dataType, nullable = true)
+          })
+          pred.initialize(0)
+          pred.eval
+        }
+      groups.collect { case (row, files) if keep(row) => PartitionDirectory(row, files) }
+    }
   }
 
   override def inputFiles: Array[String] =
@@ -210,24 +251,22 @@ object VtFileIndex {
     else new HPath(root.resolve(f).toUri)
 }
 
-/** Fallback relation for the snapshot shapes a bare file scan cannot
-  * express — deletion vectors without a native batch, column-mapped
-  * schemas the scans cannot address, renamed foreign schemas without
-  * parquet field ids, exotic partition types: it delegates to the
-  * snapshot's own replay ([[VersionedTable.readCommit]] or
-  * [[graft.vt.DeltaLogReader.readPinnedSnapshot]]), which handles all of
-  * them. It is a [[PrunedFilteredScan]]: pushed filters (a) prune the
-  * snapshot's file list through the one survival test ([[VtPruning]]) —
-  * a point-read of a DV-carrying 100 TB snapshot touches one file, not
-  * all of them — and (b) are re-expressed as Column predicates on the
-  * replayed DataFrame, below the deletion-vector filter, where parquet
-  * pushdown and footer skipping see them (a filter never resurrects a
-  * deleted row, so filtering before the position subtraction is exact).
-  * Untranslatable conjuncts are reported via `unhandledFilters` and Spark
-  * re-applies them above the scan. */
-final class ReplayRelation(ctx: SQLContext, commit: Commit,
-                           bloom: (String, String) => Option[Array[Byte]],
-                           replay: Commit => DataFrame)
+/** DSv1 fallback relation for the snapshot shapes a bare
+  * `HadoopFsRelation` cannot express — deletion vectors, and columns whose
+  * files name them differently (a DSv1 relation can neither subtract
+  * vectors nor re-alias columns): it serves the snapshot's replay
+  * ([[VersionedTable.replay]]), which handles both. It is a
+  * [[PrunedFilteredScan]]: pushed filters (a) prune the snapshot's file
+  * list through the one survival test ([[VtPruning]]) — a point-read of a
+  * DV-carrying 100 TB snapshot touches one file, not all of them — and (b)
+  * are re-expressed as Column predicates on the replayed DataFrame, where
+  * parquet pushdown and footer skipping see them (a filter never
+  * resurrects a deleted row, so filtering before the position subtraction
+  * is exact). Untranslatable conjuncts are reported via `unhandledFilters`
+  * and Spark re-applies them above the scan. `vt` is the table handle
+  * where one exists (its bloom index); a foreign Delta replay has none. */
+final class ReplayRelation(ctx: SQLContext, root: java.nio.file.Path, commit: Commit,
+                           vt: Option[VersionedTable])
     extends BaseRelation with PrunedFilteredScan {
   override def sqlContext: SQLContext = ctx
   override val schema: StructType =
@@ -240,8 +279,10 @@ final class ReplayRelation(ctx: SQLContext, commit: Commit,
     * can assert the file-skipping evidence (`scanPlan(...).inputFiles`). */
   private[graft] def scanPlan(requiredColumns: Array[String],
                                 filters: Array[Filter]): DataFrame = {
-    val pruned = commit.copy(files = VtPruning.prunedFiles(commit, filters.toSeq, bloom))
-    val df = FilterColumns.applyAll(replay(pruned), filters)
+    val pruned = commit.copy(files =
+      VtPruning.prunedFiles(commit, filters.toSeq, VtPruning.bloomOf(vt, commit)))
+    val df = FilterColumns.applyAll(
+      VersionedTable.replay(ctx.sparkSession, root, pruned, VtPruning.bloomOf(vt, _)), filters)
     if (requiredColumns.isEmpty) df
     else df.select(requiredColumns.head, requiredColumns.tail: _*)
   }
@@ -249,66 +290,6 @@ final class ReplayRelation(ctx: SQLContext, commit: Commit,
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] =
     scanPlan(requiredColumns, filters).rdd
-}
-
-object ReplayRelation {
-  /** A native commit, replayed by [[VersionedTable.readCommit]]. */
-  def native(ctx: SQLContext, vt: VersionedTable, commit: Commit): ReplayRelation =
-    new ReplayRelation(ctx, commit, vt.bloomLookup(commit),
-      vt.readCommit(ctx.sparkSession, _))
-
-  /** A foreign Delta snapshot, replayed by
-    * [[graft.vt.DeltaLogReader.readPinnedSnapshot]] over the kept adds. */
-  def foreign(ctx: SQLContext, tableRoot: String, snap: DeltaSnapshot): ReplayRelation =
-    new ReplayRelation(ctx, DeltaLogReader.asCommit(snap), VtPruning.NoBloom, kept => {
-      val keep = kept.files.toSet
-      DeltaLogReader.readPinnedSnapshot(ctx.sparkSession, tableRoot,
-        snap.copy(files = snap.files.filter(f => keep(f.path))))
-    })
-}
-
-/** DSv2 → DSv1 bridge over a [[ReplayRelation]]: the snapshot shapes the
-  * native batch builders cannot serve (column-mapped native commits with
-  * deletion vectors; foreign snapshots with directory partitions or
-  * renamed schemas) plan through a [[V1Scan]], pruned by the same
-  * survival test, pushed filters below any DV subtraction, untranslatable
-  * conjuncts re-applied by Spark. */
-final class ReplayV1ScanBuilder(full: StructType, label: String,
-                                relation: SQLContext => ReplayRelation)
-    extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = full
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters
-    filters // all residual: the relation re-applies what it can, Spark the rest
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val names = requiredSchema.fieldNames.toSet
-    val kept = full.fields.filter(f => names.contains(f.name))
-    // an empty projection (e.g. COUNT(*)) still needs one column to scan
-    required = if (kept.isEmpty) StructType(full.fields.take(1))
-               else StructType(kept)
-  }
-
-  override def build(): Scan = new V1Scan {
-    override def readSchema(): StructType = required
-    override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T = {
-      val rel = relation(context)
-      val cols = required.fieldNames
-      val filters = pushed
-      (new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): RDD[Row] = rel.scanPlan(cols, filters).rdd
-      }).asInstanceOf[T]
-    }
-    override def description(): String = s"ReplayV1Scan $label"
-  }
 }
 
 /** `format("vt")`: the versioned table as a first-class Spark data source —
@@ -403,7 +384,7 @@ final class VtDataSource extends RelationProvider with CreatableRelationProvider
     // RENAME/DROP) need the physical→logical re-aliasing readCommit does —
     // both are exactly what the replay relation serves (pruned, filter-pushed)
     if (commit.dvs.nonEmpty || VersionedTable.hasColumnMapping(schema))
-      ReplayRelation.native(sqlContext, vt, commit)
+      new ReplayRelation(sqlContext, vt.root, commit, Some(vt))
     else {
       val spark = sqlContext.sparkSession
       HadoopFsRelation(new VtFileIndex(spark, vt, commit), StructType(Nil),

@@ -13,16 +13,19 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, LocalScan, Pa
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.graft.{CatalystFilterPushdown, Dsv2Shim}
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.vt.{Commit, DeletionVectors, VersionedTable}
 
-/** DSv2 scan builder for DV-FREE snapshots: Spark's own
-  * [[ParquetScanBuilder]] over the commit-pinned [[VtFileIndex]] (full
-  * catalyst filter pushdown → commit-log stats pruning in `listFiles` AND
-  * footer skipping, column pruning, vectorization), PLUS metadata-only
+/** The one DSv2 scan builder, for every snapshot shape — native commits
+  * and foreign Delta replays ([[graft.vt.DeltaLogReader.asCommit]]), with
+  * or without deletion vectors, column mapping or directory partitions:
+  * Spark's own [[ParquetScanBuilder]] over the commit-pinned
+  * [[VtFileIndex]] (full catalyst filter pushdown → commit-log stats
+  * pruning AND footer skipping, column pruning, vectorization), read in
+  * the snapshot's [[VersionedTable.ReadLayout]], PLUS metadata-only
   * aggregate pushdown: an UNFILTERED, UNGROUPED `COUNT(*)` / `COUNT(col)`
   * / `MIN(col)` / `MAX(col)` whose answer is PROVABLE from the commit
   * log's per-file row counts / null counts / min-max stats short-circuits
@@ -30,103 +33,135 @@ import graft.vt.{Commit, DeletionVectors, VersionedTable}
   * parquet aggregate pushdown still pays one footer GET per file; at 10⁶
   * files the driver-side fold is the only sane shape for "how big / how
   * fresh is this table?"). Anything not provable — a filter, a group-by,
-  * a DV (this builder is only used DV-free), a stats-less file, a string
-  * stat at the truncation limit, an int64 beyond 2⁵³ — falls through to
-  * the normal scan, exactly the refusal contract of
-  * [[VersionedTable.minMaxFromStats]]. A foreign Delta replay comes
-  * without a table handle (`vt = None`): the same pruned, runtime-filtered
-  * scan, but no metadata answers, bloom probes or stream. */
+  * a stats-less file, a string stat at the truncation limit, an int64
+  * beyond 2⁵³ — falls through to the normal scan, exactly the refusal
+  * contract of [[VersionedTable.minMaxFromStats]]. A snapshot with
+  * deletion vectors reads the generated row index too and plans the
+  * merge-on-read batch ([[VtMorScan]]); the rest plan [[VtDfScan]]. A
+  * foreign Delta replay comes without a table handle (`vt = None`): the
+  * same pruned, runtime-filtered scan, but no metadata answers, bloom
+  * probes or stream.
+  *
+  * Every pushed conjunct is also returned as residual: the delegate's
+  * residual drops partition-only conjuncts (a `FileScanBuilder` trusts
+  * `listFiles` to enforce them, but the batches plan their own files from
+  * conservative stats windows) and, under column mapping, names physical
+  * columns Spark cannot re-resolve. */
 final class VtMetaScanBuilder(spark: SparkSession, root: java.nio.file.Path,
-                              commit: Commit, tableSchema: StructType,
-                              vt: Option[VersionedTable],
+                              commit: Commit, vt: Option[VersionedTable],
                               branch: String = "main",
                               options: CaseInsensitiveStringMap =
                                 CaseInsensitiveStringMap.empty())
     extends ScanBuilder with CatalystFilterPushdown
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
-  // ---- COLUMN MAPPING (r20): the delegate operates in PHYSICAL name
-  // space — physical-named twin schema and a commit copy whose stats maps
-  // are re-keyed physical (and whose schemaJson IS the physical schema, so
-  // bloomLookup's translation is the identity — immune to rename swaps) —
-  // while Spark, the metadata aggregates, and the runtime-filter path stay
-  // LOGICAL. Rows are positional, so only NAMES translate: filters rewrite
-  // their attribute names on the way into the delegate, pruning renames its
-  // requested fields, and VtDfScan maps the pruned read schema back.
-  private val mapped = VersionedTable.hasColumnMapping(tableSchema)
-  private val physOf: Map[String, String] =
-    if (!mapped) Map.empty
-    else tableSchema.fields.map(f => f.name -> VersionedTable.physicalName(f)).toMap
-  private val logOf: Map[String, String] = physOf.map(_.swap)
-  private val physCommit: Commit =
-    VersionedTable.physicalStatsCommit(commit, tableSchema)
+  // ---- COLUMN MAPPING: the delegate operates in the files' name space —
+  // the layout's file schema over a commit whose stats maps are keyed the
+  // same way (and whose schemaJson IS that schema, so bloomLookup's
+  // translation is the identity — immune to rename swaps) — while Spark,
+  // the metadata aggregates and the runtime-filter path stay LOGICAL. Rows
+  // are positional, so only NAMES translate: filters rewrite their
+  // attribute names on the way into the delegate, pruning renames its
+  // requested fields at every depth, and the scans map the pruned read
+  // schema back.
+  private val layout = new VersionedTable.ReadLayout(commit)
+  private val fileCommit = layout.fileCommit
+  private val session = layout.session(spark)
+  private val index =
+    new VtFileIndex(session, root, fileCommit, VtPruning.bloomOf(vt, fileCommit))
+  private val rowIdx = Dsv2Shim.rowIndexField
+  private val withRowIndex = commit.dvs.nonEmpty
+  private val fileSchema =
+    if (withRowIndex) StructType(layout.fileSchema.fields :+ rowIdx) else layout.fileSchema
+  private val delegate = ParquetScanBuilder(session, index,
+    StructType(fileSchema.fields ++ index.partitionSchema.fields), fileSchema, options)
+  /** No translation, no vectors, no partitions: the delegate's own
+    * footer-level aggregate scan binds as it is. */
+  private val plain = !layout.renamed && !layout.byFieldId && !withRowIndex &&
+    index.partitionSchema.isEmpty
+
   private def toPhys(e: Expression): Expression = e.transform {
     case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-        if physOf.getOrElse(a.name, a.name) != a.name =>
-      a.withName(physOf(a.name))
+        if layout.dataSchema.fieldNames.contains(a.name) =>
+      a.withName(VersionedTable.physicalName(layout.dataSchema(a.name)))
   }
-  private def toPhysSchema(s: StructType): StructType =
-    StructType(s.fields.map(f => f.copy(name = physOf.getOrElse(f.name, f.name))))
+  private def translate(s: StructType, from: StructType, to: StructType): StructType =
+    if (!layout.renamed) s else VtMetaScanBuilder.rename(s, from, to).asInstanceOf[StructType]
 
-  private val delegate =
-    ParquetScanBuilder(spark,
-      new VtFileIndex(spark, root, physCommit, VtPruning.bloomOf(vt, physCommit)),
-      VersionedTable.physicalSchema(tableSchema),
-      VersionedTable.physicalSchema(tableSchema), options)
+  private var required: StructType =
+    StructType(layout.fileSchema.fields ++ index.partitionSchema.fields)
   private var dataFilters: Seq[Expression] = Nil
-  private var filtered = false
   private var delegateAggPushed = false
   private var meta: Option[(StructType, InternalRow)] = None
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    filtered = filtered || filters.nonEmpty
     dataFilters = dataFilters ++ filters
-    val residual = delegate.pushFilters(
-      if (mapped) filters.map(toPhys) else filters)
-    // mapped: the delegate's residual carries PHYSICAL names Spark cannot
-    // re-resolve — return every original conjunct instead (correct; the
-    // translated copies still reached the parquet readers)
-    if (mapped) filters else residual
+    delegate.pushFilters(if (layout.renamed) filters.map(toPhys) else filters)
+    filters
   }
   override def pushedFilters: Array[Predicate] = delegate.pushedFilters
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    delegate.pruneColumns(
-      if (mapped) toPhysSchema(requiredSchema) else requiredSchema)
+    required = translate(requiredSchema, layout.dataSchema, layout.fileSchema)
 
   // Spark asks for complete pushdown BEFORE pushing: the metadata answer is
   // a pure function of the aggregation, so both calls compute it
   private def metaAnswer(agg: Aggregation): Option[(StructType, InternalRow)] =
-    vt.filter(_ => !filtered).flatMap(VtExact.metaAnswer(_, commit, tableSchema, agg))
+    vt.filter(_ => dataFilters.isEmpty)
+      .flatMap(VtExact.metaAnswer(_, commit, layout.schema, agg))
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     meta = metaAnswer(aggregation)
-    // the delegate's footer-level aggregate scan reports a physical-named
-    // readSchema Spark cannot bind — mapped snapshots take metadata answers
-    // or the ordinary scan, never the delegate's aggregate scan
-    meta.isDefined || (!mapped && {
+    meta.isDefined || (plain && {
       delegateAggPushed = delegate.pushAggregation(aggregation)
       delegateAggPushed })
   }
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
     metaAnswer(aggregation).isDefined ||
-      (!mapped && delegate.supportCompletePushDown(aggregation))
+      (plain && delegate.supportCompletePushDown(aggregation))
 
   override def build(): Scan = meta match {
     case Some((schema, row)) => new VtMetaAggScan(schema, row, commit)
     // a footer-level aggregate scan owns its own whole-file partition plan
-    // — serve it untouched; everything else gets the native batch (runtime
+    // — serve it untouched; everything else gets a native batch (runtime
     // file skipping, commit-log statistics) around the delegate's readers
     case None if delegateAggPushed => delegate.build()
     case None =>
-      new VtDfScan(spark, root, commit, vt, dataFilters, delegate.build(), branch,
-        options, logOf)
+      delegate.pruneColumns(
+        if (withRowIndex) StructType(required.fields :+ rowIdx) else required)
+      val parquet = delegate.build()
+      val out = translate(parquet.readSchema(), layout.fileSchema, layout.dataSchema)
+      if (!withRowIndex)
+        new VtDfScan(spark, root, commit, vt, dataFilters, parquet, index, out, branch, options)
+      else
+        new VtMorScan(spark, root, commit, vt, dataFilters, parquet, index,
+          StructType(out.fields.filterNot(_.name == rowIdx.name)), branch, options)
   }
 }
 
-/** The provable-from-metadata aggregate answer shared by the scan builders
-  * (clean and MOR), with its exactness helpers: resolve an aggregate's
+object VtMetaScanBuilder {
+  /** `s` (a pruned subset of `from`, nested fields included) with every
+    * field named as in `to`, the same type under other names — fields
+    * `from` does not hold (partition columns, the row index) stay as is. */
+  private def rename(s: DataType, from: DataType, to: DataType): DataType = (s, from, to) match {
+    case (st: StructType, f: StructType, t: StructType) =>
+      StructType(st.fields.map { sf =>
+        val i = f.fieldNames.indexOf(sf.name)
+        if (i < 0) sf
+        else sf.copy(name = t(i).name, dataType = rename(sf.dataType, f(i).dataType, t(i).dataType))
+      })
+    case (a: ArrayType, f: ArrayType, t: ArrayType) =>
+      a.copy(elementType = rename(a.elementType, f.elementType, t.elementType))
+    case (m: MapType, f: MapType, t: MapType) =>
+      m.copy(keyType = rename(m.keyType, f.keyType, t.keyType),
+        valueType = rename(m.valueType, f.valueType, t.valueType))
+    case _ => s
+  }
+}
+
+/** The provable-from-metadata aggregate answer of the scan builder, with
+  * its exactness helpers: resolve an aggregate's
   * single-column reference against the table schema, and convert a
   * double-domain stat to the column type only where exactness is
   * PROVABLE. */
@@ -237,6 +272,10 @@ private[sources] trait VtRuntimePrunedScan
   protected def options: CaseInsensitiveStringMap
   /** The planning-time stats-pruned file list. */
   protected def staticFiles: Vector[String]
+  /** The index the delegate reads through (typed partition values). */
+  protected def index: VtFileIndex
+  /** The delegate's scan, whose partition columns each split carries. */
+  protected def parquet: ParquetScan
 
   protected final lazy val bloom = VtPruning.bloomOf(vt, commit)
 
@@ -285,16 +324,24 @@ private[sources] trait VtRuntimePrunedScan
   }.toMap
   protected final def totalBytes: Long = liveFiles.iterator.map(sizeOf).sum
 
-  /** One [[PartitionedFile]] per ≤ `maxSplit` chunk of `rel` — the one
-    * per-file split planner of the batch scans and, through [[VtMorScan]],
-    * the micro-batch stream. Row indexes (where requested) are
-    * file-absolute, so chunking is always safe. */
+  private lazy val readPartOrdinals: Seq[Int] =
+    parquet.readPartitionSchema.fieldNames.toSeq.map(index.partitionSchema.fieldIndex)
+
+  /** One [[PartitionedFile]] per ≤ `maxSplit` chunk of `rel`, carrying the
+    * file's typed values of the partition columns the scan reads — the one
+    * per-file split planner of the batch scans and the micro-batch stream.
+    * Row indexes (where requested) are file-absolute, so chunking is always
+    * safe. */
   protected final def splitsOf(rel: String, maxSplit: Long): Seq[PartitionedFile] = {
     val size = sizeOf(rel)
     val path = SparkPath.fromPath(VtFileIndex.pathOf(root, rel))
+    val row = index.partitionRow(rel)
+    val values = if (readPartOrdinals.isEmpty) InternalRow.empty
+      else InternalRow.fromSeq(readPartOrdinals.map(i =>
+        row.get(i, index.partitionSchema(i).dataType)))
     (0L until size by maxSplit).map(start =>
-      PartitionedFile(InternalRow.empty, path, start,
-        math.min(maxSplit, size - start), Array.empty, 0L, size, Map.empty))
+      PartitionedFile(values, path, start, math.min(maxSplit, size - start), Array.empty,
+        commit.modTimes.getOrElse(rel, 0L), size, Map.empty))
   }
 
   /** Live-row count from the commit log, when every live file logged one. */
@@ -323,18 +370,16 @@ private[sources] trait VtRuntimePrunedScan
   * `SupportsRuntimeV2Filtering` ([[VtRuntimePrunedScan]]): a broadcast
   * join's key values re-prune the FILE LIST at execution time through
   * the per-file stats (dynamic file pruning). Spark's own `FileScan`
-  * runtime-filters only PARTITION columns, which a versioned table does
-  * not have; per-file stats are its partition pruning. */
+  * runtime-filters only PARTITION columns; per-file stats cover those
+  * (a Delta replay's partition values are `(v, v)` stats) and every
+  * other column alike. `outSchema` is the delegate's read schema under
+  * logical names: Spark binds the batch's columns POSITIONALLY. */
 final class VtDfScan(protected val spark: SparkSession, protected val root: java.nio.file.Path,
                      protected val commit: Commit, protected val vt: Option[VersionedTable],
-                     dataFilters: Seq[Expression], parquet: ParquetScan,
+                     dataFilters: Seq[Expression], protected val parquet: ParquetScan,
+                     protected val index: VtFileIndex, outSchema: StructType,
                      protected val branch: String,
-                     protected val options: CaseInsensitiveStringMap,
-                     // physical→logical column names for mapped snapshots
-                     // (r20): the delegate reads physical-named parquet;
-                     // Spark binds the batch's columns POSITIONALLY against
-                     // this scan's logical readSchema — only names map
-                     nameMap: Map[String, String] = Map.empty)
+                     protected val options: CaseInsensitiveStringMap)
     extends Batch with SupportsReportStatistics with VtRuntimePrunedScan {
 
   // dataFilters and the commit are both LOGICAL-keyed here — the builder
@@ -342,10 +387,7 @@ final class VtDfScan(protected val spark: SparkSession, protected val root: java
   protected lazy val staticFiles: Vector[String] =
     VtPruning.pruneExprs(commit, commit.files, dataFilters, bloom)
 
-  override def readSchema(): StructType =
-    if (nameMap.isEmpty) parquet.readSchema()
-    else StructType(parquet.readSchema().fields.map(f =>
-      f.copy(name = nameMap.getOrElse(f.name, f.name))))
+  override def readSchema(): StructType = outSchema
   override def toBatch: Batch = this
   override def description(): String =
     s"VtDfScan v${commit.version} files=${liveFiles.size}/${commit.files.size} " +
@@ -367,71 +409,6 @@ final class VtDfScan(protected val spark: SparkSession, protected val root: java
   }
 }
 
-/** NATIVE DSv2 scan builder for DV-carrying snapshots (r18 — replaces the
-  * r17 `V1Scan`/`.rdd` bridge): catalyst filters arrive through the same
-  * mixin Spark's file sources use, prune the commit's file list through
-  * the stats windows, AND are pushed into the parquet readers; the Scan
-  * is a real [[Batch]] whose reader factory applies the deletion vector
-  * BELOW everything — see [[VtMorScan]]. Every pushed conjunct is also
-  * returned as residual (the `FileScanBuilder` rule), so correctness
-  * never depends on the translation. Serves foreign Delta replays too
-  * (`vt = None`: no metadata answers, bloom probes or stream). */
-final class VtMorScanBuilder(spark: SparkSession, root: java.nio.file.Path,
-                             commit: Commit, tableSchema: StructType,
-                             vt: Option[VersionedTable],
-                             branch: String = "main",
-                             options: CaseInsensitiveStringMap =
-                               CaseInsensitiveStringMap.empty())
-    extends ScanBuilder with CatalystFilterPushdown
-    with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
-
-  private val rowIdx = Dsv2Shim.rowIndexField
-  private val dataWithIdx = StructType(tableSchema.fields :+ rowIdx)
-  private val delegate =
-    ParquetScanBuilder(spark,
-      new VtFileIndex(spark, root, commit, VtPruning.bloomOf(vt, commit)),
-      dataWithIdx, dataWithIdx, CaseInsensitiveStringMap.empty())
-  private var dataFilters: Seq[Expression] = Nil
-  private var required: StructType = tableSchema
-  private var meta: Option[(StructType, InternalRow)] = None
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    dataFilters = filters
-    delegate.pushFilters(filters) // translated conjuncts reach the parquet readers
-    filters // ALL residual: Spark re-applies them above the DV subtraction
-  }
-  override def pushedFilters: Array[Predicate] = delegate.pushedFilters
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // normalize to table order — rows come back in dataSchema order
-    val names = requiredSchema.fieldNames.toSet
-    required = StructType(tableSchema.fields.filter(f => names.contains(f.name)))
-  }
-
-  /** Metadata aggregates on a MOR snapshot, from the commit log alone —
-    * no data-file scan and no Spark job ([[VtExact.metaAnswer]]). Spark
-    * asks for complete pushdown BEFORE pushing, so both calls compute the
-    * (pure) answer. */
-  private def metaAnswer(agg: Aggregation): Option[(StructType, InternalRow)] =
-    vt.filter(_ => dataFilters.isEmpty).flatMap(VtExact.metaAnswer(_, commit, tableSchema, agg))
-
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    meta = metaAnswer(aggregation)
-    meta.isDefined
-  }
-
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    metaAnswer(aggregation).isDefined
-
-  override def build(): Scan = meta match {
-    case Some((schema, row)) => new VtMetaAggScan(schema, row, commit)
-    case None =>
-      delegate.pruneColumns(StructType(required.fields :+ rowIdx))
-      new VtMorScan(spark, root, commit, vt, dataFilters, required,
-        delegate.build(), branch, options)
-  }
-}
-
 /** Merge-on-read as a NATIVE DSv2 batch: per-file-split input partitions
   * over the stats-pruned file list; the reader factory wraps Spark's own
   * parquet readers — vectorized, filter-pushed, with the FILE-ABSOLUTE
@@ -439,8 +416,8 @@ final class VtMorScanBuilder(spark: SparkSession, root: java.nio.file.Path,
   * mechanism (correct under row-group skipping, the exact machinery
   * `_metadata.row_index` uses) — and drops rows whose position is
   * deleted with one binary search per row. No `RDD[Row]` materialization,
-  * no anti-join, columnar batches intact under the row interface, and
-  * AQE gets real [[Statistics]] from the commit log.
+  * columnar batches intact under the row interface, and AQE gets real
+  * [[Statistics]] from the commit log.
   *
   * DV loading is PER-TASK: each partition carries its file's descriptor
   * from the commit record, and a reader whose file carries deletions
@@ -449,12 +426,12 @@ final class VtMorScanBuilder(spark: SparkSession, root: java.nio.file.Path,
   * materializes the deletion set: a 100 TB table with 1% deletions is
   * tens of GB of positions. At 100 TB: a point read touches one file
   * split, the DV subtraction costs log(deletions-in-that-file) per row,
-  * and DV bytes move only to the tasks that need them. The micro-batch
-  * stream plans each batch through this scan too. */
+  * and DV bytes move only to the tasks that need them. A micro-batch
+  * whose files carry vectors plans through this scan too. */
 final class VtMorScan(protected val spark: SparkSession, protected val root: java.nio.file.Path,
                       protected val commit: Commit, protected val vt: Option[VersionedTable],
-                      dataFilters: Seq[Expression], outSchema: StructType,
-                      parquet: ParquetScan,
+                      dataFilters: Seq[Expression], protected val parquet: ParquetScan,
+                      protected val index: VtFileIndex, outSchema: StructType,
                       protected val branch: String,
                       protected val options: CaseInsensitiveStringMap)
     extends Batch with SupportsReportStatistics with VtRuntimePrunedScan {
@@ -486,6 +463,7 @@ final class VtMorScan(protected val spark: SparkSession, protected val root: jav
     // Spark refuses mixed row/columnar partitions, so columnar is a
     // whole-scan decision: only when NO live file carries deletions
     new MorReaderFactory(parquet.createReaderFactory(), outSchema,
+      parquet.readSchema().fieldIndex(Dsv2Shim.rowIndexField.name),
       allColumnar = !liveFiles.exists(commit.dvs.contains))
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -511,14 +489,14 @@ private[sources] final case class MorInputPartition(
 }
 
 /** Wraps the parquet readers: emit only rows whose file-absolute index
-  * (the generated last column) is not in the task-decoded deletion set;
+  * (the generated column at `rowIdx`, after the data columns and before
+  * any partition columns) is not in the task-decoded deletion set;
   * columnar passthrough when the whole scan is deletion-free. Serves
-  * [[VtMorScan]] over native and foreign snapshots and the micro-batch
-  * stream alike. */
+  * [[VtMorScan]] over native and foreign snapshots alike. */
 private[sources] final class MorReaderFactory(
-    delegate: PartitionReaderFactory, outSchema: StructType,
+    delegate: PartitionReaderFactory, outSchema: StructType, rowIdx: Int,
     allColumnar: Boolean) extends PartitionReaderFactory {
-  private val n = outSchema.length
+  private val columns: IndexedSeq[Int] = (0 to outSchema.length).filter(_ != rowIdx)
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     allColumnar && delegate.supportColumnarReads(
@@ -534,7 +512,7 @@ private[sources] final class MorReaderFactory(
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
         val b = inner.get()
         new org.apache.spark.sql.vectorized.ColumnarBatch(
-          Array.tabulate(n)(b.column), b.numRows())
+          columns.map(b.column).toArray, b.numRows())
       }
       override def close(): Unit = inner.close()
     }
@@ -543,7 +521,7 @@ private[sources] final class MorReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val mp = partition.asInstanceOf[MorInputPartition]
     val inner = delegate.createReader(mp.files)
-    val proj = ProjectingInternalRow(outSchema, (0 until n).toIndexedSeq)
+    val proj = ProjectingInternalRow(outSchema, columns)
     new PartitionReader[InternalRow] {
       // decoded lazily INSIDE the task; deletion-free files skip it
       private lazy val deleted: Array[Long] =
@@ -553,7 +531,7 @@ private[sources] final class MorReaderFactory(
         while (inner.next()) {
           val r = inner.get()
           if (deleted.length == 0 ||
-              java.util.Arrays.binarySearch(deleted, r.getLong(n)) < 0) {
+              java.util.Arrays.binarySearch(deleted, r.getLong(rowIdx)) < 0) {
             proj.project(r)
             return true
           }

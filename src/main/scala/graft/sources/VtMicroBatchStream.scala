@@ -70,11 +70,11 @@ private[sources] object VtStreamOffset {
   *    batch with a restart instruction instead of null-filling.
   *
   * Scale shape: the driver touches O(versions) commit records per batch —
-  * never rows; each batch plans through [[VtMorScan]] — the same per-file
-  * splits, Spark's vectorized parquet readers behind
-  * [[MorReaderFactory]] (columnar passthrough when the batch carries no
-  * deletion vectors, per-task DV loading when it does — cherry-picked
-  * commits can add files with transplanted DVs), `maxVersionsPerTrigger`
+  * never rows; each batch plans through [[VtMetaScanBuilder]] — the same
+  * per-file splits and Spark's vectorized parquet readers as a batch read,
+  * column-mapped snapshots by physical name, per-task DV loading where the
+  * batch carries vectors (cherry-picked commits can add files with
+  * transplanted DVs), `maxVersionsPerTrigger`
   * bounds tail catch-up after downtime, and `maxFilesPerTrigger` (Delta's
   * dial) CHUNKS the initial snapshot — at 100 TB the bootstrap arrives as
   * bounded per-file batches pinned to one version, not one monster batch.
@@ -121,16 +121,6 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
 
   private val pinnedSchema =
     DataType.fromJson(startCommit.schemaJson).asInstanceOf[StructType]
-
-  // column-mapped snapshots (r20 RENAME/DROP) store physical parquet names
-  // the stream's pinned logical schema cannot address through the plain
-  // ParquetScanBuilder below — refuse LOUDLY at start (a rename/drop landing
-  // MID-stream is refused per-commit by schemaGuard's dropped-column branch)
-  require(!VersionedTable.hasColumnMapping(pinnedSchema),
-    s"streaming read of $branch: the snapshot has renamed/dropped " +
-      "(column-mapped) columns; the streaming source serves unmapped " +
-      "snapshots only — start from a version before the mapping, or consume " +
-      "row-level changes via table_changes/format(\"vt-changes\")")
 
   override def initialOffset(): Offset =
     startingVersion.fold(VtStreamOffset(-1L))(sv =>
@@ -269,8 +259,8 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
       }
     // the batch is a snapshot of its own — the emitted files, their sizes
     // and the descriptors of the commits that introduced them, without
-    // stats — planned by the native MOR scan's partition planner and
-    // reader factory: Spark's vectorized parquet readers, per-file splits,
+    // stats — planned by the one scan builder: Spark's vectorized parquet
+    // readers, per-file splits, renamed columns read by physical name,
     // deletion vectors (when any) subtracted per task
     val synth = startCommit.copy(files = emitted.flatMap(_._2),
       fileSizes = emitted.flatMap { case (c, fs) =>
@@ -280,7 +270,7 @@ final class VtMicroBatchStream(spark: SparkSession, vt: VersionedTable,
       dvs = emitted.flatMap { case (c, fs) => fs.flatMap(f => c.dvs.get(f).map(f -> _)) }.toMap,
       stats = Map.empty, strStats = Map.empty, nullStats = Map.empty,
       bloomStats = Map.empty, bloomFiles = Vector.empty)
-    val builder = new VtMorScanBuilder(spark, vt.root, synth, pinnedSchema, None)
+    val builder = new VtMetaScanBuilder(spark, vt.root, synth, None)
     builder.pruneColumns(streamSchema)
     val batch = builder.build().toBatch
     factory = batch.createReaderFactory()

@@ -145,9 +145,22 @@ final case class Commit(
       * new or changed entries and a drop per removed file: the commit record
       * is O(changed files), not O(table), the Iceberg manifest-sharing
       * shape. Absent = empty = legacy inline commit (back-compatible JSON). */
-    manifests: Vector[String] = Vector.empty) {
+    manifests: Vector[String] = Vector.empty,
+    /** The FOREIGN shape of a Delta replay ([[DeltaLogReader.asCommit]]),
+      * never written to the commit log — native commits leave all three
+      * empty: the logical partition columns (their values live in the log,
+      * not the files), each file's raw partition-value strings keyed by
+      * logical column (null = the null partition), and each add's logged
+      * modification time. */
+    partitionColumns: Seq[String] = Nil,
+    partitionValues: Map[String, Map[String, String]] = Map.empty,
+    modTimes: Map[String, Long] = Map.empty) {
   /** All parents, first-parent first — the DAG edge set for ancestry walks. */
   def parents: List[String] = parent.toList ++ mergeParent.toList
+
+  /** A Delta replay: files are add paths (possibly nested under partition
+    * directories) and `props` is the Delta `configuration`. */
+  def fromDeltaLog: Boolean = modTimes.nonEmpty
 
   /** Every on-disk file this snapshot needs — data files, deletion-vector
     * `.bin` files (and legacy vector part-files), bloom index sidecars,

@@ -214,7 +214,7 @@ object DeltaForeignWriter {
         val mb = new MetadataBuilder()
         if (f.metadata.contains("delta.columnMapping.id"))
           mb.putLong("parquet.field.id", f.metadata.getLong("delta.columnMapping.id"))
-        out.as(DeltaLogReader.physName(f), mb.build())
+        out.as(VersionedTable.physicalName(f), mb.build())
       }
     }: _*)
     val rel = s"graft-${java.util.UUID.randomUUID.toString.take(12)}"

@@ -567,18 +567,32 @@ object DeltaLogReader {
 
   /** The snapshot in the shape the native scans read — a [[Commit]] whose
     * `files` are the adds' decoded paths (root-relative, or absolute),
-    * `fileSizes` their sizes, `rowCounts` their `numRecords`, `dvs` their
-    * vectors, and whose `stats` / `strStats` / `nullStats` come from each
-    * add's stats JSON, parsed once here and keyed by LOGICAL column name
-    * (stats keys are physical in column-mapped tables). Numeric columns
-    * keep numeric bounds and string columns textual ones (delta-spark may
-    * truncate those, which only widens the envelope). A partition value is
-    * its file's `(v, v)` stat — numeric when the column is not a string
-    * and the value parses, textual otherwise — with null count 0, and a
-    * null partition value is a null count equal to the file's rows, so
-    * partition values prune through the same survival test as stats. */
+    * `fileSizes` their sizes, `modTimes` their modification times,
+    * `rowCounts` their `numRecords`, `dvs` their vectors, `props` the
+    * table configuration (the column-mapping mode), `partitionColumns` and
+    * `partitionValues` the partitioning under LOGICAL names (the log may
+    * key either form), and whose `stats` / `strStats` / `nullStats` come
+    * from each add's stats JSON, parsed once here and keyed by LOGICAL
+    * column name (stats keys are physical in column-mapped tables). Numeric
+    * columns keep numeric bounds and string columns textual ones
+    * (delta-spark may truncate those, which only widens the envelope). A
+    * partition value is its file's `(v, v)` stat — numeric when the column
+    * is not a string and the value parses, textual otherwise — with null
+    * count 0, and a null partition value is a null count equal to the
+    * file's rows, so partition values prune through the same survival test
+    * as stats. */
   private[graft] def asCommit(snap: DeltaSnapshot): Commit = {
-    val partSet = snap.partitionColumns.toSet
+    val physName = VersionedTable.physicalName _
+    val partFields = snap.partitionColumns.map(n =>
+      snap.schema.fields.find(f => f.name == n || physName(f) == n).getOrElse(
+        throw new IllegalArgumentException(
+          s"partition column '$n' not found in the snapshot schema")))
+    val partOf = partFields.map(_.name).toSet
+    val partVals: Map[String, Map[String, String]] =
+      if (partFields.isEmpty) Map.empty
+      else snap.files.map(fe => fe.path -> partFields.map(f =>
+        f.name -> fe.partitionValues.get(physName(f)).orElse(fe.partitionValues.get(f.name))
+          .filter(v => v != null && v.nonEmpty).orNull).toMap).toMap
     val num = Map.newBuilder[String, Map[String, (Double, Double)]]
     val str = Map.newBuilder[String, Map[String, (String, String)]]
     val nul = Map.newBuilder[String, Map[String, Long]]
@@ -591,11 +605,9 @@ object DeltaLogReader {
       val fs = Map.newBuilder[String, (String, String)]
       val fnul = Map.newBuilder[String, Long]
       snap.schema.fields.foreach { f =>
-        val part = if (partSet(f.name) || partSet(physName(f)))
-          fe.partitionValues.get(physName(f)).orElse(fe.partitionValues.get(f.name))
-        else None
+        val part = if (partOf(f.name)) Some(partVals(fe.path)(f.name)) else None
         part match {
-          case Some(v) if v == null || v.isEmpty => rows.foreach(fnul += f.name -> _)
+          case Some(null) => rows.foreach(fnul += f.name -> _)
           case Some(v) =>
             fnul += f.name -> 0L
             v.toDoubleOption.filter(_ => f.dataType != StringType) match {
@@ -622,11 +634,20 @@ object DeltaLogReader {
       Seq(fs.result()).filter(_.nonEmpty).foreach(str += fe.path -> _)
       Seq(fnul.result()).filter(_.nonEmpty).foreach(nul += fe.path -> _)
     }
+    // a partition column can hold the null partition whatever its declared
+    // nullability: an optimizer trusting a non-null declaration would fold
+    // `IS NULL` to false over rows that read back null
+    val schema = StructType(snap.schema.fields.map(f =>
+      if (partOf(f.name)) f.copy(nullable = true) else f))
     Commit(s"delta-v${snap.version}", None, snap.version, snap.files.map(_.path),
-      snap.schema.json, "", 0L, stats = num.result(), strStats = str.result(),
+      schema.json, "", 0L, stats = num.result(), strStats = str.result(),
       nullStats = nul.result(), rowCounts = rowCounts.result(),
       dvs = snap.files.flatMap(f => f.dv.map(f.path -> _)).toMap,
-      fileSizes = snap.files.collect { case f if f.size >= 0L => f.path -> f.size }.toMap)
+      fileSizes = snap.files.collect { case f if f.size >= 0L => f.path -> f.size }.toMap,
+      props = snap.configuration,
+      partitionColumns = partFields.map(_.name),
+      partitionValues = partVals,
+      modTimes = snap.files.map(f => f.path -> f.modTime).toMap)
   }
 
   // ---- column mapping (PROTOCOL.md §Column Mapping, name + id modes) -----
@@ -646,14 +667,12 @@ object DeltaLogReader {
   // per-file footer inspection on the driver. `add.partitionValues` keys
   // are physical names in mapped tables of either mode (the spec's rule);
   // lookups try physical then logical so unmapped tables are unaffected.
+  // Physical names resolve through [[VersionedTable.physicalName]], which
+  // reads this key and the native one alike.
 
-  private val PhysNameKey = "delta.columnMapping.physicalName"
   private val ColIdKey = "delta.columnMapping.id"
   /** Spark's own parquet field-id metadata key (ParquetUtils.FIELD_ID_METADATA_KEY). */
   private val ParquetFieldIdKey = "parquet.field.id"
-
-  private[graft] def physName(f: org.apache.spark.sql.types.StructField): String =
-    if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey) else f.name
 
   /** Id-mode read schema: logical names, each field stamped with its
     * `parquet.field.id` so Spark's reader matches by id. A mapped field
@@ -682,17 +701,6 @@ object DeltaLogReader {
       }
       org.apache.spark.sql.types.StructField(f.name, walk(f.dataType), f.nullable, meta)
     })
-
-  private def physType(dt: DataType): DataType = dt match {
-    case st: StructType =>
-      StructType(st.fields.map(f =>
-        org.apache.spark.sql.types.StructField(physName(f), physType(f.dataType), f.nullable)))
-    case at: org.apache.spark.sql.types.ArrayType =>
-      at.copy(elementType = physType(at.elementType))
-    case mt: org.apache.spark.sql.types.MapType =>
-      mt.copy(keyType = physType(mt.keyType), valueType = physType(mt.valueType))
-    case other => other
-  }
 
   private def partitionValues(add: JsonNode): Map[String, String] = {
     val pv = add.path("partitionValues")
@@ -794,7 +802,7 @@ object DeltaLogReader {
         s"delta.columnMapping.mode=$mode is not implemented by this replayer")
       val mapped = mode == "name"
       val idMapped = mode == "id"
-      // same session-scoping rule as readSnapshot: id-mode scans plan
+      // same session-scoping rule as the snapshot replay: id-mode scans plan
       // against a cloned session with the field-id conf on, never by
       // mutating the caller's session
       val scanSession =
@@ -803,7 +811,7 @@ object DeltaLogReader {
         else spark
       val partSet = partCols.toSet
       def isPart(f: org.apache.spark.sql.types.StructField): Boolean =
-        partSet(f.name) || partSet(physName(f))
+        partSet(f.name) || partSet(VersionedTable.physicalName(f))
       val dataFields = schema.fields.filterNot(isPart)
       val partFields = schema.fields.filter(isPart)
       val ts = commitTimestamp(commitPath)
@@ -814,7 +822,7 @@ object DeltaLogReader {
       // partition columns live in the log, not the files: read each
       // partition-value group with the file schema (+ _change_type for cdc
       // files) and reconstitute the partition columns as typed literals —
-      // Delta's own rule, identical to readSnapshot's. Column-mapped feeds
+      // Delta's own rule, the snapshot replay's conversion. Column-mapped feeds
       // read data columns under physical names (name mode: scan physical,
       // rename back; id mode: field-id bind under logical names — the
       // `_change_type` column itself is never mapped and matches by name,
@@ -823,8 +831,7 @@ object DeltaLogReader {
       def scanGrouped(files: Vector[(String, Map[String, String])],
                       withChangeType: Boolean): DataFrame = {
         val base0 =
-          if (mapped) StructType(dataFields.map(f => org.apache.spark.sql.types
-            .StructField(physName(f), physType(f.dataType), f.nullable)))
+          if (mapped) VersionedTable.physicalSchema(StructType(dataFields))
           else if (idMapped) fieldIdSchema(StructType(dataFields))
           else StructType(dataFields)
         val fileSchema =
@@ -834,13 +841,13 @@ object DeltaLogReader {
         def renameToLogical(df: DataFrame): DataFrame =
           if (!mapped) df
           else df.select((dataFields.map(f =>
-            col(s"`${physName(f)}`").cast(f.dataType).as(f.name)) ++
+            col(s"`${VersionedTable.physicalName(f)}`").cast(f.dataType).as(f.name)) ++
             (if (withChangeType) Seq(col("_change_type")) else Nil)).toIndexedSeq: _*)
         files.groupBy(_._2).toSeq.map { case (pv, group) =>
           val base = renameToLogical(scanSession.read.schema(fileSchema)
             .parquet(group.map(g => abs(g._1)): _*))
           partFields.foldLeft(base) { (d, f) =>
-            val raw = pv.get(physName(f)).orElse(pv.get(f.name)).orNull
+            val raw = pv.get(VersionedTable.physicalName(f)).orElse(pv.get(f.name)).orNull
             val value = if (raw == null || raw.isEmpty) lit(null) else lit(raw)
             d.withColumn(f.name, value.cast(f.dataType))
           }
@@ -896,26 +903,19 @@ object DeltaLogReader {
     read(spark, tableRoot, Some(versionAtTimestamp(tableRoot, tsMillis)))
 
   /** Open the table at `versionAsOf` as a DataFrame — Delta's
-    * `option("versionAsOf", v)` without the Delta jar.
-    *
-    * Partition columns live in the log, not the files: each partition-value
-    * group is read with the file schema and the partition columns are
-    * reconstituted as cast literals (null for the empty-string-null
-    * convention) — Delta's own rule. Files carrying a DELETION VECTOR are
-    * read per-file with the parquet `_metadata.row_index` column and their
-    * MOR-deleted positions filtered out (small DVs as a codegen'd NOT-IN
-    * literal, large ones as a broadcast anti-join). DV-free tables keep the
-    * single multi-file vectorized
-    * scan (pushdown/pruning intact). */
+    * `option("versionAsOf", v)` without the Delta jar: the snapshot as a
+    * [[Commit]] ([[asCommit]]), replayed by the one snapshot replay
+    * ([[VersionedTable.replay]]) — partition columns from the log, column
+    * mapping by physical name or field id, deletion vectors dropped per
+    * row by position. */
   def read(spark: SparkSession, tableRoot: String,
-           versionAsOf: Option[Long] = None): DataFrame = {
-    val snap = graft.Tables.timed(s"delta replay: snapshot $tableRoot") {
-      snapshot(tableRoot, versionAsOf, Some(spark))
-    }
-    graft.Tables.timed(s"delta replay: build scan (${snap.files.size} files)") {
-      readSnapshot(spark, tableRoot, snap)
-    }
-  }
+           versionAsOf: Option[Long] = None): DataFrame =
+    replayed(spark, tableRoot, asCommit(snapshot(tableRoot, versionAsOf, Some(spark))))
+
+  /** A foreign snapshot's commit through the one replay (no bloom index). */
+  private def replayed(spark: SparkSession, tableRoot: String, c: Commit): DataFrame =
+    VersionedTable.replay(spark, Paths.get(tableRoot).toAbsolutePath.normalize, c,
+      _ => graft.sources.VtPruning.NoBloom)
 
   /** DATA-SKIPPING read over a Delta table: prune the snapshot's file list
     * with each add action's `stats` JSON ([min,max] on `column`, plus the
@@ -969,8 +969,8 @@ object DeltaLogReader {
   private def readKept(spark: SparkSession, tableRoot: String, snap: DeltaSnapshot,
       column: String, window: Either[List[(Double, Double)], List[(String, String)]])
       : DataFrame = {
-    val keep = VersionedTable.keptIn(asCommit(snap), column, window).toSet
-    readSnapshot(spark, tableRoot, snap.copy(files = snap.files.filter(f => keep(f.path))))
+    val c = asCommit(snap)
+    replayed(spark, tableRoot, c.copy(files = VersionedTable.keptIn(c, column, window)))
   }
 
   /** Delta CDF's `startingTimestamp` / `endingTimestamp` resolution: the
@@ -996,90 +996,5 @@ object DeltaLogReader {
     require(from >= 0 && to >= from,
       s"no commit falls inside [$fromTs, $toTs] for $tableRoot")
     changes(spark, tableRoot, from, to)
-  }
-
-  /** Replay a PINNED snapshot (possibly with a pruned file subset — the
-    * fallback relation's skipping path) into a DataFrame. Package-visible
-    * so [[graft.sources.ReplayRelation]] can serve a stats-pruned file list
-    * through the same machinery. */
-  private[graft] def readPinnedSnapshot(spark: SparkSession, tableRoot: String,
-                                        snap: DeltaSnapshot): DataFrame =
-    readSnapshot(spark, tableRoot, snap)
-
-  private def readSnapshot(spark: SparkSession, tableRoot: String,
-                           snap: DeltaSnapshot): DataFrame = {
-    val root = Paths.get(tableRoot).toAbsolutePath.normalize
-    def abs(p: String): String =
-      if (p.startsWith("/") || p.contains("://")) p else root.resolve(p).toString
-    if (snap.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snap.schema)
-    val mode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(mode == "none" || mode == "name" || mode == "id",
-      s"delta.columnMapping.mode=$mode is not implemented by this replayer " +
-        "(supported: none, name, id)")
-    val mapped = mode == "name"
-    val idMapped = mode == "id"
-    // field-id resolution happens inside Spark's parquet reader; the conf is
-    // read at scan planning from the DataFrame's OWN session — so id-mode
-    // scans are built against a cloned session with the flag on
-    // (SessionShim.withConf), never by mutating the caller's session (which
-    // would leak one table's requirement onto every later parquet scan)
-    val scanSession =
-      if (idMapped) org.apache.spark.sql.graft.SessionShim.withConf(spark,
-        "spark.sql.parquet.fieldId.read.enabled" -> "true")
-      else spark
-    // partition columns may be listed under either name form; resolve
-    // against the schema's fields so both conventions read correctly
-    val partSet = snap.partitionColumns.toSet
-    def isPart(f: org.apache.spark.sql.types.StructField): Boolean =
-      partSet(f.name) || partSet(physName(f))
-    val dataFields = snap.schema.fields.filterNot(isPart)
-    val partFields = snap.schema.fields.filter(isPart)
-    val fileSchema =
-      if (mapped)
-        StructType(dataFields.map(f => org.apache.spark.sql.types
-          .StructField(physName(f), physType(f.dataType), f.nullable)))
-      else if (idMapped) fieldIdSchema(StructType(dataFields))
-      else StructType(dataFields)
-    // id mode needs no rename: the read schema already carries the logical
-    // names and the reader binds columns by field id underneath them
-    def renameToLogical(df: DataFrame): DataFrame =
-      if (!mapped) df
-      else df.select(dataFields.map(f =>
-        col(s"`${physName(f)}`").cast(f.dataType).as(f.name)): _*)
-    def withPartCols(df: DataFrame, pv: Map[String, String]): DataFrame =
-      partFields.foldLeft(df) { (d, f) =>
-        val raw = pv.get(physName(f)).orElse(pv.get(f.name)).orNull
-        val v = if (raw == null || raw.isEmpty) lit(null) else lit(raw)
-        d.withColumn(f.name, v.cast(f.dataType))
-      }
-    // deletion vectors: the files that carry one are scanned apart, under
-    // one filter that drops a row whose position its file's descriptor
-    // marks — keyed by the absolute file path in the form Spark's
-    // `_metadata.file_path` decodes to (Hadoop-normalized: no `//`, `.`
-    // or `..` segments), so same-named files in different directories
-    // never share a vector — each task decoding only the vectors of the
-    // files it reads ([[VersionedTable.LiveMask]], the filter native
-    // merge-on-read uses); the other files scan plain
-    def key(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
-    val dvs = snap.files.flatMap(f => f.dv.map(key(abs(f.path)) -> _)).toMap
-    val mask = new VersionedTable.LiveMask(root.toString, dvs)
-    val live = org.apache.spark.sql.functions.udf((fp: String, pos: Long) =>
-      mask.liveAtUri(fp, pos))
-    def scan(group: Vector[FileEntry]): DataFrame = {
-      def read(fs: Vector[FileEntry]) =
-        scanSession.read.schema(fileSchema).parquet(fs.map(f => abs(f.path)): _*)
-      val (withDv, plain) = group.partition(_.dv.isDefined)
-      val masked = if (withDv.isEmpty) None
-        else Some(read(withDv).where(live(col("_metadata.file_path"), col("_metadata.row_index"))))
-      renameToLogical((masked.toSeq ++ Option.when(plain.nonEmpty)(read(plain)))
-        .reduce(_ unionByName _))
-    }
-    if (partFields.isEmpty) scan(snap.files)
-    else snap.files.groupBy(_.partitionValues).toSeq
-      .map { case (pv, group) => withPartCols(scan(group), pv) }
-      .reduce(_ unionByName _)
-      .select(snap.schema.fieldNames.map(col): _*)
   }
 }

@@ -236,18 +236,14 @@ object DeltaLogWriter {
         var restatement = prev.nonEmpty && removes.nonEmpty && !c.dataChange
         if (changeDataFeed && prev.nonEmpty && removes.nonEmpty && !restatement) {
           val spark = SparkSession.active
-          val feed = graft.Tables.timed(s"export v${c.version}: changesFeed plan") {
-            vt.changesFeed(spark, branch, c.version - 1, c.version)
-              .drop("version").withColumnRenamed("change_type", "_change_type")
-          }
+          val feed = vt.changesFeed(spark, branch, c.version - 1, c.version)
+            .drop("version").withColumnRenamed("change_type", "_change_type")
           // ONE pass (r21): write the cdc parquet directly and read emptiness
           // off the landed files' footer row counts — an empty feed writes a
           // single schema-only part file (verified), which is deleted again.
           // The previous persist + isEmpty + write sequence paid an extra
           // probe job and cached the feed's rows for no other consumer.
-          val written = graft.Tables.timed(s"export v${c.version}: writeCdcFiles") {
-            writeCdcFiles(vt.root, feed, c.version)
-          }
+          val written = writeCdcFiles(vt.root, feed, c.version)
           val rows = written.map { case (rel, _) =>
             VersionedTable.footerRowCount(vt.root.resolve(rel)).getOrElse(1L)
           }.sum

@@ -222,9 +222,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
         (Map.empty[String, Map[String, (Double, Double)]],
           Map.empty[String, Map[String, (String, String)]],
           Map.empty[String, Map[String, Long]])
-      else graft.Tables.timed(s"collectFileStats ${newFiles.size} files") {
-        collectFileStats(df.sparkSession, newFiles, statsCols, schema)
-      }
+      else collectFileStats(df.sparkSession, newFiles, statsCols, schema)
     // bloom columns are STICKY (Delta's bloom index is a table property):
     // unless this write names its own, the parent's bloom column set is
     // recomputed for the new files — so appends, compaction and z-order
@@ -235,9 +233,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
                         else parent.map(bloomColsOf).getOrElse(Nil))
       .filter(c => df.schema.fieldNames.contains(c) &&
         VersionedTable.bloomSupported(df.schema(c).dataType))
-    val newBlooms = graft.Tables.timed(s"collectFileBlooms ${effBloomCols.size} cols") {
-      collectFileBlooms(df.sparkSession, newFiles, effBloomCols, schema)
-    }
+    val newBlooms = collectFileBlooms(df.sparkSession, newFiles, effBloomCols, schema)
     val sidecar = writeBloomSidecar(branch, parent.map(_.version + 1).getOrElse(0L), newBlooms)
     // append keeps the parent's index (sidecars + any legacy inline
     // entries) live alongside the new files' sidecar; overwrite replaces
@@ -262,7 +258,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
                       else Vector.empty) ++ sidecar,
         dataChange = dataChange)
     }
-    try graft.Tables.timed(s"publish v${parent.map(_.version + 1).getOrElse(0L)}")(attempt(parent))
+    try attempt(parent)
     catch {
       // OCC REBASE for blind appends (r20, Delta's WriteSerializable rule:
       // a transaction that only ADDS files never logically conflicts with
@@ -2147,7 +2143,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     // column mapping (r20): parquet always stores PHYSICAL names — rename
     // the logical frame positionally per the table schema's mapping
     val body = mapTo.map(VersionedTable.toPhysical(df, _)).getOrElse(df)
-    graft.Tables.timed(s"writeDataFiles $rel")(LakeFiles.write(body, out, root))
+    LakeFiles.write(body, out, root)
   }
 
   private def publish(branch: String, parent: Option[Commit], message: String,
@@ -2320,51 +2316,10 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     }
   }
 
-  def readCommit(spark: SparkSession, c: Commit): DataFrame = {
-    val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
-    if (c.files.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else {
-      // LISTING-FREE scan over the commit's pinned file list (r21, guide
-      // §6): a HadoopFsRelation over the commit-log-backed
-      // [[graft.sources.VtFileIndex]] — file statuses come from the
-      // commit's recorded sizes, so the plan never lists paths (the old
-      // `spark.read.parquet(files…)` paid one driver getFileStatus per
-      // path, and past 32 paths a whole distributed LISTING JOB per read).
-      // Pushdown, pruning and vectorization are intact as before, PLUS the
-      // index folds commit-log stats/bloom file skipping into planning.
-      // The pinned schema keeps replays of old versions immune to later
-      // schema evolution. Column-mapped snapshots (r20 RENAME/DROP) read
-      // the PHYSICAL-named twin of the schema and re-alias positionally —
-      // filters on logical names push through the aliasing Project into
-      // the parquet scan as usual.
-      val raw = physFrame(spark, c, schema)
-      val base = if (!VersionedTable.hasColumnMapping(schema)) raw
-                 else raw.toDF(schema.fieldNames.toIndexedSeq: _*)
-      if (!c.files.exists(c.dvs.contains)) base
-      else
-        // merge-on-read: drop each file's deleted positions ([[scanWithPos]])
-        scanWithPos(spark, c).drop(VersionedTable.FkCol, VersionedTable.PosCol)
-    }
-  }
-
-  /** The physical-named parquet frame over a commit's files, planned
-    * through [[graft.sources.VtFileIndex]] (no listing, commit-stats file
-    * skipping); shared by [[readCommit]] and [[scanWithPos]]. */
-  private def physFrame(spark: SparkSession, c: Commit,
-                        schema: StructType): DataFrame =
-    // the index must see stats keyed the way the scan's pushed filters
-    // name columns — PHYSICAL under column mapping ([[physicalStatsCommit]]
-    // doc: a name-reusing rename chain makes the raw logical-keyed lookup
-    // consult the WRONG column and wrongly prune)
-    org.apache.spark.sql.graft.SessionShim.ofRelation(spark,
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        new graft.sources.VtFileIndex(spark, this,
-          VersionedTable.physicalStatsCommit(c, schema)),
-        StructType(Nil), VersionedTable.physicalSchema(schema), None,
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-        Map.empty[String, String])(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+  /** The rows of a commit of this table: the one snapshot replay
+    * ([[VersionedTable.replay]]) with this table's bloom index. */
+  def readCommit(spark: SparkSession, c: Commit): DataFrame =
+    VersionedTable.replay(spark, root, c, bloomLookup)
 
   /** Metadata-only `SELECT COUNT(*)` (Delta answers it from `numRecords` in
     * the log; so does this): when every file has a logged row count, the
@@ -2498,36 +2453,12 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
   /** The live rows of `c` tagged with their provenance — `__graft_fk` (file
     * key: last two path segments) and `__graft_pos` (0-based physical row
     * index from `_metadata.row_index`, stable because data files are
-    * immutable) — with `c`'s deletion vectors already subtracted: one
-    * filter drops a row whose position its file's descriptor marks, each
-    * task decoding only the descriptors of the files it reads
-    * ([[DeletionVectors.positions]], memoized per JVM). No join, no
-    * shuffle, and data predicates still push into the parquet scan. The
-    * building block of the merge-on-read path: [[readCommit]] drops the tag
-    * columns; row-level DML keeps them to record new deletions. */
-  private def scanWithPos(spark: SparkSession, c: Commit): DataFrame = {
-    import org.apache.spark.sql.functions.{col, concat_ws, slice, split, udf}
-    val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
-    // column mapping: tag positions on the PHYSICAL scan (metadata columns
-    // resolve only on the scan relation), then re-alias data columns to
-    // their logical names — positional, so DV subtraction is untouched
-    val raw = physFrame(spark, c, schema)
-      .withColumn(VersionedTable.FkCol,
-        concat_ws("/", slice(split(col("_metadata.file_path"), "/"), -2, 2)))
-      .withColumn(VersionedTable.PosCol, col("_metadata.row_index"))
-    val tagged =
-      if (!VersionedTable.hasColumnMapping(schema)) raw
-      else raw.toDF((schema.fieldNames :+ VersionedTable.FkCol :+
-        VersionedTable.PosCol).toIndexedSeq: _*)
-    // only the scanned files' descriptors ride the task closure
-    val byKey = c.files.flatMap(f => c.dvs.get(f).map(VersionedTable.fileKey(f) -> _)).toMap
-    if (byKey.isEmpty) tagged
-    else {
-      val mask = new VersionedTable.LiveMask(root.toString, byKey)
-      val live = udf((fk: String, pos: Long) => mask.live(fk, pos))
-      tagged.where(live(col(VersionedTable.FkCol), col(VersionedTable.PosCol)))
-    }
-  }
+    * immutable) — with `c`'s deletion vectors already subtracted
+    * ([[VersionedTable.replayTagged]]). The building block of the
+    * merge-on-read path: [[readCommit]] drops the tag columns; row-level
+    * DML keeps them to record new deletions. */
+  private def scanWithPos(spark: SparkSession, c: Commit): DataFrame =
+    VersionedTable.replayTagged(spark, root, c, bloomLookup)
 
   // ---- branch plumbing (lakeFS README.md:105-147) ------------------------
 
@@ -3409,9 +3340,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore)
     * idempotent. Returns the newest exported version. */
   def exportDeltaLog(branch: String = "main", changeDataFeed: Boolean = false,
                      checkpointInterval: Option[Int] = None): Long =
-    graft.Tables.timed(s"delta export: $branch") {
-      DeltaLogWriter.exportDeltaLog(this, branch, changeDataFeed, checkpointInterval)
-    }
+    DeltaLogWriter.exportDeltaLog(this, branch, changeDataFeed, checkpointInterval)
 
   /** Reclaim export artifacts (DV bins, cdc parquet, tmp dirs) no exported
     * version references — the export-side companion of [[vacuum]], with the
@@ -3492,12 +3421,11 @@ object VersionedTable {
       a.files.iterator.filter(f => live(f) && a.dvs.get(f) != b.dvs.get(f)).toSet
     }
 
-  /** Row filter of [[VersionedTable.scanWithPos]] and the Delta replay
-    * ([[DeltaLogReader]]): a row is live unless its file's descriptor marks
-    * its position. Keys are whatever identifies a file in the scan — the
-    * native file key, or a foreign file's decoded absolute path. Each task
-    * deserializes its own copy and decodes a file's positions once, on its
-    * first row. */
+  /** Row filter of [[VersionedTable.replayTagged]]: a row is live unless
+    * its file's descriptor marks its position. Keys are whatever identifies
+    * a file in the scan — the native file key, or a foreign file's decoded
+    * absolute path. Each task deserializes its own copy and decodes a
+    * file's positions once, on its first row. */
   private[vt] final class LiveMask(root: String,
                                    byKey: Map[String, DeletionVectors.DvDescriptor])
       extends Serializable {
@@ -3562,10 +3490,10 @@ object VersionedTable {
   /** Warm [[footerMetaCache]] for many files in PARALLEL: footer reads are
     * independent driver-local metadata I/O (~5-10 ms each) and every
     * consumer loop pays them serially — a 32-file commit spent ~0.25 s of
-    * publish wall in the rowCounts loop alone (SPARK_GRAFT_TIMING). The
-    * cache's load-outside-the-lock design makes concurrent loads of
-    * different keys safe; failures are swallowed here and re-surface as
-    * None in the serial consumer. */
+    * publish wall in the rowCounts loop alone. The cache's
+    * load-outside-the-lock design makes concurrent loads of different keys
+    * safe; failures are swallowed here and re-surface as None in the
+    * serial consumer. */
   private[vt] def prefetchFooters(paths: Seq[Path]): Unit =
     if (paths.sizeIs > 2) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -3738,20 +3666,41 @@ object VersionedTable {
     * a dropped column's name would resurrect its bytes from old files. */
   val ColMapProp = "graft.columnMapping"
 
+  /** Delta's physical-name key (PROTOCOL.md "Column Mapping"), which a
+    * foreign Delta replay's schema carries ([[DeltaLogReader.asCommit]]). */
+  private val DeltaPhysKey = "delta.columnMapping.physicalName"
+
+  /** A column's physical parquet name: the native [[PhysKey]], else Delta's
+    * physical name, else the logical name. */
   def physicalName(f: StructField): String =
-    if (f.metadata.contains(PhysKey)) f.metadata.getString(PhysKey) else f.name
+    if (f.metadata.contains(PhysKey)) f.metadata.getString(PhysKey)
+    else if (f.metadata.contains(DeltaPhysKey)) f.metadata.getString(DeltaPhysKey)
+    else f.name
 
   /** Logical column name → physical parquet name (identity when unmapped,
     * and for pseudo-columns not in the schema). */
   def physName(schema: StructType, col: String): String =
     schema.fields.find(_.name == col).map(physicalName).getOrElse(col)
 
-  /** The schema as parquet stores it: field names swapped to physical. */
-  def physicalSchema(schema: StructType): StructType =
-    StructType(schema.fields.map(f => f.copy(name = physicalName(f))))
+  private def physicalField(f: StructField): StructField =
+    f.copy(name = physicalName(f), dataType = physicalType(f.dataType))
 
-  def hasColumnMapping(schema: StructType): Boolean =
-    schema.fields.exists(f => physicalName(f) != f.name)
+  /** A type as parquet stores it: struct field names swapped to physical at
+    * every depth (nested renames are a positional struct cast away). */
+  def physicalType(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(physicalField))
+    case a: ArrayType => a.copy(elementType = physicalType(a.elementType))
+    case m: MapType =>
+      m.copy(keyType = physicalType(m.keyType), valueType = physicalType(m.valueType))
+    case other => other
+  }
+
+  /** The schema as parquet stores it (see [[physicalType]]). */
+  def physicalSchema(schema: StructType): StructType =
+    StructType(schema.fields.map(physicalField))
+
+  /** Some column, at any depth, is stored under another name. */
+  def hasColumnMapping(schema: StructType): Boolean = physicalSchema(schema) != schema
 
   /** Attach a physical name to a field's metadata. */
   def withPhysical(f: StructField, phys: String): StructField =
@@ -3763,19 +3712,26 @@ object VersionedTable {
   def freshPhysical(logical: String): String =
     s"${logical}_${java.util.UUID.randomUUID.toString.take(8)}"
 
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+
   /** Rename a DataFrame's columns to their physical twins per `schema`
     * (identity when unmapped). Positional: only names change. */
   def toPhysical(df: org.apache.spark.sql.DataFrame,
                  schema: StructType): org.apache.spark.sql.DataFrame =
     if (!hasColumnMapping(schema)) df
-    else df.toDF(df.schema.fieldNames.map(n => physName(schema, n)).toIndexedSeq: _*)
+    else schema.fields.filter(f => physicalType(f.dataType) != f.dataType)
+      .foldLeft(df.toDF(df.schema.fieldNames.map(n => physName(schema, n)).toIndexedSeq: _*)) {
+        (d, f) => d.withColumn(physicalName(f),
+          d.col(quoted(physicalName(f))).cast(physicalType(f.dataType)))
+      }
 
   /** The commit with its pruning metadata re-keyed into PHYSICAL column
     * name space (identity when unmapped): stats/strStats/nullStats maps,
     * bloomCols, and schemaJson itself (so [[VersionedTable.bloomLookup]]'s
-    * logical→physical translation becomes the identity). REQUIRED by any
-    * scan whose pushed filters carry physical attribute names (the
-    * physical-schema'd relations behind [[physFrame]] and the DSv2
+    * logical→physical translation becomes the identity). Partition columns
+    * keep their logical names: their values come from the log, not the
+    * files. REQUIRED by any scan whose pushed filters carry physical
+    * attribute names (the replay's physical-schema'd relation and the DSv2
     * delegate): the raw commit keys stats by LOGICAL names, and after a
     * name-reusing rename chain (RENAME a TO c; RENAME b TO a) a physical
     * name can COLLIDE with an unrelated logical name — the lookup would
@@ -3784,16 +3740,132 @@ object VersionedTable {
   private[graft] def physicalStatsCommit(c: Commit, schema: StructType): Commit =
     if (!hasColumnMapping(schema)) c
     else {
-      val physOf: Map[String, String] =
-        schema.fields.map(f => f.name -> physicalName(f)).toMap
+      val part = c.partitionColumns.toSet
+      val physOf: Map[String, String] = schema.fields.collect {
+        case f if !part(f.name) => f.name -> physicalName(f) }.toMap
       def rekey[V](m: Map[String, Map[String, V]]): Map[String, Map[String, V]] =
         m.view.mapValues(_.map { case (k, v) => physOf.getOrElse(k, k) -> v }).toMap
       c.copy(
-        schemaJson = physicalSchema(schema).json,
+        schemaJson = StructType(schema.fields.map(f =>
+          if (part(f.name)) f else physicalField(f))).json,
         stats = rekey(c.stats), strStats = rekey(c.strStats),
         nullStats = rekey(c.nullStats),
         bloomCols = c.bloomCols.map(cn => physOf.getOrElse(cn, cn)))
     }
+
+  /** How a snapshot's files store its columns — the one answer the replay
+    * ([[replay]]) and the DSv2 scan builder read. Partition columns (a
+    * Delta replay's) come from the log, typed by the file index. Data
+    * columns are read under their physical names at every depth (native or
+    * Delta name mapping) and re-aliased positionally, or — Delta id mode —
+    * under their logical names stamped with parquet field ids, on a
+    * session clone with field-id resolution on (never the caller's
+    * session: the conf would leak onto every later parquet scan). */
+  private[graft] final class ReadLayout(val commit: Commit) {
+    val schema: StructType = DataType.fromJson(commit.schemaJson).asInstanceOf[StructType]
+    val partFields: Seq[StructField] = commit.partitionColumns.map(schema(_))
+    val dataSchema: StructType =
+      StructType(schema.fields.filterNot(f => commit.partitionColumns.contains(f.name)))
+    // a native commit maps by name ([[PhysKey]]) wherever it maps at all
+    private val mode =
+      if (!commit.fromDeltaLog) "name"
+      else commit.props.getOrElse("delta.columnMapping.mode", "none")
+    require(Set("none", "name", "id")(mode),
+      s"delta.columnMapping.mode=$mode is not implemented by this replayer " +
+        "(supported: none, name, id)")
+    val byFieldId: Boolean = mode == "id"
+    /** Data columns the files name differently, at any depth. */
+    val renamed: Boolean = mode == "name" && hasColumnMapping(dataSchema)
+    val fileSchema: StructType =
+      if (byFieldId) DeltaLogReader.fieldIdSchema(dataSchema)
+      else if (renamed) physicalSchema(dataSchema)
+      else dataSchema
+    /** The commit keyed the way the file schema names columns. */
+    def fileCommit: Commit = if (renamed) physicalStatsCommit(commit, schema) else commit
+    def session(spark: SparkSession): SparkSession =
+      if (byFieldId) org.apache.spark.sql.graft.SessionShim.withConf(spark,
+        "spark.sql.parquet.fieldId.read.enabled" -> "true")
+      else spark
+  }
+
+  /** The one snapshot replay — native commits and foreign Delta replays
+    * ([[DeltaLogReader.asCommit]]) alike: a LISTING-FREE scan over the
+    * commit's pinned file list, a HadoopFsRelation over the commit-log
+    * backed [[graft.sources.VtFileIndex]] (file statuses from the recorded
+    * sizes, stats and `bloomOf` file skipping folded into planning,
+    * partition values from the log), read in the [[ReadLayout]] and
+    * re-aliased to the logical schema. Deletion vectors drop each row whose
+    * position its file's descriptor marks ([[replayTagged]]). The pinned
+    * schema keeps replays of old versions immune to later schema
+    * evolution. */
+  private[graft] def replay(spark: SparkSession, root: Path, c: Commit,
+                            bloomOf: Commit => (String, String) => Option[Array[Byte]])
+      : DataFrame =
+    if (c.files.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[Row](),
+        DataType.fromJson(c.schemaJson).asInstanceOf[StructType])
+    else if (!c.files.exists(c.dvs.contains)) replayed(spark, root, c, bloomOf, tag = false)
+    else replayTagged(spark, root, c, bloomOf).drop(FkCol, PosCol)
+
+  /** [[replay]] with each row tagged by [[FkCol]] and [[PosCol]] — its
+    * file and 0-based position (`_metadata.row_index`) — and the commit's
+    * deletion vectors subtracted: one filter drops a row whose position its
+    * file's descriptor marks, each task decoding only the descriptors of
+    * the files it reads. A native file is keyed by its last two path
+    * segments ([[fileKey]]); a Delta add, which may nest under partition
+    * directories, by the absolute path in the form `_metadata.file_path`
+    * decodes to (Hadoop-normalized: no `//`, `.` or `..` segments). */
+  private[graft] def replayTagged(spark: SparkSession, root: Path, c: Commit,
+                                  bloomOf: Commit => (String, String) => Option[Array[Byte]])
+      : DataFrame = {
+    import org.apache.spark.sql.functions.{col, udf}
+    val tagged = replayed(spark, root, c, bloomOf, tag = true)
+    val byKey = c.files.flatMap(f => c.dvs.get(f).map(d =>
+      (if (c.fromDeltaLog) graft.sources.VtFileIndex.pathOf(root, f).toUri.getPath
+       else fileKey(f)) -> d)).toMap
+    if (byKey.isEmpty) tagged
+    else {
+      val mask = new LiveMask(root.toString, byKey)
+      val live =
+        if (c.fromDeltaLog) udf((fp: String, pos: Long) => mask.liveAtUri(fp, pos))
+        else udf((fk: String, pos: Long) => mask.live(fk, pos))
+      tagged.where(live(col(FkCol), col(PosCol)))
+    }
+  }
+
+  private def replayed(spark: SparkSession, root: Path, c: Commit,
+                       bloomOf: Commit => (String, String) => Option[Array[Byte]],
+                       tag: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{col, concat_ws, slice, split}
+    val layout = new ReadLayout(c)
+    val session = layout.session(spark)
+    val fc = layout.fileCommit
+    val index = new graft.sources.VtFileIndex(session, root, fc, bloomOf(fc))
+    val raw = org.apache.spark.sql.graft.SessionShim.ofRelation(session,
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+        index.partitionSchema, layout.fileSchema, None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        Map.empty[String, String])(
+        session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+    // metadata columns resolve only on the scan relation: tag before aliasing
+    val tags = if (tag) Seq(FkCol, PosCol) else Nil
+    val withTags =
+      if (!tag) raw
+      else raw.withColumn(FkCol,
+          if (c.fromDeltaLog) col("_metadata.file_path")
+          else concat_ws("/", slice(split(col("_metadata.file_path"), "/"), -2, 2)))
+        .withColumn(PosCol, col("_metadata.row_index"))
+    val named =
+      if (!layout.renamed) withTags
+      else layout.dataSchema.fields.filter(f => physicalType(f.dataType) != f.dataType)
+        .foldLeft(withTags.toDF((layout.dataSchema.fieldNames ++
+          layout.partFields.map(_.name) ++ tags).toIndexedSeq: _*)) {
+          (d, f) => d.withColumn(f.name, d.col(quoted(f.name)).cast(f.dataType))
+        }
+    // the relation appends partition columns; restore the schema's order
+    if (layout.partFields.isEmpty) named
+    else named.select((layout.schema.fieldNames ++ tags).toIndexedSeq.map(n => col(quoted(n))): _*)
+  }
 
   /** Slot filename "<branch>-v<version>"; greedy branch group so hyphenated
     * branch names (even ones ending in "-vN") parse to the right (branch,

@@ -60,8 +60,8 @@ class ColumnMappingSpec extends SparkSpec {
     assert(vt.head("main").get.bloomCols === Seq("key"))
     // a point probe on the renamed column still skips to one file
     val probed = vt.read(spark, "main").where($"key" === 3000003L)
-    val rel = graft.sources.ReplayRelation.native(
-      spark.sqlContext, vt, vt.head("main").get)
+    val rel = new graft.sources.ReplayRelation(
+      spark.sqlContext, vt.root, vt.head("main").get, Some(vt))
     val plan = rel.scanPlan(Array("key", "v"),
       Array(org.apache.spark.sql.sources.EqualTo("key", 3000003L)))
     assert(plan.inputFiles.length === 1, "bloom probe must prune through the rename")
@@ -157,19 +157,38 @@ class ColumnMappingSpec extends SparkSpec {
     assert(v1.where($"doc_id" === 1000L).count() === 1)
   }
 
-  test("streaming read refuses a mapped snapshot loudly; CDF export of a mapped lineage refuses") {
+  test("a stream reads a column-mapped table from a mapped start version; a mid-stream rename refuses") {
+    val vt = VersionedTable.create(Tables.scratch("cmap_stream"))
+    vt.write((1 to 10).map(i => (i.toLong, s"r$i")).toDF("k", "v").coalesce(1),
+      "main", "v0")
+    vt.renameColumn(spark, "main", "k", "kk")
+    spark.conf.set("spark.sql.catalog.vt", classOf[graft.sources.VtCatalog].getName)
+    val q = spark.readStream.table(s"vt.`${vt.root}`").writeStream
+      .format("memory").queryName("cmap_stream").start()
+    try {
+      q.processAllAvailable()
+      // a post-rename append lands under the physical name; the stream
+      // reads it back under the logical one
+      vt.write((11 to 15).map(i => (i.toLong, s"r$i")).toDF("kk", "v").coalesce(1),
+        "main", "v2", mode = "append")
+      q.processAllAvailable()
+      val got = spark.table("cmap_stream")
+      assert(got.columns.toSeq === Seq("kk", "v"))
+      assert(got.as[(Long, String)].collect().sorted.toSeq ===
+        (1 to 15).map(i => (i.toLong, s"r$i")))
+      // a rename landing MID-stream loses a pinned column: refused
+      vt.renameColumn(spark, "main", "v", "vv")
+      vt.write(Seq((16L, "r16")).toDF("kk", "vv").coalesce(1), "main", "v4", mode = "append")
+      val e = intercept[Exception](q.processAllAvailable())
+      assert(e.getMessage.contains("restart the stream"))
+    } finally q.stop()
+  }
+
+  test("CDF export of a mapped lineage refuses") {
     val vt = VersionedTable.create(Tables.scratch("cmap_refusals"))
     vt.write((1 to 10).map(i => (i.toLong, s"r$i")).toDF("k", "v").coalesce(1),
       "main", "v0")
     vt.renameColumn(spark, "main", "k", "kk")
-    val e = intercept[Exception] {
-      spark.conf.set("spark.sql.catalog.vt", classOf[graft.sources.VtCatalog].getName)
-      val q = spark.readStream.table(s"vt.`${vt.root}`").writeStream
-        .format("memory").queryName("cmap_stream").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    assert(e.getMessage.contains("column-mapped") ||
-      Option(e.getCause).exists(_.getMessage.contains("column-mapped")))
     // CDF export of a mapped lineage refuses; the PLAIN export now works
     // (see the round-trip test below)
     val e2 = intercept[IllegalArgumentException](

@@ -121,7 +121,7 @@ class DeltaLiteSpec extends SparkSpec {
     assert(scannedFiles(qIn) === 2, "IN must also PRUNE, not just stay correct")
   }
 
-  test("DeltaFileIndex trusts the log's size/mtime: planning issues NO filesystem stats") {
+  test("the delta-lite file index trusts the log's size/mtime: planning issues NO filesystem stats") {
     import graft.vt.DeltaLogReader
     val root = freshRoot("nostat")
     val schema = Seq((1L, "a")).toDF("k", "v").schema
@@ -133,17 +133,39 @@ class DeltaLiteSpec extends SparkSpec {
     val snap = DeltaLogReader.snapshot(root.toString, None, Some(spark))
     assert(snap.files.head.size === 1234L && snap.files.head.modTime === 99L,
       "snapshot must carry the add action's size and modificationTime")
-    val idx = new graft.sources.DeltaFileIndex(spark,
-      root.toAbsolutePath.normalize, snap)
+    // format("delta-lite") and the dlite catalog's scans plan through the
+    // one commit-log index over the replay
+    val idx = new graft.sources.VtFileIndex(spark, root.toAbsolutePath.normalize,
+      DeltaLogReader.asCommit(snap), graft.sources.VtPruning.NoBloom)
     val dirs = idx.listFiles(Nil, Nil)
     assert(dirs.map(_.files.map(_.getLen).sum).sum === 1234L)
+    assert(dirs.flatMap(_.files.map(_.getModificationTime)) === Seq(99L))
     assert(idx.sizeInBytes === 1234L)
-    // the dlite catalog's scans plan through the native index over the
-    // replay: the same log-only planning
-    val vtIdx = new graft.sources.VtFileIndex(spark, root.toAbsolutePath.normalize,
-      DeltaLogReader.asCommit(snap), graft.sources.VtPruning.NoBloom)
-    assert(vtIdx.listFiles(Nil, Nil).map(_.files.map(_.getLen).sum).sum === 1234L)
-    assert(vtIdx.sizeInBytes === 1234L)
+  }
+
+  test("delta-lite reports each add's logged modificationTime in _metadata.file_modification_time") {
+    def mtimes(root: java.nio.file.Path): Map[Long, Long] =
+      readDl(root.toString).select($"k", $"_metadata.file_modification_time")
+        .as[(Long, java.sql.Timestamp)].collect().map { case (k, t) => k -> t.getTime }.toMap
+    val df = Seq(1L, 2L, 3L).toDF("k")
+    // unpartitioned
+    val flat = freshRoot("mtime_flat")
+    val (fa, sa) = F.writeDataFile(flat, df.where($"k" < 3), "pa")
+    val (fb, sb) = F.writeDataFile(flat, df.where($"k" === 3), "pb")
+    F.writeCommit(flat, 0, Seq(F.protocolLine(), F.metaDataLine(df.schema.json, Nil),
+      F.addLine(fa, sa, mtime = 1700000000000L), F.addLine(fb, sb, mtime = 1700000123000L)))
+    assert(mtimes(flat) === Map(1L -> 1700000000000L, 2L -> 1700000000000L,
+      3L -> 1700000123000L))
+    // partitioned
+    val parted = freshRoot("mtime_parts")
+    val (fc, sc) = F.writeDataFile(parted, df.where($"k" < 3), "pc")
+    val (fd, sd) = F.writeDataFile(parted, df.where($"k" === 3), "pd")
+    val schema = Seq((0L, 0)).toDF("k", "bucket").schema
+    F.writeCommit(parted, 0, Seq(F.protocolLine(), F.metaDataLine(schema.json, Seq("bucket")),
+      F.addLine(fc, sc, Map("bucket" -> "0"), mtime = 1700000456000L),
+      F.addLine(fd, sd, Map("bucket" -> "1"), mtime = 1700000789000L)))
+    assert(mtimes(parted) === Map(1L -> 1700000456000L, 2L -> 1700000456000L,
+      3L -> 1700000789000L))
   }
 
   test("delta-lite serves id-mode column-mapped tables NATIVELY: field ids bind, stats prune") {
@@ -199,8 +221,9 @@ class DeltaLiteSpec extends SparkSpec {
     val q = readDl(vt.root.toString).where($"k".between(12, 18))
     assert(q.select("k").as[Long].collect().sorted === Array(12L, 13, 14, 16, 17, 18))
     // evidence: the pushed window prunes the snapshot's files before any scan
-    val rel = graft.sources.ReplayRelation.foreign(spark.sqlContext,
-      vt.root.toString, graft.vt.DeltaLogReader.snapshot(vt.root.toString, None, Some(spark)))
+    val rel = new graft.sources.ReplayRelation(spark.sqlContext, vt.root,
+      graft.vt.DeltaLogReader.asCommit(
+        graft.vt.DeltaLogReader.snapshot(vt.root.toString, None, Some(spark))), None)
     val plan = rel.scanPlan(Array("k"),
       Array(fs.GreaterThanOrEqual("k", 12L), fs.LessThanOrEqual("k", 18L)))
     assert(plan.inputFiles.length === 1,
@@ -232,8 +255,9 @@ class DeltaLiteSpec extends SparkSpec {
     assert(read.where($"bucket" === 1).select("k").as[Long].collect().sorted
       === (1L to 30L).filter(_ % 3 == 1).toArray)
     // pushed partition-column filters prune whole partitionValues groups
-    val rel = graft.sources.ReplayRelation.foreign(spark.sqlContext,
-      root.toString, graft.vt.DeltaLogReader.snapshot(root.toString, None, Some(spark)))
+    val rel = new graft.sources.ReplayRelation(spark.sqlContext, root.toAbsolutePath.normalize,
+      graft.vt.DeltaLogReader.asCommit(
+        graft.vt.DeltaLogReader.snapshot(root.toString, None, Some(spark))), None)
     assert(rel.scanPlan(Array("k"), Array(fs.EqualTo("bucket", 1)))
       .inputFiles.length === 1)
     assert(rel.scanPlan(Array("k"), Array(fs.In("bucket", Array(0, 2))))

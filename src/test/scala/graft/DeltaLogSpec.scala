@@ -1439,6 +1439,13 @@ class DeltaLogSpec extends SparkSpec {
       .fieldNames.toSeq === Seq("a", "b"), "nested fields renamed to logical")
     assert(got2.select($"k", $"s.a", $"s.b").as[(Int, Int, String)]
       .collect().sortBy(_._1) === Array((1, 10, "x"), (2, 20, "y")))
+    // the dlite catalog's scan reads both shapes through the same layout:
+    // the renamed partition key, and a nested field pruned by name
+    spark.conf.set("spark.sql.catalog.dlite", classOf[graft.sources.DeltaLiteCatalog].getName)
+    assert(spark.sql(s"SELECT amt, part FROM dlite.`$root`").as[(Int, String)]
+      .collect().sortBy(_._1) === Array((17, "x"), (23, "y")))
+    assert(spark.sql(s"SELECT k, s.b FROM dlite.`$root2`").as[(Int, String)]
+      .collect().sortBy(_._1) === Array((1, "x"), (2, "y")))
   }
 
   test("column mapping (id mode): parquet field ids drive the read, names do not") {

@@ -720,7 +720,9 @@ class PropertySpec extends SparkSpec {
           if (nxt == off) done = true
           else {
             stream.planInputPartitions(off, nxt).foreach { p =>
-              val fp = p.asInstanceOf[Product].productIterator.collectFirst {
+              // a deletion-free batch plans bare file partitions, a batch
+              // with vectors wraps each one with its file's descriptor
+              val fp = Iterator(p).concat(p.asInstanceOf[Product].productIterator).collectFirst {
                 case f: org.apache.spark.sql.execution.datasources.FilePartition => f
               }.get
               fp.files.foreach(pf => seen += ((norm(pf.filePath.toString), pf.start)))

@@ -196,25 +196,25 @@ class SourcesUnitSpec extends AnyFunSuite {
       org.apache.spark.sql.sources.EqualTo("d", Double.NaN)))._1 === Nil)
   }
 
-  test("DeltaLite.unrenamed walks every container depth") {
+  test("VersionedTable.hasColumnMapping walks every container depth") {
     import org.apache.spark.sql.types._
     def field(name: String, phys: String, dt: DataType) =
       StructField(name, dt, nullable = true,
         new MetadataBuilder()
           .putString("delta.columnMapping.physicalName", phys).build())
-    // renamed struct field buried under array<array<struct>>: NOT unrenamed
+    // renamed struct field buried under array<array<struct>>: mapped
     val deep = StructType(Seq(StructField("a",
       ArrayType(ArrayType(StructType(Seq(field("x", "col-x", IntegerType))))))))
-    assert(!DeltaLite.unrenamed(deep),
-      "a rename under nested containers must force the exact fallback")
-    // same shape, physical == logical: unrenamed
+    assert(graft.vt.VersionedTable.hasColumnMapping(deep),
+      "a rename under nested containers is a column mapping")
+    // same shape, physical == logical: not mapped
     val same = StructType(Seq(StructField("a",
       ArrayType(ArrayType(StructType(Seq(field("x", "x", IntegerType))))))))
-    assert(DeltaLite.unrenamed(same))
+    assert(!graft.vt.VersionedTable.hasColumnMapping(same))
     // map-value struct rename
     val mapped = StructType(Seq(StructField("m",
       MapType(StringType, StructType(Seq(field("y", "col-y", IntegerType)))))))
-    assert(!DeltaLite.unrenamed(mapped))
+    assert(graft.vt.VersionedTable.hasColumnMapping(mapped))
   }
 
   test("StatsWindows.fromFilters: the sources.Filter front end mirrors the catalyst one") {

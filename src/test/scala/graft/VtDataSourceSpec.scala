@@ -106,7 +106,7 @@ class VtDataSourceSpec extends SparkSpec {
     assert(readVt(root).count() === 7L)
   }
 
-  test("MOR fallback is a PrunedFilteredScan: stats prune files, filters push below the DV anti-join") {
+  test("MOR fallback is a PrunedFilteredScan: stats prune files, filters push below the DV filter") {
     import org.apache.spark.sql.{sources => fs}
     val vt = VersionedTable.create(Tables.scratch("vtds_mor_push"))
     def part(lo: Int, hi: Int) =
@@ -124,7 +124,7 @@ class VtDataSourceSpec extends SparkSpec {
     assert(qIn.select("k").as[Long].collect().sorted === Array(2L, 21),
       "IN must respect the MOR deletion of k=15")
     // evidence: pushed filters prune the commit's file list BEFORE any scan
-    val rel = graft.sources.ReplayRelation.native(spark.sqlContext, vt, commit)
+    val rel = new graft.sources.ReplayRelation(spark.sqlContext, vt.root, commit, Some(vt))
     // inputFiles returns URIs; compare by the trailing dir/file key
     def key(p: String) = p.split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
     val dataFiles = commit.files.map(key).toSet
@@ -136,7 +136,7 @@ class VtDataSourceSpec extends SparkSpec {
     // IN prunes as a union of point windows: file [11,20] holds neither 2 nor 21
     val planIn = rel.scanPlan(Array("k"), Array(fs.In("k", Array(2L, 21L))))
     assert(planIn.inputFiles.map(key).count(dataFiles) === 2)
-    // the translated predicate reaches the parquet scan under the anti-join
+    // the translated predicate reaches the parquet scan under the DV filter
     assert(plan.queryExecution.executedPlan.toString.contains("PushedFilters: ["),
       "pushed filters must reach the inner parquet scan")
     // honesty: translatable conjuncts are handled, exotic ones reported back
@@ -363,7 +363,7 @@ class VtDataSourceSpec extends SparkSpec {
     def morOpened(key: String): Int = {
       val h = vt.head("main").get
       def fk(p: String) = p.split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
-      graft.sources.ReplayRelation.native(spark.sqlContext, vt, h)
+      new graft.sources.ReplayRelation(spark.sqlContext, vt.root, h, Some(vt))
         .scanPlan(Array("k", "v"), Array(org.apache.spark.sql.sources.EqualTo("k", key)))
         .inputFiles.map(fk).count(h.files.map(fk).toSet)
     }
