@@ -4,9 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{SQLContext, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graft.SessionShim
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
-import org.apache.spark.sql.types.StructType
 
 import graft.vt.{DeltaLogReader, VersionedTable}
 import graft.vt.DeltaLogReader.DeltaSnapshot
@@ -28,7 +26,8 @@ import graft.vt.DeltaLogReader.DeltaSnapshot
   * the likeliest to predate a mapping upgrade), or scans plainly when no
   * column was ever renamed (physicalName == logical name throughout).
   * The field-id conf is scoped to the RELATION'S cloned session
-  * ([[SessionShim.withConf]]) — the user's session is never mutated.
+  * ([[DeltaLogReader.fieldIdSession]]) — the user's session is never
+  * mutated.
   * Snapshots with deletion vectors, or renamed name-mode schemas without
   * file field ids, need what a DSv1 relation cannot do (subtract vectors,
   * re-alias columns) and are served by [[ReplayRelation]] (correct,
@@ -52,43 +51,27 @@ final class DeltaLite extends RelationProvider with DataSourceRegister {
     val spark = sqlContext.sparkSession
     val snap = DeltaLogReader.snapshot(path, version, Some(spark))
     val commit = DeltaLogReader.asCommit(snap)
-    val mode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
+    val layout = new VersionedTable.ReadLayout(commit)
     val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    val dataFields = StructType(snap.schema.fields
-      .filterNot(f => commit.partitionColumns.contains(f.name)))
-    // (schema option, needs field-id resolution) per mapping mode; None =
-    // this snapshot needs the replay
-    val routed: Option[(StructType, Boolean)] = mode match {
-      case _ if commit.dvs.nonEmpty => None
-      // mapping off, or enabled but no column ever renamed (the upgrade
-      // default): physical == logical, a plain scan binds correctly
-      case "none" => Some((dataFields, false))
-      case _ if !VersionedTable.hasColumnMapping(dataFields) => Some((dataFields, false))
-      case "id" => Some((DeltaLogReader.fieldIdSchema(dataFields), true))
-      case "name" =>
-        // renamed name-mode columns can still bind NATIVELY when the
-        // data files carry parquet field ids (delta-spark's do): reuse
-        // the id-mode machinery; fall back only when ids are genuinely
-        // absent (probed from the oldest file's footer — a mixed table
-        // whose old files lack ids fails loudly in the reader rather
-        // than returning wrong columns)
-        scala.util.Try(DeltaLogReader.fieldIdSchema(dataFields)).toOption
-          .filter(_ => DeltaLite.oldestFileHasFieldIds(spark, root, snap))
-          .map(s => (s, true))
-      case _ => None
-    }
-    routed match {
-      case None => new ReplayRelation(sqlContext, root, commit, None)
-      case Some((dataSchema, needsIds)) =>
-        // field-id resolution is read at scan planning from the
-        // RELATION's session — scope it to a clone, never the user's
-        val relSession =
-          if (needsIds) SessionShim.withConf(spark,
-            "spark.sql.parquet.fieldId.read.enabled" -> "true")
-          else spark
-        val index = new VtFileIndex(relSession, root, commit, VtPruning.NoBloom)
-        HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
-          new ParquetFileFormat, Map.empty[String, String])(relSession)
+    // renamed name-mode columns can still bind NATIVELY when the data
+    // files carry parquet field ids (delta-spark's do): reuse the id-mode
+    // machinery; fall back only when ids are genuinely absent (probed from
+    // the oldest file's footer — a mixed table whose old files lack ids
+    // fails loudly in the reader rather than returning wrong columns)
+    val idSchema =
+      if (!layout.renamed) None
+      else scala.util.Try(DeltaLogReader.fieldIdSchema(layout.dataSchema)).toOption
+        .filter(_ => DeltaLite.oldestFileHasFieldIds(spark, root, snap))
+    if (commit.dvs.nonEmpty || (layout.renamed && idSchema.isEmpty))
+      new ReplayRelation(sqlContext, root, commit, None)
+    else {
+      // field-id resolution is read at scan planning from the RELATION's
+      // session, a clone — never the user's
+      val relSession =
+        if (idSchema.isEmpty) layout.session(spark) else DeltaLogReader.fieldIdSession(spark)
+      val index = new VtFileIndex(relSession, root, commit, VtPruning.NoBloom)
+      HadoopFsRelation(index, index.partitionSchema, idSchema.getOrElse(layout.fileSchema),
+        None, new ParquetFileFormat, Map.empty[String, String])(relSession)
     }
   }
 }

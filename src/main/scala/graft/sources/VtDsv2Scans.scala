@@ -62,8 +62,9 @@ final class VtMetaScanBuilder(spark: SparkSession, root: java.nio.file.Path,
   // the metadata aggregates and the runtime-filter path stay LOGICAL. Rows
   // are positional, so only NAMES translate: filters rewrite their
   // attribute names on the way into the delegate, pruning renames its
-  // requested fields at every depth, and the scans map the pruned read
-  // schema back.
+  // requested fields at every depth (id mode: re-stamps their field ids,
+  // which Spark's pruned schema does not carry), and the scans map the
+  // pruned read schema back.
   private val layout = new VersionedTable.ReadLayout(commit)
   private val fileCommit = layout.fileCommit
   private val session = layout.session(spark)
@@ -86,7 +87,8 @@ final class VtMetaScanBuilder(spark: SparkSession, root: java.nio.file.Path,
       a.withName(VersionedTable.physicalName(layout.dataSchema(a.name)))
   }
   private def translate(s: StructType, from: StructType, to: StructType): StructType =
-    if (!layout.renamed) s else VtMetaScanBuilder.rename(s, from, to).asInstanceOf[StructType]
+    if (layout.fileSchema == layout.dataSchema) s
+    else VtMetaScanBuilder.rename(s, from, to).asInstanceOf[StructType]
 
   private var required: StructType =
     StructType(layout.fileSchema.fields ++ index.partitionSchema.fields)
@@ -142,14 +144,17 @@ final class VtMetaScanBuilder(spark: SparkSession, root: java.nio.file.Path,
 
 object VtMetaScanBuilder {
   /** `s` (a pruned subset of `from`, nested fields included) with every
-    * field named as in `to`, the same type under other names — fields
-    * `from` does not hold (partition columns, the row index) stay as is. */
+    * field named as in `to` and carrying its metadata (the parquet field
+    * id an id-mapped read binds by), the same type under other names —
+    * fields `from` does not hold (partition columns, the row index) stay
+    * as is. */
   private def rename(s: DataType, from: DataType, to: DataType): DataType = (s, from, to) match {
     case (st: StructType, f: StructType, t: StructType) =>
       StructType(st.fields.map { sf =>
         val i = f.fieldNames.indexOf(sf.name)
         if (i < 0) sf
-        else sf.copy(name = t(i).name, dataType = rename(sf.dataType, f(i).dataType, t(i).dataType))
+        else sf.copy(name = t(i).name, metadata = t(i).metadata,
+          dataType = rename(sf.dataType, f(i).dataType, t(i).dataType))
       })
     case (a: ArrayType, f: ArrayType, t: ArrayType) =>
       a.copy(elementType = rename(a.elementType, f.elementType, t.elementType))

@@ -674,6 +674,20 @@ object DeltaLogReader {
   /** Spark's own parquet field-id metadata key (ParquetUtils.FIELD_ID_METADATA_KEY). */
   private val ParquetFieldIdKey = "parquet.field.id"
 
+  /** The session an id-bound read plans on ([[fieldIdSchema]]): a clone of
+    * `spark` with field-id resolution on — never the caller's session, or
+    * the conf would leak onto every later parquet scan — and parquet filter
+    * pushdown off. Spark turns pushed filters into parquet predicates by
+    * column NAME, and the names of an id-bound read are logical while the
+    * files' are physical: where a logical name is another column's
+    * physical name (a rename chain, or files whose names disagree with the
+    * log), a pushed `a = 5` would skip row groups on the wrong column. File
+    * skipping from the log's logical-keyed stats is unaffected. */
+  private[graft] def fieldIdSession(spark: SparkSession): SparkSession =
+    org.apache.spark.sql.graft.SessionShim.withConf(spark,
+      "spark.sql.parquet.fieldId.read.enabled" -> "true",
+      "spark.sql.parquet.filterPushdown" -> "false")
+
   /** Id-mode read schema: logical names, each field stamped with its
     * `parquet.field.id` so Spark's reader matches by id. A mapped field
     * without an id is refused loudly — guessing by name here is exactly the
@@ -802,13 +816,7 @@ object DeltaLogReader {
         s"delta.columnMapping.mode=$mode is not implemented by this replayer")
       val mapped = mode == "name"
       val idMapped = mode == "id"
-      // same session-scoping rule as the snapshot replay: id-mode scans plan
-      // against a cloned session with the field-id conf on, never by
-      // mutating the caller's session
-      val scanSession =
-        if (idMapped) org.apache.spark.sql.graft.SessionShim.withConf(spark,
-          "spark.sql.parquet.fieldId.read.enabled" -> "true")
-        else spark
+      val scanSession = if (idMapped) fieldIdSession(spark) else spark
       val partSet = partCols.toSet
       def isPart(f: org.apache.spark.sql.types.StructField): Boolean =
         partSet(f.name) || partSet(VersionedTable.physicalName(f))

@@ -3758,9 +3758,8 @@ object VersionedTable {
     * Delta replay's) come from the log, typed by the file index. Data
     * columns are read under their physical names at every depth (native or
     * Delta name mapping) and re-aliased positionally, or — Delta id mode —
-    * under their logical names stamped with parquet field ids, on a
-    * session clone with field-id resolution on (never the caller's
-    * session: the conf would leak onto every later parquet scan). */
+    * under their logical names stamped with parquet field ids, on the
+    * field-id session ([[DeltaLogReader.fieldIdSession]]). */
   private[graft] final class ReadLayout(val commit: Commit) {
     val schema: StructType = DataType.fromJson(commit.schemaJson).asInstanceOf[StructType]
     val partFields: Seq[StructField] = commit.partitionColumns.map(schema(_))
@@ -3783,9 +3782,7 @@ object VersionedTable {
     /** The commit keyed the way the file schema names columns. */
     def fileCommit: Commit = if (renamed) physicalStatsCommit(commit, schema) else commit
     def session(spark: SparkSession): SparkSession =
-      if (byFieldId) org.apache.spark.sql.graft.SessionShim.withConf(spark,
-        "spark.sql.parquet.fieldId.read.enabled" -> "true")
-      else spark
+      if (byFieldId) DeltaLogReader.fieldIdSession(spark) else spark
   }
 
   /** The one snapshot replay — native commits and foreign Delta replays

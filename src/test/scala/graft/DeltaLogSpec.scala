@@ -1472,6 +1472,13 @@ class DeltaLogSpec extends SparkSpec {
     assert(got.columns.toSeq === Seq("x", "y"))
     assert(got.as[(Int, String)].collect() === Array((7, "seven")),
       "id mode must bind columns by parquet field id, not by physical name")
+    // the dlite catalog's scan too: Spark's pruned read schema carries no
+    // field ids, so the builder must stamp them back before the readers bind
+    spark.conf.set("spark.sql.catalog.dlite", classOf[graft.sources.DeltaLiteCatalog].getName)
+    assert(spark.sql(s"SELECT x, y FROM dlite.`$root`").as[(Int, String)].collect() ===
+      Array((7, "seven")))
+    assert(spark.sql(s"SELECT y FROM dlite.`$root` WHERE x = 7").as[String].collect() ===
+      Array("seven"))
     // a mapped field WITHOUT an id is refused loudly — falling back to name
     // matching is exactly the wrong-column hazard above
     val root2 = freshRoot("cmap_id_missing")
@@ -1487,6 +1494,31 @@ class DeltaLogSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       DeltaLogReader.read(spark, root2.toString, None))
     assert(e.getMessage.contains("delta.columnMapping.id"), e.getMessage)
+  }
+
+  test("column mapping (id mode): a filter on a name the files give another column reads by id") {
+    // the files store logical x under the name "y" and logical y under
+    // "x": a filter pushed into parquet by NAME would test the wrong
+    // column's row-group stats and skip the row
+    val root = freshRoot("cmap_id_collide")
+    val df = Seq((7, 100)).toDF("x", "y")
+    val swap = Map("x" -> "y", "y" -> "x")
+    val ids = Map("x" -> 1L, "y" -> 2L)
+    val (fa, sa) = F.writeDataFile(root, F.physicalWithIds(df, swap, ids), "pa")
+    F.writeCommit(root, 0, Seq(F.protocolLine(minReader = 2, minWriter = 5),
+      F.metaDataLine(F.columnMappedSchema(df.schema, swap, ids).json, Nil,
+        Map("delta.columnMapping.mode" -> "id", "delta.columnMapping.maxColumnId" -> "2")),
+      F.addLine(fa, sa)))
+    spark.conf.set("spark.sql.catalog.dlite", classOf[graft.sources.DeltaLiteCatalog].getName)
+    val fronts = Seq(
+      "replay" -> DeltaLogReader.read(spark, root.toString, None),
+      "delta-lite" -> spark.read.format("delta-lite").load(root.toString),
+      "dlite." -> spark.table(s"dlite.`$root`"))
+    fronts.foreach { case (front, t) =>
+      assert(t.where($"x" === 7).as[(Int, Int)].collect() === Array((7, 100)), front)
+      assert(t.where($"y" === 100).as[(Int, Int)].collect() === Array((7, 100)), front)
+      assert(t.where($"x" === 100).isEmpty, front)
+    }
   }
 
   test("column mapping (id mode): NESTED struct fields bind by field id too") {
@@ -1519,6 +1551,13 @@ class DeltaLogSpec extends SparkSpec {
     assert(got.columns.toSeq === Seq("k", "s"))
     assert(got.selectExpr("k", "s.amt", "s.label").as[(Int, Long, String)]
       .collect().sortBy(_._1) === Array((1, 10L, "ten"), (2, 20L, "twenty")))
+    // through the dlite catalog's scan, a nested field pruned by name
+    spark.conf.set("spark.sql.catalog.dlite", classOf[graft.sources.DeltaLiteCatalog].getName)
+    assert(spark.sql(s"SELECT k, s.amt, s.label FROM dlite.`$root`")
+      .as[(Int, Long, String)].collect().sortBy(_._1) ===
+      Array((1, 10L, "ten"), (2, 20L, "twenty")))
+    assert(spark.sql(s"SELECT s.label FROM dlite.`$root` WHERE k = 2").as[String]
+      .collect() === Array("twenty"))
   }
 
   test("column mapping: config survives a checkpoint") {
